@@ -178,6 +178,7 @@ def create_server(index, port: int = 0, spellchecker=None,
     lock = threading.Lock()
 
     MAX_K = 10_000
+    WEB_K = 20  # /web's default result count
     MAX_PER_HOST = 100
     MAX_COMPLETIONS = 100
     MAX_FUZZY_DIST = 2
@@ -532,7 +533,9 @@ def create_server(index, port: int = 0, spellchecker=None,
             f"value='{ds.isoformat() if ds else ''}'> "
             "date_end <input name='date_end' size='10' "
             f"value='{de.isoformat() if de else ''}'>"
-            "</form>")
+            + (f"<input type='hidden' name='k' value='{k}'>"
+               if k != WEB_K else "")
+            + "</form>")
         if not query:
             return head + "</body></html>"
         out = run_query(query, k, "bm25", ds, de,
@@ -547,6 +550,8 @@ def create_server(index, port: int = 0, spellchecker=None,
             rerun_q = quote(out["original_query"])
             dq = (f"&date_start={ds.isoformat()}&date_end="
                   f"{de.isoformat()}" if ds and de else "")
+            if k != WEB_K:
+                dq += f"&k={k}"
             parts.append(
                 "<p>Showing results for: "
                 f"<b>{_html.escape(out['corrected_query'])}</b><br>"
@@ -819,7 +824,7 @@ def create_server(index, port: int = 0, spellchecker=None,
                     # [&rerun=1] (results page; rerun skips spellcheck
                     # like /rerun_query)
                     q = parse_qs(u.query)
-                    kk = int(q.get("k", ["20"])[0])
+                    kk = int(q.get("k", [str(WEB_K)])[0])
                     if not 1 <= kk <= MAX_K:
                         raise ValueError(
                             f"k must be in [1, {MAX_K}], got {kk}")

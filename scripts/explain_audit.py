@@ -9,12 +9,17 @@ plans and assert the properties that matter at 100 TB:
 * postings build — exactly the intended shuffles (partial agg before
   exchange), WholeStageCodegen around the relational stages.
 
-Writes the annotated plans to BENCH/PLANS.md. Exit code 1 if an
-assertion fails.
+Writes the annotated plans to ``--out`` (default BENCH/PLANS.md, the
+committed dump), with the audit's temp dirs written as ``<tmp>/audit_*``
+so the dump carries no per-run paths. Exit code 1 if an assertion
+fails.
+
+    python scripts/explain_audit.py [--out PATH]
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import re
@@ -34,6 +39,11 @@ def plan_of(df) -> str:
 
 def main() -> int:
     import tempfile
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--out", default=os.path.join(ROOT, "BENCH", "PLANS.md"),
+                    help="where to write the annotated plans")
+    out = ap.parse_args().out
 
     from pyspark.sql import functions as F
 
@@ -126,14 +136,14 @@ def main() -> int:
     # segment encode. The WHOLE chain must contain exactly ONE Exchange
     # (the range repartition that lays out (bucket, term, block_id)) —
     # the encode itself is a mapInPandas over those partitions, no
-    # second shuffle, no per-group applyInPandas aggregate.
+    # second shuffle, no per-group applyInPandas aggregate. The exchange
+    # is the build's own catalog.range_layout.
     from search_engine_spark.operators import segments as SEGOP
 
-    sorted_post = post.withColumn(
+    sorted_post = catalog.range_layout(post.withColumn(
         "bucket", F.pmod(F.xxhash64("term"), F.lit(16)).cast("int")
-    ).withColumn("block_id", (F.col("doc_id") / F.lit(4096)).cast("long")) \
-        .repartitionByRange(16, "bucket", "term", "block_id") \
-        .sortWithinPartitions("bucket", "term", "block_id", "doc_id")
+    ).withColumn("block_id", (F.col("doc_id") / F.lit(4096)).cast("long")),
+        "bucket", "term", "block_id", tiebreak="doc_id")
     p3b = plan_of(SEGOP.encode_sorted(sorted_post))
     check(
         "Fused segment encode (postings -> segments)", p3b,
@@ -1337,7 +1347,9 @@ def main() -> int:
         ],
     )
 
-    out = os.path.join(ROOT, "BENCH", "PLANS.md")
+    # mkdtemp dirs end in 8 random characters: drop them with the temp root
+    tmp_dir = re.compile(re.escape(tempfile.gettempdir())
+                         + r"/(audit_[a-z]+)_[a-z0-9_]{8}")
     with open(out, "w") as f:
         f.write("# Physical-plan audit (`scripts/explain_audit.py`)\n\n"
                 "Key plans with the properties asserted for 100 TB scale.\n")
@@ -1345,7 +1357,8 @@ def main() -> int:
             f.write(f"\n## {title}\n\n")
             for desc, ok in results:
                 f.write(f"- {'✅' if ok else '❌'} {desc}\n")
-            f.write("\n```\n" + plan.strip()[:6000] + "\n```\n")
+            plan = tmp_dir.sub(r"<tmp>/\1", plan.strip()[:6000])
+            f.write("\n```\n" + plan + "\n```\n")
     for title, _, results in sections:
         for desc, ok in results:
             print(f"{'OK  ' if ok else 'FAIL'} {title}: {desc}")

@@ -43,17 +43,31 @@ from ..operators.search import InvertedIndex
 #: table: a term-IN lookup then skips row groups whose min/max range
 #: covers the term but whose chunk does not contain it (the gap min/max
 #: stats cannot close once a row group spans a wide vocabulary range).
-#: parquet-mr only MATERIALIZES the bloom when a chunk falls back from
-#: dictionary encoding (a fully dictionary-encoded chunk already gives
-#: the reader exact membership), so small/test indexes pay zero bytes
-#: and web-scale row groups — where the vocabulary outgrows the
-#: dictionary — get the filter exactly when it starts mattering.
-#: ndv 100k ≈ 120 KB per materialized chunk, hard-capped at 128 KiB.
+#: parquet-mr materializes the bloom whenever a chunk leaves dictionary
+#: encoding, which segment chunks always do (one row per (term, block)).
+#: Adaptive mode sizes each bloom to the chunk's distinct terms (the
+#: smallest of 12 halving candidates up to the 128 KiB cap): a 4-term
+#: segment file pays ~1 KiB. parquet-mr reads adaptive.enabled only as
+#: a global key, and an explicit expected.ndv would turn it off.
 TERM_BLOOM = {
     "parquet.bloom.filter.enabled#term": "true",
-    "parquet.bloom.filter.expected.ndv#term": "100000",
+    "parquet.bloom.filter.adaptive.enabled": "true",
+    "parquet.bloom.filter.candidates.number#term": "12",
     "parquet.bloom.filter.max.bytes": str(128 * 1024),
 }
+
+
+def range_layout(df: DataFrame, *keys: str, tiebreak: str | None = None
+                 ) -> DataFrame:
+    """The index build's one layout exchange: range-partition on
+    ``keys``, then sort each partition by ``keys`` (and ``tiebreak``).
+    The partition count is the session's shuffle partitions, which AQE
+    may coalesce, so small inputs run few tasks and write few files.
+    Equal keys land whole in one partition, and coalescing only merges
+    neighbouring ranges, so each key's rows stay one consecutive run
+    (the invariant ``SEG.encode_sorted`` scans for)."""
+    order = keys + ((tiebreak,) if tiebreak else ())
+    return df.repartitionByRange(*keys).sortWithinPartitions(*order)
 
 
 def _manifest_path(index_dir: str, step: str) -> str:
@@ -155,17 +169,13 @@ def build_durable_index(
         # by block occupancy ≤ block_span); (3) sortWithinPartitions
         # gives term-ordered files whose parquet min/max term stats prune
         # term lookups (the word2byte analog); (4) equal (bucket, term,
-        # block_id) keys land whole in ONE partition, so the segment
-        # encode is a shuffle-free consecutive-run scan of these same
-        # partitions (SEG.encode_sorted).
+        # block_id) keys form one consecutive run (range_layout).
         # persist pre-exchange too: repartitionByRange runs a boundary-
         # SAMPLING job that would otherwise re-execute the whole analysis
         # pipeline (extract+tokenize+stem UDFs) a second time
         post_cache = post.persist(StorageLevel.MEMORY_AND_DISK)
-        parts = max(2 * spark.sparkContext.defaultParallelism, buckets)
-        sorted_post = post_cache \
-            .repartitionByRange(parts, "bucket", "term", "block_id") \
-            .sortWithinPartitions("bucket", "term", "block_id", "doc_id") \
+        sorted_post = range_layout(post_cache, "bucket", "term", "block_id",
+                                   tiebreak="doc_id") \
             .persist(StorageLevel.MEMORY_AND_DISK)
         # block_id is derivable (doc_id // block_span) — keep the staged
         # files free of it so readers of postings_stage see the plain
@@ -263,12 +273,10 @@ def build_durable_index(
             # resume: the consecutive-run invariant must be
             # re-established — parquet re-reads split/coalesce files
             # arbitrarily, so pay one fresh exchange
-            parts = max(2 * spark.sparkContext.defaultParallelism, buckets)
-            src = spark.read.parquet(stage_dir).withColumn(
+            src = range_layout(spark.read.parquet(stage_dir).withColumn(
                 "block_id",
-                (F.col("doc_id") / F.lit(block_span)).cast("long")) \
-                .repartitionByRange(parts, "bucket", "term", "block_id") \
-                .sortWithinPartitions("bucket", "term", "block_id", "doc_id")
+                (F.col("doc_id") / F.lit(block_span)).cast("long")),
+                "bucket", "term", "block_id", tiebreak="doc_id")
         seg = SEG.encode_sorted(src, positional=positional,
                                 block_codec=block_codec) \
             .persist(StorageLevel.MEMORY_AND_DISK)
@@ -319,9 +327,7 @@ def build_durable_index(
         from pyspark import StorageLevel
         seg = seg.persist(StorageLevel.MEMORY_AND_DISK)  # sampling reuse
         try:
-            seg_parts = max(spark.sparkContext.defaultParallelism, hi - lo)
-            seg.repartitionByRange(seg_parts, "bucket", "term", "block_id") \
-                .sortWithinPartitions("bucket", "term", "block_id") \
+            range_layout(seg, "bucket", "term", "block_id") \
                 .write.mode("overwrite").options(**TERM_BLOOM) \
                 .partitionBy("bucket").parquet(out)
             # lineage from the persisted frame (cache hit) — identical rows
@@ -428,10 +434,7 @@ def compact_streaming_index(
         t0 = time.perf_counter()
         staged = spark.read.parquet(os.path.join(stream_dir, "postings_stage"))
         cols = [c for c in staged.columns if c != "batch"]
-        parts = max(2 * spark.sparkContext.defaultParallelism, buckets)
-        staged.select(*cols) \
-            .repartitionByRange(parts, "bucket", "term", "doc_id") \
-            .sortWithinPartitions("bucket", "term", "doc_id") \
+        range_layout(staged.select(*cols), "bucket", "term", "doc_id") \
             .write.mode("overwrite").options(**TERM_BLOOM) \
             .partitionBy("bucket").parquet(stage_out)
         _record(out_dir, "postings_stage", source=os.path.abspath(stream_dir),
@@ -604,26 +607,28 @@ class SegmentIndex(InvertedIndex):
     def deleted_ids(self, max_ids: int | None = None) -> frozenset[int]:
         """Driver-side live-docs set for the WAND kernel (the per-segment
         deleted-docs bitmap of segment-file engines). Collected once per
-        index handle, BOUNDED: more than ``max_ids`` (default
-        ``DELETED_IDS_MAX``) tombstones raises with a vacuum
-        recommendation instead of materializing an unbounded set — the
-        collect ships at most ``max_ids + 1`` ids either way. Deletes
-        issued with ``auto_vacuum_threshold`` never get near the bound."""
+        index handle, BOUNDED on every call: more than ``max_ids``
+        (default ``DELETED_IDS_MAX``) tombstones raises with a vacuum
+        recommendation, also when an earlier call with a larger bound
+        cached the set — the collect ships at most ``max_ids + 1`` ids.
+        Deletes issued with ``auto_vacuum_threshold`` never get near it."""
         if self._tombstones is None:
             return frozenset()
         bound = self.DELETED_IDS_MAX if max_ids is None else max_ids
-        if self._deleted_set is None:
-            rows = self._tombstones.limit(bound + 1).collect()
-            if len(rows) > bound:
-                raise ValueError(
-                    f"index at {self.index_dir} has more than {bound} "
-                    "tombstoned docs — too many to hold as the kernels' "
-                    "driver-side live-docs set. Vacuum the index "
-                    "(merge_indexes / delete_docs auto_vacuum_threshold) "
-                    "to fold tombstones into the postings, or raise "
-                    "max_ids explicitly if the driver has the memory.")
-            self._deleted_set = frozenset(r["doc_id"] for r in rows)
-        return self._deleted_set
+        ids = self._deleted_set
+        if ids is None:
+            ids = frozenset(r["doc_id"] for r in
+                            self._tombstones.limit(bound + 1).collect())
+        if len(ids) > bound:
+            raise ValueError(
+                f"index at {self.index_dir} has more than {bound} "
+                "tombstoned docs — too many to hold as the kernels' "
+                "driver-side live-docs set. Vacuum the index "
+                "(merge_indexes / delete_docs auto_vacuum_threshold) "
+                "to fold tombstones into the postings, or raise "
+                "max_ids explicitly if the driver has the memory.")
+        self._deleted_set = ids
+        return ids
 
     def _buckets_for(self, terms: list[str]) -> list[int]:
         # must equal pmod(xxhash64(term), buckets): computed driver-side
@@ -1157,11 +1162,9 @@ def build_phrase_index(spark: SparkSession, index_dir: str,
         F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
     ).withColumn(
         "block_id", (F.col("doc_id") / F.lit(block_span)).cast("long"))
-    parts = max(2 * spark.sparkContext.defaultParallelism, buckets)
-    sorted_bg = staged \
-        .repartitionByRange(parts, "bucket", "term", "block_id") \
-        .sortWithinPartitions("bucket", "term", "block_id", "doc_id")
-    seg = SEG.encode_sorted(sorted_bg, positional=True)
+    seg = SEG.encode_sorted(
+        range_layout(staged, "bucket", "term", "block_id", tiebreak="doc_id"),
+        positional=True)
     out = os.path.join(index_dir, "phrase_segments")
     seg.sortWithinPartitions("bucket", "term", "block_id") \
         .write.mode("overwrite").options(**TERM_BLOOM) \
@@ -1264,9 +1267,7 @@ def build_term_ngram_index(spark: SparkSession, index_dir: str) -> dict:
                            F.lit(TRIGRAM_BUCKETS)).cast("int"))
     )
     out = os.path.join(index_dir, "term_trigrams")
-    parts = max(2 * spark.sparkContext.defaultParallelism, 8)
-    grams.repartitionByRange(parts, "gbucket", "gram", "term") \
-        .sortWithinPartitions("gbucket", "gram", "term") \
+    range_layout(grams, "gbucket", "gram", "term") \
         .write.mode("overwrite").partitionBy("gbucket").parquet(out)
     n_grams = spark.read.parquet(out).count()
     _record(index_dir, "term_ngram_index", rows=n_grams,
@@ -1632,9 +1633,7 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str],
             lambda x, y: x.unionByName(y),
             [spark.read.parquet(os.path.join(d, "postings_stage"))
              for d in index_dirs]))
-        parts = max(2 * spark.sparkContext.defaultParallelism, buckets)
-        staged.repartitionByRange(parts, "bucket", "term", "doc_id") \
-            .sortWithinPartitions("bucket", "term", "doc_id") \
+        range_layout(staged, "bucket", "term", "doc_id") \
             .write.mode("overwrite").options(**TERM_BLOOM) \
             .partitionBy("bucket").parquet(stage_out)
         _record(out_dir, "postings_stage",

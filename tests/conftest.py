@@ -1,3 +1,4 @@
+import os
 import sys
 from pathlib import Path
 
@@ -5,6 +6,14 @@ import numpy as np
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+# Local mode runs driver and executors in one JVM. Under the engine's
+# 48g default heap, G1 keeps growing instead of collecting, and on a
+# machine with less memory than that the OS kills the JVM mid-suite
+# (every later Spark test then fails). Set before any session starts,
+# so the suite's own JVM and the ones its subprocess tests launch share
+# the bound; 4g is ample for the test corpora.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")

@@ -181,6 +181,16 @@ def test_fused_build_matches_sharded(spark, corpus_sdf, tmp_path, index_dir):
     d = str(tmp_path / "fused")
     catalog.build_durable_index(spark, corpus_sdf, d, shards=1, buckets=16)
 
+    def n_segment_files():
+        return sum(f.endswith(".parquet") for _, _, fs in
+                   os.walk(os.path.join(d, "segments")) for f in fs)
+
+    # the layout exchange is data-sized (session shuffle partitions, AQE
+    # coalescing): each task writes the buckets its contiguous range
+    # covers, so files <= tasks + buckets
+    max_files = 16 + 2 * spark.sparkContext.defaultParallelism
+    assert 0 < n_segment_files() <= max_files
+
     key = (lambda r: (r.term, r.block_id))
     val = (lambda r: (r.n_docs, r.min_doc_id, r.max_doc_id, r.block_max_tf,
                       r.bucket, bytes(r.payload), bytes(r.pos_payload)))
@@ -207,6 +217,7 @@ def test_fused_build_matches_sharded(spark, corpus_sdf, tmp_path, index_dir):
     resumed = {key(r): val(r) for r in
                spark.read.parquet(os.path.join(d, "segments")).collect()}
     assert resumed == fused
+    assert 0 < n_segment_files() <= max_files
 
     # end to end: identical ranking through the loaded index
     f_idx = catalog.load_index(spark, d, documents=corpus_sdf)
@@ -314,8 +325,9 @@ def test_term_bloom_filter_mechanism(spark, tmp_path):
     """catalog.TERM_BLOOM materializes parquet bloom filters exactly
     when a chunk's vocabulary outgrows dictionary encoding: a
     high-cardinality term column grows by bloom bytes (bounded by
-    max.bytes per chunk), a dictionary-friendly one stays byte-free,
-    and reads with pushed equality filters return identical rows.
+    max.bytes per chunk), a few-term one by a bloom sized to its terms,
+    a dictionary-friendly one stays byte-free, and reads with pushed
+    equality filters return identical rows.
     Every index build goes through writers that apply TERM_BLOOM, so
     the existing lookup-parity suites already run against bloom-built
     stores; this test pins the option set itself against drift."""
@@ -342,6 +354,17 @@ def test_term_bloom_filter_mechanism(spark, tmp_path):
     low.write.options(**catalog.TERM_BLOOM).mode("overwrite") \
         .parquet(l_bloom)
     assert size(l_bloom) == size(l_plain)  # dictionary chunk: zero cost
+
+    # a few unique terms (a small segment file: one row per term, so the
+    # chunk leaves dictionary encoding): the adaptive bloom is sized to
+    # the chunk's distinct terms, not to the 128 KiB cap
+    few = spark.range(4).selectExpr("md5(cast(id as string)) AS term", "id") \
+        .coalesce(1)
+    f_plain, f_bloom = str(tmp_path / "fplain"), str(tmp_path / "fbloom")
+    few.write.mode("overwrite").parquet(f_plain)
+    few.write.options(**catalog.TERM_BLOOM).mode("overwrite") \
+        .parquet(f_bloom)
+    assert 0 < size(f_bloom) - size(f_plain) <= 4 * 1024
 
     probe = spark.range(5).selectExpr("md5(cast(id as string)) AS term")
     got = (spark.read.parquet(p_bloom)

@@ -854,9 +854,24 @@ def test_web_errors_render_html(server):
 def test_web_escapes_user_input(server):
     """Query text renders escaped everywhere it appears (form value,
     correction notice) — no markup injection through the search box."""
+    import urllib.error
     from urllib.parse import quote
 
     evil = '<script>alert(1)</script> market'
     _, _, page = _get_html(server + "/web?query=" + quote(evil) + "&k=3")
     assert "<script>alert" not in page
     assert "&lt;script&gt;" in page
+    # a non-default k rides on the form (hidden input) and on the
+    # spellcheck rerun link; the default k adds neither
+    assert "<input type='hidden' name='k' value='3'>" in page
+    _, _, typo = _get_html(server + "/web?query=merket&k=5")
+    assert "/web?query=merket&rerun=1&k=5'" in typo
+    assert "<input type='hidden' name='k' value='5'>" in typo
+    _, _, plain = _get_html(server + "/web?query=merket")
+    assert "/web?query=merket&rerun=1'" in plain
+    assert "name='k'" not in plain
+    # k reaches the page only as a validated int: markup in it is a 400
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get_html(server + "/web?query=market&k=" + quote("<b>3"))
+    body = e.value.read().decode()
+    assert e.value.code == 400 and "<b>3" not in body

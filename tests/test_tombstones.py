@@ -192,3 +192,13 @@ def test_deleted_ids_bound(spark, live_index):
     assert over.deleted_ids(max_ids=4) == frozenset(ids)
     assert catalog.load_index(spark, live_index).deleted_ids() \
         == frozenset(ids)
+
+    # a set cached under a large bound is not handed to a later call
+    # with a smaller one: every call enforces its own bound
+    big = catalog.load_index(spark, live_index)
+    assert big.deleted_ids(max_ids=1000) == frozenset(ids)
+    with pytest.raises(ValueError, match="[Vv]acuum"):
+        big.deleted_ids(max_ids=3)
+    big.DELETED_IDS_MAX = 3  # later default-bound calls recheck too
+    with pytest.raises(ValueError, match="[Vv]acuum"):
+        big.deleted_ids()
