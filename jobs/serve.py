@@ -112,7 +112,11 @@ deployed a ~1 byte/posting store to be served from the impact byte;
 per-doc error is bounded by the quantizer, test_impact's accuracy
 gate) — while ``wand=0`` still forces the exact relational sidecar
 path, so the two defaults differ on impact stores BY DESIGN and the
-``path`` key discloses it. ``kernel=wand|maxscore`` (or ``wand=1``) forces a kernel and
+``path`` key discloses it. A term with more postings blocks than the
+kernel's fetch cap (wand.WAND_AUTO_CAP) is scored from its
+highest-bound blocks only; the response then carries ``"exact": false``
+and the ``truncated_terms`` (``"exact": true`` otherwise).
+``kernel=wand|maxscore`` (or ``wand=1``) forces a kernel and
 keeps the old refusal semantics (400 on date filters etc. — same
 reason jobs/query_topk.py rejects the combination); ``wand=0`` (or
 ``kernel=relational``) forces the relational path.
@@ -385,6 +389,9 @@ def create_server(index, port: int = 0, spellchecker=None,
             if not wand.wand_eligible(
                     _planner.classify(executed, index.analyzer)):
                 kernel, use_wand = None, False
+        # the serving kernels report the terms their fetch cap cut
+        # short; the relational path always scores every posting
+        kstats: dict = {}
         with lock:
             if use_wand:
                 if ds or de:
@@ -397,11 +404,12 @@ def create_server(index, port: int = 0, spellchecker=None,
 
                     hits = _ms.search_maxscore(
                         index, executed, k=k,
-                        prior=prior, prior_lam=prior_lam)
+                        prior=prior, prior_lam=prior_lam, stats=kstats)
                 else:
                     hits = wand.search_wand(index, executed, k=k,
                                             prior=prior,
-                                            prior_lam=prior_lam)
+                                            prior_lam=prior_lam,
+                                            stats=kstats)
             elif collapse_host:
                 from search_engine_spark.operators import serp
 
@@ -459,6 +467,7 @@ def create_server(index, port: int = 0, spellchecker=None,
                     "doc_id long, score double")
                 snips = {r["doc_id"]: r["snippet"] for r in
                          _S.snippets(sdf, index.documents, terms).collect()}
+        truncated = kstats.get("truncated_terms", [])
         return {
             "results": [
                 {"rank": i, "doc_id": int(d), "score": float(s),
@@ -475,6 +484,10 @@ def create_server(index, port: int = 0, spellchecker=None,
             # which path actually served (auto-routing makes it
             # request-dependent; clients and the bench read it)
             "path": kernel if use_wand else "relational",
+            # false when the fetch cap truncated a term: its dropped
+            # blocks only lower scores, so the ranking is approximate
+            "exact": not truncated,
+            **({"truncated_terms": truncated} if truncated else {}),
         }
 
     def _parse_after(q) -> tuple | None:

@@ -63,6 +63,19 @@ GUMBEL_SALT = "dsirg:"
 DEFAULT_DIM = 10_000
 #: Laplace smoothing mass per bucket when fitting p̂
 DEFAULT_ALPHA = 1e-4
+#: bound on the feature width: each fit collects ``dim`` numbers to the
+#: driver and the log-ratio table broadcasts ``dim`` rows, built from a
+#: driver-side list. 262144 (≈2 MB of doubles per vector, 26× the
+#: paper's 10k) keeps both cheap; the clustering.MAX_CENTROID_LITERALS
+#: idiom.
+MAX_DIM = 262_144
+
+
+def _check_dim(dim: int) -> None:
+    if not 1 <= dim <= MAX_DIM:
+        raise ValueError(
+            f"dim must be in [1, {MAX_DIM}] (MAX_DIM: the fits collect "
+            f"and broadcast dim numbers through the driver): {dim}")
 
 
 def _token_list(text_col: str):
@@ -80,8 +93,7 @@ def hashed_ngram_tf(docs: DataFrame, dim: int = DEFAULT_DIM,
     no folding); bigrams are adjacent-token pairs joined by one space,
     hashed through the same salted stream. One explode + ONE
     map-side-combined aggregate; all JVM."""
-    if dim < 1:
-        raise ValueError(f"dim must be >= 1: {dim}")
+    _check_dim(dim)
     l = _token_list(text_col)
     grams = l
     if bigrams:
@@ -105,6 +117,7 @@ def fit_bucket_logprobs(feats: DataFrame, dim: int,
     one aggregate, ≤ dim numbers to the driver. α > 0 keeps unseen
     buckets finite (the importance ratio needs both distributions
     supported everywhere)."""
+    _check_dim(dim)
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0: {alpha}")
     rows = feats.groupBy("bucket").agg(F.sum("tf").alias("c")).collect()
@@ -141,6 +154,7 @@ def importance_weights(feats: DataFrame, log_target: list[float],
         raise ValueError(
             f"distribution widths differ: {len(log_target)} vs "
             f"{len(log_raw)} (fit both with the same dim)")
+    _check_dim(len(log_target))
     spark = feats.sparkSession
     lw = spark.createDataFrame(
         [(b, float(lt - lr))
@@ -176,9 +190,10 @@ def dsir_select(docs: DataFrame, target_docs: DataFrame, k: int,
     happens BEFORE the cut so the selection is stable cross-engine.
 
     ``target_docs`` is the (small) corpus whose distribution you want
-    more of — e.g. curated wiki/books; ``docs`` is the raw pool. Docs
-    with zero tokens have no features and are never selected (they
-    carry no evidence either way)."""
+    more of — e.g. curated wiki/books; it needs only ``text_col``
+    (its docs are never selected, so a ``doc_id`` is optional).
+    ``docs`` is the raw pool. Docs with zero tokens have no features
+    and are never selected (they carry no evidence either way)."""
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")
     release_caches()
@@ -191,6 +206,10 @@ def dsir_select(docs: DataFrame, target_docs: DataFrame, k: int,
     # stays lazy.
     feats_raw = hashed_ngram_tf(docs, dim, text_col, bigrams).persist()
     _PERSISTED.add(feats_raw)
+    if "doc_id" not in target_docs.columns:
+        # the fit sums counts per bucket, so one id shared by every
+        # target doc yields the same distribution as per-doc ids
+        target_docs = target_docs.withColumn("doc_id", F.lit(0))
     feats_t = hashed_ngram_tf(target_docs, dim, text_col, bigrams)
     lt = fit_bucket_logprobs(feats_t, dim, alpha)
     lr = fit_bucket_logprobs(feats_raw, dim, alpha)

@@ -24,6 +24,12 @@ terms' blocks and touches the head term's bytes only for live
 candidates — at web scale, where the head term's blocks dominate the
 range's byte volume, that is the difference that matters.
 
+Scoring is array work over the blocks' memoized decodes (the mini-index
+LRU keeps them, catalog.MiniBlock): per surviving range, the essential
+blocks' postings are summed per doc with unique + bincount, probes add
+non-essential weights by searchsorted, and the top-k is two arrays
+merged after each range in (score desc, doc asc) order.
+
 Exactness: every skip is against the CURRENT θ, which only grows, and
 every bound argument is a strict ``< θ`` — ties at the threshold are
 still decoded, so results are bit-identical to the relational BM25 path
@@ -37,15 +43,13 @@ kernels over the same durable segments, selectable per query.
 
 from __future__ import annotations
 
-import heapq
 from collections import defaultdict
 
 import numpy as np
 
-from .. import codec
 from ..functions.analyzer import analyze_query
 from . import segments as SEG
-from .wand import WAND_AUTO_CAP, wand_eligible
+from .wand import WAND_AUTO_CAP, truncated_terms, wand_eligible
 
 
 def search_maxscore(index, query: str, k: int = 100,
@@ -66,9 +70,12 @@ def search_maxscore(index, query: str, k: int = 100,
     on one query launches no extra Spark jobs.
 
     ``stats`` (optional dict) receives ``n_blocks_total``,
-    ``n_blocks_decoded`` and ``n_ranges_skipped`` — the pruning
-    telemetry the kernel-comparison bench and tests read (counters are
-    for the LAST heap pass when prior blending deepens iteratively).
+    ``n_blocks_decoded`` (blocks scored) and ``n_ranges_skipped`` — the
+    pruning telemetry the kernel-comparison bench and tests read
+    (counters are for the LAST top-k pass when prior blending deepens
+    iteratively) — and ``truncated_terms``: the query terms the fetch
+    cap cut short (wand.truncated_terms); empty means the answer is
+    exact.
 
     ``prior`` blends a static document prior exactly as in search_wand
     (same iterative-deepening wrapper, wand._blend_prior_topk, so the
@@ -131,56 +138,60 @@ def search_maxscore(index, query: str, k: int = 100,
         for blk in blks:
             by_range[blk.block_id].append(blk)
             n_blocks += 1
+    if stats is not None:
+        stats["truncated_terms"] = truncated_terms(mini)
+
+    def weights(blk):
+        """(docs, per-term bm25 weights) of a block with deletes masked;
+        None when every posting in the block is tombstoned. The decode
+        is the block's memo (catalog.MiniBlock), so only the weights
+        are computed per request."""
+        if impact_store:
+            docs, q = blk.impact()
+        else:
+            docs, tfs, dls = blk.full()
+            if dls is None:
+                raise ValueError(
+                    "segment payloads carry no per-doc lengths (dl): "
+                    "MaxScore needs self-contained blocks — build the "
+                    "index from postings that include dl (the durable "
+                    "build does)")
+        if del_arr is not None:
+            live = ~np.isin(docs, del_arr)
+            if not live.all():
+                if not live.any():
+                    return None
+                docs = docs[live]
+                if impact_store:
+                    q = q[live]
+                else:
+                    tfs, dls = tfs[live], dls[live]
+        if stats is not None:
+            stats["n_blocks_decoded"] += 1
+        if impact_store:
+            return docs, (q_tf[blk.term] * idf[blk.term] * impact_scale
+                          * q.astype(np.float64))
+        tfs_f = tfs.astype(np.float64)
+        norm = k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl)
+        return docs, (q_tf[blk.term] * idf[blk.term] * tfs_f * (k1 + 1.0)
+                      / (tfs_f + norm))
 
     def bm25_topk(capacity: int) -> list[tuple[int, float]]:
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
+        # The top-k as two arrays in the pinned (score desc, doc asc)
+        # order, so the last entry is the one a new doc must beat (θ).
+        top_d = np.empty(0, dtype=np.int64)
+        top_s = np.empty(0, dtype=np.float64)
         if stats is not None:
             stats["n_blocks_total"] = n_blocks
             stats["n_blocks_decoded"] = 0
             stats["n_ranges_skipped"] = 0
 
-        def threshold() -> float:
-            return heap[0][0] if len(heap) >= capacity else float("-inf")
-
-        def decode(blk):
-            """Decoded (docs, tfs, per-term bm25 weights) with deletes
-            masked; None when every posting in the block is tombstoned."""
-            if impact_store:
-                docs, q = codec.decode_block_impact(bytes(blk.payload))
-                if del_arr is not None:
-                    live = ~np.isin(docs, del_arr)
-                    if not live.all():
-                        docs, q = docs[live], q[live]
-                        if not len(docs):
-                            return None
-                if stats is not None:
-                    stats["n_blocks_decoded"] += 1
-                w = (q_tf[blk.term] * idf[blk.term] * impact_scale
-                     * q.astype(np.float64))
-                return docs, w
-            docs, tfs, dls = codec.decode_block_full(bytes(blk.payload))
-            if dls is None:
-                raise ValueError(
-                    "segment payloads carry no per-doc lengths (dl): MaxScore "
-                    "needs self-contained blocks — build the index from "
-                    "postings that include dl (the durable build does)")
-            if del_arr is not None:
-                live = ~np.isin(docs, del_arr)
-                if not live.all():
-                    docs, tfs, dls = docs[live], tfs[live], dls[live]
-                    if not len(docs):
-                        return None
-            if stats is not None:
-                stats["n_blocks_decoded"] += 1
-            tfs_f = tfs.astype(np.float64)
-            norm = k1 * (1.0 - b + b * dls.astype(np.float64) / avgdl)
-            w = (q_tf[blk.term] * idf[blk.term] * tfs_f * (k1 + 1.0)
-                 / (tfs_f + norm))
-            return docs, w
-
         for block_id in sorted(by_range):
             grp = by_range[block_id]
-            theta = threshold()
+            # θ only changes when a range's candidates are merged in, so
+            # it is constant while the range is scored
+            full = len(top_d) >= capacity
+            theta = float(top_s[-1]) if full else float("-inf")
             # Range-local upper bounds (tighter than global term bounds:
             # they use THIS range's block_max_tf), ascending — the MaxScore
             # ordering. ubs[i] = (ub, blk).
@@ -197,17 +208,17 @@ def search_maxscore(index, query: str, k: int = 100,
                      for blk in grp),
                     key=lambda x: x[0])
             total_ub = sum(u for u, _ in ubs)
-            if len(heap) >= capacity and total_ub < theta:
+            if full and total_ub < theta:
                 # WAND's range skip, recovered as the all-non-essential case
                 if stats is not None:
                     stats["n_ranges_skipped"] += 1
                 continue
             # Largest prefix (ascending ub) with cumulative bound < θ is
             # non-essential: a doc scoring ONLY there stays strictly under
-            # θ and can never displace the heap minimum.
+            # θ and can never displace the top-k minimum.
             cum = 0.0
             split = 0
-            if len(heap) >= capacity:
+            if full:
                 for u, _ in ubs:
                     if cum + u < theta:
                         cum += u
@@ -215,48 +226,43 @@ def search_maxscore(index, query: str, k: int = 100,
                     else:
                         break
             non_essential = ubs[:split]
-            essential = ubs[split:]
 
-            acc: dict[int, float] = defaultdict(float)
-            for _, blk in essential:
-                dec = decode(blk)
-                if dec is None:
-                    continue
-                docs, w = dec
-                for d, s in zip(docs.tolist(), w.tolist()):
-                    acc[d] += s
+            # Essential blocks, concatenated in ascending-bound order:
+            # bincount adds in input order, so each doc's partial score
+            # sums its terms in the same order a per-doc accumulator would.
+            scored = [w for w in (weights(blk) for _, blk in ubs[split:])
+                      if w is not None]
+            if not scored:
+                continue
+            cand_d, inv = np.unique(np.concatenate([d for d, _ in scored]),
+                                    return_inverse=True)
+            cand_s = np.bincount(
+                inv, weights=np.concatenate([w for _, w in scored]),
+                minlength=len(cand_d))
             # Probe non-essential blocks in DESCENDING bound order, dropping
-            # candidates as the remaining bound shrinks. remaining[i] =
-            # cumulative ub of the still-unprobed non-essential blocks.
-            if acc and non_essential:
-                rem = cum  # Σ non-essential bounds, shrinks as we probe
-                for u, blk in reversed(non_essential):
-                    theta = threshold()
-                    alive = {d: s for d, s in acc.items()
-                             if not (len(heap) >= capacity and s + rem < theta)}
-                    if not alive:
-                        acc = alive
+            # candidates whose partial score plus the bound of the
+            # still-unprobed non-essential blocks stays below θ.
+            rem = cum
+            for u, blk in reversed(non_essential):
+                alive = ~(cand_s + rem < theta)
+                if not alive.all():
+                    cand_d, cand_s = cand_d[alive], cand_s[alive]
+                    if not len(cand_d):
                         break
-                    acc = alive
-                    dec = decode(blk)
-                    if dec is not None:
-                        docs, w = dec
-                        for d, s in zip(docs.tolist(), w.tolist()):
-                            if d in acc:
-                                acc[d] += s
-                    rem -= u
-            # Final candidate filter: partial scores whose term set was
-            # fully probed are exact; anything still below θ simply fails
-            # the heap test naturally.
-            for d, s in acc.items():
-                item = (s, -d)
-                if len(heap) < capacity:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
+                dec = weights(blk)
+                if dec is not None:
+                    docs, w = dec
+                    pos = np.searchsorted(docs, cand_d)
+                    pos[pos == len(docs)] = 0
+                    hit = docs[pos] == cand_d
+                    cand_s[hit] += w[pos[hit]]
+                rem -= u
+            all_d = np.concatenate([top_d, cand_d])
+            all_s = np.concatenate([top_s, cand_s])
+            order = np.lexsort((all_d, -all_s))[:capacity]
+            top_d, top_s = all_d[order], all_s[order]
 
-        out = sorted(heap, key=lambda x: (-x[0], -x[1]))
-        return [(-nd, s) for s, nd in out]
+        return list(zip(top_d.tolist(), top_s.tolist()))
 
     if prior is None:
         return bm25_topk(k)

@@ -37,7 +37,6 @@ from collections import defaultdict
 import numpy as np
 from pyspark.sql import functions as F
 
-from .. import codec
 from ..functions.analyzer import analyze_query
 from . import segments as SEG
 
@@ -85,6 +84,14 @@ def _capped_blocks(index, terms: list[str], cap: int):
 WAND_AUTO_CAP = 256
 
 
+def truncated_terms(mini: dict) -> list[str]:
+    """Terms of a mini-index lookup whose fetched blocks hold fewer
+    postings than the term's df — the fetch cap dropped some of their
+    blocks, so scores over them are a safe under-estimate."""
+    return sorted(t for t, (df, blks) in mini.items()
+                  if sum(blk.n_docs for blk in blks) < df)
+
+
 def wand_eligible(plan) -> bool:
     """True iff a classified plan has WAND semantics: pure bag-of-words
     free text, no phrases. THE single predicate behind search_wand's
@@ -104,7 +111,7 @@ def search_wand(index, query: str, k: int = 100,
                 max_blocks_per_term: int | None | str = "auto",
                 prior=None, prior_lam: float = 0.3,
                 prior_id_col: str = "node", prior_col: str = "rank",
-                ) -> list[tuple[int, float]]:
+                stats: dict | None = None) -> list[tuple[int, float]]:
     """BM25 top-k over a SegmentIndex via block-max WAND.
 
     Returns [(doc_id, score)] — a driver-side result (the serving path);
@@ -148,6 +155,9 @@ def search_wand(index, query: str, k: int = 100,
     LRU-cached, so only the heap pass repeats). Exact at every cap where
     the bm25 kernel itself is exact; costs one small Spark lookup per
     query vs the prior-less warm path's zero.
+
+    ``stats`` (optional dict) receives ``truncated_terms``, as in
+    maxscore.search_maxscore.
     """
     if not hasattr(index, "mini_index"):
         raise TypeError(
@@ -211,6 +221,8 @@ def search_wand(index, query: str, k: int = 100,
     by_range: dict[int, list] = defaultdict(list)
     for blk in blocks:
         by_range[blk.block_id].append(blk)
+    if stats is not None:
+        stats["truncated_terms"] = truncated_terms(mini)
 
     def bm25_topk(capacity: int) -> list[tuple[int, float]]:
         """The block-max heap pass at a given heap capacity — exact bm25
@@ -237,7 +249,7 @@ def search_wand(index, query: str, k: int = 100,
             acc: dict[int, float] = defaultdict(float)
             for blk in grp:
                 if impact_store:
-                    docs, q = codec.decode_block_impact(bytes(blk.payload))
+                    docs, q = blk.impact()
                     if del_arr is not None:
                         live = ~np.isin(docs, del_arr)
                         if not live.all():
@@ -249,7 +261,7 @@ def search_wand(index, query: str, k: int = 100,
                     for d, s in zip(docs.tolist(), w.tolist()):
                         acc[d] += s
                     continue
-                docs, tfs, dls = codec.decode_block_full(bytes(blk.payload))
+                docs, tfs, dls = blk.full()
                 if dls is None:
                     raise ValueError(
                         "segment payloads carry no per-doc lengths (dl): "

@@ -33,6 +33,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import codec
 from ..functions.analyzer import AnalyzerConfig
 from ..operators import postings as P
 from ..operators import segments as SEG
@@ -470,6 +471,50 @@ def lineage_rows(index_dir: str) -> list[dict]:
     return out
 
 
+class MiniBlock:
+    """One posting block in the driver mini-index: the segment row's
+    metadata and payload bytes, plus the block's decoded arrays,
+    memoized on first use so a cached term is decoded once rather than
+    once per request. The arrays are read-only (every request shares
+    them; tombstone masking makes per-request copies) and are evicted
+    with the term's LRU entry. Decoded, a posting costs at most 24 B
+    (int64 doc, tf and dl) against ~4 B as varints. The memo is
+    idempotent: two threads racing on it decode the same arrays."""
+
+    __slots__ = ("term", "block_id", "block_max_tf", "n_docs", "payload",
+                 "_decoded")
+
+    def __init__(self, row):
+        self.term = row.term
+        self.block_id = row.block_id
+        self.block_max_tf = row.block_max_tf
+        self.n_docs = row.n_docs
+        self.payload = bytes(row.payload)
+        self._decoded = None
+
+    def _memo(self, decode):
+        if self._decoded is None:
+            arrays = []
+            for a in decode(self.payload):
+                if a is not None:
+                    if a.base is not None:
+                        # tf, dl and impact runs are views into the
+                        # whole decoded varint stream: own just the run
+                        a = a.copy()
+                    a.flags.writeable = False
+                arrays.append(a)
+            self._decoded = tuple(arrays)
+        return self._decoded
+
+    def full(self):
+        """codec.decode_block_full of the payload: (docs, tfs, dls|None)."""
+        return self._memo(codec.decode_block_full)
+
+    def impact(self):
+        """codec.decode_block_impact of the payload: (docs, impacts)."""
+        return self._memo(codec.decode_block_impact)
+
+
 class SegmentIndex(InvertedIndex):
     """InvertedIndex backed by on-disk segments: term lookups decode only
     the matching blocks (bucket partition pruning + term predicate
@@ -514,10 +559,11 @@ class SegmentIndex(InvertedIndex):
             return p
 
         self.segments = spark.read.parquet(os.path.join(index_dir, "segments"))
-        # Driver-side mini-index LRU: per-term (df, [blocks]) — the moral
-        # equivalent of the reference's startup word2byte dict plus
-        # byte-range posting loads warmed by the OS page cache
-        # (index_loader.py:71-128). A repeat term costs zero Spark jobs.
+        # Driver-side mini-index LRU: per-term (df, [MiniBlock], cap_used)
+        # — the moral equivalent of the reference's startup word2byte
+        # dict plus byte-range posting loads warmed by the OS page cache
+        # (index_loader.py:71-128). A repeat term costs zero Spark jobs
+        # and, once scored, zero block decodes.
         from collections import OrderedDict
         self._mini: OrderedDict[str, tuple[int, list]] = OrderedDict()
         self._mini_cap = max_cached_terms
@@ -812,9 +858,9 @@ class SegmentIndex(InvertedIndex):
 
     def mini_index(self, terms: list[str], cap: int | None = None,
                    ) -> dict[str, tuple[int, list]]:
-        """Serving-path point lookup: {term: (df, [Row(term, block_id,
-        block_max_tf, n_docs, payload)])} for in-vocabulary terms,
-        through the driver LRU. Misses cost exactly ONE pruned segment
+        """Serving-path point lookup: {term: (df, [MiniBlock(term,
+        block_id, block_max_tf, n_docs, payload)])} for in-vocabulary
+        terms, through the driver LRU. Misses cost exactly ONE pruned segment
         scan (df derives from the blocks' n_docs); hits cost zero Spark
         jobs.
 
@@ -859,7 +905,7 @@ class SegmentIndex(InvertedIndex):
                          "payload").collect()
                 fetched: dict[str, list] = {}
                 for r in rows:
-                    fetched.setdefault(r.term, []).append(r)
+                    fetched.setdefault(r.term, []).append(MiniBlock(r))
                 for t, blks in fetched.items():
                     self._mini[t] = (sum(b.n_docs for b in blks), blks, None)
             else:
@@ -880,7 +926,7 @@ class SegmentIndex(InvertedIndex):
                 if len(rows) < budget:
                     fetched = {}
                     for r in rows:
-                        fetched.setdefault(r.term, []).append(r)
+                        fetched.setdefault(r.term, []).append(MiniBlock(r))
                     for t, blks in fetched.items():
                         self._mini[t] = (sum(b.n_docs for b in blks),
                                          blks, None)
@@ -890,7 +936,7 @@ class SegmentIndex(InvertedIndex):
                     dfs, rows = _capped_blocks(self, missing, cap)
                     fetched = {}
                     for r in rows:
-                        fetched.setdefault(r.term, []).append(r)
+                        fetched.setdefault(r.term, []).append(MiniBlock(r))
                     for t, blks in fetched.items():
                         # a term that came back with FEWER than cap
                         # blocks was fetched complete (the ranked fetch

@@ -63,3 +63,25 @@ def oracle_index(corpus_docs):
     from tests import oracle
 
     return oracle.build_index(corpus_docs)
+
+
+@pytest.fixture(scope="session")
+def seg_index_dir(tmp_path_factory, spark, corpus_sdf):
+    """Durable index over the corpus with 16-doc blocks, so queries
+    cross many blocks and the serving kernels' pruning kicks in. Built
+    once per session; modules open it through ``seg_index``."""
+    from search_engine_spark.sources import catalog
+
+    d = str(tmp_path_factory.mktemp("segidx") / "index")
+    catalog.build_durable_index(spark, corpus_sdf, d, shards=4, buckets=16,
+                                block_span=16)
+    return d
+
+
+@pytest.fixture(scope="module")
+def seg_index(spark, seg_index_dir):
+    """A fresh handle on ``seg_index_dir`` per module: tests clear its
+    mini-index LRU, resize it and monkeypatch ``deleted_ids``."""
+    from search_engine_spark.sources import catalog
+
+    return catalog.load_index(spark, seg_index_dir)

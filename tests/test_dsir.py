@@ -86,6 +86,15 @@ def test_validation(spark):
         dsir.dsir_select(raw, target, k=0)
     with pytest.raises(ValueError, match="dim"):
         dsir.hashed_ngram_tf(raw, dim=0)
+    with pytest.raises(ValueError, match="MAX_DIM"):
+        dsir.hashed_ngram_tf(raw, dim=dsir.MAX_DIM + 1)
+    with pytest.raises(ValueError, match="MAX_DIM"):
+        dsir.fit_bucket_logprobs(dsir.hashed_ngram_tf(raw, dim=8),
+                                 dsir.MAX_DIM + 1)
+    wide = [0.0] * (dsir.MAX_DIM + 1)
+    with pytest.raises(ValueError, match="MAX_DIM"):
+        dsir.importance_weights(dsir.hashed_ngram_tf(raw, dim=8),
+                                wide, wide)
     with pytest.raises(ValueError, match="alpha"):
         dsir.fit_bucket_logprobs(dsir.hashed_ngram_tf(raw, dim=8), 8,
                                  alpha=0.0)
@@ -120,6 +129,16 @@ def test_curation_funnel_dsir_stage(spark):
 
     with pytest.raises(ValueError, match="dsir_keep"):
         curation.curate(raw, languages=None, dsir_target=target)
+
+
+def test_text_only_target(spark):
+    """A target frame with only text (no doc_id) selects exactly what
+    the same target with ids does."""
+    raw, target = _corpus(spark)
+    kw = dict(k=30, dim=256, salt="t")
+    want = dsir.dsir_select(raw, target, **kw).collect()
+    got = dsir.dsir_select(raw, target.select("text"), **kw).collect()
+    assert got == want and len(got) == 30
 
 
 def test_dim_mismatch_is_diagnosed(spark):

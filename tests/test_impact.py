@@ -185,6 +185,12 @@ def test_maxscore_impact_identity(indexes, q):
     assert stats["n_blocks_total"] > 0
 
 
+def test_maxscore_impact_golden(indexes):
+    from tests.test_maxscore import assert_golden
+
+    assert_golden(indexes[1], "impact")
+
+
 def test_impact_scores_within_bound_of_exact(indexes):
     src, quant = indexes
     q = "market price growth"

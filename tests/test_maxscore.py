@@ -3,12 +3,17 @@ the oracle (scores equal to float-accumulation tolerance), with real
 term-level decode savings — exactness despite pruning, the same
 contract test_wand.py pins for the range-level kernel."""
 
+import json
+import threading
+import urllib.request
+from pathlib import Path
+
 import pytest
 
+from search_engine_spark import codec
 from search_engine_spark.operators import maxscore as MS
 from search_engine_spark.operators import search as S
 from search_engine_spark.operators import wand
-from search_engine_spark.sources import catalog
 from tests import oracle
 from tests.test_wand import _fuzz_freetext
 
@@ -23,17 +28,39 @@ def _same_ranking(a, b, abs_tol=1e-9):
         assert x == pytest.approx(y, abs=abs_tol)
 
 
-@pytest.fixture(scope="module")
-def seg_index(tmp_path_factory, spark, corpus_sdf):
-    d = str(tmp_path_factory.mktemp("msidx") / "index")
-    # small block span so queries cross many blocks and pruning kicks in
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=4, buckets=16,
-                                block_span=16)
-    return catalog.load_index(spark, d)
-
-
 QUERIES = ["market", "market price growth", "germany economy china",
            "zzzqq", "connect bank report", "market market price"]
+
+# (doc, score) lists and pruning counters of search_maxscore, recorded
+# from the scalar kernel (per-doc dict accumulator + heapq top-k) that
+# the vectorized one replaced, on this module's index ("tf") and on
+# test_impact's quantized store ("impact"). Regenerate — json.dump of
+# golden_entries(index) per store — only for an intended scoring change.
+GOLDEN = Path(__file__).parent / "fixtures" / "maxscore_golden.json"
+GOLDEN_K = (1, 3, 15, 1 << 30)
+GOLDEN_STATS = ("n_blocks_total", "n_blocks_decoded", "n_ranges_skipped")
+
+
+def golden_entries(index) -> dict:
+    out = {}
+    for q in QUERIES + _fuzz_freetext():
+        for k in GOLDEN_K:
+            stats = {}
+            hits = MS.search_maxscore(index, q, k=k, stats=stats)
+            out[f"{k}|{q}"] = {
+                "hits": [[d, s] for d, s in hits],
+                "stats": {x: stats[x] for x in GOLDEN_STATS if x in stats}}
+    return out
+
+
+def assert_golden(index, store: str) -> None:
+    """Bit-for-bit: ``==`` on every score, not approx."""
+    with open(GOLDEN) as f:
+        want = json.load(f)[store]
+    got = golden_entries(index)
+    assert got.keys() == want.keys()
+    for key, entry in want.items():
+        assert got[key] == entry, (store, key)
 
 
 @pytest.mark.parametrize("q", QUERIES)
@@ -144,3 +171,104 @@ def test_maxscore_prior_matches_wand(spark, seg_index, q):
     ms = MS.search_maxscore(seg_index, q, k=10, prior=prior, prior_lam=0.4)
     wd = wand.search_wand(seg_index, q, k=10, prior=prior, prior_lam=0.4)
     _same_ranking(ms, wd)
+
+
+def test_maxscore_golden(seg_index):
+    assert_golden(seg_index, "tf")
+
+
+def test_warm_repeat_query_decodes_nothing(seg_index, monkeypatch):
+    """The mini-index LRU keeps each block's decoded arrays: once a
+    query has scored every block, repeating it (on either kernel)
+    decodes nothing."""
+    calls = []
+    decode = codec.decode_block_full
+
+    def counting(payload):
+        calls.append(1)
+        return decode(payload)
+
+    monkeypatch.setattr(codec, "decode_block_full", counting)
+    q = "market price growth"
+    seg_index._mini.clear()
+    cold = MS.search_maxscore(seg_index, q, k=1 << 30)
+    assert calls  # the cold query decoded through the patched codec
+    calls.clear()
+    assert MS.search_maxscore(seg_index, q, k=1 << 30) == cold
+    MS.search_maxscore(seg_index, q, k=5)
+    wand.search_wand(seg_index, q, k=5)
+    assert calls == []
+
+
+def test_deletes_after_warm_cache_are_masked(seg_index, monkeypatch):
+    """Tombstones that appear after the blocks were decoded and cached
+    are still masked per request, by both kernels — including a block
+    whose every posting is deleted — and masking never alters the
+    cached arrays."""
+    q = "market price"
+    full = MS.search_maxscore(seg_index, q, k=1 << 30)  # warms every block
+    top = full[0][0]
+    dead = set(range(top // 16 * 16, top // 16 * 16 + 16)) | {full[1][0]}
+    monkeypatch.setattr(type(seg_index), "deleted_ids",
+                        lambda self: frozenset(dead), raising=False)
+    live = [(d, s) for d, s in full if d not in dead]
+    assert len(live) < len(full)
+    assert MS.search_maxscore(seg_index, q, k=1 << 30) == live
+    _same_ranking(wand.search_wand(seg_index, q, k=1 << 30), live)
+    for kernel in (MS.search_maxscore, wand.search_wand):
+        _same_ranking(kernel(seg_index, q, k=5), live[:5])
+    dead.clear()
+    assert MS.search_maxscore(seg_index, q, k=1 << 30) == full
+
+
+def test_capped_fetch_reports_truncated_terms(seg_index):
+    """A term cut short by the fetch cap (Σ n_docs of its blocks < df)
+    is reported; truncation only lowers scores."""
+    q = "market price growth"
+    exact = dict(MS.search_maxscore(seg_index, q, k=1 << 30,
+                                    max_blocks_per_term=None))
+    stats: dict = {}
+    approx = MS.search_maxscore(seg_index, q, k=20, max_blocks_per_term=1,
+                                stats=stats)
+    assert stats["truncated_terms"] == ["growth", "market", "price"]
+    assert approx
+    for d, s in approx:
+        assert s <= exact[d]
+    wstats: dict = {}
+    wand.search_wand(seg_index, q, k=20, max_blocks_per_term=1,
+                     stats=wstats)
+    assert wstats["truncated_terms"] == stats["truncated_terms"]
+    MS.search_maxscore(seg_index, q, k=20, stats=stats)
+    assert stats["truncated_terms"] == []
+    seg_index._mini.clear()
+
+
+def test_results_says_when_capped(seg_index, monkeypatch):
+    """/results discloses a capped answer: ``exact: false`` plus the
+    truncated terms, every score at most its exact score."""
+    from jobs.serve import create_server
+
+    q = "market price growth"
+    exact = dict(MS.search_maxscore(seg_index, q, k=1 << 30,
+                                    max_blocks_per_term=None))
+    srv = create_server(seg_index, port=0)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    url = (f"http://127.0.0.1:{srv.server_address[1]}/results?"
+           f"query={q.replace(' ', '+')}&k=20")
+    try:
+        with urllib.request.urlopen(url, timeout=120) as r:
+            body = json.loads(r.read())
+        assert body["path"] == "maxscore" and body["exact"] is True
+        assert "truncated_terms" not in body
+        monkeypatch.setattr(MS, "WAND_AUTO_CAP", 1)
+        with urllib.request.urlopen(url, timeout=120) as r:
+            body = json.loads(r.read())
+    finally:
+        srv.shutdown()
+        srv.server_close()
+        seg_index._mini.clear()
+    assert body["path"] == "maxscore" and body["exact"] is False
+    assert body["truncated_terms"] == ["growth", "market", "price"]
+    assert body["results"]
+    for r in body["results"]:
+        assert r["score"] <= exact[r["doc_id"]]

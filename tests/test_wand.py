@@ -9,15 +9,6 @@ from search_engine_spark.sources import catalog
 from tests import oracle
 
 
-@pytest.fixture(scope="module")
-def seg_index(tmp_path_factory, spark, corpus_sdf):
-    d = str(tmp_path_factory.mktemp("wandidx") / "index")
-    # small block span so queries cross many blocks and pruning kicks in
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=4, buckets=16,
-                                block_span=16)
-    return catalog.load_index(spark, d)
-
-
 QUERIES = ["market", "market price growth", "germany economy china",
            "zzzqq", "connect bank report", "market market price"]
 
