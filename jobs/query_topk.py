@@ -11,7 +11,10 @@ spark-submit --py-files dist/engine.zip jobs/query_topk.py \
 
 Prints one JSON line per hit: {"rank", "doc_id", "score"}.
 --wand uses the Block-Max WAND kernel (BM25 only); default is the
-distributed relational path through the unified executor.
+distributed relational path through the unified executor. When a
+kernel's fetch cap (wand.WAND_AUTO_CAP blocks per term) cut a query
+term short, the answer is approximate and stderr carries one JSON line
+{"exact": false, "truncated_terms": [...]}; stdout stays the hits.
 """
 
 from __future__ import annotations
@@ -200,15 +203,22 @@ def main() -> None:
         # prior blends on the WAND path too (round-4 parity): the kernel
         # pays one bounded Spark lookup per query for candidate priors
         prior = spark.read.parquet(args.prior) if args.prior else None
+        kstats: dict = {}
         if kernel == "maxscore":
             from search_engine_spark.operators import maxscore as MS
 
             hits = MS.search_maxscore(idx, query, k=args.k,
                                       prior=prior,
-                                      prior_lam=args.prior_lam)
+                                      prior_lam=args.prior_lam,
+                                      stats=kstats)
         else:
             hits = wand.search_wand(idx, query, k=args.k,
-                                    prior=prior, prior_lam=args.prior_lam)
+                                    prior=prior, prior_lam=args.prior_lam,
+                                    stats=kstats)
+        if kstats.get("truncated_terms"):
+            print(json.dumps({"exact": False,
+                              "truncated_terms": kstats["truncated_terms"]}),
+                  file=sys.stderr)
     else:
         prior = spark.read.parquet(args.prior) if args.prior else None
         df = executor.execute(

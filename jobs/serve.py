@@ -68,10 +68,14 @@ Endpoint parity (reference search/retrieval/urls.py:8-11, views.py):
                                                    ANN artifact.
     GET /stats                                   → index statistics
                                                    (n_docs, total_tokens,
-                                                   avgdl, n_terms; the
-                                                   vocabulary count is
-                                                   memoized after one
-                                                   job)
+                                                   avgdl, n_terms, and on
+                                                   a durable index the
+                                                   mini-index LRU's
+                                                   cumulative hits,
+                                                   misses, blocks fetched
+                                                   and fetch seconds;
+                                                   zero Spark jobs on a
+                                                   durable index)
     GET /explain_plan?query=...[&model=...]      → plan-choice explain
                                                    (plans.explain): kind,
                                                    eligible kernels,
@@ -101,24 +105,28 @@ retrieval_time, term_been_corrected, corrected_query, original_query.
 DEFAULT ROUTING (round-5): with no kernel/wand parameter, an eligible
 request — plain bag-of-words BM25 free text, no date filter or other
 relational-only feature, a durable segment index loaded — serves from
-the Block-Max MaxScore kernel + driver mini-index LRU (repeat-term
-queries answer in ~15 ms with zero Spark jobs — serving-grade latency;
+the Block-Max MaxScore kernel + driver mini-index LRU. Opening the index
+is lazy (catalog.SegmentIndex reads only its JSON manifests), an LRU
+miss is a capped driver-side Arrow read of the segment files, and the
+spellcheck vocabulary streams term_stats through Arrow, so the kernel
+path runs no Spark job from start-up on (serving-grade latency;
 rank-identical to the relational path by the wand_bm25_identity /
-maxscore_bm25_identity gates). Ineligible requests FALL BACK to the
-relational path silently; the response's ``path`` key says which path
-served. On a quantized-IMPACT store the default serves the store's
-QUANTIZED scores — that is the artifact's serving contract (you
-deployed a ~1 byte/posting store to be served from the impact byte;
-per-doc error is bounded by the quantizer, test_impact's accuracy
-gate) — while ``wand=0`` still forces the exact relational sidecar
-path, so the two defaults differ on impact stores BY DESIGN and the
-``path`` key discloses it. A term with more postings blocks than the
-kernel's fetch cap (wand.WAND_AUTO_CAP) is scored from its
-highest-bound blocks only; the response then carries ``"exact": false``
-and the ``truncated_terms`` (``"exact": true`` otherwise).
-``kernel=wand|maxscore`` (or ``wand=1``) forces a kernel and
-keeps the old refusal semantics (400 on date filters etc. — same
-reason jobs/query_topk.py rejects the combination); ``wand=0`` (or
+maxscore_bm25_identity gates). The driver must see ``--index``. The
+first relational request pays to open the tables it reads. Ineligible
+requests FALL BACK to the relational path silently; the response's
+``path`` key says which path served. On a quantized-IMPACT store the
+default serves the store's QUANTIZED scores — that is the artifact's
+serving contract (you deployed a ~1 byte/posting store to be served from
+the impact byte; per-doc error is bounded by the quantizer,
+test_impact's accuracy gate) — while ``wand=0`` still forces the exact
+relational sidecar path, so the two defaults differ on impact stores BY
+DESIGN and the ``path`` key discloses it. A term with more postings
+blocks than the kernel's fetch cap (wand.WAND_AUTO_CAP) is scored from
+its highest-bound blocks only; the response then carries ``"exact":
+false`` and the ``truncated_terms`` (``"exact": true`` otherwise).
+``kernel=wand|maxscore`` (or ``wand=1``) forces a kernel and keeps the
+old refusal semantics (400 on date filters etc. — same reason
+jobs/query_topk.py rejects the combination); ``wand=0`` (or
 ``kernel=relational``) forces the relational path.
 
 A single lock serializes query execution: one Spark driver serves the
@@ -514,7 +522,7 @@ def create_server(index, port: int = 0, spellchecker=None,
         return {k: (v.isoformat() if hasattr(v, "isoformat") else v)
                 for k, v in rows[0].asDict().items()}
 
-    # memo for /stats derived scalars (one count job, then free)
+    # memo for /stats derived scalars (read once, then free)
     stats_memo: dict = {}
 
     def render_web(query: str | None, k: int, ds, de,
@@ -646,21 +654,27 @@ def create_server(index, port: int = 0, spellchecker=None,
                                      "models": list(_MODELS)})
                 elif parts[0] == "stats":
                     # index statistics (the _cat/indices analog): corpus
-                    # scalars are already broadcast on the handle;
-                    # vocabulary size is ONE count job, memoized so
-                    # monitoring pollers cost zero Spark work after the
-                    # first hit (the index handle is immutable — deletes
-                    # load a new handle)
+                    # scalars are already on the handle; vocabulary size
+                    # is memoized (the index handle is immutable —
+                    # deletes load a new handle): parquet footers on a
+                    # durable index, ONE count job on an in-memory one
                     if "n_terms" not in stats_memo:
                         with lock:
-                            stats_memo["n_terms"] = index.term_stats.count()
-                    self._json(200, {
+                            stats_memo["n_terms"] = (
+                                index.vocabulary_size()
+                                if hasattr(index, "vocabulary_size")
+                                else index.term_stats.count())
+                    body = {
                         "n_docs": index.stats["n_docs"],
                         "total_tokens": int(index.stats["total_len"]),
                         "avgdl": float(index.stats["avgdl"]),
                         "n_terms": int(stats_memo["n_terms"]),
                         "documents_loaded": index.documents is not None,
-                    })
+                    }
+                    if hasattr(index, "mini_counters"):
+                        with lock:
+                            body["mini_index"] = dict(index.mini_counters)
+                    self._json(200, body)
                 elif parts[0] == "results":
                     q = parse_qs(u.query)
                     query = q.get("query", [None])[0]

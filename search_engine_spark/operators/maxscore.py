@@ -67,7 +67,7 @@ def search_maxscore(index, query: str, k: int = 100,
     ("auto" = wand.WAND_AUTO_CAP; capped terms make results a documented
     safe approximation exactly as in WAND — dropped blocks only LOWER
     scores). Shares the mini-index LRU with WAND, so alternating kernels
-    on one query launches no extra Spark jobs.
+    on one query fetches nothing twice.
 
     ``stats`` (optional dict) receives ``n_blocks_total``,
     ``n_blocks_decoded`` (blocks scored) and ``n_ranges_skipped`` — the
@@ -75,7 +75,8 @@ def search_maxscore(index, query: str, k: int = 100,
     (counters are for the LAST top-k pass when prior blending deepens
     iteratively) — and ``truncated_terms``: the query terms the fetch
     cap cut short (wand.truncated_terms); empty means the answer is
-    exact.
+    exact — and ``mini_hits`` / ``mini_misses``: the query terms the
+    mini-index LRU served and the ones it fetched.
 
     ``prior`` blends a static document prior exactly as in search_wand
     (same iterative-deepening wrapper, wand._blend_prior_topk, so the
@@ -123,7 +124,7 @@ def search_maxscore(index, query: str, k: int = 100,
                if deleted else None)
     cap = (WAND_AUTO_CAP if max_blocks_per_term == "auto"
            else max_blocks_per_term)
-    mini = index.mini_index(terms, cap=cap)
+    mini = index.mini_index(terms, cap=cap, stats=stats)
     dfs = {t: df for t, (df, _) in mini.items()}
     if not dfs:
         return []

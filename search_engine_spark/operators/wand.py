@@ -2,9 +2,10 @@
 
 The reference loads a per-query "mini index" via byte-range reads
 (index_loader.py:71-128) and scores it in Python loops. Here, the mini
-index is the set of segment BLOCKS of the query terms — fetched through a
-bucket/term-pruned columnar scan (pos_payload never read: column pruning)
-— and scored with Block-Max pruning:
+index is the set of segment BLOCKS of the query terms — fetched by a
+driver-side Arrow read of the segment files, pruned on bucket
+partitions and term min/max (pos_payload never read: column pruning;
+catalog.SegmentIndex.mini_index) — and scored with Block-Max pruning:
 
 * blocks are doc-partitioned (block_id = doc_id // span), so all terms'
   blocks with the same block_id cover the same doc range and a doc's final
@@ -39,41 +40,6 @@ from pyspark.sql import functions as F
 
 from ..functions.analyzer import analyze_query
 from . import segments as SEG
-
-
-def _capped_blocks(index, terms: list[str], cap: int):
-    """Impact-ordered capped fetch: (dfs, blocks) with ≤ cap blocks per
-    term shipped to the driver.
-
-    Phase 1 scans block METADATA only (column pruning keeps payload
-    bytes out of the scan): a per-term window ranks blocks by
-    block_max_tf — the BM25 upper bound is monotone in block_max_tf for
-    a fixed term, so top-N by max_tf IS top-N by ub — and a window sum
-    of n_docs yields the term's exact df (blocks are doc-disjoint).
-    Phase 2 fetches payloads for the winning (term, block_id) set via a
-    broadcast semi-join on the same pruned scan."""
-    from pyspark.sql.window import Window
-
-    pred = (F.col("bucket").isin(index._buckets_for(terms))
-            & F.col("term").isin(terms))
-    meta = index.segments.filter(pred).select(
-        "term", "block_id", "block_max_tf", "n_docs")
-    ranked = (
-        meta.withColumn("df", F.sum("n_docs").over(Window.partitionBy("term")))
-        .withColumn("rn", F.row_number().over(
-            Window.partitionBy("term")
-            .orderBy(F.desc("block_max_tf"), F.asc("block_id"))))
-        .filter(F.col("rn") <= cap)
-        .select("term", "block_id", "df")
-    )
-    rows = (
-        index.segments.filter(pred)
-        .join(F.broadcast(ranked), ["term", "block_id"])
-        .select("term", "block_id", "block_max_tf", "n_docs", "payload", "df")
-        .collect()
-    )
-    dfs = {r.term: int(r.df) for r in rows}
-    return dfs, rows
 
 
 # Default per-term driver-fetch bound (blocks). At the default build
@@ -119,22 +85,22 @@ def search_wand(index, query: str, k: int = 100,
 
     ``max_blocks_per_term`` bounds the impact-ordered fetch for
     stopword-scale terms at web scale: each term keeps only its
-    highest-upper-bound blocks (ub from block_max_tf). The cap is pushed
-    INTO the Spark plan — a metadata scan (no payload bytes) ranks
-    blocks per term and an exact df rides along; only the winners'
-    payloads are fetched — so driver transfer is bounded even for a
-    10^12-doc head term. Blocks actually dropped make results
-    approximate (documented safe-approximation: dropped blocks can only
-    LOWER a doc's score, never raise it).
+    highest-upper-bound blocks (ub from block_max_tf). The cap applies
+    inside the fetch — a metadata read (no payload bytes) ranks blocks
+    per term and yields the exact df; only the winners' payloads are
+    read — so driver transfer is bounded even for a 10^12-doc head
+    term. Blocks actually dropped make results approximate (documented
+    safe-approximation: dropped blocks can only LOWER a doc's score,
+    never raise it).
 
     The DEFAULT is ``"auto"`` = WAND_AUTO_CAP (the uncapped fetch would
     ship every block of every query term to the driver — a scale hazard
     that used to be the default); terms under the cap are untouched, so
     typical queries remain exact. ``None`` opts into the exact uncapped
     fetch; an int sets an explicit cap. All paths go through the driver
-    mini-index LRU, so a repeat-term query launches ZERO Spark jobs
-    (the reference's per-query mini-index byte loads,
-    index_loader.py:71-128).
+    mini-index LRU, and its misses are driver-side Arrow reads, so a
+    query launches ZERO Spark jobs (the reference's per-query
+    mini-index byte loads, index_loader.py:71-128).
 
     Requires a SegmentIndex (the durable, block-encoded form): the
     relational ``operators.search`` path is the equivalent for in-memory
@@ -156,8 +122,8 @@ def search_wand(index, query: str, k: int = 100,
     the bm25 kernel itself is exact; costs one small Spark lookup per
     query vs the prior-less warm path's zero.
 
-    ``stats`` (optional dict) receives ``truncated_terms``, as in
-    maxscore.search_maxscore.
+    ``stats`` (optional dict) receives ``truncated_terms``,
+    ``mini_hits`` and ``mini_misses``, as in maxscore.search_maxscore.
     """
     if not hasattr(index, "mini_index"):
         raise TypeError(
@@ -208,7 +174,7 @@ def search_wand(index, query: str, k: int = 100,
                if deleted else None)
     cap = (WAND_AUTO_CAP if max_blocks_per_term == "auto"
            else max_blocks_per_term)
-    mini = index.mini_index(terms, cap=cap)
+    mini = index.mini_index(terms, cap=cap, stats=stats)
     dfs = {t: df for t, (df, _) in mini.items()}
     blocks = [blk for _, blks in mini.values() for blk in blks]
     if not dfs:
@@ -313,7 +279,7 @@ def _blend_prior_topk(index, bm25_topk, k: int, prior, lam: float,
     query has been blended)."""
     import math
 
-    spark = index.segments.sparkSession
+    spark = index.spark
     p_max = getattr(prior, "_wand_prior_max", None)
     if p_max is None:
         p_max = prior.agg(F.max(F.col(prior_col))).collect()[0][0]

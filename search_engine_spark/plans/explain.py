@@ -89,13 +89,13 @@ def explain_plan(index, query: str, model: str = "bm25") -> dict[str, Any]:
             # two words: one tf-only bigram lookup; three+: the W&Z §4
             # chain needs EVERY consecutive pair covered positionally
             fast = False
-            if slop == 0 and hasattr(index, "bigram_lookup"):
+            if slop == 0 and hasattr(index, "bigram_covered"):
                 if len(ph) == 2:
-                    fast = index.bigram_lookup(ph[0], ph[1]) is not None
+                    fast = index.bigram_covered(ph[0], ph[1])
                 elif len(ph) >= 3:
                     fast = all(
-                        index.bigram_lookup(a, b, positional=True)
-                        is not None for a, b in zip(ph, ph[1:]))
+                        index.bigram_covered(a, b, positional=True)
+                        for a, b in zip(ph, ph[1:]))
             engaged.append({"phrase": ph, "slop": slop,
                             "next_word_index": bool(fast)})
         artifacts["phrases"] = engaged
@@ -111,8 +111,7 @@ def explain_plan(index, query: str, model: str = "bm25") -> dict[str, Any]:
             anchor = wildcard_anchor(p)
             grams = _pattern_trigrams(p) if not anchor else []
             bounded = (not anchor and grams
-                       and hasattr(index, "trigram_candidates")
-                       and getattr(index, "_term_trigrams", None)
+                       and getattr(index, "_trigram_dir", None)
                        is not None)
             per.append({
                 "pattern": p,

@@ -61,6 +61,37 @@ def _osa_distance(a: str, b: str, cap: int) -> int:
     return prev[lb]
 
 
+#: rows per Arrow batch when ``top_df_terms`` streams term_stats
+VOCAB_BATCH_ROWS = 65_536
+
+
+def top_df_terms(path: str, max_terms: int) -> dict[str, int]:
+    """{term: df} of the ``max_terms`` highest-df terms of the term_stats
+    parquet at ``path``, ties broken by term — the order of Spark's
+    ``orderBy(desc("df"), asc("term")).limit(max_terms)``. Streams the
+    files in Arrow batches and keeps a running top-k, so it holds at
+    most ``max_terms`` rows plus one batch."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    order = [("df", "descending"), ("term", "ascending")]
+    top = None
+    for batch in pads.dataset(path, format="parquet").to_batches(
+            columns=["term", "df"], batch_size=VOCAB_BATCH_ROWS):
+        rows = pa.Table.from_batches([batch])
+        if top is not None:
+            if 0 < max_terms <= top.num_rows:
+                # only rows that can tie or beat the current k-th stay
+                rows = rows.filter(pc.greater_equal(
+                    rows["df"], top["df"][top.num_rows - 1]))
+            rows = pa.concat_tables([top, rows])
+        top = rows.take(pc.sort_indices(rows, sort_keys=order)[:max_terms])
+    if top is None:
+        return {}
+    return dict(zip(top["term"].to_pylist(), top["df"].to_pylist()))
+
+
 class VocabularySpellchecker:
     """Edit-distance corrector over the index vocabulary.
 
@@ -90,14 +121,23 @@ class VocabularySpellchecker:
         """Build from an InvertedIndex's term_stats (driver-side broadcast
         dictionary — the reference loads its whole spell dictionary at
         startup the same way). When the vocabulary exceeds ``max_terms``
-        the HIGHEST-df terms are kept (a bare limit() would select a
-        nondeterministic, partition-order-dependent subset at scale).
+        the HIGHEST-df terms are kept, ties broken by term (a bare
+        limit() would select a nondeterministic, partition-order-
+        dependent subset at scale).
+
+        A durable index's term_stats files stream through an Arrow top-k
+        on the driver (``top_df_terms``), with no Spark job; an in-memory
+        index has no files and takes the same cut with a Spark
+        TakeOrdered.
 
         The default caps the delete-index build cost (~37 forms/word →
         a few seconds and ~hundreds of MB at 100k; 500k would be a
         multi-GB, minutes-long startup). Misspellings correct toward
         frequent words anyway — frequency-pruned dictionaries are the
         standard SymSpell deployment shape."""
+        if hasattr(index, "table_path"):
+            return cls(top_df_terms(index.table_path("term_stats"),
+                                    max_terms))
         from pyspark.sql import functions as F
 
         rows = (index.term_stats

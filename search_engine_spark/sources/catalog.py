@@ -29,6 +29,7 @@ import json
 import math
 import os
 import time
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,12 +76,26 @@ def _manifest_path(index_dir: str, step: str) -> str:
     return os.path.join(index_dir, "manifest", f"{step}.json")
 
 
+def _write_json(path: str, obj: dict) -> None:
+    """Commit a JSON file atomically: write a sibling temp file, then
+    ``os.replace`` it over ``path``. A reader (a lazily opened handle
+    reads these from the driver at any time) sees the previous file or
+    the new one, never half of one; a failed write leaves no temp."""
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+
+
 def _record(index_dir: str, step: str, **info) -> None:
     os.makedirs(os.path.join(index_dir, "manifest"), exist_ok=True)
-    tmp = _manifest_path(index_dir, step) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"step": step, "ts": time.time(), **info}, f)
-    os.replace(tmp, _manifest_path(index_dir, step))  # atomic commit
+    _write_json(_manifest_path(index_dir, step),
+                {"step": step, "ts": time.time(), **info})
 
 
 def _done(index_dir: str, step: str) -> bool:
@@ -223,8 +238,7 @@ def build_durable_index(
                          "remove_stopwords": conf.remove_stopwords,
                          "stem": conf.stem},
         }
-        with open(os.path.join(index_dir, "stats.json"), "w") as f:
-            json.dump(stats, f)
+        _write_json(os.path.join(index_dir, "stats.json"), stats)
         _record(index_dir, "stats")
 
     def _build_term_stats() -> None:
@@ -484,12 +498,13 @@ class MiniBlock:
     __slots__ = ("term", "block_id", "block_max_tf", "n_docs", "payload",
                  "_decoded")
 
-    def __init__(self, row):
-        self.term = row.term
-        self.block_id = row.block_id
-        self.block_max_tf = row.block_max_tf
-        self.n_docs = row.n_docs
-        self.payload = bytes(row.payload)
+    def __init__(self, term: str, block_id: int, block_max_tf: int,
+                 n_docs: int, payload: bytes):
+        self.term = term
+        self.block_id = block_id
+        self.block_max_tf = block_max_tf
+        self.n_docs = n_docs
+        self.payload = payload
         self._decoded = None
 
     def _memo(self, decode):
@@ -515,11 +530,41 @@ class MiniBlock:
         return self._memo(codec.decode_block_impact)
 
 
+#: segment columns a mini-index miss ships to the driver, in
+#: ``MiniBlock`` constructor order (``pos_payload`` is never read)
+_MINI_COLUMNS = ("term", "block_id", "block_max_tf", "n_docs", "payload")
+
+
+def _read_doc_ids(paths: list[str], limit: int) -> frozenset[int]:
+    """Distinct ``doc_id`` values of the parquet dirs at ``paths``, read
+    on the driver through Arrow. Stops once ``limit`` distinct ids are
+    held, so it holds at most ``limit`` ids plus one Arrow batch."""
+    import pyarrow.dataset as pads
+
+    ids: set[int] = set()
+    for p in paths:
+        for batch in pads.dataset(p, format="parquet").to_batches(
+                columns=["doc_id"]):
+            ids.update(batch.column(0).to_pylist())
+            if len(ids) >= limit:
+                return frozenset(ids)
+    return frozenset(ids)
+
+
 class SegmentIndex(InvertedIndex):
     """InvertedIndex backed by on-disk segments: term lookups decode only
     the matching blocks (bucket partition pruning + term predicate
     pushdown — the columnar replacement for the reference's word2byte
-    byte-range reads, index_loader.py:71-128)."""
+    byte-range reads, index_loader.py:71-128).
+
+    Opening is lazy. The constructor reads only the JSON manifests
+    (stats.json, manifest/, the phrase and ANN metadata) on the driver;
+    each Spark frame — segments, postings, doc_stats, term_stats, VSM
+    norms, the phrase and trigram tables, tombstones — is created on
+    first use. The serving kernels read segments and tombstones through
+    Arrow on the driver (``mini_index``, ``deleted_ids``), so a handle
+    that only serves them never starts a Spark job. The driver must see
+    ``index_dir``, as it must to read the manifests."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  documents: DataFrame | None = None,
@@ -528,11 +573,14 @@ class SegmentIndex(InvertedIndex):
         with open(os.path.join(index_dir, "stats.json")) as f:
             meta = json.load(f)
         a = meta["analyzer"]
-        conf = AnalyzerConfig(lowercase=a["lowercase"],
-                              remove_stopwords=a["remove_stopwords"],
-                              stem=a["stem"])
+        self.spark = spark
         self.index_dir = index_dir
         self.meta = meta
+        self.stats = {k: meta[k] for k in ("n_docs", "total_len", "avgdl")}
+        self.documents = documents
+        self.analyzer = AnalyzerConfig(lowercase=a["lowercase"],
+                                       remove_stopwords=a["remove_stopwords"],
+                                       stem=a["stem"])
         # quantized-impact artifacts (quantize_index) carry only their
         # re-coded segments + stats.json; score-free side tables
         # (postings_stage, doc_stats, term_stats, vsm_norms, tombstones)
@@ -551,91 +599,139 @@ class SegmentIndex(InvertedIndex):
                 "from the current source index (jobs/quantize_index.py) "
                 "— impact artifacts bake their source's stats and share "
                 "its side tables, so they cannot outlive it.")
+        self._sidecar = sidecar
 
-        def _art(name: str) -> str:
-            p = os.path.join(index_dir, name)
-            if sidecar and not os.path.isdir(p):
-                return os.path.join(sidecar, name)
-            return p
+        def committed(step: str) -> str | None:
+            # the index's own artifact, else the sidecar's; gated on the
+            # MANIFEST entry, not directory existence: a build killed
+            # mid-write leaves a partial parquet dir that must not load
+            return next((d for d in (index_dir, sidecar)
+                         if d and _done(d, step)), None)
 
-        self.segments = spark.read.parquet(os.path.join(index_dir, "segments"))
         # Driver-side mini-index LRU: per-term (df, [MiniBlock], cap_used)
         # — the moral equivalent of the reference's startup word2byte
         # dict plus byte-range posting loads warmed by the OS page cache
-        # (index_loader.py:71-128). A repeat term costs zero Spark jobs
-        # and, once scored, zero block decodes.
+        # (index_loader.py:71-128). A repeat term costs zero reads and,
+        # once scored, zero block decodes.
         from collections import OrderedDict
         self._mini: OrderedDict[str, tuple[int, list]] = OrderedDict()
         self._mini_cap = max_cached_terms
-        super().__init__(
-            postings=spark.read.parquet(_art("postings_stage")),
-            doc_stats=spark.read.parquet(_art("doc_stats")),
-            term_stats=spark.read.parquet(_art("term_stats")),
-            stats={k: meta[k] for k in ("n_docs", "total_len", "avgdl")},
-            documents=documents,
-            analyzer=conf,
-        )
-        # gate on the MANIFEST entry, not directory existence: a build
-        # killed mid-write leaves a partial/unreadable parquet dir whose
-        # silent load would drop docs from VSM rankings (or fail the
-        # whole index open). Indexes built before the artifact existed
-        # (or interrupted before its commit) fall back to lazy compute.
-        if _done(index_dir, "vsm_norms"):
-            self._vsm_norms = spark.read.parquet(
-                os.path.join(index_dir, "vsm_norms"))
-        elif sidecar and _done(sidecar, "vsm_norms"):
-            self._vsm_norms = spark.read.parquet(
-                os.path.join(sidecar, "vsm_norms"))
-        # next-word phrase index (build_phrase_index): committed-manifest
-        # gated like vsm_norms; quantized artifacts share the source's
-        # via the sidecar. Coverage decides DRIVER-SIDE from the stored
-        # common-term list — no Spark job to test a pair.
+        self._segment_files = None
+        #: cumulative mini-index traffic of this handle: term lookups
+        #: served from the LRU (hits) or fetched (misses), payload blocks
+        #: shipped and seconds spent in fetches
+        self.mini_counters = {"hits": 0, "misses": 0, "blocks_fetched": 0,
+                              "fetch_s": 0.0}
+        # VSM norms are a build artifact; indexes built before it existed
+        # (or interrupted before its commit) fall back to lazy compute
+        self._vsm_dir = committed("vsm_norms")
+        # next-word phrase index (build_phrase_index): coverage decides
+        # DRIVER-SIDE from the stored common-term list — no Spark job to
+        # test a pair
         self._phrase_common: frozenset[str] = frozenset()
         self._phrase_meta: dict = {}
-        self._phrase_segments = None
-        pdir = next((d for d in (index_dir, sidecar)
-                     if d and _done(d, "phrase_index")), None)
-        if pdir:
-            with open(os.path.join(pdir, PHRASE_INDEX_META)) as f:
+        self._phrase_dir = committed("phrase_index")
+        if self._phrase_dir:
+            with open(os.path.join(self._phrase_dir, PHRASE_INDEX_META)) as f:
                 self._phrase_meta = json.load(f)
             self._phrase_common = frozenset(self._phrase_meta["terms"])
-            self._phrase_segments = spark.read.parquet(
-                os.path.join(pdir, "phrase_segments"))
         # character-trigram vocabulary index (build_term_ngram_index):
         # bounds leading-wildcard / infix pattern expansion
-        self._term_trigrams = None
-        tdir = next((d for d in (index_dir, sidecar)
-                     if d and _done(d, "term_ngram_index")), None)
-        if tdir:
-            self._term_trigrams = spark.read.parquet(
-                os.path.join(tdir, "term_trigrams"))
+        self._trigram_dir = committed("term_ngram_index")
         # compressed-ANN artifact (build_ann_index): IVF centroids + PQ
         # codebooks restore lazily (driver-sized collects on first use);
         # the cell-partitioned coded table reads like any side table
         self._ann_meta: dict | None = None
-        self._ann_dir: str | None = None
         self._ann_centroids = None
         self._ann_codebooks = None
-        adir = next((d for d in (index_dir, sidecar)
-                     if d and _done(d, "ann_index")), None)
-        if adir:
-            with open(os.path.join(adir, ANN_INDEX_META)) as f:
+        self._ann_dir = committed("ann_index")
+        if self._ann_dir:
+            with open(os.path.join(self._ann_dir, ANN_INDEX_META)) as f:
                 self._ann_meta = json.load(f)
-            self._ann_dir = adir
         # Lucene-style live-docs: committed tombstone batches exclude
         # deleted docs from every query path NOW; postings vacuum (and
-        # stats refresh) happens at merge_indexes. None when no deletes.
-        # as_of_batch time-travels the delete state (batches are
-        # immutable, so every past snapshot stays readable): -1 reads
+        # stats refresh) happens at merge_indexes. No paths when no
+        # deletes. as_of_batch time-travels the delete state (batches
+        # are immutable, so every past snapshot stays readable): -1 reads
         # the pre-delete index, N applies batches 0..N, None is live.
+        # The batch list is fixed at open, so the relational paths and
+        # the kernels see the same deletes however late each first reads.
         self.as_of_batch = as_of_batch
         # a quantized artifact inherits its SOURCE's tombstones (deletes
         # committed against the source after quantization apply here
         # too) unless it has committed batches of its own
         tomb_dir = (sidecar if sidecar and not _tombstone_batches(index_dir)
                     else index_dir)
-        self._tombstones = load_tombstones(spark, tomb_dir, as_of_batch)
+        self._tomb_paths = _tombstone_paths(tomb_dir, as_of_batch)
         self._deleted_set: frozenset[int] | None = None
+
+    def __repr__(self) -> str:
+        # the dataclass repr would read every lazy frame
+        return f"SegmentIndex({self.index_dir!r})"
+
+    def table_path(self, name: str) -> str:
+        """Directory of side table ``name`` (postings_stage, doc_stats,
+        term_stats): the index's own, or its sidecar's on a quantized
+        artifact."""
+        p = os.path.join(self.index_dir, name)
+        if self._sidecar and not os.path.isdir(p):
+            return os.path.join(self._sidecar, name)
+        return p
+
+    @cached_property
+    def segments(self) -> DataFrame:
+        return self.spark.read.parquet(os.path.join(self.index_dir,
+                                                    "segments"))
+
+    @cached_property
+    def postings(self) -> DataFrame:
+        return self.spark.read.parquet(self.table_path("postings_stage"))
+
+    @cached_property
+    def doc_stats(self) -> DataFrame:
+        return self.spark.read.parquet(self.table_path("doc_stats"))
+
+    @cached_property
+    def term_stats(self) -> DataFrame:
+        return self.spark.read.parquet(self.table_path("term_stats"))
+
+    @cached_property
+    def _vsm_norms(self) -> DataFrame | None:
+        # search.vsm_doc_norms assigns the lazily computed frame when
+        # this is None (assignment replaces the cached value)
+        if self._vsm_dir is None:
+            return None
+        return self.spark.read.parquet(os.path.join(self._vsm_dir,
+                                                    "vsm_norms"))
+
+    @cached_property
+    def _phrase_segments(self) -> DataFrame | None:
+        if self._phrase_dir is None:
+            return None
+        return self.spark.read.parquet(os.path.join(self._phrase_dir,
+                                                    "phrase_segments"))
+
+    @cached_property
+    def _term_trigrams(self) -> DataFrame | None:
+        if self._trigram_dir is None:
+            return None
+        return self.spark.read.parquet(os.path.join(self._trigram_dir,
+                                                    "term_trigrams"))
+
+    @cached_property
+    def _tombstones(self) -> DataFrame | None:
+        if not self._tomb_paths:
+            return None
+        return self.spark.read.parquet(*self._tomb_paths) \
+            .select("doc_id").distinct()
+
+    def vocabulary_size(self) -> int:
+        """Number of distinct terms: the row count of term_stats, read
+        from its parquet footers (no Spark job, no data pages)."""
+        import pyarrow.dataset as pads
+
+        return pads.dataset(self.table_path("term_stats"),
+                            format="parquet").count_rows()
 
     @property
     def store(self) -> str:
@@ -651,20 +747,21 @@ class SegmentIndex(InvertedIndex):
     DELETED_IDS_MAX = 5_000_000
 
     def deleted_ids(self, max_ids: int | None = None) -> frozenset[int]:
-        """Driver-side live-docs set for the WAND kernel (the per-segment
-        deleted-docs bitmap of segment-file engines). Collected once per
-        index handle, BOUNDED on every call: more than ``max_ids``
-        (default ``DELETED_IDS_MAX``) tombstones raises with a vacuum
-        recommendation, also when an earlier call with a larger bound
-        cached the set — the collect ships at most ``max_ids + 1`` ids.
-        Deletes issued with ``auto_vacuum_threshold`` never get near it."""
-        if self._tombstones is None:
+        """Driver-side live-docs set for the serving kernels (the
+        per-segment deleted-docs bitmap of segment-file engines), read
+        from the committed tombstone batches through Arrow — no Spark
+        job. Read once per index handle, BOUNDED on every call: more
+        than ``max_ids`` (default ``DELETED_IDS_MAX``) tombstones raises
+        with a vacuum recommendation, also when an earlier call with a
+        larger bound cached the set — the read stops after ``max_ids +
+        1`` distinct ids. Deletes issued with ``auto_vacuum_threshold``
+        never get near it."""
+        if not self._tomb_paths:
             return frozenset()
         bound = self.DELETED_IDS_MAX if max_ids is None else max_ids
         ids = self._deleted_set
         if ids is None:
-            ids = frozenset(r["doc_id"] for r in
-                            self._tombstones.limit(bound + 1).collect())
+            ids = _read_doc_ids(self._tomb_paths, bound + 1)
         if len(ids) > bound:
             raise ValueError(
                 f"index at {self.index_dir} has more than {bound} "
@@ -685,25 +782,31 @@ class SegmentIndex(InvertedIndex):
 
         return sorted({spark_bucket(t, self.meta["buckets"]) for t in terms})
 
+    def bigram_covered(self, t1: str, t2: str,
+                       positional: bool = False) -> bool:
+        """True iff the committed phrase index serves "t1 t2" (both words
+        in its common-term coverage, and positions stored when asked
+        for). Decided from the driver-side metadata: no Spark job."""
+        return (self._phrase_dir is not None
+                and t1 in self._phrase_common and t2 in self._phrase_common
+                and (not positional
+                     or self._phrase_meta.get("positional", False)))
+
     def bigram_lookup(self, t1: str, t2: str,
                       positional: bool = False) -> DataFrame | None:
         """Next-word index point lookup: (term, doc_id, tf, dl
         [, positions]) rows for the two-word phrase "t1 t2" where tf is
         its consecutive-occurrence count and positions (when requested)
         are the FIRST word's positions of each instance — or None when
-        no phrase index is committed, either word is outside its
-        common-term coverage, or ``positional=True`` against a
-        pre-positional (tf-only) artifact (callers fall back to the
-        positional unigram intersection; results are identical either
+        ``bigram_covered`` is False: no phrase index is committed, either
+        word is outside its common-term coverage, or ``positional=True``
+        against a pre-positional (tf-only) artifact (callers fall back to
+        the positional unigram intersection; results are identical either
         way, this only changes the plan). Same bucket/term-pruned scan
         and tombstone exclusion as unigram lookup(). ``positional`` is
         what lets a k-word phrase chain m-1 bigram postings (Williams &
         Zobel §4) instead of decoding m common unigrams."""
-        if self._phrase_segments is None or not self._phrase_common:
-            return None
-        if t1 not in self._phrase_common or t2 not in self._phrase_common:
-            return None
-        if positional and not self._phrase_meta.get("positional", False):
+        if not self.bigram_covered(t1, t2, positional):
             return None
         bigram = f"{t1} {t2}"
         blocks = self._phrase_segments.filter(
@@ -757,7 +860,7 @@ class SegmentIndex(InvertedIndex):
         if self._ann_centroids is None:
             import numpy as np
 
-            spark = self.segments.sparkSession
+            spark = self.spark
             meta = self._ann_meta
             cent = np.empty((meta["n_centroids"], meta["dim"]),
                             dtype=np.float64)
@@ -784,7 +887,7 @@ class SegmentIndex(InvertedIndex):
             raise ValueError(
                 f"index at {self.index_dir} has no committed ANN "
                 "artifact — run catalog.build_ann_index first")
-        coded = self.segments.sparkSession.read.parquet(
+        coded = self.spark.read.parquet(
             os.path.join(self._ann_dir, "ann_coded"))
         if self._tombstones is not None:
             coded = coded.join(
@@ -857,22 +960,23 @@ class SegmentIndex(InvertedIndex):
         return decoded
 
     def mini_index(self, terms: list[str], cap: int | None = None,
+                   stats: dict | None = None,
                    ) -> dict[str, tuple[int, list]]:
         """Serving-path point lookup: {term: (df, [MiniBlock(term,
         block_id, block_max_tf, n_docs, payload)])} for in-vocabulary
-        terms, through the driver LRU. Misses cost exactly ONE pruned segment
-        scan (df derives from the blocks' n_docs); hits cost zero Spark
-        jobs.
+        terms, through the driver LRU. Hits cost nothing; the misses of
+        one call cost one driver-side Arrow read of segments/
+        (``_fetch_blocks``) and no Spark job.
 
-        ``cap`` bounds what a miss SHIPS to the driver: the
-        impact-ordered fetch (operators.wand._capped_blocks) keeps each
-        term's top-``cap`` blocks by upper bound, with the EXACT df
-        riding along in the plan. Cache entries remember the cap they
-        were fetched under: an entry fetched full (cap_used=None) or
-        with a looser cap serves any tighter request by driver-side
-        truncation (sorted by (block_max_tf desc, block_id asc) — the
-        same ordering the plan uses); a tighter entry forces a refetch
-        for a looser request."""
+        ``cap`` bounds what a miss SHIPS to the driver: each term keeps
+        its top-``cap`` blocks by upper bound (block_max_tf desc,
+        block_id asc), with the EXACT df alongside. Cache entries
+        remember the cap they were fetched under: an entry fetched full
+        (cap_used=None) or with a looser cap serves any tighter request
+        by driver-side truncation in the same order; a tighter entry
+        forces a refetch for a looser request. ``stats`` (optional dict)
+        receives this call's ``mini_hits`` and ``mini_misses`` (terms);
+        ``mini_counters`` accumulates them over the handle's life."""
         if cap is not None and cap < 1:
             # cap=0 would fetch zero blocks and fall through to the
             # OOV negative cache, poisoning the LRU: later EXACT
@@ -893,59 +997,16 @@ class SegmentIndex(InvertedIndex):
                 self._mini.move_to_end(t)
             else:
                 missing.append(t)
+        counters = self.mini_counters
+        counters["hits"] += len(terms) - len(missing)
+        counters["misses"] += len(missing)
+        if stats is not None:
+            stats["mini_hits"] = len(terms) - len(missing)
+            stats["mini_misses"] = len(missing)
         if missing:
-            if cap is None:
-                # ONE pruned scan serves everything: blocks are
-                # doc-disjoint, so df(term) = Σ n_docs over the term's
-                # blocks — no separate term_stats job
-                rows = self.segments.filter(
-                    F.col("bucket").isin(self._buckets_for(missing))
-                    & F.col("term").isin(missing)
-                ).select("term", "block_id", "block_max_tf", "n_docs",
-                         "payload").collect()
-                fetched: dict[str, list] = {}
-                for r in rows:
-                    fetched.setdefault(r.term, []).append(MiniBlock(r))
-                for t, blks in fetched.items():
-                    self._mini[t] = (sum(b.n_docs for b in blks), blks, None)
-            else:
-                # optimistic single scan with a hard driver-transfer
-                # budget: if EVERY missing term fits the cap, the limit
-                # can't trigger (total ≤ cap·|terms|) and this one scan
-                # IS the full fetch — cached as such (cap_used=None).
-                # The limit firing proves (pigeonhole) some term exceeds
-                # the cap; only then pay the two-phase ranked fetch.
-                # Either way the driver never receives more than
-                # cap·|terms| block payloads from the optimistic scan.
-                budget = cap * len(missing) + 1
-                rows = self.segments.filter(
-                    F.col("bucket").isin(self._buckets_for(missing))
-                    & F.col("term").isin(missing)
-                ).select("term", "block_id", "block_max_tf", "n_docs",
-                         "payload").limit(budget).collect()
-                if len(rows) < budget:
-                    fetched = {}
-                    for r in rows:
-                        fetched.setdefault(r.term, []).append(MiniBlock(r))
-                    for t, blks in fetched.items():
-                        self._mini[t] = (sum(b.n_docs for b in blks),
-                                         blks, None)
-                else:
-                    from ..operators.wand import _capped_blocks
-
-                    dfs, rows = _capped_blocks(self, missing, cap)
-                    fetched = {}
-                    for r in rows:
-                        fetched.setdefault(r.term, []).append(MiniBlock(r))
-                    for t, blks in fetched.items():
-                        # a term that came back with FEWER than cap
-                        # blocks was fetched complete (the ranked fetch
-                        # truncates only AT the cap) — remember it as
-                        # uncapped so a later looser/exact request is a
-                        # cache hit instead of a refetch Spark job
-                        self._mini[t] = (
-                            dfs[t], blks,
-                            cap if len(blks) >= cap else None)
+            t0 = time.perf_counter()
+            self._mini.update(self._fetch_blocks(missing, cap))
+            counters["fetch_s"] += time.perf_counter() - t0
             for t in missing:  # negative-cache OOV terms too (universal)
                 if t not in self._mini:
                     self._mini[t] = (0, [], None)
@@ -966,13 +1027,71 @@ class SegmentIndex(InvertedIndex):
                 out[t] = (df, blks)
         return out
 
+    def _fetch_blocks(self, terms: list[str], cap: int | None
+                      ) -> dict[str, tuple[int, list, int | None]]:
+        """LRU entries {term: (df, [MiniBlock], cap_used)} for the
+        in-vocabulary ``terms``, from one driver-side Arrow read of
+        segments/ (the reference's word2byte byte-range loads,
+        index_loader.py:71-128). The read prunes files on the hive
+        ``bucket=`` partitions and row groups on term min/max. It reads
+        block metadata first: blocks are doc-disjoint, so a term's df is
+        the sum of its blocks' n_docs, and a term with more than ``cap``
+        blocks keeps its top ``cap`` by (block_max_tf desc, block_id
+        asc) — the BM25 upper bound is monotone in block_max_tf for a
+        fixed term. Payloads are then read for the selected blocks only.
+        cap_used is ``cap`` for a truncated term and None for one fetched
+        complete, so a later exact request is a hit."""
+        import pyarrow.compute as pc
+        import pyarrow.dataset as pads
+
+        if self._segment_files is None:
+            self._segment_files = pads.dataset(
+                os.path.join(self.index_dir, "segments"), format="parquet",
+                partitioning="hive")
+        files = self._segment_files
+        if "term" not in files.schema.names:
+            return {}  # an index with no postings wrote no segment files
+        in_buckets = pads.field("bucket").isin(self._buckets_for(terms))
+        meta = files.to_table(
+            columns=["term", "block_id", "block_max_tf", "n_docs"],
+            filter=in_buckets & pads.field("term").isin(terms))
+        dfs: dict[str, int] = {}
+        capped: set[str] = set()
+        want = None
+        for t in dict.fromkeys(terms):
+            blocks = meta.filter(pc.equal(meta["term"], t))
+            if not blocks.num_rows:
+                continue
+            dfs[t] = pc.sum(blocks["n_docs"]).as_py()
+            sel = pads.field("term") == t
+            if cap is not None and blocks.num_rows > cap:
+                top = pc.sort_indices(blocks, sort_keys=[
+                    ("block_max_tf", "descending"),
+                    ("block_id", "ascending")])[:cap]
+                sel = sel & pads.field("block_id").isin(
+                    blocks["block_id"].take(top).to_pylist())
+                capped.add(t)
+            want = sel if want is None else want | sel
+        if want is None:
+            return {}
+        rows = files.to_table(columns=list(_MINI_COLUMNS),
+                              filter=in_buckets & want)
+        self.mini_counters["blocks_fetched"] += rows.num_rows
+        out = {t: (df, [], cap if t in capped else None)
+               for t, df in dfs.items()}
+        for rec in zip(*(rows[c].to_pylist() for c in _MINI_COLUMNS)):
+            out[rec[0]][1].append(MiniBlock(*rec))
+        return out
+
 
 def load_index(spark: SparkSession, index_dir: str,
                documents: DataFrame | None = None,
                as_of_batch: int | None = None) -> SegmentIndex:
-    """Open a durable index. ``as_of_batch`` gives snapshot-isolation
-    time travel over DELETES: only tombstone batches with id <=
-    as_of_batch are applied (-1 → before any delete; None → live).
+    """Open a durable index lazily: only its JSON manifests are read
+    here, and no Spark job runs (SegmentIndex). ``as_of_batch`` gives
+    snapshot-isolation time travel over DELETES: only tombstone batches
+    with id <= as_of_batch are applied (-1 → before any delete; None →
+    live).
     Builds/merges/vacuums already version by directory (immutable
     layout), so directory + as_of_batch addresses every state the
     store has ever served. Snapshot points: ``tombstone_batches``."""
@@ -1082,8 +1201,7 @@ def quantize_index(spark: SparkSession, index_dir: str, out_dir: str,
         "impact_k1": scoring.IMPACT_K1, "impact_b": scoring.IMPACT_B,
         "sidecar_dir": os.path.abspath(index_dir),
     })
-    with open(os.path.join(out_dir, "stats.json"), "w") as f:
-        json.dump(out_stats, f)
+    _write_json(os.path.join(out_dir, "stats.json"), out_stats)
     _record(out_dir, "quantize_complete", bits=bits,
             source=os.path.abspath(index_dir),
             duration_sec=round(time.perf_counter() - t0, 3))
@@ -1221,8 +1339,7 @@ def build_phrase_index(spark: SparkSession, index_dir: str,
     info = {"min_df": min_df, "max_terms": max_terms,
             "n_common_terms": len(common), "terms": common,
             "positional": True}
-    with open(os.path.join(index_dir, PHRASE_INDEX_META), "w") as f:
-        json.dump(info, f)
+    _write_json(os.path.join(index_dir, PHRASE_INDEX_META), info)
     _record(index_dir, "phrase_index", min_df=min_df, max_terms=max_terms,
             n_common_terms=len(common),
             duration_sec=round(time.perf_counter() - t0, 3))
@@ -1401,8 +1518,7 @@ def build_ann_index(spark: SparkSession, index_dir: str,
         "embeddings_path": (os.path.abspath(embeddings_path)
                             if embeddings_path else None),
     }
-    with open(os.path.join(index_dir, ANN_INDEX_META), "w") as f:
-        json.dump(info, f)
+    _write_json(os.path.join(index_dir, ANN_INDEX_META), info)
     _record(index_dir, "ann_index", n_vectors=int(n_vecs),
             n_centroids=n_centroids, pq_m=pq_m, pq_ksub=pq_ksub,
             duration_sec=round(time.perf_counter() - t0, 3))
@@ -1557,14 +1673,18 @@ def load_tombstones(spark: SparkSession, index_dir: str,
     when none apply. ``as_of_batch`` time-travels the delete state:
     only batches with id <= it are applied (-1 → the pre-delete
     snapshot; None → all, the live view)."""
-    batches = _tombstone_batches(index_dir)
-    if as_of_batch is not None:
-        batches = [b for b in batches if b <= as_of_batch]
-    if not batches:
+    paths = _tombstone_paths(index_dir, as_of_batch)
+    if not paths:
         return None
-    paths = [os.path.join(index_dir, "tombstones", f"batch={b}")
-             for b in batches]
     return spark.read.parquet(*paths).select("doc_id").distinct()
+
+
+def _tombstone_paths(index_dir: str, as_of_batch: int | None) -> list[str]:
+    """Parquet dirs of the committed tombstone batches applied at
+    ``as_of_batch`` (all when None)."""
+    return [os.path.join(index_dir, "tombstones", f"batch={b}")
+            for b in _tombstone_batches(index_dir)
+            if as_of_batch is None or b <= as_of_batch]
 
 
 def merge_indexes(spark: SparkSession, index_dirs: list[str],

@@ -13,17 +13,67 @@ results as a CORRECTNESS_r{N}-shaped artifact. The official driver
 snapshot caps at 50 entries while the repo registers far more; the
 committed ``CORRECTNESS_full_r{N}.json`` files are this script's full
 replay, regenerated and committed each round so every gate has a
-durable record (VERDICT r4 item 2).
+durable record (VERDICT r4 item 2). The artifact records git HEAD and
+a digest of the code the gates run (``search_engine_spark/`` and
+``__spark_entry__.py``).
+
+``python tests/driver_check.py --stale PATH`` checks an artifact
+against the working tree without starting Spark: it exits 1 when the
+code digest differs from the recorded one, or the artifact has none.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import subprocess
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+
+def code_digest() -> str:
+    """sha256 over the path and bytes of every file the gates run:
+    ``search_engine_spark/`` (bytecode caches excluded) and
+    ``__spark_entry__.py``."""
+    files = [os.path.join(ROOT, "__spark_entry__.py")]
+    for d, dirs, names in os.walk(os.path.join(ROOT, "search_engine_spark")):
+        dirs[:] = [x for x in dirs if x != "__pycache__"]
+        files += [os.path.join(d, n) for n in names
+                  if not n.endswith((".pyc", ".pyo"))]
+    h = hashlib.sha256()
+    for f in sorted(files):
+        h.update(os.path.relpath(f, ROOT).encode() + b"\0")
+        with open(f, "rb") as fh:
+            h.update(fh.read() + b"\0")
+    return h.hexdigest()
+
+
+def git_head() -> str | None:
+    try:
+        return subprocess.run(["git", "-C", ROOT, "rev-parse", "HEAD"],
+                              capture_output=True, text=True,
+                              check=True).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        return None
+
+
+def stale(path: str) -> int:
+    """1 when the artifact at ``path`` was not written from the current
+    code (digest differs or is missing), else 0."""
+    with open(path) as f:
+        recorded = json.load(f).get("code_digest")
+    if recorded is None:
+        print(f"{path}: STALE (no code_digest recorded)")
+        return 1
+    if recorded != code_digest():
+        print(f"{path}: STALE (code changed since it was written)")
+        return 1
+    print(f"{path}: current")
+    return 0
 
 
 def canon(rows, cols):
@@ -111,6 +161,8 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str = "") -> int:
         with open(out, "w") as f:
             json.dump({
                 "sf_dir": sf_dir,
+                "git_head": git_head(),
+                "code_digest": code_digest(),
                 "n_entries": len(report),
                 "n_failures": failures,
                 "entry_rows": len(erows),
@@ -122,4 +174,8 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str = "") -> int:
 
 
 if __name__ == "__main__":
+    if sys.argv[1:2] == ["--stale"]:
+        if len(sys.argv) != 3:
+            raise SystemExit("usage: driver_check.py --stale PATH")
+        raise SystemExit(stale(sys.argv[2]))
     raise SystemExit(main(*(sys.argv[1:] or [])))

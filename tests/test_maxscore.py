@@ -272,3 +272,73 @@ def test_results_says_when_capped(seg_index, monkeypatch):
     assert body["results"]
     for r in body["results"]:
         assert r["score"] <= exact[r["doc_id"]]
+
+
+def test_query_topk_says_when_capped(spark, seg_index_dir, monkeypatch,
+                                     capsys):
+    """jobs/query_topk.py on the kernel path: a capped answer prints
+    {"exact": false, "truncated_terms": [...]} to stderr while stdout
+    stays one JSON hit per line; an exact answer prints nothing there."""
+    import sys
+
+    from jobs import query_topk
+    from search_engine_spark import session
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **kw: spark)
+
+    def run(kernel):
+        monkeypatch.setattr(sys, "argv", [
+            "query_topk.py", "--index", seg_index_dir, "--query",
+            "market price growth", "--k", "5", "--kernel", kernel])
+        query_topk.main()
+        out, err = capsys.readouterr()
+        hits = [json.loads(line) for line in out.splitlines()]
+        assert [h["rank"] for h in hits] == [1, 2, 3, 4, 5]
+        return [json.loads(line) for line in err.splitlines()
+                if line.startswith("{")]
+
+    assert run("maxscore") == [] and run("wand") == []
+    monkeypatch.setattr(MS, "WAND_AUTO_CAP", 1)
+    monkeypatch.setattr(wand, "WAND_AUTO_CAP", 1)
+    for kernel in ("maxscore", "wand"):
+        assert run(kernel) == [{"exact": False, "truncated_terms":
+                                ["growth", "market", "price"]}]
+
+
+def test_kernel_path_runs_no_spark_job(spark, seg_index_dir):
+    """Opening an index, building the spellcheck vocabulary from it and
+    serving cold and warm kernel queries (capped and exact) start no
+    Spark job; a relational query on the same handle still answers."""
+    from search_engine_spark.plans.spellcheck import VocabularySpellchecker
+    from search_engine_spark.sources import catalog
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs():
+        return set(tracker.getJobIdsForGroup(None))
+
+    before = jobs()
+    idx = catalog.load_index(spark, seg_index_dir)
+    checker = VocabularySpellchecker.from_index(idx, max_terms=50)
+    assert checker.vocab
+    stats: dict = {}
+    q = "market price growth"
+    cold = MS.search_maxscore(idx, q, k=10, stats=stats)
+    assert (stats["mini_hits"], stats["mini_misses"]) == (0, 3)
+    warm = MS.search_maxscore(idx, q, k=10, stats=stats)
+    assert (stats["mini_hits"], stats["mini_misses"]) == (3, 0)
+    assert warm == cold
+    _same_ranking(wand.search_wand(idx, q, k=10, stats=stats), cold)
+    assert stats["mini_hits"] == 3
+    wand.search_wand(idx, "germany economy", k=10,
+                     max_blocks_per_term=None)
+    MS.search_maxscore(idx, "china bank", k=10, max_blocks_per_term=1)
+    assert idx.deleted_ids() == frozenset()
+    counters = idx.mini_counters
+    assert counters["misses"] == 7 and counters["hits"] == 6
+    assert counters["blocks_fetched"] > 0 and counters["fetch_s"] > 0
+    assert jobs() == before
+    rel = [(r.doc_id, r.score)
+           for r in S.search_freetext(idx, q, k=10).collect()]
+    _same_ranking(rel, cold)
+    assert jobs() != before  # the tracker does see jobs

@@ -405,3 +405,29 @@ def test_bad_block_codec_refused(spark, corpus_sdf, tmp_path):
         SEG.encode_segments(
             spark.createDataFrame([(1, "t", 1)], "doc_id long, term string, tf long"),
             block_codec="zstd").count()
+
+
+def test_json_commit_is_atomic(tmp_path, monkeypatch):
+    """stats.json, the artifact metadata and every manifest row commit
+    through one temp-file + os.replace helper: when json.dump fails
+    mid-write, the previous file stays intact and no partial file (or
+    temp) is left behind."""
+    import json
+
+    path = tmp_path / "stats.json"
+    catalog._write_json(str(path), {"n_docs": 1})
+    real_dump = json.dump
+
+    def torn(obj, f):
+        f.write('{"n_docs": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn)
+    with pytest.raises(OSError, match="disk full"):
+        catalog._write_json(str(path), {"n_docs": 2})
+    with pytest.raises(OSError, match="disk full"):
+        catalog._record(str(tmp_path), "stats")
+    monkeypatch.setattr(json, "dump", real_dump)
+    assert json.loads(path.read_text()) == {"n_docs": 1}
+    assert sorted(p.name for p in tmp_path.rglob("*") if p.is_file()) \
+        == ["stats.json"]

@@ -875,3 +875,22 @@ def test_web_escapes_user_input(server):
         _get_html(server + "/web?query=market&k=" + quote("<b>3"))
     body = e.value.read().decode()
     assert e.value.code == 400 and "<b>3" not in body
+
+
+def test_stats_reports_mini_index_counters(server, spark):
+    """/stats carries the mini-index LRU's cumulative counters, and
+    neither it nor a cold or warm kernel request starts a Spark job."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    _, s0 = _get(server + "/stats")
+    q = "/results?query=bank+report+connect&k=5"
+    _, cold = _get(server + q)
+    _, warm = _get(server + q)
+    assert cold["path"] == warm["path"] == "maxscore"
+    _, s1 = _get(server + "/stats")
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    c0, c1 = s0["mini_index"], s1["mini_index"]
+    assert set(c1) == {"hits", "misses", "blocks_fetched", "fetch_s"}
+    assert c1["hits"] >= c0["hits"] + 3
+    assert c1["misses"] + c1["hits"] == c0["misses"] + c0["hits"] + 6
+    assert c1["blocks_fetched"] >= c0["blocks_fetched"]

@@ -82,12 +82,23 @@ def test_from_index(built_index):
     assert c.correct("merket") == "market"
 
 
-def test_from_index_cut_is_df_ranked(built_index):
+def test_from_index_cut_is_df_ranked(built_index, seg_index, monkeypatch):
     """The max_terms truncation keeps the HIGHEST-df terms (ties broken
     lexicographically), never an arbitrary partition-order subset: at
     web scale a bare limit() would silently drop head vocabulary from
-    correction candidates while keeping hapax noise."""
+    correction candidates while keeping hapax noise. A durable index
+    streams term_stats through the Arrow top-k; with small batches and
+    a cut inside a df tie it equals the Spark TakeOrdered."""
     from pyspark.sql import functions as F
+
+    ranked = seg_index.term_stats.orderBy(
+        F.desc("df"), F.asc("term")).collect()
+    tie = next(i for i in range(10, len(ranked))
+               if ranked[i - 1].df == ranked[i].df)
+    monkeypatch.setattr(SP, "VOCAB_BATCH_ROWS", 7)
+    for n in (tie, 1, len(ranked) + 5):
+        c = SP.VocabularySpellchecker.from_index(seg_index, max_terms=n)
+        assert c.vocab == {r.term: r.df for r in ranked[:n]}
 
     cut = 25
     c = SP.VocabularySpellchecker.from_index(built_index, max_terms=cut)
