@@ -458,18 +458,20 @@ def q_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(100)
 
 
-def q_impact_wand_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_impact_maxscore_identity(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
     """End-to-end quantized-store serving: build the durable tf/dl
     index, re-code it with catalog.quantize_index (8-bit impact blocks,
-    ~1 byte/posting, codec tag 0x00'I'), and serve with the WAND impact
-    branch (score = qtf·idf·(k1+1)·q/maxq from the stored impact byte;
-    per-block bound EXACT for the quantized scores). Gated against the
+    ~1 byte/posting, codec tag 0x00'I'), and serve with the MaxScore
+    kernel's impact branch (score = qtf·idf·(k1+1)·q/maxq from the
+    stored impact byte; per-block bound EXACT for the quantized
+    scores). Gated against the
     SAME integer-quantizer SQL oracle as quantized_topk — converter +
     impact kernel == relational quantized scoring, hash-exact."""
     import shutil
     import tempfile
 
-    from search_engine_spark.operators import wand as W
+    from search_engine_spark.operators import maxscore as MS
     from search_engine_spark.sources import catalog
 
     docs = _docs(spark, sf_dir)
@@ -481,43 +483,8 @@ def q_impact_wand_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     positional=False)
         qdir = catalog.quantize_index(spark, d, tmp + "/impact", bits=8)
         qidx = catalog.load_index(spark, qdir)
-        hits = W.search_wand(qidx, " ".join(_BM25_QUERY_TERMS), k=1 << 30)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    raw = spark.createDataFrame(
-        [(int(doc), float(s)) for doc, s in hits], "doc_id long, raw double")
-    return (raw.select("doc_id", F.round("raw", 4).alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(100))
-
-
-def q_wand_bm25_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end durable-index serving path: build the segment store on
-    disk, run the Block-Max WAND kernel over the encoded blocks (varint
-    decode + block-max pruning + bounded heap), and gate the result
-    against the SAME BM25 SQL oracle as the relational path — the north
-    rule's 'top-k rank-identity on the reference query set' check, here
-    from the on-disk index rather than the in-memory one.
-
-    k is exhaustive so final selection happens on ROUNDED scores in the
-    DataFrame (Spark's HALF_UP round == DuckDB's; Python's round() is
-    banker's and would diverge)."""
-    import shutil
-    import tempfile
-
-    from search_engine_spark.operators import wand as W
-    from search_engine_spark.sources import catalog
-
-    docs = _docs(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="wand_contract_")
-    try:
-        d = tmp + "/idx"
-        catalog.build_durable_index(spark, docs, d, conf=SIMPLE, shards=2,
-                                    buckets=16, block_span=64,
-                                    positional=False)
-        idx = catalog.load_index(spark, d)
-        # search_wand collects driver-side, so the on-disk index can be
-        # deleted before the (local-list-backed) DataFrame is consumed
-        hits = W.search_wand(idx, " ".join(_BM25_QUERY_TERMS), k=1 << 30)
+        hits = MS.search_maxscore(qidx, " ".join(_BM25_QUERY_TERMS),
+                                  k=1 << 30)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     raw = spark.createDataFrame(
@@ -527,12 +494,14 @@ def q_wand_bm25_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_maxscore_bm25_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Durable-index serving path #2: the MaxScore kernel
-    (operators/maxscore.py, Turtle & Flood 1995) over the same on-disk
-    segment store, gated against the SAME BM25 SQL oracle as WAND and
-    the relational path. Exhaustive k decodes every block, so this gate
-    pins the end-to-end decode+score path; pruning exactness at small k
-    is pinned by the fuzzed three-way identity in tests/test_maxscore.py."""
+    """End-to-end durable-index serving path: build the segment store on
+    disk, run the MaxScore kernel (operators/maxscore.py) over the
+    encoded blocks, and gate the result against the SAME BM25 SQL oracle
+    as the relational path — the north rule's top-k rank-identity check,
+    from the on-disk index. k is exhaustive (every block decoded;
+    pruning at small k is pinned by tests/test_maxscore.py), so final
+    selection happens on ROUNDED scores in the DataFrame (Spark's
+    HALF_UP round == DuckDB's; Python's round() is banker's)."""
     import shutil
     import tempfile
 
@@ -620,7 +589,7 @@ def q_ivf_topk_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe = n_centroids the probe set covers every cell, so exact
     cosine within the probed cells must equal the straight SQL cosine
     top-k — gating fit → persist → load → probe the way
-    wand_bm25_identity gates the WAND kernel."""
+    maxscore_bm25_identity gates the MaxScore kernel."""
     import shutil
     import tempfile
 
@@ -732,33 +701,34 @@ def q_rm3_dates_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(100)
 
 
-def q_wand_prior_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WAND + static-prior serving parity (round-4: wand used to ignore
-    a configured prior): the kernel's iterative-deepening blend must
+def q_maxscore_prior_identity(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    """MaxScore + static-prior serving parity: the kernel's
+    iterative-deepening blend must
     equal score + 0.3·ln(prior) computed by SQL, with odd docs carrying
     a deterministic pagerank-shaped probability 1/(doc_id+2) and even
     docs ABSENT from the prior frame (both paths apply the shared 1e-12
     floor). k is exhaustive so final selection happens on ROUNDED
-    scores DataFrame-side, as in wand_bm25_identity."""
+    scores DataFrame-side, as in maxscore_bm25_identity."""
     import shutil
     import tempfile
 
-    from search_engine_spark.operators import wand as W
+    from search_engine_spark.operators import maxscore as MS
     from search_engine_spark.sources import catalog
 
     docs = _docs(spark, sf_dir)
     prior = (docs.filter(F.col("doc_id") % 2 == 1)
              .select(F.col("doc_id").alias("node"),
                      (F.lit(1.0) / (F.col("doc_id") + 2)).alias("rank")))
-    tmp = tempfile.mkdtemp(prefix="wand_prior_contract_")
+    tmp = tempfile.mkdtemp(prefix="prior_contract_")
     try:
         d = tmp + "/idx"
         catalog.build_durable_index(spark, docs, d, conf=SIMPLE, shards=2,
                                     buckets=16, block_span=64,
                                     positional=False)
         idx = catalog.load_index(spark, d)
-        hits = W.search_wand(idx, " ".join(_BM25_QUERY_TERMS), k=1 << 30,
-                             prior=prior, prior_lam=0.3)
+        hits = MS.search_maxscore(idx, " ".join(_BM25_QUERY_TERMS),
+                                  k=1 << 30, prior=prior, prior_lam=0.3)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     raw = spark.createDataFrame(
@@ -1940,10 +1910,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_near_dups": q_simhash_near_dups,
         "minhash_survivors": q_minhash_survivors,
         "language_id": q_language_id,
-        "wand_bm25_identity": q_wand_bm25_identity,
         "maxscore_bm25_identity": q_maxscore_bm25_identity,
         "quantized_topk": q_quantized_topk,
-        "impact_wand_identity": q_impact_wand_identity,
+        "impact_maxscore_identity": q_impact_maxscore_identity,
         "bigram_phrase_identity": q_bigram_phrase_identity,
         "chained_phrase_identity": q_chained_phrase_identity,
         "trigram_wildcard_identity": q_trigram_wildcard_identity,
@@ -1993,7 +1962,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_keywords": q_doc_keywords,
         "top_bigrams_approx": q_top_bigrams_approx,
         "rm3_dates_identity": q_rm3_dates_identity,
-        "wand_prior_identity": q_wand_prior_identity,
+        "maxscore_prior_identity": q_maxscore_prior_identity,
         "vacuum_identity": q_vacuum_identity,
         "batch_bm25_topk": q_batch_bm25_topk,
         "ltr_features": q_ltr_features,
@@ -2032,16 +2001,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     bm25_terms = ", ".join(f"('{t}')" for t in _BM25_QUERY_TERMS)
     sql = _oracle_sql_dict(bm25_terms)
-    # the WAND serving path must reproduce EXACTLY the relational BM25
-    # oracle — same query terms, same formula, same rounding/tie-break
-    sql["wand_bm25_identity"] = sql["bm25_topk"]
-    # the MaxScore kernel (operators.maxscore) is the second serving
-    # kernel over the same segments — same oracle, same contract
+    # the MaxScore serving kernel (operators.maxscore) must reproduce
+    # EXACTLY the relational BM25 oracle — same query terms, same
+    # formula, same rounding/tie-break
     sql["maxscore_bm25_identity"] = sql["bm25_topk"]
-    # the quantized-impact store: converter + WAND impact branch must
+    # the quantized-impact store: converter + kernel impact branch must
     # reproduce the relational quantized scoring, which the integer
     # quantizer lets the oracle compute bit-for-bit
-    sql["impact_wand_identity"] = sql["quantized_topk"]
+    sql["impact_maxscore_identity"] = sql["quantized_topk"]
     # the next-word phrase index serves the same consecutive counts the
     # positional intersection computes — same oracle as phrase_match
     sql["bigram_phrase_identity"] = sql["phrase_match"]
@@ -2106,9 +2073,9 @@ def oracle_sql() -> dict[str, str]:
         FROM w GROUP BY doc_id
         ORDER BY score DESC, doc_id ASC LIMIT 100
     """
-    # WAND + prior: bm25 + 0.3·ln(prior) with odd docs at 1/(doc_id+2)
+    # MaxScore + prior: bm25 + 0.3·ln(prior), odd docs at 1/(doc_id+2)
     # and even docs at the shared 1e-12 floor (absent from the frame)
-    sql["wand_prior_identity"] = f"""
+    sql["maxscore_prior_identity"] = f"""
         WITH tok AS ({_TOK}),
         tf AS (SELECT term, doc_id, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
         dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY 1),

@@ -157,11 +157,11 @@ def main() -> None:
     web_row = timed_best("web_build", web_build)
     web_dps = n_web / timings["web_build"]
 
-    # -- phase 2b: durable segment build + WAND serving path ---------------
+    # -- phase 2b: durable segment build + MaxScore serving path -----------
     import shutil
     import tempfile
 
-    from search_engine_spark.operators import wand as W
+    from search_engine_spark.operators import maxscore as MS
     from search_engine_spark.sources import catalog
 
     seg_dir = tempfile.mkdtemp(prefix="bench_seg_")
@@ -187,24 +187,17 @@ def main() -> None:
     seg_idx = timed_best("segment_build", seg_build)
     seg_dps = n_web / timings["segment_build"]
 
-    def q_wand():
-        return len(W.search_wand(seg_idx, "market price growth", k=100))
-
-    timed("q_wand_cold", q_wand)
-    timed("q_wand_warm", q_wand)
-
     def q_ms():
-        from search_engine_spark.operators import maxscore as MS
-
         return len(MS.search_maxscore(seg_idx, "market price growth",
                                       k=100))
 
-    # warm mini-index (shared LRU with WAND): pure driver kernel time —
-    # the head-to-head the two dynamic-pruning families are compared on
+    # cold = mini-index miss (driver Arrow fetch); warm = pure driver
+    # kernel time over the LRU's memoized decodes
+    timed("q_maxscore_cold", q_ms)
     timed("q_maxscore_warm", q_ms)
 
     # quantized-impact serving artifact (catalog.quantize_index): the
-    # segment re-code pass, then WAND over 8-bit impact blocks — the
+    # segment re-code pass, then MaxScore over 8-bit impact blocks — the
     # ~1-byte-per-posting store with the exact quantized block bound
     def seg_quantize():
         out = os.path.join(seg_dir, "impact")
@@ -215,7 +208,8 @@ def main() -> None:
     imp_idx = timed("quantize_index", seg_quantize)
 
     def q_imp():
-        return len(W.search_wand(imp_idx, "market price growth", k=100))
+        return len(MS.search_maxscore(imp_idx, "market price growth",
+                                      k=100))
 
     timed("q_impact_cold", q_imp)
     timed("q_impact_warm", q_imp)
@@ -313,7 +307,7 @@ def main() -> None:
     # the driver tables do not contain, so every phase-3 line measured
     # the EMPTY-RESULT path — pruned scans + job overhead, zero scoring
     # rows. Round-4 numbers are therefore slower AND honest; the web-
-    # vocabulary lines live on in phase 2b (q_wand*) where the index IS
+    # vocabulary lines live on in phase 2b (q_maxscore*) where the index IS
     # the web corpus. Documented in BENCH/BASELINE.md.
     from search_engine_spark.operators import batchsearch as BS
 

@@ -1,6 +1,6 @@
 """Streaming-index compaction job: re-encode the (batch, bucket)-staged
 postings a streaming ingest accumulates into the durable block-encoded
-segment layout (WAND-servable, identical to jobs/build_index.py output).
+segment layout (kernel-servable, identical to jobs/build_index.py output).
 
 spark-submit --py-files dist/engine.zip jobs/compact_index.py \
     --stream-index /data/stream_idx --output /data/index \

@@ -1,6 +1,6 @@
 """Tombstone-delete job: logically delete documents from a completed
 durable index. Queries exclude the docs immediately (lookup anti-join +
-WAND live-docs mask); run jobs/merge_index.py with a single input to
+kernel live-docs mask); run jobs/merge_index.py with a single input to
 vacuum the postings physically and refresh corpus stats.
 
 spark-submit --py-files dist/engine.zip jobs/delete_docs.py \

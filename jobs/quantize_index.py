@@ -9,7 +9,7 @@ spark-submit --py-files dist/engine.zip jobs/quantize_index.py \
 The output holds re-coded segments (+ stats.json) only — ~1 byte per
 posting instead of the tf+dl varint pair; score-free side tables
 resolve from the source via the sidecar pointer. Serving kernels
-(WAND/MaxScore) score idf·(k1+1)·q/maxq with an EXACT per-block bound;
+(MaxScore) score idf·(k1+1)·q/maxq with an EXACT per-block bound;
 the scoring model (k1=1.2, b=0.75) and corpus stats are baked in, so
 re-quantize after any merge/vacuum of the source.
 """

@@ -3,17 +3,19 @@
 spark-submit --py-files dist/engine.zip jobs/query_topk.py \
     --index /data/index --query "market price" [--k 100] \
     [--model bm25|bm25-reference|vsm|lm-dirichlet|lm-pyp] \
-    [--wand] [--date-start 2022-01-01 --date-end 2022-01-31] \
+    [--kernel relational|maxscore] \
+    [--date-start 2022-01-01 --date-end 2022-01-31] \
     [--documents /data/documents_parquet] \
     [--prior /data/ranks [--prior-lam 0.3]] \
     [--rm3-alpha 0.6 [--rm3-fb-docs 10 --rm3-fb-terms 10]] \
     [--fuzzy 1]
 
 Prints one JSON line per hit: {"rank", "doc_id", "score"}.
---wand uses the Block-Max WAND kernel (BM25 only); default is the
-distributed relational path through the unified executor. When a
-kernel's fetch cap (wand.WAND_AUTO_CAP blocks per term) cut a query
-term short, the answer is approximate and stderr carries one JSON line
+--kernel maxscore serves from the block-max MaxScore kernel (bag-of-words
+BM25 only); the default, --kernel relational, is the distributed
+relational path through the unified executor. When the kernel's fetch
+cap (maxscore.FETCH_CAP blocks per term) cut a query term short, the
+answer is approximate and stderr carries one JSON line
 {"exact": false, "truncated_terms": [...]}; stdout stays the hits.
 """
 
@@ -34,10 +36,10 @@ def main() -> None:
     ap.add_argument("--query", required=True)
     ap.add_argument("--k", type=int, default=100)
     ap.add_argument("--model", default="bm25")
-    ap.add_argument("--wand", action="store_true")
-    ap.add_argument("--kernel", choices=["wand", "maxscore"], default=None,
-                    help="segment serving kernel (implies the --wand "
-                         "path; --wand alone means --kernel wand)")
+    ap.add_argument("--kernel", choices=["relational", "maxscore"],
+                    default="relational",
+                    help="maxscore = the segment serving kernel (BM25, "
+                         "bag-of-words free text only)")
     ap.add_argument("--date-start")
     ap.add_argument("--date-end")
     ap.add_argument("--documents")
@@ -94,46 +96,50 @@ def main() -> None:
                          "tombstone batches with id <= this (-1 = the "
                          "pre-delete snapshot; default = live view)")
     args = ap.parse_args()
-    # --kernel maxscore rides the segment-kernel path: every --wand
-    # guard below (rm3/fuzzy/mm/synonyms/cursor/date/recency refusals)
-    # applies identically to both kernels
-    if args.kernel is not None:
-        args.wand = True
+    # every feature the kernel cannot honor is refused, never ignored
+    use_kernel = args.kernel == "maxscore"
+    if use_kernel and args.model != "bm25":
+        ap.error(f"--model {args.model} needs the relational path; the "
+                 "maxscore kernel scores BM25 only")
     if args.rm3_alpha is not None:
-        if args.wand:
-            ap.error("--rm3-alpha needs the relational path; drop --wand")
+        if use_kernel:
+            ap.error("--rm3-alpha needs the relational path; "
+                     "use --kernel relational")
         if not args.documents:
             ap.error("--rm3-alpha needs --documents (feedback docs are "
                      "re-read as text)")
         if not 0.0 <= args.rm3_alpha <= 1.0:
             ap.error("--rm3-alpha must be in [0, 1]")
     if args.fuzzy is not None:
-        if args.wand:
-            ap.error("--fuzzy needs the relational path; drop --wand")
+        if use_kernel:
+            ap.error("--fuzzy needs the relational path; "
+                     "use --kernel relational")
         if not 0 <= args.fuzzy <= 2:
             ap.error("--fuzzy must be in [0, 2]")
     if args.min_should_match is not None:
-        if args.wand:
+        if use_kernel:
             ap.error("--min-should-match needs the relational path; "
-                     "drop --wand")
+                     "use --kernel relational")
         if args.min_should_match < 1:
             ap.error("--min-should-match must be >= 1")
-    if args.synonyms is not None and args.wand:
-        ap.error("--synonyms needs the relational path; drop --wand")
+    if args.synonyms is not None and use_kernel:
+        ap.error("--synonyms needs the relational path; "
+                 "use --kernel relational")
     if (args.after_score is None) != (args.after_doc is None):
         ap.error("--after-score and --after-doc must be given together")
-    if args.after_score is not None and args.wand:
+    if args.after_score is not None and use_kernel:
         ap.error("--after-score/--after-doc need the relational path; "
-                 "drop --wand")
-    if args.wand and (args.date_start or args.date_end):
-        # WAND scores over ALL blocks; silently post-filtering an
+                 "use --kernel relational")
+    if use_kernel and (args.date_start or args.date_end):
+        # the kernel scores over ALL blocks; silently post-filtering an
         # unrestricted top-k would return fewer-than-k / wrong-rank
-        # results. The relational path (no --wand) filters BEFORE
-        # ranking via partition-pruned date candidates.
-        ap.error("--wand does not support --date-start/--date-end; "
-                 "drop --wand to use the date-filtered relational path")
+        # results. The relational path filters BEFORE ranking via
+        # partition-pruned date candidates.
+        ap.error("--kernel maxscore does not support --date-start/"
+                 "--date-end; use --kernel relational for the "
+                 "date-filtered path")
 
-    from search_engine_spark.operators import executor, wand
+    from search_engine_spark.operators import executor, maxscore
     from search_engine_spark.session import get_spark
     from search_engine_spark.sources import catalog
 
@@ -161,10 +167,10 @@ def main() -> None:
 
     doc_dates = None
     if args.recency_half_life is not None:
-        if args.wand:
+        if use_kernel:
             raise SystemExit(
                 "--recency-half-life requires the relational path "
-                "(drop --wand)")
+                "(--kernel relational)")
         if args.recency_as_of is None:
             raise SystemExit(
                 "--recency-half-life requires --recency-as-of")
@@ -181,40 +187,32 @@ def main() -> None:
                 "--recency-half-life requires --documents with a "
                 "warc_ts/warc_date column")
 
-    kernel = args.kernel or ("wand" if args.wand else None)
-    if kernel:
+    if use_kernel:
         query = args.query
         if checker is not None or abbreviations:
             # Classify BEFORE correcting (mirrors jobs/serve.py): a
-            # boolean/phrase/proximity query must reach search_wand's
+            # boolean/phrase/proximity query must reach the kernel's
             # refusal VERBATIM — spellchecking first would rewrite
             # operator words (AND/OR/NOT are not in the stemmed vocab)
             # into vocabulary terms, turning the query into free text
-            # that WAND then silently scores as bag-of-words.
+            # that the kernel then silently scores as bag-of-words.
             from search_engine_spark.plans import planner
 
-            if wand.wand_eligible(planner.classify(query, idx.analyzer)):
+            if maxscore.kernel_eligible(planner.classify(query,
+                                                         idx.analyzer)):
                 if checker is not None:
                     query = SP.correct_query(query, checker, symbols)
                 if abbreviations:
-                    # bare terms: search_wand rejects quoted queries
+                    # bare terms: the kernel rejects quoted queries
                     query = SP.expand_abbreviations(query, abbreviations,
                                                     quote=False)
-        # prior blends on the WAND path too (round-4 parity): the kernel
-        # pays one bounded Spark lookup per query for candidate priors
+        # the prior blends on the kernel path too: it pays one bounded
+        # Spark lookup per query for the candidates' priors
         prior = spark.read.parquet(args.prior) if args.prior else None
         kstats: dict = {}
-        if kernel == "maxscore":
-            from search_engine_spark.operators import maxscore as MS
-
-            hits = MS.search_maxscore(idx, query, k=args.k,
-                                      prior=prior,
-                                      prior_lam=args.prior_lam,
-                                      stats=kstats)
-        else:
-            hits = wand.search_wand(idx, query, k=args.k,
-                                    prior=prior, prior_lam=args.prior_lam,
-                                    stats=kstats)
+        hits = maxscore.search_maxscore(idx, query, k=args.k, prior=prior,
+                                        prior_lam=args.prior_lam,
+                                        stats=kstats)
         if kstats.get("truncated_terms"):
             print(json.dumps({"exact": False,
                               "truncated_terms": kstats["truncated_terms"]}),

@@ -21,7 +21,7 @@ Endpoint parity (reference search/retrieval/urls.py:8-11, views.py):
                                                    template engine
     GET /results?query=...[&date_start=YYYY-MM-DD&date_end=...]
                 [&model=bm25|bm25-reference|vsm|lm-dirichlet|lm-pyp]
-                [&k=100][&kernel=wand|maxscore|relational|&wand=0|1]
+                [&k=100][&kernel=maxscore|relational]
                 [&snippets=1]
                 [&collapse_host=N][&rm3=0.6]
                 [&fuzzy=1][&mm=2][&syn=1]
@@ -102,7 +102,7 @@ Responses are JSON (an engine serves data, not Django templates): the
 same context keys the reference renders — results, number_of_results,
 retrieval_time, term_been_corrected, corrected_query, original_query.
 
-DEFAULT ROUTING (round-5): with no kernel/wand parameter, an eligible
+DEFAULT ROUTING (round-5): with no kernel parameter, an eligible
 request — plain bag-of-words BM25 free text, no date filter or other
 relational-only feature, a durable segment index loaded — serves from
 the Block-Max MaxScore kernel + driver mini-index LRU. Opening the index
@@ -110,27 +110,28 @@ is lazy (catalog.SegmentIndex reads only its JSON manifests), an LRU
 miss is a capped driver-side Arrow read of the segment files, and the
 spellcheck vocabulary streams term_stats through Arrow, so the kernel
 path runs no Spark job from start-up on (serving-grade latency;
-rank-identical to the relational path by the wand_bm25_identity /
-maxscore_bm25_identity gates). The driver must see ``--index``. The
+rank-identical to the relational path by the maxscore_bm25_identity
+gate). The driver must see ``--index``. The
 first relational request pays to open the tables it reads. Ineligible
 requests FALL BACK to the relational path silently; the response's
 ``path`` key says which path served. On a quantized-IMPACT store the
 default serves the store's QUANTIZED scores — that is the artifact's
 serving contract (you deployed a ~1 byte/posting store to be served from
 the impact byte; per-doc error is bounded by the quantizer,
-test_impact's accuracy gate) — while ``wand=0`` still forces the exact
-relational sidecar path, so the two defaults differ on impact stores BY
+test_impact's accuracy gate) — while ``kernel=relational`` forces the
+exact relational sidecar path, so the two differ on impact stores BY
 DESIGN and the ``path`` key discloses it. A term with more postings
-blocks than the kernel's fetch cap (wand.WAND_AUTO_CAP) is scored from
+blocks than the kernel's fetch cap (maxscore.FETCH_CAP) is scored from
 its highest-bound blocks only; the response then carries ``"exact":
 false`` and the ``truncated_terms`` (``"exact": true`` otherwise).
-``kernel=wand|maxscore`` (or ``wand=1``) forces a kernel and keeps the
-old refusal semantics (400 on date filters etc. — same reason
-jobs/query_topk.py rejects the combination); ``wand=0`` (or
-``kernel=relational``) forces the relational path.
+``kernel=maxscore`` forces the kernel and refuses with a 400 what it
+cannot honor (date filters, non-BM25 models, relational-only features —
+the same refusals as jobs/query_topk.py); ``kernel=relational`` forces
+the relational path. The retired selectors ``kernel=wand`` and
+``wand=0|1`` answer 400 naming their replacement.
 
 A single lock serializes query execution: one Spark driver serves the
-plans, and the WAND kernel mutates the driver-side LRU.
+plans, and the kernel mutates the driver-side LRU.
 
 Usage:
     spark-submit --py-files dist/engine.zip jobs/serve.py \
@@ -178,14 +179,13 @@ def create_server(index, port: int = 0, spellchecker=None,
     ``prior`` (a (node, rank) DataFrame, e.g. a pagerank artifact)
     blends the static document prior into every ranked query on BOTH
     paths: the relational path via executor.execute(prior=...) and the
-    WAND kernel via its iterative-deepening blend (round-4: wand=1 used
-    to ignore the prior; now the two paths stay rank-identical with a
-    prior configured — the kernel pays one bounded Spark lookup per
-    query for the candidates' prior rows).
+    MaxScore kernel via its iterative-deepening blend (the two paths
+    stay rank-identical with a prior configured — the kernel pays one
+    bounded Spark lookup per query for the candidates' prior rows).
     ``embeddings`` (a (vec_id, embedding) DataFrame keyed by doc_id)
     enables GET /hybrid — sparse+dense RRF fusion; without it the
     endpoint answers 400."""
-    from search_engine_spark.operators import executor, wand
+    from search_engine_spark.operators import executor, maxscore
 
     lock = threading.Lock()
 
@@ -234,49 +234,52 @@ def create_server(index, port: int = 0, spellchecker=None,
         t0 = time.perf_counter()
         # kernel: None = AUTO (default — route eligible plain BM25
         # free text through the MaxScore kernel, everything else
-        # relational); "wand"/"maxscore" = force a segment serving
-        # kernel (explicit requests keep their refusal semantics);
-        # "relational" = force the relational path (the old default,
-        # also ?wand=0)
-        if kernel not in (None, "wand", "maxscore", "relational"):
-            raise ValueError(
-                f"kernel must be 'wand', 'maxscore' or 'relational', "
-                f"got {kernel!r}")
+        # relational); "maxscore" = force the kernel (explicit requests
+        # keep their refusal semantics); "relational" = force the
+        # relational path
+        if kernel not in (None, "maxscore", "relational"):
+            raise ValueError(f"unknown kernel {kernel!r}: use "
+                             "kernel=maxscore or kernel=relational")
         auto_route = kernel is None
-        if kernel == "relational":
-            kernel = None
-        use_wand = kernel is not None
+        use_kernel = kernel == "maxscore"
+        if use_kernel and model != "bm25":
+            # the kernel scores BM25 only; answering with BM25 scores
+            # under another model's name would be silently wrong
+            raise ValueError(
+                f"model={model} requires the relational path "
+                "(kernel=relational): the MaxScore kernel scores BM25 only")
         if not 1 <= k <= MAX_K:
             # negative k raises deep inside Spark's limit() (a 500), and
             # an unbounded k lets one request collect the whole index
             # through the serving lock — reject as a 400 like the
-            # wand/date and half-open-range checks
+            # kernel/date and half-open-range checks
             raise ValueError(f"k must be in [1, {MAX_K}], got {k}")
         if collapse_host:
             if not 1 <= collapse_host <= MAX_PER_HOST:
                 raise ValueError(
                     f"collapse_host must be in [1, {MAX_PER_HOST}], "
                     f"got {collapse_host}")
-            if use_wand:
-                # the WAND kernel returns a driver-side bounded heap of
+            if use_kernel:
+                # the kernel returns a driver-side bounded top-k of
                 # exactly k; diversifying after the cut would UNDER-fill
                 # the page — route through the relational path, whose
                 # full df-bounded ranking the collapse can draw from
                 raise ValueError(
-                    "collapse_host requires the relational path (wand=0)")
+                    "collapse_host requires the relational path "
+                    "(kernel=relational)")
             if doc_hosts is None:
                 raise ValueError(
                     "collapse_host requires --documents with a url column")
         if rm3_alpha is not None:
-            if use_wand:
+            if use_kernel:
                 raise ValueError(
-                    "rm3 requires the relational path (wand=0)")
+                    "rm3 requires the relational path (kernel=relational)")
             if not 0.0 <= rm3_alpha <= 1.0:
                 raise ValueError(f"rm3 must be in [0, 1], got {rm3_alpha}")
         if fuzzy_max_dist is not None:
-            if use_wand:
+            if use_kernel:
                 raise ValueError(
-                    "fuzzy requires the relational path (wand=0)")
+                    "fuzzy requires the relational path (kernel=relational)")
             if not 0 <= fuzzy_max_dist <= MAX_FUZZY_DIST:
                 # Lucene's own FuzzyQuery bound: beyond distance 2 the
                 # expansion set explodes and matches stop being typos
@@ -284,16 +287,16 @@ def create_server(index, port: int = 0, spellchecker=None,
                     f"fuzzy must be in [0, {MAX_FUZZY_DIST}], "
                     f"got {fuzzy_max_dist}")
         if min_should_match is not None:
-            if use_wand:
+            if use_kernel:
                 raise ValueError(
-                    "mm requires the relational path (wand=0)")
+                    "mm requires the relational path (kernel=relational)")
             if min_should_match < 1:
                 raise ValueError(
                     f"mm must be >= 1, got {min_should_match}")
         if recency_hl is not None:
-            if use_wand:
+            if use_kernel:
                 raise ValueError(
-                    "recency requires the relational path (wand=0)")
+                    "recency requires the relational path (kernel=relational)")
             if recency_as_of is None:
                 raise ValueError(
                     "recency=HL requires as_of=YYYY-MM-DD — an implicit "
@@ -307,14 +310,14 @@ def create_server(index, port: int = 0, spellchecker=None,
                 raise ValueError(
                     "syn=1 requires the server to be started with "
                     "--synonyms (no synonym table loaded)")
-            if use_wand:
+            if use_kernel:
                 raise ValueError(
-                    "syn requires the relational path (wand=0)")
+                    "syn requires the relational path (kernel=relational)")
         if after is not None:
-            if use_wand:
+            if use_kernel:
                 raise ValueError(
                     "after_score/after_doc require the relational path "
-                    "(wand=0): the WAND kernel's heap has no cursor")
+                    "(kernel=relational): the kernel's top-k has no cursor")
             if collapse_host:
                 raise ValueError(
                     "after_score/after_doc do not compose with "
@@ -328,7 +331,7 @@ def create_server(index, port: int = 0, spellchecker=None,
         if auto_route:
             # DEFAULT routing (round-5): an eligible query serves from
             # the MaxScore kernel — rank-identical to the relational
-            # path (wand_bm25_identity / maxscore_bm25_identity gates)
+            # path (maxscore_bm25_identity gate)
             # and ~50× faster warm (driver mini-index LRU, zero Spark
             # jobs on repeat terms; the reference's only serving path IS
             # its mini-index fast path, index_loader.py:71-128).
@@ -339,8 +342,8 @@ def create_server(index, port: int = 0, spellchecker=None,
             # EXPLICIT kernel requests the kernel cannot honor).
             # Impact stores: the kernel serves the store's QUANTIZED
             # scores — the artifact's serving contract (error bounded
-            # by the quantizer) — while wand=0 stays exact via the
-            # sidecar; documented divergence, disclosed by "path".
+            # by the quantizer) — while kernel=relational stays exact
+            # via the sidecar; documented divergence, disclosed by "path".
             from search_engine_spark.plans import planner as _planner
 
             relational_only = (
@@ -350,10 +353,9 @@ def create_server(index, port: int = 0, spellchecker=None,
                 or recency_hl is not None or after is not None
                 or model != "bm25")
             if (not relational_only and hasattr(index, "mini_index")
-                    and wand.wand_eligible(
+                    and maxscore.kernel_eligible(
                         _planner.classify(query, index.analyzer))):
-                kernel = "maxscore"
-                use_wand = True
+                use_kernel = True
         corrected = query
         executed = corrected
         if first_execution and (spellchecker is not None or abbreviations):
@@ -365,11 +367,11 @@ def create_server(index, port: int = 0, spellchecker=None,
             # boolean/proximity query would rewrite operator words into
             # vocabulary terms and silently change the parse.
             plan = planner.classify(query, index.analyzer)
-            # wand path: the stricter shared predicate (wand_eligible
-            # also excludes phrase-bearing free text, which search_wand
+            # kernel path: the stricter shared predicate (kernel_eligible
+            # also excludes phrase-bearing free text, which the kernel
             # 400s) — correcting a query the kernel will refuse anyway
             # is wasted work and lets the two guards drift.
-            correctable = (wand.wand_eligible(plan) if use_wand
+            correctable = (maxscore.kernel_eligible(plan) if use_kernel
                            else isinstance(plan, planner.FreeTextPlan))
             if correctable:
                 if spellchecker is not None:
@@ -382,11 +384,11 @@ def create_server(index, port: int = 0, spellchecker=None,
                     from search_engine_spark.plans.spellcheck import (
                         expand_abbreviations)
 
-                    # wand's bag-of-words kernel rejects quoted queries,
+                    # the bag-of-words kernel rejects quoted queries,
                     # so expand to bare terms there instead of a phrase
                     executed = expand_abbreviations(
-                        corrected, abbreviations, quote=not use_wand)
-        if auto_route and use_wand and executed != query:
+                        corrected, abbreviations, quote=not use_kernel)
+        if auto_route and use_kernel and executed != query:
             # belt-and-braces: a rewrite (spellcheck/expansion) cannot
             # introduce phrases on the kernel path (quote=False above),
             # but if the executed query ever stopped being
@@ -394,30 +396,23 @@ def create_server(index, port: int = 0, spellchecker=None,
             # refuse a request the user never made explicit
             from search_engine_spark.plans import planner as _planner
 
-            if not wand.wand_eligible(
+            if not maxscore.kernel_eligible(
                     _planner.classify(executed, index.analyzer)):
-                kernel, use_wand = None, False
-        # the serving kernels report the terms their fetch cap cut
-        # short; the relational path always scores every posting
+                use_kernel = False
+        # the kernel reports the terms its fetch cap cut short; the
+        # relational path always scores every posting
         kstats: dict = {}
         with lock:
-            if use_wand:
+            if use_kernel:
                 if ds or de:
                     raise ValueError(
-                        "wand=1 does not support date filtering; "
+                        "kernel=maxscore does not support date filtering; "
                         "use the relational path")
-                if kernel == "maxscore":
-                    from search_engine_spark.operators import (
-                        maxscore as _ms)
-
-                    hits = _ms.search_maxscore(
-                        index, executed, k=k,
-                        prior=prior, prior_lam=prior_lam, stats=kstats)
-                else:
-                    hits = wand.search_wand(index, executed, k=k,
-                                            prior=prior,
-                                            prior_lam=prior_lam,
-                                            stats=kstats)
+                # resolved through the module at call time, so a tracer
+                # that wraps maxscore.search_maxscore sees every call
+                hits = maxscore.search_maxscore(
+                    index, executed, k=k,
+                    prior=prior, prior_lam=prior_lam, stats=kstats)
             elif collapse_host:
                 from search_engine_spark.operators import serp
 
@@ -491,7 +486,7 @@ def create_server(index, port: int = 0, spellchecker=None,
             "original_query": query,
             # which path actually served (auto-routing makes it
             # request-dependent; clients and the bench read it)
-            "path": kernel if use_wand else "relational",
+            "path": "maxscore" if use_kernel else "relational",
             # false when the fetch cap truncated a term: its dropped
             # blocks only lower scores, so the ranking is approximate
             "exact": not truncated,
@@ -686,14 +681,18 @@ def create_server(index, port: int = 0, spellchecker=None,
                     if model not in _MODELS:
                         self._json(400, {"error": f"unknown model {model}"})
                         return
-                    # kernel param: explicit kernel=/wand=1 forces a
-                    # kernel (with refusals); wand=0 forces relational;
-                    # ABSENT = auto-route (kernel when eligible,
-                    # relational fallback otherwise)
+                    # kernel param: kernel=maxscore forces the kernel
+                    # (with refusals); kernel=relational forces
+                    # relational; ABSENT = auto-route (kernel when
+                    # eligible, relational fallback otherwise)
+                    if "wand" in q:
+                        # refuse, never ignore: a dropped wand=0 would
+                        # switch impact-store clients to quantized scores
+                        raise ValueError(
+                            "the wand parameter was retired: use "
+                            + ("kernel=maxscore" if q["wand"][0] == "1"
+                               else "kernel=relational"))
                     kern = q.get("kernel", [None])[0]
-                    if kern is None and "wand" in q:
-                        kern = ("wand" if q["wand"][0] == "1"
-                                else "relational")
                     self._json(200, run_query(
                         query, int(q.get("k", ["100"])[0]), model,
                         _parse_date(q.get("date_start", [None])[0]),

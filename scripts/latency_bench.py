@@ -3,9 +3,10 @@ SURVEY §7 step-5 latency evidence in distribution form (bench.py
 records single best-of samples; this sweeps repetitions).
 
 Builds the in-memory index over $SPARK_GRAFT_SF_DIR (default sf0.1) and
-a durable segment index over the same docs for the WAND line, derives a
-deterministic query set from the corpus vocabulary (head/mid/tail df
-terms), and runs each query kind R times (default 20) after a warm-up.
+a durable segment index over the same docs for the MaxScore line,
+derives a deterministic query set from the corpus vocabulary
+(head/mid/tail df terms), and runs each query kind R times (default 20)
+after a warm-up.
 Prints one JSON line:
 
     {"metric": "query_latency_ms", "kinds": {kind: {"p50": .., "p95": ..,
@@ -47,7 +48,7 @@ def main() -> None:
 
     from search_engine_spark import engine
     from search_engine_spark.functions.analyzer import AnalyzerConfig
-    from search_engine_spark.operators import executor, wand
+    from search_engine_spark.operators import executor, maxscore
     from search_engine_spark.session import get_spark
     from search_engine_spark.sources import catalog, corpus
 
@@ -73,7 +74,6 @@ def main() -> None:
         spark, docs.select("doc_id", "text"), os.path.join(seg_dir, "idx"))
     seg = catalog.load_index(spark, os.path.join(seg_dir, "idx"))
 
-    from search_engine_spark.operators import maxscore as _ms
     from search_engine_spark.operators import search as S_mod
 
     # next-word phrase index over the durable store: `seg` was loaded
@@ -112,13 +112,9 @@ def main() -> None:
         "page2": lambda i: executor.execute(
             idx, f"{head[i % 4]} {head[(i + 1) % 4]}", k=50,
             after=(1.0, 100)).count(),
-        # WAND over the durable store: i%4==0 repeats a term set (LRU
-        # hit, zero Spark jobs), the rest rotate (cold pruned scans)
-        "wand": lambda i: len(wand.search_wand(
-            seg, f"{head[i % 4]} {mid[i % 4]}", k=100)),
-        # MaxScore over the SAME store + shared LRU: the kernel
-        # head-to-head at serving latency
-        "maxscore": lambda i: len(_ms.search_maxscore(
+        # MaxScore over the durable store: i%4==0 repeats a term set
+        # (LRU hit, zero Spark jobs), the rest rotate (mini-index misses)
+        "maxscore": lambda i: len(maxscore.search_maxscore(
             seg, f"{head[i % 4]} {mid[i % 4]}", k=100)),
         # the same two-word phrase over the durable store: positional
         # intersection (pre-artifact handle) vs ONE bigram lookup

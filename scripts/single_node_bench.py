@@ -43,7 +43,7 @@ def main() -> None:
     from search_engine_spark.functions.analyzer import (AnalyzerConfig,
                                                         extract_text,
                                                         make_extract_text_udf)
-    from search_engine_spark.operators import wand as W
+    from search_engine_spark.operators import maxscore as MS
     from search_engine_spark.session import get_spark
     from search_engine_spark.sources import catalog, corpus
     from tests import oracle
@@ -90,7 +90,7 @@ def main() -> None:
     ref_q = (time.perf_counter() - t0) / len(queries)
     del o_index, o_sizes, docs
 
-    # ---- engine: durable segment build + WAND serving -------------------
+    # ---- engine: durable segment build + MaxScore serving ---------------
     def prepared(df):
         w = corpus.ingest_filters(corpus.with_dense_doc_ids(df))
         return w.select(
@@ -113,10 +113,10 @@ def main() -> None:
     # apples-to-apples state (the reference re-reads its mini index per
     # query from disk/GCS — excluded from its number too)
     for q in set(queries):
-        W.search_wand(idx, q, k=100)
+        MS.search_maxscore(idx, q, k=100)
     t0 = time.perf_counter()
     for q in queries:
-        W.search_wand(idx, q, k=100)
+        MS.search_maxscore(idx, q, k=100)
     eng_q = (time.perf_counter() - t0) / len(queries)
     shutil.rmtree(tmp)
 

@@ -79,7 +79,7 @@ def encode_block(doc_ids: np.ndarray, tfs: np.ndarray,
     Layout: varint([n, doc₀, Δdoc₁..Δdocₙ₋₁, tf₁..tfₙ[, dl₁..dlₙ]]).
     doc_ids must be sorted ascending and unique within the block. ``dls``
     (per-posting doc length) makes blocks self-contained for scoring —
-    the query path then needs NO doc_stats join and the WAND kernel can
+    the query path then needs NO doc_stats join and the serving kernel can
     score a block from its bytes alone (cost ≈1-2 bytes/posting).
     """
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
@@ -263,7 +263,7 @@ def encode_block_ef(doc_ids: np.ndarray, tfs: np.ndarray,
     """encode_block's Elias-Fano sibling: doc ids as an EF sequence, tf
     (and optional dl) runs varint-coded exactly as in the legacy layout.
     Same decode_block_full contract — payloads self-describe via the
-    0x00 tag, so readers (WAND, MaxScore, segment merge, tf-only
+    0x00 tag, so readers (MaxScore, segment merge, tf-only
     convert) work unchanged on either codec or a mix."""
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)

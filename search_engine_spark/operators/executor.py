@@ -274,7 +274,7 @@ def execute(index: InvertedIndex, query: str, k: int | None = 100,
 
     # RM3 expansion (search.search_rm3) applies to PLAIN free-text BM25
     # only; every unsupported combination is refused explicitly (the
-    # --wand guard style) rather than silently ignoring the expansion:
+    # kernel-guard style) rather than silently ignoring the expansion:
     # phrase/boolean/proximity plans have no bag-of-words weight vector
     # to interpolate and other models define no RM3 weighting here. A
     # date range IS supported: both RM3 passes restrict to the date

@@ -1,27 +1,31 @@
 """Driver-orchestrated MaxScore top-k kernel (Turtle & Flood 1995) —
-the other classical dynamic-pruning family, next to Block-Max WAND
-(operators.wand).
+the engine's one dynamic-pruning serving kernel.
 
-Where WAND's unit of work is the block RANGE (skip a doc range iff the
-sum of every term's block upper bound is below the heap threshold θ),
-MaxScore's is the TERM: sort the query terms by score upper bound and
-call a term "non-essential" when the upper bounds of it and every
-smaller term sum to < θ — a document containing ONLY non-essential
-terms can never enter the top-k, so non-essential posting blocks are
-never decoded wholesale. They are probed only for candidates that
+The reference loads a per-query "mini index" via byte-range reads
+(index_loader.py:71-128) and scores it in Python loops. Here the mini
+index is the query terms' segment BLOCKS, fetched by a driver-side
+Arrow read (catalog.SegmentIndex.mini_index; bounded per term by the
+impact-ordered FETCH_CAP), and scored with block-max pruning.
+
+Blocks are doc-partitioned (block_id = doc_id // span), so all terms'
+blocks with the same block_id cover the same doc range and a doc's
+final score is complete once its block range is processed. Within a
+range, MaxScore's unit of work is the TERM: sort the range's blocks by
+score upper bound (Σ qtf · ub(df, block_max_tf)) and call a block
+"non-essential" when the upper bounds of it and every smaller block sum
+to < θ, the current top-k threshold — a document containing ONLY
+non-essential terms can never enter the top-k, so non-essential blocks
+are never decoded wholesale. They are probed only for candidates that
 already scored on an essential term, and each candidate is abandoned
 the moment its partial score plus the remaining non-essential bound
 falls below θ.
 
-This kernel layers MaxScore ON TOP of the block-range structure the
-segment store provides (segments.py: doc-partitioned blocks with
-per-block max-tf metadata), so it keeps WAND's range skip as the
-degenerate case (every term non-essential ⇒ total bound < θ ⇒ skip the
-range without decoding) and adds the per-term decode savings inside
-surviving ranges. For head-term-heavy queries ("the data") WAND decodes
-every term's block in a surviving range; MaxScore decodes the selective
-terms' blocks and touches the head term's bytes only for live
-candidates — at web scale, where the head term's blocks dominate the
+Block-Max WAND's range skip is the degenerate case: every block
+non-essential ⇒ the whole range's bound is < θ ⇒ skip the range without
+decoding. Inside surviving ranges MaxScore adds the per-term decode
+savings: for head-term-heavy queries ("the data") it decodes the
+selective terms' blocks and touches the head term's bytes only for live
+candidates — at web scale, where the head term's blocks dominate a
 range's byte volume, that is the difference that matters.
 
 Scoring is array work over the blocks' memoized decodes (the mini-index
@@ -32,24 +36,55 @@ merged after each range in (score desc, doc asc) order.
 
 Exactness: every skip is against the CURRENT θ, which only grows, and
 every bound argument is a strict ``< θ`` — ties at the threshold are
-still decoded, so results are bit-identical to the relational BM25 path
-and to search_wand (pinned by the ``maxscore_bm25_identity`` driver
-gate and the fuzzed three-way identity in tests/test_maxscore.py).
-
-Reference parity: the reference engine has a single query loop
-(query_processing.py); WAND and MaxScore are this repo's two serving
-kernels over the same durable segments, selectable per query.
+still decoded, so results are rank-identical to the relational BM25
+path (pinned by the ``maxscore_bm25_identity`` driver gate and the
+oracle identity tests in tests/test_maxscore.py).
 """
 
 from __future__ import annotations
 
+import math
 from collections import defaultdict
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from ..functions.analyzer import analyze_query
 from . import segments as SEG
-from .wand import WAND_AUTO_CAP, truncated_terms, wand_eligible
+
+
+# Default per-term driver-fetch bound (blocks). At the default build
+# span of 4096 docs/block this is ~1M docs of postings per term — far
+# beyond any non-head term, so typical queries stay EXACT; a
+# stopword-scale term at 10^12 docs is truncated to its 256
+# highest-upper-bound blocks instead of shipping GBs to the driver.
+FETCH_CAP = 256
+
+# the relational path's floor for docs absent from the prior frame
+# (search.blend_doc_prior default_prior) — the two paths MUST share it
+PRIOR_FLOOR = 1e-12
+
+
+def truncated_terms(mini: dict) -> list[str]:
+    """Terms of a mini-index lookup whose fetched blocks hold fewer
+    postings than the term's df — the fetch cap dropped some of their
+    blocks, so scores over them are a safe under-estimate."""
+    return sorted(t for t, (df, blks) in mini.items()
+                  if sum(blk.n_docs for blk in blks) < df)
+
+
+def kernel_eligible(plan) -> bool:
+    """True iff a classified plan has kernel semantics: pure bag-of-words
+    free text, no phrases. THE single predicate behind search_maxscore's
+    own refusal and the serving entry points' pre-spellcheck guards
+    (jobs/serve.py, jobs/query_topk.py, plans/explain.py) — keeping them
+    on one function prevents the guards drifting apart (e.g. a caller
+    spellchecking a boolean query that the kernel then rejects)."""
+    from ..plans import planner
+
+    return (isinstance(plan, planner.FreeTextPlan) and not plan.phrases
+            and not plan.prefixes and not plan.wildcards
+            and not plan.regexps)
 
 
 def search_maxscore(index, query: str, k: int = 100,
@@ -60,27 +95,38 @@ def search_maxscore(index, query: str, k: int = 100,
                     stats: dict | None = None) -> list[tuple[int, float]]:
     """BM25 top-k over a SegmentIndex via block-max MaxScore.
 
-    Same contract as wand.search_wand: [(doc_id, score)] driver-side,
-    free-text only (phrase/boolean/proximity refused — the analyzer
-    would silently degrade them), tombstoned deletes masked, the
-    impact-ordered ``max_blocks_per_term`` cap bounds driver transfer
-    ("auto" = wand.WAND_AUTO_CAP; capped terms make results a documented
-    safe approximation exactly as in WAND — dropped blocks only LOWER
-    scores). Shares the mini-index LRU with WAND, so alternating kernels
-    on one query fetches nothing twice.
+    Returns [(doc_id, score)] — a driver-side result (the serving path);
+    use operators.search for the distributed DataFrame path.
+
+    Requires a SegmentIndex (the durable, block-encoded form): the
+    relational ``operators.search`` path is the equivalent for in-memory
+    indexes. FREE-TEXT queries only: phrase/boolean/proximity shapes
+    raise ValueError (the analyzer would strip their operators and
+    silently degrade them to bag-of-words) — use executor.execute.
+    Tombstoned deletes are masked with the same stale global stats as
+    the relational path, so the two stay rank-identical under deletes.
+
+    ``max_blocks_per_term`` bounds the fetch: each term keeps only its
+    highest-upper-bound blocks, ranked from block metadata before any
+    payload is read, with the exact df alongside. Dropped blocks can
+    only LOWER a doc's score (a safe approximation, reported in
+    ``stats["truncated_terms"]``). ``"auto"`` = FETCH_CAP, ``None`` =
+    the exact uncapped fetch, an int = an explicit cap. Fetches go
+    through the driver mini-index LRU and its misses are driver-side
+    Arrow reads, so a query launches ZERO Spark jobs.
 
     ``stats`` (optional dict) receives ``n_blocks_total``,
     ``n_blocks_decoded`` (blocks scored) and ``n_ranges_skipped`` — the
-    pruning telemetry the kernel-comparison bench and tests read
-    (counters are for the LAST top-k pass when prior blending deepens
-    iteratively) — and ``truncated_terms``: the query terms the fetch
-    cap cut short (wand.truncated_terms); empty means the answer is
-    exact — and ``mini_hits`` / ``mini_misses``: the query terms the
-    mini-index LRU served and the ones it fetched.
+    pruning telemetry the bench and tests read (counters are for the
+    LAST top-k pass when prior blending deepens iteratively) — and
+    ``truncated_terms``: the query terms the fetch cap cut short
+    (truncated_terms); empty means the answer is exact — and
+    ``mini_hits`` / ``mini_misses``: the query terms the mini-index LRU
+    served and the ones it fetched.
 
-    ``prior`` blends a static document prior exactly as in search_wand
-    (same iterative-deepening wrapper, wand._blend_prior_topk, so the
-    two kernels cannot drift).
+    ``prior`` (a (node, rank) DataFrame, canonically a PageRank
+    artifact) blends the static document prior EXACTLY like the
+    relational path's search.blend_doc_prior (see _blend_prior_topk).
     """
     if not hasattr(index, "mini_index"):
         raise TypeError(
@@ -90,7 +136,7 @@ def search_maxscore(index, query: str, k: int = 100,
     from ..plans import planner
 
     plan = planner.classify(query, index.analyzer)
-    if not wand_eligible(plan):
+    if not kernel_eligible(plan):
         raise ValueError(
             "search_maxscore is a bag-of-words BM25 kernel: phrase, "
             "boolean and proximity queries have no MaxScore semantics "
@@ -105,9 +151,10 @@ def search_maxscore(index, query: str, k: int = 100,
 
     n = index.stats["n_docs"]
     avgdl = index.stats["avgdl"]
-    # quantized-impact stores: same branch as search_wand — score from
-    # the stored impact, bound from the block's max impact (exact for
-    # the quantized scores), scoring model baked at quantize time
+    # quantized-impact stores (catalog.quantize_index): blocks carry the
+    # stored impact q instead of tf+dl; score = qtf·idf·(k1+1)·q/maxq and
+    # the per-block bound idf·(k1+1)·block_max/maxq is EXACT for the
+    # quantized scores (block_max_tf holds the block's max impact)
     impact_store = getattr(index, "store", "tf") == "impact"
     impact_scale = 0.0
     if impact_store:
@@ -122,7 +169,7 @@ def search_maxscore(index, query: str, k: int = 100,
                else frozenset())
     del_arr = (np.fromiter(deleted, dtype=np.int64, count=len(deleted))
                if deleted else None)
-    cap = (WAND_AUTO_CAP if max_blocks_per_term == "auto"
+    cap = (FETCH_CAP if max_blocks_per_term == "auto"
            else max_blocks_per_term)
     mini = index.mini_index(terms, cap=cap, stats=stats)
     dfs = {t: df for t, (df, _) in mini.items()}
@@ -210,7 +257,7 @@ def search_maxscore(index, query: str, k: int = 100,
                     key=lambda x: x[0])
             total_ub = sum(u for u, _ in ubs)
             if full and total_ub < theta:
-                # WAND's range skip, recovered as the all-non-essential case
+                # Block-Max WAND's range skip: the all-non-essential case
                 if stats is not None:
                     stats["n_ranges_skipped"] += 1
                 continue
@@ -267,7 +314,57 @@ def search_maxscore(index, query: str, k: int = 100,
 
     if prior is None:
         return bm25_topk(k)
-    from .wand import _blend_prior_topk
-
     return _blend_prior_topk(index, bm25_topk, k, prior, prior_lam,
                              prior_id_col, prior_col)
+
+
+def _blend_prior_topk(index, bm25_topk, k: int, prior, lam: float,
+                      id_col: str, prior_col: str) -> list[tuple[int, float]]:
+    """Exact blended top-k (score + lam·ln(prior), docs absent from the
+    prior or with a null prior at PRIOR_FLOOR) from a bm25-exact
+    ``bm25_topk(capacity)``, by iterative deepening: take the exact bm25
+    top-K′ (K′ starts at 4k), fetch those K′ docs' priors in ONE bounded
+    Spark job (broadcast semi-join, O(K′) rows — never the corpus-sized
+    prior frame), and stop once no unseen doc can enter the top-k.
+
+    Correctness argument: for any doc outside the bm25 top-K′, blended ≤
+    bm25 + C with C = max(0, lam·ln max_prior) (C = 0 when priors are
+    probabilities), and its bm25 ≤ the K′-th bm25 score; so once
+    bm25_{K′} + C < blended_{k-th}, no unseen doc can enter the top-k.
+    K′ doubles until that holds or the candidate set is exhausted (fewer
+    than K′ docs returned → everything matching the query has been
+    blended). Block fetches are LRU-cached, so only the heap pass
+    repeats."""
+    spark = index.spark
+    p_max = getattr(prior, "_prior_max", None)
+    if p_max is None:
+        p_max = prior.agg(F.max(F.col(prior_col))).collect()[0][0]
+        try:  # memo on the frame: serving reuses one prior frame
+            prior._prior_max = p_max
+        except AttributeError:
+            pass
+    boost = max(0.0, lam * math.log(p_max)) if p_max else 0.0
+    cap = max(4 * k, k)
+    while True:
+        cands = bm25_topk(cap)
+        if not cands:
+            return []
+        ids_df = spark.createDataFrame([(d,) for d, _ in cands],
+                                       "doc_id long")
+        got = (prior.join(F.broadcast(ids_df),
+                          F.col(id_col) == F.col("doc_id"))
+               .select("doc_id", F.col(prior_col).alias("p")).collect())
+        # a null rank blends like an absent row (the relational path's
+        # coalesce to the floor)
+        pmap = {r.doc_id: r.p for r in got if r.p is not None}
+        blended = sorted(
+            ((d, s + lam * math.log(pmap.get(d, PRIOR_FLOOR)))
+             for d, s in cands),
+            key=lambda x: (-x[1], x[0]))
+        exhausted = len(cands) < cap
+        if exhausted or len(blended) < k:
+            return blended[:k]
+        theta = blended[k - 1][1]
+        if cands[-1][1] + boost < theta:
+            return blended[:k]
+        cap *= 2

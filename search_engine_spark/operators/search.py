@@ -147,7 +147,7 @@ def quantized_scored_frame(index: InvertedIndex, terms: list[str],
                            bits: int = 8) -> DataFrame:
     """per-(term,doc) QUANTIZED-impact weight frame — the relational
     twin of the impact-store serving kernels (catalog.quantize_index +
-    wand/maxscore impact branches). The impact is computed on the fly
+    maxscore impact branch). The impact is computed on the fly
     from (tf, dl) with scoring.quantized_impact_col — exact int64
     arithmetic, so it equals the impacts a quantized store of the same
     corpus holds bit-for-bit; weight = idf·(k1+1)·q/maxq. This is the
@@ -169,7 +169,7 @@ def quantized_scored_frame(index: InvertedIndex, terms: list[str],
 def search_quantized(index: InvertedIndex, terms: list[str], k: int = 100,
                      bits: int = 8) -> DataFrame:
     """Quantized-impact BM25 top-k → (doc_id, score), relational path.
-    Rank-identical to the impact-store WAND/MaxScore kernels at the same
+    Rank-identical to the impact-store MaxScore kernel at the same
     ``bits`` (pytest-gated); within (k1+1)·|q|/(2·maxq) of exact BM25 by
     the quantization error bound."""
     scored = quantized_scored_frame(index, terms, bits=bits)

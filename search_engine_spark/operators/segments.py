@@ -62,7 +62,8 @@ def _block_encoder(name: str):
 
 def bm25_upper_bound(df: int, n_docs: int, max_tf: int,
                      k1: float = 1.2, b: float = 0.75) -> float:
-    """Per-block BM25 score ceiling (dl→0 bound), used by WAND pruning."""
+    """Per-block BM25 score ceiling (dl→0 bound), used by block-max
+    pruning."""
     idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
     return idf * (k1 + 1.0) * max_tf / (max_tf + k1 * (1.0 - b))
 

@@ -553,7 +553,7 @@ def mmr_rerank(embeddings: DataFrame, qvec: list[float], k: int = 10,
     TakeOrderedAndProject); the greedy selection is inherently
     sequential (selection i depends on 1..i−1) and runs driver-side
     over the fetched fetch_k×dim block — a bounded serving-sized
-    numpy loop (the WAND-kernel pattern), never the corpus. Ties break
+    numpy loop (the serving-kernel pattern), never the corpus. Ties break
     (score DESC, vec_id ASC), the engine rule; candidate scores are
     pre-rounded to 6dp like cosine_topk so the λ=1 gate cannot wobble
     on float accumulation order."""

@@ -1,14 +1,15 @@
 """Query plan-choice explain: WHICH path will serve a query, before it
-runs — the debuggability tool every multi-kernel engine grows
+runs — the debuggability tool every multi-path engine grows
 (Elasticsearch `_validate/query?explain`, Lucene's query rewrite dump).
 
 ``explain_plan`` performs classification and the same artifact/kernel
 eligibility checks the execution paths perform, without launching any
 Spark job: classification is driver-side, phrase-index coverage is a
 driver-side set test, trigram extraction is pure string work, and
-kernel eligibility is the shared ``wand.wand_eligible`` predicate — so
-the report can never drift from what execute()/search_wand actually do
-(it calls the same functions). Score explain for an executed query is
+kernel eligibility is the shared ``maxscore.kernel_eligible`` predicate
+plus the BM25-only model check /results routes on — so the report can
+never drift from what execute()/search_maxscore actually do (it calls
+the same functions). Score explain for an executed query is
 the separate operators.search.explain_scores.
 """
 
@@ -24,8 +25,8 @@ def explain_plan(index, query: str, model: str = "bm25") -> dict[str, Any]:
 
     * ``kind``: proximity | boolean | freetext (planner.classify);
     * the analyzed terms / phrases / pattern tokens the plan carries;
-    * ``kernels``: dynamic-pruning kernels this (index, query) pair can
-      serve — ["wand", "maxscore"] for a pure bag-of-words free-text
+    * ``kernels``: dynamic-pruning kernels this (index, query, model)
+      can serve — ["maxscore"] for a pure bag-of-words BM25 free-text
       query on a durable SegmentIndex, else [] with a reason;
     * ``store``: "tf" or "impact" (+ bits) — which scoring the kernels
       would produce;
@@ -60,20 +61,25 @@ def explain_plan(index, query: str, model: str = "bm25") -> dict[str, Any]:
             report["regexps"] = plan.regexps
 
     # kernel eligibility — the SAME predicate the serving guards use
-    from ..operators import wand as W
+    from ..operators import maxscore
 
     durable = hasattr(index, "mini_index")
     if not durable:
         report["kernels"] = []
         report["kernels_reason"] = ("in-memory index — kernels need the "
                                     "durable segment store")
-    elif not W.wand_eligible(plan):
+    elif not maxscore.kernel_eligible(plan):
         report["kernels"] = []
         report["kernels_reason"] = ("not a pure bag-of-words free-text "
                                     "query — served by the relational "
                                     "path")
+    elif model != "bm25":
+        report["kernels"] = []
+        report["kernels_reason"] = (f"model {model} — the kernel scores "
+                                    "BM25 only; served by the relational "
+                                    "path")
     else:
-        report["kernels"] = ["wand", "maxscore"]
+        report["kernels"] = ["maxscore"]
 
     store = getattr(index, "store", "tf")
     report["store"] = store

@@ -208,9 +208,9 @@ def expand_abbreviations(query: str, abbreviations: dict[str, str],
     (reference helpers.py:297-303; dead code there, live feature here).
 
     ``quote=False`` appends the expansion as bare terms instead — for
-    the WAND serving path, whose bag-of-words BM25 kernel has no phrase
-    operator (search_wand rejects quoted queries rather than silently
-    degrading a phrase to independent terms)."""
+    the kernel serving path, whose bag-of-words BM25 kernel has no
+    phrase operator (search_maxscore rejects quoted queries rather than
+    silently degrading a phrase to independent terms)."""
     extra = []
     for tok in query.split(" "):
         exp = abbreviations.get(tok.lower())

@@ -134,7 +134,7 @@ def build_durable_index(
     # Resume must re-run with the SAME build config: skipping completed
     # steps while e.g. the analyzer or block_span changed would mix
     # incompatible artifacts (stats.json would claim the new analyzer
-    # against old-analyzer tokens; mixed block spans break WAND's
+    # against old-analyzer tokens; mixed block spans break the kernel's
     # same-block-id-covers-same-doc-range invariant). The config commits
     # to the manifest up front and every re-run validates against it.
     config = {
@@ -408,7 +408,7 @@ def compact_streaming_index(
     growth story: ``streaming.incremental_index_build`` absorbs new files
     continuously into staging tables that serve queries directly, and a
     periodic compaction turns the accumulated batches into block-encoded,
-    WAND-servable segments (this exact ``build_durable_index`` format).
+    kernel-servable segments (this exact ``build_durable_index`` format).
 
     A pure LAYOUT transform: no re-tokenization, no re-hashing — term
     buckets are reused from the staged partition values (the absorb step
@@ -929,7 +929,7 @@ class SegmentIndex(InvertedIndex):
             # relational paths (free-text/phrase/boolean/VSM/LM) read
             # the SOURCE postings via the sidecar instead and score
             # EXACT (unquantized) weights; the quantized scores are the
-            # serving kernels' (search_wand/search_maxscore) and the
+            # serving kernel's (search_maxscore) and the
             # explicit search_quantized path. Same bucket pruning as the
             # segment scan — the stage is partitioned by bucket too.
             src = self.postings
@@ -1148,7 +1148,7 @@ def quantize_index(spark: SparkSession, index_dir: str, out_dir: str,
     re-encoded as ~1-byte-per-posting impact blocks
     (codec.encode_block_impact); serving then scores
     idf·(k1+1)·q/maxq with NO doc-length data — smaller payloads,
-    fewer decode bytes, and an EXACT per-block bound for WAND/MaxScore
+    fewer decode bytes, and an EXACT per-block bound for MaxScore
     pruning (block_max_tf holds the block's max impact). Positions pass
     through unchanged, so phrase/proximity queries still work.
 
@@ -1598,14 +1598,14 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids,
                 vacuum_out: str | None = None) -> dict:
     """Tombstone documents in a completed index — Lucene-style logical
     deletion: queries exclude the docs IMMEDIATELY (SegmentIndex applies
-    the tombstone set in lookup() and the WAND kernel), while the
+    the tombstone set in lookup() and the MaxScore kernel), while the
     physical postings stay on disk until a ``merge_indexes`` pass (which
     also vacuums a single index) drops them and recomputes corpus stats.
 
     Until that vacuum, corpus-global statistics (df, n_docs, avgdl) are
     STALE-BY-DESIGN — exactly the trade every segment-file engine makes
     (deleted docs still count toward idf until segments merge). Both the
-    relational and WAND paths score with the same stale stats, so they
+    relational and kernel paths score with the same stale stats, so they
     stay rank-identical to each other (test-gated).
 
     ``doc_ids``: a DataFrame with a doc_id column, or an iterable of
@@ -1710,7 +1710,7 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str],
     Requirements validated up front: every input finished building
     (build_complete manifest), all inputs share the same analyzer /
     buckets / block_span / positional config (mixing analyzers would mix
-    token vocabularies; mixing block spans breaks WAND's block-range
+    token vocabularies; mixing block spans breaks the kernel's block-range
     invariant), and LIVE doc_id sets are pairwise DISJOINT
     (doc-partitioned blocks assume one posting per (term, doc_id);
     merging re-crawled corpora needs a dedup/re-id pass first — see

@@ -13,7 +13,7 @@ without a full rebuild:
   manifest lineage row per batch. The staged postings serve queries
   directly; ``sources.catalog.compact_streaming_index`` periodically
   re-encodes the accumulated batches into the durable block-encoded
-  segment layout (WAND-servable) — a pure layout transform reusing the
+  segment layout (kernel-servable) — a pure layout transform reusing the
   ingest's term buckets, resumable via the same manifest steps. The
   doc-partitioned block layout (block_id = doc_id // span) means new
   high doc_ids only ADD blocks, never rewrite old ones.

@@ -1,6 +1,6 @@
 """plans.explain.explain_plan: the plan-choice report must agree with
 what the execution paths actually do — it calls the same predicates
-(planner.classify, wand.wand_eligible, bigram coverage, trigram
+(planner.classify, maxscore.kernel_eligible, bigram coverage, trigram
 extraction), so these tests pin the report against observed behavior.
 """
 
@@ -25,8 +25,17 @@ def explain_idx(tmp_path_factory, spark, corpus_sdf):
 def test_freetext_kernels_eligible(explain_idx):
     rep = explain_plan(explain_idx, "market price growth")
     assert rep["kind"] == "freetext"
-    assert rep["kernels"] == ["wand", "maxscore"]
+    assert rep["kernels"] == ["maxscore"]
     assert rep["store"] == "tf"
+
+
+def test_non_bm25_model_reports_no_kernels(explain_idx):
+    """/results routes a non-BM25 model relationally (the kernel scores
+    BM25 only), so the report must not list a kernel for it."""
+    for model in ("vsm", "lm-dirichlet", "bm25-reference"):
+        rep = explain_plan(explain_idx, "market price growth", model=model)
+        assert rep["kernels"] == []
+        assert model in rep["kernels_reason"]
 
 
 def test_phrase_refuses_kernels_and_reports_fast_path(explain_idx):
@@ -80,4 +89,4 @@ def test_impact_store_reported(tmp_path, spark, explain_idx):
     rep = explain_plan(qidx, "market price")
     assert rep["store"] == "impact"
     assert rep["impact_bits"] == 8
-    assert rep["kernels"] == ["wand", "maxscore"]
+    assert rep["kernels"] == ["maxscore"]

@@ -235,8 +235,8 @@ def test_prefix_validation(fuzzy_index):
 
 def test_executor_prefix_parsing_and_refusals(built_index):
     """'tok*' routes through search_prefix in the executor; the
-    composition refusal matrix and the WAND guard hold."""
-    from search_engine_spark.operators import executor, wand
+    composition refusal matrix and the kernel guard hold."""
+    from search_engine_spark.operators import executor, maxscore
     from search_engine_spark.plans import planner
 
     # prefix of a vocabulary word scores docs; same as manual call
@@ -260,8 +260,9 @@ def test_executor_prefix_parsing_and_refusals(built_index):
             executor.execute(built_index, q, k=10, **kwargs)
     with pytest.raises(ValueError, match="free-text"):
         executor.execute(built_index, f'{q} "some phrase"', k=10)
-    # WAND eligibility refuses prefix plans (shared serving guard)
-    assert not wand.wand_eligible(planner.classify(q, built_index.analyzer))
+    # kernel eligibility refuses prefix plans (shared serving guard)
+    assert not maxscore.kernel_eligible(
+        planner.classify(q, built_index.analyzer))
     # no-star queries are untouched: prefixes list stays empty
     p = planner.classify("plain words", built_index.analyzer)
     assert p.prefixes == []

@@ -1,13 +1,13 @@
 """Quantized-impact store (codec tag 0x00'I' + catalog.quantize_index +
-the WAND/MaxScore impact branches + search.search_quantized).
+the MaxScore impact branch + search.search_quantized).
 
 Gates:
 * codec roundtrip + cross-format refusals;
 * the exact-int64 quantizer: numpy == Spark column == Fraction ground
   truth, and the dequantized weight is within (k1+1)/(2·maxq) of the
   BM25 tf/dl part computed at the pinned milli-avgdl;
-* serving identity: WAND-on-impact-store == MaxScore-on-impact-store ==
-  relational search_quantized (rank AND score);
+* serving identity: MaxScore-on-impact-store == relational
+  search_quantized (rank AND score), pruned == exhaustive kernel;
 * accuracy vs exact BM25: per-doc error within the theoretical bound;
 * phrase queries still work on a quantized store (positions, tf and dl
   all resolve from the source sidecar; the quantized segments carry no
@@ -25,7 +25,6 @@ from search_engine_spark import codec
 from search_engine_spark.operators import maxscore as MS
 from search_engine_spark.operators import scoring
 from search_engine_spark.operators import search as S
-from search_engine_spark.operators import wand
 from search_engine_spark.sources import catalog
 
 
@@ -164,7 +163,7 @@ def test_wand_impact_vs_relational_quantized(indexes, q):
     terms = sorted(set(analyze_query(q, src.analyzer)))
     rel = [(r.doc_id, r.score)
            for r in S.search_quantized(src, terms, k=30, bits=8).collect()]
-    got = wand.search_wand(quant, q, k=30)
+    got = MS.search_maxscore(quant, q, k=30)
     assert [d for d, _ in got] == [d for d, _ in rel]
     for (_, a), (_, b) in zip(got, rel):
         assert a == pytest.approx(b, abs=1e-9)
@@ -175,10 +174,10 @@ def test_maxscore_impact_identity(indexes, q):
     _, quant = indexes
     stats: dict = {}
     ms = MS.search_maxscore(quant, q, k=30, stats=stats)
-    wd = wand.search_wand(quant, q, k=30)
-    # ids rank-identical; scores to 1e-9 (the two kernels accumulate a
-    # doc's per-term weights in different orders — essential-split vs
-    # block order — which differs in the last ulp)
+    wd = MS.search_maxscore(quant, q, k=1 << 30)[:30]
+    # pruned == exhaustive: ids rank-identical; scores to 1e-9 (a
+    # different essential split sums a doc's per-term weights in a
+    # different order, which differs in the last ulp)
     assert [d for d, _ in ms] == [d for d, _ in wd]
     for (_, a), (_, b) in zip(ms, wd):
         assert a == pytest.approx(b, abs=1e-9)
@@ -196,7 +195,7 @@ def test_impact_scores_within_bound_of_exact(indexes):
     q = "market price growth"
     exact = {r.doc_id: r.score
              for r in S.search_freetext(src, q, k=10_000).collect()}
-    got = wand.search_wand(quant, q, k=50)
+    got = MS.search_maxscore(quant, q, k=50)
     # per-doc error ≤ Σ_t idf_t · (k1+1)/(2·maxq); bound with the
     # largest idf in the corpus (ln(1+(N+0.5)/0.5)) per matched term
     n = src.stats["n_docs"]
@@ -211,7 +210,7 @@ def test_impact_scores_within_bound_of_exact(indexes):
 def test_wand_rejects_foreign_model_on_impact_store(indexes):
     _, quant = indexes
     with pytest.raises(ValueError, match="bakes"):
-        wand.search_wand(quant, "market", k=5, k1=1.5)
+        MS.search_maxscore(quant, "market", k=5, k1=1.5)
     with pytest.raises(ValueError, match="bakes"):
         MS.search_maxscore(quant, "market", k=5, b=0.5)
 

@@ -1,7 +1,9 @@
-"""MaxScore kernel: rank-identical to WAND / the relational BM25 path /
-the oracle (scores equal to float-accumulation tolerance), with real
-term-level decode savings — exactness despite pruning, the same
-contract test_wand.py pins for the range-level kernel."""
+"""MaxScore kernel: rank-identical to the relational BM25 path and the
+oracle (scores equal to float-accumulation tolerance), with real
+term-level decode savings — exactness despite pruning — plus its
+golden rankings and the serving surfaces (/results, query_topk) that
+report a capped answer. tests/test_wand.py holds the rest of the
+kernel contract (exact fetch, LRU, cap semantics, prior blending)."""
 
 import json
 import threading
@@ -13,16 +15,35 @@ import pytest
 from search_engine_spark import codec
 from search_engine_spark.operators import maxscore as MS
 from search_engine_spark.operators import search as S
-from search_engine_spark.operators import wand
 from tests import oracle
-from tests.test_wand import _fuzz_freetext
+
+
+def _fuzz_freetext(seed: int = 777, n: int = 12) -> list[str]:
+    import numpy as np
+
+    from search_engine_spark.sources.corpus import _VOCAB
+
+    pool = [w for w in _VOCAB if w.isalpha()][:60] + ["zzzqq", "the"]
+    rng = np.random.default_rng(seed)
+    return [" ".join(pool[int(i)] for i in rng.integers(0, len(pool),
+                                                        int(rng.integers(1, 5))))
+            for _ in range(n)]
+
+
+def _toy_prior(spark, n_docs: int):
+    """Deterministic pagerank-shaped prior: odd docs get 1/(doc_id+2)
+    (a probability), even docs are ABSENT from the graph so both paths
+    must apply the shared 1e-12 floor."""
+    return spark.createDataFrame(
+        [(d, 1.0 / (d + 2)) for d in range(1, n_docs + 1, 2)],
+        "node long, rank double")
 
 
 def _same_ranking(a, b, abs_tol=1e-9):
     """Same doc order, scores equal to float-accumulation tolerance —
-    the two kernels add the SAME term contributions in different order
-    (essential-first vs block order), so exact float equality is one
-    ulp too strict."""
+    the kernel and the relational path add the SAME term contributions
+    in different order (essential-first vs per-term joins), so exact
+    float equality is one ulp too strict."""
     assert [d for d, _ in a] == [d for d, _ in b]
     for (_, x), (_, y) in zip(a, b):
         assert x == pytest.approx(y, abs=abs_tol)
@@ -75,14 +96,15 @@ def test_maxscore_vs_oracle(seg_index, oracle_index, q):
 
 @pytest.mark.parametrize("q", _fuzz_freetext())
 def test_maxscore_fuzz_three_way(seg_index, oracle_index, q):
-    """MaxScore == WAND == oracle on fuzzed queries (incl. stopword-only
-    and OOV shapes) at a k small enough that both kernels prune."""
+    """Pruned MaxScore == unpruned MaxScore == oracle on fuzzed queries
+    (incl. stopword-only and OOV shapes) at a k small enough that the
+    kernel prunes; exhaustive k decodes every block."""
     o_index, doc_sizes = oracle_index
     want = oracle.search_freetext(o_index, doc_sizes, q, k=15, model="bm25")
-    wd = wand.search_wand(seg_index, q, k=15)
+    full = MS.search_maxscore(seg_index, q, k=1 << 30)
     ms = MS.search_maxscore(seg_index, q, k=15)
     assert [d for d, _ in ms] == [d for d, _ in want], q
-    _same_ranking(ms, wd)
+    _same_ranking(ms, full[:15])
     for (_, gs), (_, ws) in zip(ms, want):
         assert gs == pytest.approx(ws, abs=1e-9), q
 
@@ -112,28 +134,21 @@ def test_maxscore_actually_prunes(seg_index):
     assert full["n_ranges_skipped"] == 0
 
 
-def test_maxscore_shares_mini_index_cache_with_wand(seg_index):
-    import time
-
-    q = "market price growth"
-    seg_index._mini.clear()
-    wd = wand.search_wand(seg_index, q, k=20)
-    t0 = time.perf_counter()
-    ms = MS.search_maxscore(seg_index, q, k=20)
-    warm_sec = time.perf_counter() - t0
-    _same_ranking(ms, wd)
-    # warm path = driver numpy only; a Spark job would be >100ms
-    assert warm_sec < 0.1
-
-
-def test_maxscore_masks_deletes_like_wand(seg_index, monkeypatch):
-    top = MS.search_maxscore(seg_index, "market price", k=5)
+def test_maxscore_masks_deletes_like_oracle(seg_index, oracle_index,
+                                            monkeypatch):
+    """A tombstoned doc leaves the ranking and nothing else moves: the
+    masked top-k is the oracle's ranking minus the dead doc (deletes
+    keep the stale global stats, so no other score changes)."""
+    o_index, doc_sizes = oracle_index
+    q = "market price"
+    top = MS.search_maxscore(seg_index, q, k=5)
     dead = {top[0][0]}
     monkeypatch.setattr(type(seg_index), "deleted_ids",
                         lambda self: frozenset(dead), raising=False)
-    ms = MS.search_maxscore(seg_index, "market price", k=5)
-    wd = wand.search_wand(seg_index, "market price", k=5)
-    _same_ranking(ms, wd)
+    ms = MS.search_maxscore(seg_index, q, k=5)
+    want = [(d, s) for d, s in oracle.search_freetext(
+        o_index, doc_sizes, q, k=10_000) if d not in dead][:5]
+    _same_ranking(ms, want)
     assert top[0][0] not in {d for d, _ in ms}
 
 
@@ -153,24 +168,45 @@ def test_maxscore_refusals(seg_index, spark, corpus_sdf):
 
 
 def test_maxscore_capped_fetch_safe_approximation(seg_index):
-    """A tight impact-ordered cap keeps MaxScore a safe approximation
-    exactly like WAND: same results as WAND at the same cap (both read
-    the same capped mini-index)."""
-    ms = MS.search_maxscore(seg_index, "market price", k=10,
-                            max_blocks_per_term=2)
-    wd = wand.search_wand(seg_index, "market price", k=10,
-                          max_blocks_per_term=2)
-    _same_ranking(ms, wd)
+    """A tight impact-ordered cap keeps MaxScore a safe approximation:
+    the capped top-k is the exact ranking over the capped blocks — the
+    uncapped kernel's scores restricted to the fetched postings — so
+    every score is at most its exact score and pruning loses nothing
+    over what was fetched."""
+    q = "market price"
+    exact = dict(MS.search_maxscore(seg_index, q, k=1 << 30,
+                                    max_blocks_per_term=None))
+    seg_index._mini.clear()  # an uncapped entry would serve any cap
+    stats: dict = {}
+    ms = MS.search_maxscore(seg_index, q, k=10, max_blocks_per_term=2,
+                            stats=stats)
+    assert stats["truncated_terms"] and ms
+    full = MS.search_maxscore(seg_index, q, k=1 << 30,
+                              max_blocks_per_term=2)
+    seg_index._mini.clear()
+    _same_ranking(ms, full[:10])
+    for d, s in ms:
+        assert s <= exact[d] + 1e-12
 
 
-@pytest.mark.parametrize("q", ["market price", "germany economy china"])
-def test_maxscore_prior_matches_wand(spark, seg_index, q):
-    from tests.test_wand import _toy_prior
+def test_null_prior_blends_like_absent(spark, seg_index):
+    """A prior row whose rank is null blends at the 1e-12 floor, as an
+    absent row does — the relational blend coalesces null to the floor
+    — instead of failing in log(None)."""
+    from search_engine_spark.operators import executor as EX
 
-    prior = _toy_prior(spark, 150)
-    ms = MS.search_maxscore(seg_index, q, k=10, prior=prior, prior_lam=0.4)
-    wd = wand.search_wand(seg_index, q, k=10, prior=prior, prior_lam=0.4)
-    _same_ranking(ms, wd)
+    q = "market price growth"
+    hits = MS.search_maxscore(seg_index, q, k=1 << 30)
+    # null ranks for the top matching docs, real ranks for the rest
+    nulls = {d for d, _ in hits[:8]}
+    prior = spark.createDataFrame(
+        [(d, None if d in nulls else 1.0 / (d + 2)) for d in range(1, 151)],
+        "node long, rank double")
+    rel = [(r.doc_id, r.score)
+           for r in EX.execute(seg_index, q, k=20, prior=prior,
+                               prior_lam=0.3).collect()]
+    ms = MS.search_maxscore(seg_index, q, k=20, prior=prior, prior_lam=0.3)
+    _same_ranking(ms, rel)
 
 
 def test_maxscore_golden(seg_index):
@@ -179,8 +215,8 @@ def test_maxscore_golden(seg_index):
 
 def test_warm_repeat_query_decodes_nothing(seg_index, monkeypatch):
     """The mini-index LRU keeps each block's decoded arrays: once a
-    query has scored every block, repeating it (on either kernel)
-    decodes nothing."""
+    query has scored every block, repeating it (at any k) decodes
+    nothing."""
     calls = []
     decode = codec.decode_block_full
 
@@ -196,13 +232,12 @@ def test_warm_repeat_query_decodes_nothing(seg_index, monkeypatch):
     calls.clear()
     assert MS.search_maxscore(seg_index, q, k=1 << 30) == cold
     MS.search_maxscore(seg_index, q, k=5)
-    wand.search_wand(seg_index, q, k=5)
     assert calls == []
 
 
 def test_deletes_after_warm_cache_are_masked(seg_index, monkeypatch):
     """Tombstones that appear after the blocks were decoded and cached
-    are still masked per request, by both kernels — including a block
+    are still masked per request, at any k — including a block
     whose every posting is deleted — and masking never alters the
     cached arrays."""
     q = "market price"
@@ -214,9 +249,7 @@ def test_deletes_after_warm_cache_are_masked(seg_index, monkeypatch):
     live = [(d, s) for d, s in full if d not in dead]
     assert len(live) < len(full)
     assert MS.search_maxscore(seg_index, q, k=1 << 30) == live
-    _same_ranking(wand.search_wand(seg_index, q, k=1 << 30), live)
-    for kernel in (MS.search_maxscore, wand.search_wand):
-        _same_ranking(kernel(seg_index, q, k=5), live[:5])
+    _same_ranking(MS.search_maxscore(seg_index, q, k=5), live[:5])
     dead.clear()
     assert MS.search_maxscore(seg_index, q, k=1 << 30) == full
 
@@ -234,10 +267,6 @@ def test_capped_fetch_reports_truncated_terms(seg_index):
     assert approx
     for d, s in approx:
         assert s <= exact[d]
-    wstats: dict = {}
-    wand.search_wand(seg_index, q, k=20, max_blocks_per_term=1,
-                     stats=wstats)
-    assert wstats["truncated_terms"] == stats["truncated_terms"]
     MS.search_maxscore(seg_index, q, k=20, stats=stats)
     assert stats["truncated_terms"] == []
     seg_index._mini.clear()
@@ -260,7 +289,7 @@ def test_results_says_when_capped(seg_index, monkeypatch):
             body = json.loads(r.read())
         assert body["path"] == "maxscore" and body["exact"] is True
         assert "truncated_terms" not in body
-        monkeypatch.setattr(MS, "WAND_AUTO_CAP", 1)
+        monkeypatch.setattr(MS, "FETCH_CAP", 1)
         with urllib.request.urlopen(url, timeout=120) as r:
             body = json.loads(r.read())
     finally:
@@ -276,7 +305,7 @@ def test_results_says_when_capped(seg_index, monkeypatch):
 
 def test_query_topk_says_when_capped(spark, seg_index_dir, monkeypatch,
                                      capsys):
-    """jobs/query_topk.py on the kernel path: a capped answer prints
+    """jobs/query_topk.py --kernel maxscore: a capped answer prints
     {"exact": false, "truncated_terms": [...]} to stderr while stdout
     stays one JSON hit per line; an exact answer prints nothing there."""
     import sys
@@ -286,10 +315,10 @@ def test_query_topk_says_when_capped(spark, seg_index_dir, monkeypatch,
 
     monkeypatch.setattr(session, "get_spark", lambda *a, **kw: spark)
 
-    def run(kernel):
+    def run():
         monkeypatch.setattr(sys, "argv", [
             "query_topk.py", "--index", seg_index_dir, "--query",
-            "market price growth", "--k", "5", "--kernel", kernel])
+            "market price growth", "--k", "5", "--kernel", "maxscore"])
         query_topk.main()
         out, err = capsys.readouterr()
         hits = [json.loads(line) for line in out.splitlines()]
@@ -297,12 +326,10 @@ def test_query_topk_says_when_capped(spark, seg_index_dir, monkeypatch,
         return [json.loads(line) for line in err.splitlines()
                 if line.startswith("{")]
 
-    assert run("maxscore") == [] and run("wand") == []
-    monkeypatch.setattr(MS, "WAND_AUTO_CAP", 1)
-    monkeypatch.setattr(wand, "WAND_AUTO_CAP", 1)
-    for kernel in ("maxscore", "wand"):
-        assert run(kernel) == [{"exact": False, "truncated_terms":
-                                ["growth", "market", "price"]}]
+    assert run() == []
+    monkeypatch.setattr(MS, "FETCH_CAP", 1)
+    assert run() == [{"exact": False, "truncated_terms":
+                      ["growth", "market", "price"]}]
 
 
 def test_kernel_path_runs_no_spark_job(spark, seg_index_dir):
@@ -328,10 +355,10 @@ def test_kernel_path_runs_no_spark_job(spark, seg_index_dir):
     warm = MS.search_maxscore(idx, q, k=10, stats=stats)
     assert (stats["mini_hits"], stats["mini_misses"]) == (3, 0)
     assert warm == cold
-    _same_ranking(wand.search_wand(idx, q, k=10, stats=stats), cold)
+    _same_ranking(MS.search_maxscore(idx, q, k=5, stats=stats), cold[:5])
     assert stats["mini_hits"] == 3
-    wand.search_wand(idx, "germany economy", k=10,
-                     max_blocks_per_term=None)
+    MS.search_maxscore(idx, "germany economy", k=10,
+                       max_blocks_per_term=None)
     MS.search_maxscore(idx, "china bank", k=10, max_blocks_per_term=1)
     assert idx.deleted_ids() == frozenset()
     counters = idx.mini_counters

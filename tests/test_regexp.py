@@ -116,9 +116,9 @@ def test_executor_regexp_routing_and_refusals(rx_index):
 
 
 def test_wand_refuses_regexp_queries(rx_index):
-    from search_engine_spark.operators import wand
+    from search_engine_spark.operators import maxscore
 
-    assert not wand.wand_eligible(planner.classify("/ca./"))
+    assert not maxscore.kernel_eligible(planner.classify("/ca./"))
 
 
 def test_spellcheck_never_corrects_slash_tokens(rx_index):

@@ -375,11 +375,10 @@ def test_term_bloom_filter_mechanism(spark, tmp_path):
 def test_ef_codec_index_rank_identical(spark, corpus_sdf, tmp_path,
                                        index_dir):
     """block_codec='ef' builds a byte-different, SMALLER segment store
-    whose WAND and MaxScore results are rank-identical to the default
+    whose MaxScore results are rank-identical to the default
     varint index — payloads self-describe (0x00 tag), so every reader
     works unchanged."""
     from search_engine_spark.operators import maxscore as MS
-    from search_engine_spark.operators import wand
 
     d = str(tmp_path / "efidx")
     catalog.build_durable_index(spark, corpus_sdf, d, shards=2, buckets=16,
@@ -387,13 +386,11 @@ def test_ef_codec_index_rank_identical(spark, corpus_sdf, tmp_path,
     ef_idx = catalog.load_index(spark, d)
     vb_idx = catalog.load_index(spark, index_dir)
     for q in ("market price", "germany economy china", "market"):
-        ef_w = wand.search_wand(ef_idx, q, k=20)
-        vb_w = wand.search_wand(vb_idx, q, k=20)
-        assert [x for x, _ in ef_w] == [x for x, _ in vb_w], q
-        for (_, a), (_, b) in zip(ef_w, vb_w):
-            assert a == pytest.approx(b, abs=1e-9)
         ef_m = MS.search_maxscore(ef_idx, q, k=20)
-        assert [x for x, _ in ef_m] == [x for x, _ in ef_w], q
+        vb_m = MS.search_maxscore(vb_idx, q, k=20)
+        assert [x for x, _ in ef_m] == [x for x, _ in vb_m], q
+        for (_, a), (_, b) in zip(ef_m, vb_m):
+            assert a == pytest.approx(b, abs=1e-9)
     # size claims live in test_codec.test_ef_beats_varint_on_dense_blocks
     # at realistic block occupancy; this fixture's span-16 blocks are
     # header-dominated for EITHER codec and prove only identity

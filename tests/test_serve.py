@@ -1,6 +1,7 @@
 """HTTP serving surface (jobs/serve.py): endpoint parity with the
 reference's Django urls (results / rerun_query / article), JSON form,
-spellcheck-on-first-execution vs rerun, WAND fast path, error surfaces."""
+spellcheck-on-first-execution vs rerun, MaxScore fast path, error
+surfaces."""
 
 import json
 import threading
@@ -68,7 +69,7 @@ def test_abbreviation_expansion_through_results(server):
     """fin-abbrev expansion on the first-execution path: the expansion
     rides as a quoted phrase and actually retrieves (the planted
     'germany economy' phrase docs)."""
-    status, body = _get(server + "/results?query=gdp&k=5&wand=0")
+    status, body = _get(server + "/results?query=gdp&k=5&kernel=relational")
     assert status == 200
     assert body["executed_query"] == 'gdp "germany economy"'
     assert body["corrected_query"] == "gdp"  # guard kept the key intact
@@ -76,11 +77,11 @@ def test_abbreviation_expansion_through_results(server):
 
 
 def test_abbreviation_expansion_wand_path_unquoted(server):
-    """On the WAND path the expansion must ride as bare terms —
-    search_wand rejects quoted queries rather than degrading the phrase
-    to independent terms, so a quoted expansion would 400 every
-    abbreviated query under wand=1."""
-    status, body = _get(server + "/results?query=gdp&k=5&wand=1")
+    """On the kernel path the expansion must ride as bare terms — the
+    kernel rejects quoted queries rather than degrading the phrase to
+    independent terms, so a quoted expansion would 400 every
+    abbreviated query under kernel=maxscore."""
+    status, body = _get(server + "/results?query=gdp&k=5&kernel=maxscore")
     assert status == 200
     assert body["executed_query"] == "gdp germany economy"
     assert body["number_of_results"] > 0
@@ -100,11 +101,11 @@ def test_boolean_query_not_spellchecked_or_expanded(server):
 
 
 def test_wand_rejects_non_freetext_as_400(server):
-    """wand=1 has no phrase/boolean semantics; the kernel refuses
-    instead of silently degrading to bag-of-words."""
+    """kernel=maxscore has no phrase/boolean semantics; the kernel
+    refuses instead of silently degrading to bag-of-words."""
     for q in ("%22germany%20economy%22", "gdp%20AND%20growth"):
         with pytest.raises(urllib.error.HTTPError) as e:
-            _get(server + f"/results?query={q}&k=5&wand=1")
+            _get(server + f"/results?query={q}&k=5&kernel=maxscore")
         assert e.value.code == 400, q
 
 
@@ -124,8 +125,10 @@ def test_rerun_skips_spellcheck(server):
 
 
 def test_wand_path_matches_relational(server):
-    _, rel = _get(server + "/results?query=market%20price&k=10")
-    _, wnd = _get(server + "/results?query=market%20price&k=10&wand=1")
+    url = server + "/results?query=germany%20economy%20china&k=20"
+    _, rel = _get(url + "&kernel=relational")
+    _, wnd = _get(url + "&kernel=maxscore")
+    assert (rel["path"], wnd["path"]) == ("relational", "maxscore")
     assert [r["doc_id"] for r in wnd["results"]] == \
         [r["doc_id"] for r in rel["results"]]
     for a, b in zip(wnd["results"], rel["results"]):
@@ -134,7 +137,7 @@ def test_wand_path_matches_relational(server):
 
 def test_wand_rejects_dates(server):
     with pytest.raises(urllib.error.HTTPError) as e:
-        _get(server + "/results?query=market&wand=1"
+        _get(server + "/results?query=market&kernel=maxscore"
                       "&date_start=2022-01-01&date_end=2022-01-31")
     assert e.value.code == 400
 
@@ -192,16 +195,16 @@ def test_prior_blend_through_results(spark, corpus_sdf, tmp_path):
     try:
         status, body = _get(
             f"http://127.0.0.1:{srv.server_address[1]}"
-            "/results?query=market&k=3&wand=0")
+            "/results?query=market&k=3&kernel=relational")
         assert status == 200
         got = [h["doc_id"] for h in body["results"]]
         assert got[0] == base[-1]
         assert set(got) == set(base)
-        # round-4: wand=1 blends the SAME prior (it used to score pure
-        # BM25) — identical page to the relational path
+        # the kernel blends the SAME prior — identical page to the
+        # relational path
         status, wbody = _get(
             f"http://127.0.0.1:{srv.server_address[1]}"
-            "/results?query=market&k=3&wand=1")
+            "/results?query=market&k=3&kernel=maxscore")
         assert status == 200
         assert [(h["doc_id"], round(h["score"], 9))
                 for h in wbody["results"]] == \
@@ -278,7 +281,8 @@ def test_collapse_host_through_results(server, corpus_pdf):
 
 
 def test_collapse_host_wand_rejected(server):
-    status, body = _err(server + "/results?query=market&collapse_host=1&wand=1")
+    status, body = _err(server + "/results?query=market&collapse_host=1"
+                        "&kernel=maxscore")
     assert status == 400
     assert "relational" in body["error"]
 
@@ -288,7 +292,8 @@ def test_rm3_through_results(server):
     alpha=1 the response must equal the plain request exactly (the
     identity the driver gate pins), and alpha<1 still returns a full
     well-formed page."""
-    _, plain = _get(server + "/results?query=market%20price&k=10&wand=0")
+    _, plain = _get(server + "/results?query=market%20price&k=10"
+                             "&kernel=relational")
     _, same = _get(server + "/results?query=market%20price&k=10&rm3=1.0")
     assert same["results"] == plain["results"]
     _, exp = _get(server + "/results?query=market%20price&k=10&rm3=0.5")
@@ -297,7 +302,7 @@ def test_rm3_through_results(server):
 
 
 def test_rm3_validation_as_400(server):
-    for bad in ("rm3=1.5&", "rm3=-0.1&", "rm3=0.5&wand=1&",
+    for bad in ("rm3=1.5&", "rm3=-0.1&", "rm3=0.5&kernel=maxscore&",
                 "rm3=0.5&model=vsm&"):
         with pytest.raises(urllib.error.HTTPError) as e:
             _get(server + f"/results?query=market&k=5&{bad}")
@@ -331,7 +336,8 @@ def test_fuzzy_through_results(server):
     expansion. NOTE 'marke' would NOT work here: it stems to 'mark',
     which is distance 2 from 'market' — fuzzy operates on ANALYZED
     tokens against the STEMMED vocabulary."""
-    _, plain = _get(server + "/results?query=market%20price&k=10&wand=0")
+    _, plain = _get(server + "/results?query=market%20price&k=10"
+                             "&kernel=relational")
     _, same = _get(server + "/results?query=market%20price&k=10&fuzzy=0")
     assert same["results"] == plain["results"]
     status, fz = _get(server + "/results?query=markex&k=10&fuzzy=1")
@@ -341,7 +347,7 @@ def test_fuzzy_through_results(server):
 
 
 def test_fuzzy_validation_as_400(server):
-    for bad in ("fuzzy=3&", "fuzzy=-1&", "fuzzy=1&wand=1&",
+    for bad in ("fuzzy=3&", "fuzzy=-1&", "fuzzy=1&kernel=maxscore&",
                 "fuzzy=1&rm3=0.5&", "fuzzy=1&model=vsm&"):
         with pytest.raises(urllib.error.HTTPError) as e:
             _get(server + f"/results?query=market&k=5&{bad}")
@@ -374,11 +380,12 @@ def test_mlt_endpoint(server):
 def test_cursor_pagination_partitions_ranking(server):
     """Three cursor pages of 5 == the top-15 row-for-row: disjoint,
     ordered, each page anchored on the previous page's last row."""
-    status, top15 = _get(server + "/results?query=market+price+growth&k=15&wand=0")
+    status, top15 = _get(server + "/results?query=market+price+growth&k=15"
+                                  "&kernel=relational")
     assert status == 200
     flat = [(r["doc_id"], r["score"]) for r in top15["results"]]
     paged = []
-    url = server + "/results?query=market+price+growth&k=5&wand=0"
+    url = server + "/results?query=market+price+growth&k=5&kernel=relational"
     nxt = url
     for _ in range(3):
         status, page = _get(nxt)
@@ -396,8 +403,8 @@ def test_cursor_pagination_error_surfaces(server):
     for bad in (
         "/results?query=market&k=5&after_score=1.0",           # half cursor
         "/results?query=market&k=5&after_doc=3",               # half cursor
-        "/results?query=market&k=5&wand=1"
-        "&after_score=1.0&after_doc=3",                        # wand path
+        "/results?query=market&k=5&kernel=maxscore"
+        "&after_score=1.0&after_doc=3",                        # kernel path
         "/results?query=market&k=5&collapse_host=1"
         "&after_score=1.0&after_doc=3",                        # re-ranked page
         "/results?query=%235(market,price)&k=5"
@@ -431,7 +438,7 @@ def test_min_should_match_through_results(server):
     import urllib.error
 
     _, plain = _get(server + "/results?query=search%20index%20connect&k=10"
-                  "&wand=0")
+                  "&kernel=relational")
     _, mm1 = _get(server + "/results?query=search%20index%20connect&k=10"
                   "&mm=1")
     assert [h["doc_id"] for h in plain["results"]] == \
@@ -439,11 +446,12 @@ def test_min_should_match_through_results(server):
     _, mm3 = _get(server + "/results?query=search%20index%20connect&k=100"
                   "&mm=3")
     assert 0 < len(mm3["results"]) <= len(_get(
-        server + "/results?query=search%20index%20connect&k=100&wand=0")[1]
+        server + "/results?query=search%20index%20connect&k=100"
+                 "&kernel=relational")[1]
         ["results"])
     for bad in (
         "/results?query=search&k=5&mm=0",          # below range
-        "/results?query=search&k=5&mm=2&wand=1",   # wand path
+        "/results?query=search&k=5&mm=2&kernel=maxscore",  # kernel path
         "/results?query=search%20AND%20index&k=5&mm=2",  # boolean kind
         "/results?query=search&k=5&mm=2&rm3=0.6",  # expansion combo
     ):
@@ -476,7 +484,7 @@ def test_synonyms_through_results(spark, corpus_sdf, tmp_path):
             idx, ["market"], table, k=100, weight=0.5).collect()]
         got = [(h["doc_id"], round(h["score"], 4)) for h in body["results"]]
         assert got == want and got
-        _, plain = _get(base + "/results?query=market&k=100&wand=0")
+        _, plain = _get(base + "/results?query=market&k=100&kernel=relational")
         plain_rows = [(h["doc_id"], round(h["score"], 4))
                       for h in plain["results"]]
         # without syn=1 the query runs literal (matches the plain path
@@ -487,7 +495,7 @@ def test_synonyms_through_results(spark, corpus_sdf, tmp_path):
         assert plain_rows == plain_want
         assert plain_rows != got
         with pytest.raises(urllib.error.HTTPError) as e:
-            _get(base + "/results?query=market&k=5&syn=1&wand=1")
+            _get(base + "/results?query=market&k=5&syn=1&kernel=maxscore")
         assert e.value.code == 400
     finally:
         srv.shutdown()
@@ -509,7 +517,7 @@ def test_explain_plan_endpoint(server):
     status, body = _get(server + "/explain_plan?query=market+price")
     assert status == 200
     assert body["kind"] == "freetext"
-    assert body["kernels"] == ["wand", "maxscore"]
+    assert body["kernels"] == ["maxscore"]
     assert body["store"] == "tf"
     status, body = _get(
         server + "/explain_plan?query=%22market%20price%22")
@@ -574,7 +582,7 @@ def test_recency_through_results(server):
     """recency=HL&as_of= reorders by freshness decay; half-lives and the
     explicit as_of change scores monotonically (fresher ≥ same doc at a
     longer age); parameter misuse is a 400, never silently ignored."""
-    _, plain = _get(server + "/results?query=market&k=5&wand=0")
+    _, plain = _get(server + "/results?query=market&k=5&kernel=relational")
     status, fresh = _get(
         server + "/results?query=market&k=5&recency=30&as_of=2022-06-01")
     assert status == 200 and fresh["number_of_results"] > 0
@@ -585,7 +593,7 @@ def test_recency_through_results(server):
             assert r["score"] <= plain_scores[r["doc_id"]] + 1e-9
     for path in (
         "/results?query=market&recency=30",              # missing as_of
-        "/results?query=market&recency=30&as_of=2022-06-01&wand=1",
+        "/results?query=market&recency=30&as_of=2022-06-01&kernel=maxscore",
     ):
         with pytest.raises(urllib.error.HTTPError) as e:
             _get(server + path)
@@ -663,7 +671,8 @@ def test_hybrid_through_results(spark, corpus_sdf, tmp_path):
 
 
 def test_maxscore_kernel_matches_relational(server):
-    _, rel = _get(server + "/results?query=market%20price&k=10")
+    _, rel = _get(server + "/results?query=market%20price&k=10"
+                  "&kernel=relational")
     _, ms = _get(server + "/results?query=market%20price&k=10"
                  "&kernel=maxscore")
     assert [r["doc_id"] for r in ms["results"]] == \
@@ -673,16 +682,31 @@ def test_maxscore_kernel_matches_relational(server):
 
 
 def test_kernel_param_validation(server):
+    """Bad, retired and unhonorable kernel requests are 400s, never
+    silently served: the retired selectors (kernel=wand, wand=0|1) name
+    their replacement — a dropped wand=0 would move impact-store clients
+    from exact to quantized scores — and an explicit kernel with a
+    non-BM25 model names the relational path instead of returning BM25
+    scores under the other model's name."""
     import urllib.error
 
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(server + "/results?query=market&k=5&kernel=bogus")
     assert e.value.code == 400
-    # kernel=maxscore inherits every wand-path refusal
+    # kernel=maxscore refuses what the kernel cannot honor
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(server + "/results?query=gdp%20AND%20growth&k=5"
              "&kernel=maxscore")
     assert e.value.code == 400
+    cases = [("kernel=wand", "kernel=maxscore")] + [
+        (f"wand={v}", replacement) for v, replacement in
+        (("0", "kernel=relational"), ("1", "kernel=maxscore"))] + [
+        (f"model={m}&kernel=maxscore", "kernel=relational")
+        for m in ("vsm", "lm-dirichlet", "lm-pyp", "bm25-reference")]
+    for qs, replacement in cases:
+        status, body = _err(server + f"/results?query=market&k=5&{qs}")
+        assert status == 400, qs
+        assert replacement in body["error"], qs
 
 
 # ---------------------------------------------------------------------------
@@ -690,12 +714,13 @@ def test_kernel_param_validation(server):
 # ---------------------------------------------------------------------------
 
 def test_auto_routes_eligible_queries_to_kernel(server):
-    """With no kernel/wand parameter an eligible plain BM25 free-text
+    """With no kernel parameter an eligible plain BM25 free-text
     request serves from the MaxScore kernel — the default path is the
     fast path — and stays rank-identical to the relational page."""
     _, body = _get(server + "/results?query=market%20price&k=10")
     assert body["path"] == "maxscore"
-    _, rel = _get(server + "/results?query=market%20price&k=10&wand=0")
+    _, rel = _get(server + "/results?query=market%20price&k=10"
+                           "&kernel=relational")
     assert rel["path"] == "relational"
     assert [r["doc_id"] for r in body["results"]] == \
         [r["doc_id"] for r in rel["results"]]
@@ -730,11 +755,10 @@ def test_auto_fallback_vs_explicit_refusal(server):
     400 (refusal semantics unchanged for explicit requests)."""
     status, body = _get(server + "/results?query=%22germany%20economy%22&k=5")
     assert status == 200 and body["path"] == "relational"
-    for forced in ("wand=1", "kernel=maxscore"):
-        with pytest.raises(urllib.error.HTTPError) as e:
-            _get(server + f"/results?query=%22germany%20economy%22&k=5"
-                 f"&{forced}")
-        assert e.value.code == 400
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(server + "/results?query=%22germany%20economy%22&k=5"
+             "&kernel=maxscore")
+    assert e.value.code == 400
 
 
 def test_auto_kernel_expands_abbreviations_unquoted(server):
@@ -774,8 +798,8 @@ def test_auto_kernel_requires_durable_index(spark, corpus_sdf):
 def test_auto_kernel_serves_impact_store(spark, corpus_sdf, tmp_path):
     """The default path engages on a quantized-impact store too: the
     kernel scores the stored impacts (the artifact's serving contract)
-    and stays rank-identical to an explicit wand=1 over the same
-    store."""
+    and stays rank-identical to an explicit kernel=maxscore over the
+    same store."""
     import threading
 
     from jobs.serve import create_server
@@ -792,7 +816,8 @@ def test_auto_kernel_serves_impact_store(spark, corpus_sdf, tmp_path):
         _, body = _get(base + "/results?query=market%20price&k=10")
         assert body["path"] == "maxscore"
         assert body["number_of_results"] > 0
-        _, wnd = _get(base + "/results?query=market%20price&k=10&wand=1")
+        _, wnd = _get(base + "/results?query=market%20price&k=10"
+                             "&kernel=maxscore")
         assert [r["doc_id"] for r in body["results"]] == \
             [r["doc_id"] for r in wnd["results"]]
     finally:

@@ -15,20 +15,36 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
 
 
-def test_wand_rejects_date_flags():
-    """--wand + date range must error up front (the kernel ranks over ALL
-    blocks; a silent post-filter would return wrong-rank results). The
-    check fires before any Spark startup, so plain python suffices."""
+def _query_topk_usage_error(*flags: str) -> subprocess.CompletedProcess:
+    """Run jobs/query_topk.py with flags its argument checks refuse —
+    they fire before any Spark startup, so plain python suffices."""
     import sys
 
-    p = subprocess.run(
+    return subprocess.run(
         [sys.executable, os.path.join(ROOT, "jobs", "query_topk.py"),
-         "--index", "/nonexistent", "--query", "x", "--wand",
-         "--date-start", "2022-01-01", "--date-end", "2022-01-31"],
+         "--index", "/nonexistent", "--query", "x", *flags],
         capture_output=True, text=True, timeout=60,
     )
-    assert p.returncode != 0
-    assert "--wand does not support" in p.stderr
+
+
+def test_wand_rejects_date_flags():
+    """--kernel maxscore + date range must error up front (the kernel
+    ranks over ALL blocks; a silent post-filter would return wrong-rank
+    results)."""
+    p = _query_topk_usage_error("--kernel", "maxscore",
+                                "--date-start", "2022-01-01",
+                                "--date-end", "2022-01-31")
+    assert p.returncode == 2
+    assert "--kernel maxscore does not support" in p.stderr
+
+
+@pytest.mark.parametrize("model", ["vsm", "lm-dirichlet"])
+def test_kernel_rejects_non_bm25_model(model):
+    """The kernel scores BM25 only: --kernel maxscore with another model
+    is a usage error, not BM25 hits printed under the model's name."""
+    p = _query_topk_usage_error("--kernel", "maxscore", "--model", model)
+    assert p.returncode == 2
+    assert "BM25 only" in p.stderr
 
 
 def test_build_with_partitioned_document_store(tmp_path, spark):
@@ -159,7 +175,8 @@ def test_jobs_ship_via_py_files(tmp_path):
 
     q = subprocess.run(
         common + [str(neutral / "query_topk.py"), "--index", idx,
-                  "--query", "system query", "--k", "5", "--wand"],
+                  "--query", "system query", "--k", "5",
+                  "--kernel", "maxscore"],
         cwd=str(neutral), env=env, capture_output=True, text=True,
         timeout=420,
     )

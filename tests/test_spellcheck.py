@@ -39,7 +39,7 @@ def test_abbreviation_expansion():
     out = SP.expand_abbreviations("gdp growth", {"gdp": "gross domestic product"})
     assert out == 'gdp growth "gross domestic product"'
     assert SP.expand_abbreviations("plain query", {}) == "plain query"
-    # bag-of-words variant for the WAND path (no phrase operator there)
+    # bag-of-words variant for the kernel path (no phrase operator there)
     out = SP.expand_abbreviations(
         "gdp growth", {"gdp": "gross domestic product"}, quote=False)
     assert out == "gdp growth gross domestic product"

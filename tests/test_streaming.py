@@ -350,11 +350,11 @@ def test_streaming_sessionize_randomized_identity(spark, tmp_path):
 def test_compaction_produces_identical_durable_index(spark, corpus_sdf,
                                                      tmp_path):
     """streaming ingest → compact_streaming_index == a direct durable
-    build over the same docs: identical WAND top-k (scores included) and
+    build over the same docs: identical MaxScore top-k (scores included) and
     a working positional (phrase) path — the streaming growth story ends
     in a first-class segment index."""
     from search_engine_spark.operators import phrase as PH
-    from search_engine_spark.operators import wand
+    from search_engine_spark.operators import maxscore as MS
     from search_engine_spark.sources import catalog
 
     src = str(tmp_path / "cmp_src")
@@ -372,7 +372,8 @@ def test_compaction_produces_identical_durable_index(spark, corpus_sdf,
     a = catalog.load_index(spark, out)
     b = catalog.load_index(spark, direct)
     for q in ("market price", "germany economy china", "market"):
-        assert wand.search_wand(a, q, k=20) == wand.search_wand(b, q, k=20), q
+        assert (MS.search_maxscore(a, q, k=20)
+                == MS.search_maxscore(b, q, k=20)), q
     # positions survived the re-encode
     got = {r.doc_id: r.phrase_tf for r in
            PH.phrase_occurrences(a, ["germani", "economi"]).collect()}

@@ -1,4 +1,4 @@
-"""Tombstone deletes: logical exclusion on every query path, WAND /
+"""Tombstone deletes: logical exclusion on every query path, kernel /
 relational rank-identity under deletes, physical vacuum via
 merge_indexes, and the append-only batch commit semantics."""
 
@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators import search as S
-from search_engine_spark.operators import wand as W
+from search_engine_spark.operators import maxscore as MS
 from search_engine_spark.sources import catalog
 
 
@@ -41,12 +41,12 @@ def test_deletes_exclude_from_every_query_path(spark, corpus_sdf,
     survivors = [(d, s) for d, s in before if d not in victims]
     assert _top(idx)[: len(survivors)] == survivors[:25]
 
-    # WAND path excludes them too, and stays rank-identical to the
+    # the kernel excludes them too, and stays rank-identical to the
     # relational path under deletes
-    wand_hits = W.search_wand(idx, "market price growth", k=25)
-    assert not set(victims) & {d for d, _ in wand_hits}
+    kernel_hits = MS.search_maxscore(idx, "market price growth", k=25)
+    assert not set(victims) & {d for d, _ in kernel_hits}
     rel = _top(idx, k=25)
-    assert [(d, round(s, 9)) for d, s in wand_hits] == rel
+    assert [(d, round(s, 9)) for d, s in kernel_hits] == rel
 
     # phrase/positional path goes through the same lookup
     pos = idx.lookup(["market"], positional=True)
@@ -171,9 +171,9 @@ def test_as_of_batch_time_travel(spark, live_index):
     assert _top(catalog.load_index(spark, live_index, as_of_batch=1)) \
         == _top(live)
 
-    # WAND serves the snapshot too (same deleted_ids plumbing)
-    wand0 = W.search_wand(at0, "market price growth", k=25)
-    assert [(d, round(s, 9)) for d, s in wand0] == _top(at0)
+    # the kernel serves the snapshot too (same deleted_ids plumbing)
+    kernel0 = MS.search_maxscore(at0, "market price growth", k=25)
+    assert [(d, round(s, 9)) for d, s in kernel0] == _top(at0)
 
 
 def test_deleted_ids_bound(spark, live_index):

@@ -1,33 +1,39 @@
-"""Block-Max WAND kernel: bit-identical to the relational BM25 path and
-the oracle (exactness despite pruning)."""
+"""Serving-kernel contract on operators.maxscore, the block-max
+pruning kernel whose all-non-essential case is Block-Max WAND's range
+skip: identical to the relational BM25 path and the oracle at the exact
+uncapped fetch, on fuzzed queries and on a 5k-doc index (exactness
+despite pruning); the mini-index LRU; the impact-ordered fetch cap; k
+<= 0 and refusals; and exact static-prior blending.
+
+tests/test_maxscore.py covers the default-cap identity, pruning
+telemetry, the golden rankings and the serving surfaces."""
 
 import pytest
 
+from search_engine_spark.operators import maxscore as MS
 from search_engine_spark.operators import search as S
-from search_engine_spark.operators import wand
 from search_engine_spark.sources import catalog
 from tests import oracle
-
-
-QUERIES = ["market", "market price growth", "germany economy china",
-           "zzzqq", "connect bank report", "market market price"]
+from tests.test_maxscore import QUERIES, _fuzz_freetext, _toy_prior
 
 
 @pytest.mark.parametrize("q", QUERIES)
 def test_wand_vs_oracle(seg_index, oracle_index, q):
+    """The exact uncapped fetch (max_blocks_per_term=None) matches the
+    oracle; test_maxscore_vs_oracle pins the default cap."""
     o_index, doc_sizes = oracle_index
     want = oracle.search_freetext(o_index, doc_sizes, q, k=20, model="bm25")
-    got = wand.search_wand(seg_index, q, k=20)
+    got = MS.search_maxscore(seg_index, q, k=20, max_blocks_per_term=None)
     assert [d for d, _ in got] == [d for d, _ in want]
     for (_, gs), (_, ws) in zip(got, want):
         assert gs == pytest.approx(ws, abs=1e-9)
 
 
 def test_wand_vs_relational(seg_index):
-    q = "market price"
+    q = "germany economy china"
     rel = [(r.doc_id, r.score)
-           for r in S.search_freetext(seg_index, q, k=50).collect()]
-    wd = wand.search_wand(seg_index, q, k=50)
+           for r in S.search_freetext(seg_index, q, k=20).collect()]
+    wd = MS.search_maxscore(seg_index, q, k=20)
     assert [d for d, _ in wd] == [d for d, _ in rel]
     for (_, a), (_, b) in zip(wd, rel):
         assert a == pytest.approx(b, abs=1e-9)
@@ -35,7 +41,7 @@ def test_wand_vs_relational(seg_index):
 
 def test_wand_k_larger_than_hits(seg_index, oracle_index):
     o_index, doc_sizes = oracle_index
-    got = wand.search_wand(seg_index, "germani", k=10_000)
+    got = MS.search_maxscore(seg_index, "germani", k=10_000)
     want = oracle.search_freetext(o_index, doc_sizes, "germani", k=10_000)
     assert [d for d, _ in got] == [d for d, _ in want]
 
@@ -45,10 +51,10 @@ def test_mini_index_cache_identity_and_warmth(seg_index):
 
     q = "market price growth"
     seg_index._mini.clear()
-    cold = wand.search_wand(seg_index, q, k=20)
+    cold = MS.search_maxscore(seg_index, q, k=20)
     assert set(seg_index._mini) >= {"market", "price", "growth"}
     t0 = time.perf_counter()
-    warm = wand.search_wand(seg_index, q, k=20)
+    warm = MS.search_maxscore(seg_index, q, k=20)
     warm_sec = time.perf_counter() - t0
     assert warm == cold
     # warm path = driver numpy only (no Spark job): generous bound that
@@ -58,7 +64,7 @@ def test_mini_index_cache_identity_and_warmth(seg_index):
 
 def test_mini_index_negative_cache(seg_index):
     seg_index._mini.clear()
-    assert wand.search_wand(seg_index, "zzzqq", k=5) == []
+    assert MS.search_maxscore(seg_index, "zzzqq", k=5) == []
     # negative entries are universal (cap_used=None): any later cap is served
     assert seg_index._mini.get("zzzqq") == (0, [], None)
 
@@ -67,14 +73,14 @@ def test_mini_index_lru_eviction(seg_index):
     seg_index._mini.clear()
     seg_index._mini_cap = 2
     try:
-        wand.search_wand(seg_index, "market", k=5)
-        wand.search_wand(seg_index, "price", k=5)
-        wand.search_wand(seg_index, "growth", k=5)
+        MS.search_maxscore(seg_index, "market", k=5)
+        MS.search_maxscore(seg_index, "price", k=5)
+        MS.search_maxscore(seg_index, "growth", k=5)
         assert len(seg_index._mini) <= 2
         assert "growth" in seg_index._mini
         # evicted term still answers correctly (re-fetch)
-        again = wand.search_wand(seg_index, "market", k=5)
-        assert again == wand.search_wand(seg_index, "market", k=5)
+        again = MS.search_maxscore(seg_index, "market", k=5)
+        assert again == MS.search_maxscore(seg_index, "market", k=5)
     finally:
         seg_index._mini_cap = 4096
 
@@ -86,13 +92,13 @@ def test_mini_index_full_cache_mixed_hit_miss(seg_index):
     seg_index._mini.clear()
     seg_index._mini_cap = 2
     try:
-        wand.search_wand(seg_index, "market", k=5)
-        wand.search_wand(seg_index, "price", k=5)  # cache full; market oldest
-        hits = wand.search_wand(seg_index, "market growth", k=5)
+        MS.search_maxscore(seg_index, "market", k=5)
+        MS.search_maxscore(seg_index, "price", k=5)  # cache full; market oldest
+        hits = MS.search_maxscore(seg_index, "market growth", k=5)
         assert hits  # no KeyError, real results
         assert "market" in seg_index._mini and "growth" in seg_index._mini
         # query wider than the cache: all its terms still served
-        wide = wand.search_wand(seg_index, "market price growth bank", k=5)
+        wide = MS.search_maxscore(seg_index, "market price growth bank", k=5)
         assert wide
     finally:
         seg_index._mini_cap = 4096
@@ -101,38 +107,26 @@ def test_mini_index_full_cache_mixed_hit_miss(seg_index):
 
 def test_impact_ordered_cap_exact_when_loose(seg_index):
     q = "market price"
-    exact = wand.search_wand(seg_index, q, k=20)
-    capped = wand.search_wand(seg_index, q, k=20, max_blocks_per_term=10_000)
+    exact = MS.search_maxscore(seg_index, q, k=20)
+    capped = MS.search_maxscore(seg_index, q, k=20, max_blocks_per_term=10_000)
     assert capped == exact
 
 
 def test_impact_ordered_cap_is_safe_approximation(seg_index):
     q = "market price growth"
-    exact = dict(wand.search_wand(seg_index, q, k=1000))
-    approx = wand.search_wand(seg_index, q, k=20, max_blocks_per_term=2)
+    exact = dict(MS.search_maxscore(seg_index, q, k=1000))
+    approx = MS.search_maxscore(seg_index, q, k=20, max_blocks_per_term=2)
     assert approx  # still answers
     for d, s in approx:
         # dropped blocks can only LOWER a doc's score, never raise it
         assert s <= exact[d] + 1e-12
 
 
-def _fuzz_freetext(seed: int = 777, n: int = 12) -> list[str]:
-    import numpy as np
-
-    from search_engine_spark.sources.corpus import _VOCAB
-
-    pool = [w for w in _VOCAB if w.isalpha()][:60] + ["zzzqq", "the"]
-    rng = np.random.default_rng(seed)
-    return [" ".join(pool[int(i)] for i in rng.integers(0, len(pool),
-                                                        int(rng.integers(1, 5))))
-            for _ in range(n)]
-
-
 @pytest.mark.parametrize("q", _fuzz_freetext())
 def test_wand_fuzz_vs_oracle(seg_index, oracle_index, q):
     o_index, doc_sizes = oracle_index
     want = oracle.search_freetext(o_index, doc_sizes, q, k=30, model="bm25")
-    got = wand.search_wand(seg_index, q, k=30)
+    got = MS.search_maxscore(seg_index, q, k=30)
     assert [d for d, _ in got] == [d for d, _ in want], q
     for (_, gs), (_, ws) in zip(got, want):
         assert gs == pytest.approx(ws, abs=1e-9), q
@@ -151,7 +145,7 @@ def seg_index_5k(tmp_path_factory, spark):
         C.synthesize_web_corpus(spark, 5000)))
     prepared = web.select(
         "doc_id", make_extract_text_udf()(F.col("html")).alias("text"))
-    d = str(tmp_path_factory.mktemp("wand5k") / "index")
+    d = str(tmp_path_factory.mktemp("kernel5k") / "index")
     catalog.build_durable_index(spark, prepared, d, shards=2, buckets=16,
                                 block_span=256)
     return catalog.load_index(spark, d)
@@ -163,15 +157,15 @@ def seg_index_5k(tmp_path_factory, spark):
 def test_wand_vs_relational_5k(seg_index_5k, q):
     rel = [(r.doc_id, r.score)
            for r in S.search_freetext(seg_index_5k, q, k=100).collect()]
-    wd = wand.search_wand(seg_index_5k, q, k=100)
+    wd = MS.search_maxscore(seg_index_5k, q, k=100)
     assert [d for d, _ in wd] == [d for d, _ in rel], q
     for (_, a), (_, b) in zip(wd, rel):
         assert a == pytest.approx(b, abs=1e-9), q
 
 
 def test_wand_k_zero_and_negative(seg_index):
-    assert wand.search_wand(seg_index, "market", k=0) == []
-    assert wand.search_wand(seg_index, "market", k=-3) == []
+    assert MS.search_maxscore(seg_index, "market", k=0) == []
+    assert MS.search_maxscore(seg_index, "market", k=-3) == []
 
 
 def test_wand_requires_segment_index(spark, corpus_sdf):
@@ -180,7 +174,7 @@ def test_wand_requires_segment_index(spark, corpus_sdf):
 
     mem = engine.build_index(corpus_sdf, AnalyzerConfig.full(), cache=False)
     with pytest.raises(TypeError, match="SegmentIndex"):
-        wand.search_wand(mem, "market", k=5)
+        MS.search_maxscore(mem, "market", k=5)
 
 
 def test_default_cap_bounds_head_term_fetch(seg_index, monkeypatch):
@@ -188,9 +182,9 @@ def test_default_cap_bounds_head_term_fetch(seg_index, monkeypatch):
     tightened to 2, a head-term query under the DEFAULT arguments ships
     at most 2 blocks per term to the driver (visible in the LRU entry),
     and an explicit opt-in to None still fetches the full exact set."""
-    monkeypatch.setattr(wand, "WAND_AUTO_CAP", 2)
+    monkeypatch.setattr(MS, "FETCH_CAP", 2)
     seg_index._mini.clear()
-    wand.search_wand(seg_index, "market price", k=5)  # defaults
+    MS.search_maxscore(seg_index, "market price", k=5)  # defaults
     for t in ("market", "price"):
         df, blks, cap_used = seg_index._mini[t]
         assert cap_used == 2 and len(blks) <= 2
@@ -199,7 +193,7 @@ def test_default_cap_bounds_head_term_fetch(seg_index, monkeypatch):
             seg_index.term_stats.term == t).collect()[0].df
         assert df == int(exact_df)
     # explicit exact opt-in refetches full (cap_used=None, all blocks)
-    exact = wand.search_wand(seg_index, "market price", k=5,
+    exact = MS.search_maxscore(seg_index, "market price", k=5,
                              max_blocks_per_term=None)
     assert seg_index._mini["market"][2] is None
     assert exact
@@ -207,16 +201,16 @@ def test_default_cap_bounds_head_term_fetch(seg_index, monkeypatch):
 
 
 def test_wand_refuses_non_freetext_and_bad_cap(seg_index):
-    """Phrase/boolean/proximity queries have no WAND semantics — the
+    """Phrase/boolean/proximity queries have no kernel semantics — the
     analyzer would strip the operators and silently score bag-of-words;
     refuse instead. cap<1 would negative-cache in-vocabulary terms as
     OOV (poisoning later exact lookups) — also refused."""
     for q in ('"market price"', "market AND price", "#3(market, price)"):
         with pytest.raises(ValueError, match="bag-of-words"):
-            wand.search_wand(seg_index, q, k=5)
+            MS.search_maxscore(seg_index, q, k=5)
     with pytest.raises(ValueError, match="cap"):
         seg_index.mini_index(["market"], cap=0)
-    assert wand.search_wand(seg_index, "market", k=5,
+    assert MS.search_maxscore(seg_index, "market", k=5,
                             max_blocks_per_term=1)  # cap=1 is legal
 
 
@@ -247,13 +241,13 @@ def test_cap_cache_remembers_complete_fetch(seg_index):
 
 
 def test_default_auto_cap_rank_identical_on_bench_queries(seg_index, oracle_index):
-    """With the real WAND_AUTO_CAP (256), no fixture term exceeds the cap,
+    """With the real FETCH_CAP (256), no fixture term exceeds the cap,
     so the default path is rank- and score-identical to the exact opt-in
     across the bench query set."""
     seg_index._mini.clear()
     for q in QUERIES:
-        assert (wand.search_wand(seg_index, q, k=20)
-                == wand.search_wand(seg_index, q, k=20,
+        assert (MS.search_maxscore(seg_index, q, k=20)
+                == MS.search_maxscore(seg_index, q, k=20,
                                     max_blocks_per_term=None)), q
 
 
@@ -272,19 +266,10 @@ def test_capped_fetch_ships_at_most_cap_blocks(seg_index):
 
 # -------------------------------------------------- static prior blending
 
-def _toy_prior(spark, n_docs: int):
-    """Deterministic pagerank-shaped prior: even docs get 1/(doc_id+2)
-    (a probability), odd docs are ABSENT from the graph so both paths
-    must apply the shared 1e-12 floor."""
-    return spark.createDataFrame(
-        [(d, 1.0 / (d + 2)) for d in range(1, n_docs + 1, 2)],
-        "node long, rank double")
-
-
 @pytest.mark.parametrize("q", ["market price growth", "market",
                                "germany economy china"])
 def test_wand_prior_matches_relational(spark, seg_index, q):
-    """WAND+prior == relational+prior, rank-identical with matching
+    """Kernel+prior == relational+prior, rank-identical with matching
     scores, at the exact uncapped fetch (the round-3 verdict's done
     criterion). k=10 with lam=0.3 exercises the iterative-deepening
     expansion: floor-prior demotion (~8.3) exceeds the bm25 spread, so
@@ -296,7 +281,7 @@ def test_wand_prior_matches_relational(spark, seg_index, q):
         rel = [(r.doc_id, r.score)
                for r in EX.execute(seg_index, q, k=k, prior=prior,
                                    prior_lam=0.3).collect()]
-        wd = wand.search_wand(seg_index, q, k=k, prior=prior,
+        wd = MS.search_maxscore(seg_index, q, k=k, prior=prior,
                               prior_lam=0.3, max_blocks_per_term=None)
         assert [d for d, _ in wd] == [d for d, _ in rel], (q, k)
         for (_, a), (_, b) in zip(wd, rel):
@@ -312,7 +297,7 @@ def test_wand_prior_exhausts_candidates_when_needed(spark, seg_index):
     rel = [(r.doc_id, r.score)
            for r in EX.execute(seg_index, "germani", k=10_000, prior=prior,
                                prior_lam=0.5).collect()]
-    wd = wand.search_wand(seg_index, "germani", k=10_000, prior=prior,
+    wd = MS.search_maxscore(seg_index, "germani", k=10_000, prior=prior,
                           prior_lam=0.5)
     assert [d for d, _ in wd] == [d for d, _ in rel]
 
@@ -330,7 +315,7 @@ def test_wand_prior_gt_one_keeps_exactness(spark, seg_index):
     rel = [(r.doc_id, r.score)
            for r in EX.execute(seg_index, q, k=25, prior=prior,
                                prior_lam=0.4).collect()]
-    wd = wand.search_wand(seg_index, q, k=25, prior=prior, prior_lam=0.4,
+    wd = MS.search_maxscore(seg_index, q, k=25, prior=prior, prior_lam=0.4,
                           max_blocks_per_term=None)
     assert [d for d, _ in wd] == [d for d, _ in rel]
     for (_, a), (_, b) in zip(wd, rel):

@@ -86,7 +86,7 @@ def test_planner_routing(built_index):
 
 
 def test_executor_wildcard_routing_and_refusals(built_index):
-    from search_engine_spark.operators import executor, wand
+    from search_engine_spark.operators import executor, maxscore
     from search_engine_spark.plans import planner
 
     vocab_term = built_index.term_stats.orderBy(
@@ -113,7 +113,7 @@ def test_executor_wildcard_routing_and_refusals(built_index):
             executor.execute(built_index, q, k=10, **kwargs)
     with pytest.raises(ValueError, match="free-text"):
         executor.execute(built_index, f'{q} "some phrase"', k=10)
-    assert not wand.wand_eligible(plan)
+    assert not maxscore.kernel_eligible(plan)
 
 
 def test_validation(wc_index):
