@@ -8,6 +8,10 @@ Phases:
      web_docs_per_sec — the BASELINE.json headline metric shape;
   3. warm-index query latencies for every query kind.
 
+Each line is the median of ``samples[line]`` runs (SAMPLES, or 1 for a
+line that times a first call): wall seconds under ``queries``, CPU
+seconds of the engine's process tree under ``queries_cpu_sec``.
+
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32),
      BENCH_WEB_DOCS (default 20000) — web corpus size.
@@ -20,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -35,6 +40,9 @@ LOAD1_AT_START = round(os.getloadavg()[0], 2)
 #: settles, it runs anyway and flags ``host_busy`` in the output.
 QUIET_LOAD1 = float(os.environ.get("BENCH_QUIET_LOAD1", "2.0"))
 QUIET_TIMEOUT = float(os.environ.get("BENCH_QUIET_TIMEOUT", "600"))
+
+#: runs per bench line; the line reports their median
+SAMPLES = 3
 
 
 def wait_for_quiet_host() -> tuple[float, float]:
@@ -80,28 +88,36 @@ def main() -> None:
 
     spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    from perfbench.host import tree_cpu_s
+
     timings: dict[str, float] = {}
+    cpu_timings: dict[str, float] = {}
+    samples: dict[str, int] = {}
 
-    def timed(name, fn):
-        t0 = time.perf_counter()
-        out = fn()
-        timings[name] = round(time.perf_counter() - t0, 4)
-        return out
-
-    def timed_best(name, fn, repeat=2):
-        """Best-of-N: the sandbox host throttles in bursts
-        (BENCH/BASELINE.md) and a single sample can land 5-8x off; the
-        min of two back-to-back runs is the engine number. Build lines
-        pass a factory that makes each run genuinely cold (fresh output
-        dir / fresh handle), so min-of-2 still measures a cold build.
+    def timed(name, fn, n=SAMPLES):
+        """Run ``fn`` ``n`` times; record the median wall seconds in
+        ``timings[name]`` and the median CPU seconds of the process tree
+        (driver, JVM, Python workers) in ``cpu_timings[name]``. The host
+        throttles wall time in bursts (BENCH/BASELINE.md) while CPU time
+        stays flat, so the two go side by side. The line's Spark jobs
+        carry its name as their job description. Build lines pass a
+        factory that makes each run genuinely cold (fresh output dir /
+        fresh handle); a line that measures a first call passes n=1.
         Returns the LAST run's result (logically identical across runs)."""
-        best, out = None, None
-        for _ in range(max(1, repeat)):
-            t0 = time.perf_counter()
-            out = fn()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        timings[name] = round(best, 4)
+        sc = spark.sparkContext
+        wall_s, cpu_s, out = [], [], None
+        sc.setJobDescription(name)
+        try:
+            for _ in range(n):
+                c0, t0 = tree_cpu_s(os.getpid()), time.perf_counter()
+                out = fn()
+                wall_s.append(time.perf_counter() - t0)
+                cpu_s.append(tree_cpu_s(os.getpid()) - c0)
+        finally:
+            sc.setJobDescription(None)
+        timings[name] = round(statistics.median(wall_s), 4)
+        cpu_timings[name] = round(statistics.median(cpu_s), 4)
+        samples[name] = n
         return out
 
     # -- phase 1: index build on the driver documents table -----------------
@@ -122,7 +138,7 @@ def main() -> None:
         _prev_idx.append(idx)
         return idx
 
-    idx = timed_best("build_index", build)
+    idx = timed("build_index", build)
     build_dps = n_docs / timings["build_index"]
 
     # -- phase 2: web-corpus (input_hint shape) build -----------------------
@@ -142,7 +158,7 @@ def main() -> None:
                 .write.mode("overwrite").parquet(web_dir)
         return spark.read.parquet(web_dir)
 
-    web = timed("web_gen", web_gen)
+    web = timed("web_gen", web_gen, n=1)  # later runs read the cache
 
     def web_build():
         w = corpus.ingest_filters(corpus.with_hash_doc_ids(web))
@@ -154,7 +170,7 @@ def main() -> None:
             F.count("*").alias("postings"), F.sum("tf").alias("tokens")
         ).collect()[0]
 
-    web_row = timed_best("web_build", web_build)
+    web_row = timed("web_build", web_build)
     web_dps = n_web / timings["web_build"]
 
     # -- phase 2b: durable segment build + MaxScore serving path -----------
@@ -184,7 +200,7 @@ def main() -> None:
         catalog.build_durable_index(spark, prepared, out, block_span=4096)
         return catalog.load_index(spark, out)
 
-    seg_idx = timed_best("segment_build", seg_build)
+    seg_idx = timed("segment_build", seg_build)
     seg_dps = n_web / timings["segment_build"]
 
     def q_ms():
@@ -193,7 +209,7 @@ def main() -> None:
 
     # cold = mini-index miss (driver Arrow fetch); warm = pure driver
     # kernel time over the LRU's memoized decodes
-    timed("q_maxscore_cold", q_ms)
+    timed("q_maxscore_cold", q_ms, n=1)
     timed("q_maxscore_warm", q_ms)
 
     # quantized-impact serving artifact (catalog.quantize_index): the
@@ -205,13 +221,13 @@ def main() -> None:
         return catalog.load_index(
             spark, catalog.quantize_index(spark, seg_idx.index_dir, out))
 
-    imp_idx = timed("quantize_index", seg_quantize)
+    imp_idx = timed("quantize_index", seg_quantize, n=1)
 
     def q_imp():
         return len(MS.search_maxscore(imp_idx, "market price growth",
                                       k=100))
 
-    timed("q_impact_cold", q_imp)
+    timed("q_impact_cold", q_imp, n=1)
     timed("q_impact_warm", q_imp)
 
     # next-word phrase index (catalog.build_phrase_index): the same
@@ -244,7 +260,7 @@ def main() -> None:
         return catalog.build_phrase_index(spark, seg_idx.index_dir,
                                           min_df=cut)
 
-    timed("phrase_index_build", ph_build)
+    timed("phrase_index_build", ph_build, n=1)
     ph_idx = catalog.load_index(spark, seg_idx.index_dir)
     if ph_idx.bigram_lookup(*ph_terms) is None:
         raise RuntimeError("bench phrase pair not covered by the phrase "
@@ -298,6 +314,7 @@ def main() -> None:
     q_serve_default()  # cold: warms the mini-index through the server
     timed("q_serve_default_warm", q_serve_default)
     srv.shutdown()
+    srv.server_close()
     shutil.rmtree(seg_dir, ignore_errors=True)
 
     # -- phase 3: warm query latencies --------------------------------------
@@ -373,10 +390,8 @@ def main() -> None:
             n_shards=8, m=2).count(),
     }
     for name, fn in queries.items():
-        if name == "q_vsm":
-            timed(name, fn)  # single-pass: pays the one-time norms build
-        else:
-            timed_best(name, fn)
+        # q_vsm is single-pass: it pays the one-time norms build
+        timed(name, fn, n=1 if name == "q_vsm" else SAMPLES)
 
     # -- phase 4: training-data pipeline ops (first-class per task brief) ---
     from search_engine_spark.operators import (corpusstats, decontam, dedup,
@@ -615,7 +630,7 @@ def main() -> None:
         return serp.date_histogram(hits, _dated(docs_df)).count()
 
     for name, fn in pipeline_ops.items():
-        timed_best(name, fn)
+        timed(name, fn)
 
     total = round(sum(timings.values()), 4)
     print(json.dumps({
@@ -623,6 +638,8 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "queries_cpu_sec": cpu_timings,
+        "samples": samples,
         "sf": sf,
         "n_docs": n_docs,
         "build_docs_per_sec": round(build_dps, 1),

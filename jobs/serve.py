@@ -130,8 +130,13 @@ the same refusals as jobs/query_topk.py); ``kernel=relational`` forces
 the relational path. The retired selectors ``kernel=wand`` and
 ``wand=0|1`` answer 400 naming their replacement.
 
-A single lock serializes query execution: one Spark driver serves the
-plans, and the kernel mutates the driver-side LRU.
+Requests run on a fixed pool of HANDLER_THREADS handler threads fed
+from one queue by the accept loop (no thread is started per
+connection). Each connection has a socket timeout of
+HANDLER_TIMEOUT_S, so an idle or slow client frees its handler instead
+of holding it, and with it a share of the pool, for good. Inside the
+handlers a single lock serializes query execution: one Spark driver
+serves the plans, and the kernel mutates the driver-side LRU.
 
 Usage:
     spark-submit --py-files dist/engine.zip jobs/serve.py \
@@ -144,16 +149,85 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import queue
 import sys
 import threading
 import time
 from datetime import date
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler, HTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _MODELS = ("bm25", "bm25-reference", "vsm", "lm-dirichlet", "lm-pyp")
+
+#: handler threads per server: requests beyond this many wait in the
+#: accept queue (query execution is serialized on one lock anyway)
+HANDLER_THREADS = 8
+#: socket timeout (s) of an accepted connection: a client that sends
+#: nothing, or reads nothing, for this long is dropped and frees its
+#: handler thread
+HANDLER_TIMEOUT_S = 10.0
+
+
+class PooledHTTPServer(HTTPServer):
+    """HTTPServer whose requests run on HANDLER_THREADS long-lived
+    handler threads: ``process_request`` only queues the accepted
+    socket. ``server_close()`` closes the listening socket, lets the
+    handlers finish what is queued, and joins them."""
+
+    def __init__(self, server_address, handler_class):
+        self._requests: queue.SimpleQueue = queue.SimpleQueue()
+        self.workers = tuple(
+            threading.Thread(target=self._work, daemon=True,
+                             name=f"serve-handler-{i}")
+            for i in range(HANDLER_THREADS))
+        for t in self.workers:
+            t.start()
+        # a failed bind calls server_close(), which stops the workers
+        super().__init__(server_address, handler_class)
+
+    def process_request(self, request, client_address):
+        self._requests.put((request, client_address))
+
+    def _work(self) -> None:
+        while (item := self._requests.get()) is not None:
+            request, client_address = item
+            try:
+                self.finish_request(request, client_address)
+            except Exception:
+                self.handle_error(request, client_address)
+            finally:
+                self.shutdown_request(request)
+
+    def server_close(self) -> None:
+        super().server_close()
+        for _ in self.workers:
+            self._requests.put(None)
+        for t in self.workers:
+            t.join()
+
+
+def results_json(hits, snippets: dict | None, meta: dict) -> bytes:
+    """The /results body, byte-identical to ``json.dumps`` of
+    ``{"results": [{"rank": i, "doc_id": d, "score": s[, "snippet":
+    snippets.get(d, "")]} for i, (d, s) in enumerate(hits, 1)], **meta}``
+    (snippets None = no snippet key), written from the (doc_id, score)
+    pairs without building a dict per hit."""
+    rows = ""
+    if hits:
+        docs, scores = zip(*hits)
+        # one json.dumps formats every score as it would inside the
+        # dicts (NaN/Infinity included); no float repr contains ", "
+        cols = [range(1, len(hits) + 1), docs,
+                json.dumps(list(map(float, scores)))[1:-1].split(", ")]
+        fmt = '{"rank": %d, "doc_id": %d, "score": %s'
+        if snippets is not None:
+            cols.append([json.dumps(snippets.get(int(d), "")) for d in docs])
+            fmt += ', "snippet": %s'
+        rows = ", ".join(map((fmt + "}").__mod__, zip(*cols)))
+    rest = ", " + json.dumps(meta)[1:] if meta else "}"
+    return ('{"results": [' + rows + "]" + rest).encode()
 
 
 def _parse_date(s: str | None) -> date | None:
@@ -169,7 +243,7 @@ def create_server(index, port: int = 0, spellchecker=None,
                   synonyms: dict[str, list[str]] | None = None,
                   synonym_weight: float = 0.7,
                   embeddings=None,
-                  ) -> ThreadingHTTPServer:
+                  ) -> PooledHTTPServer:
     """Build (without starting) the HTTP server around a loaded index.
     ``port=0`` binds an ephemeral port (see ``server.server_address``).
     ``abbreviations`` (term→expansion, e.g. from
@@ -186,6 +260,7 @@ def create_server(index, port: int = 0, spellchecker=None,
     enables GET /hybrid — sparse+dense RRF fusion; without it the
     endpoint answers 400."""
     from search_engine_spark.operators import executor, maxscore
+    from search_engine_spark.plans import planner
 
     lock = threading.Lock()
 
@@ -230,7 +305,11 @@ def create_server(index, port: int = 0, spellchecker=None,
                   min_should_match: int | None = None,
                   use_synonyms: bool = False,
                   recency_hl: float | None = None,
-                  recency_as_of=None) -> dict:
+                  recency_as_of=None) -> tuple[list, dict | None, dict]:
+        """Execute one search → (hits, snippets, info): the ranked
+        (doc_id, score) pairs, {doc_id: snippet} when ``want_snippets``
+        (else None), and the response's other keys; ``results_json``
+        writes the three as the /results body."""
         t0 = time.perf_counter()
         # kernel: None = AUTO (default — route eligible plain BM25
         # free text through the MaxScore kernel, everything else
@@ -328,6 +407,11 @@ def create_server(index, port: int = 0, spellchecker=None,
             # of returning out-of-range results with a 200
             raise ValueError(
                 "date_start and date_end must be provided together")
+        # classified once: routing, the spellcheck guard and the kernel
+        # all read this plan (re-classified only if a rewrite changes
+        # the query the kernel runs). planner.classify is resolved
+        # through the module at call time, so a tracer can wrap it.
+        plan = planner.classify(query, index.analyzer)
         if auto_route:
             # DEFAULT routing (round-5): an eligible query serves from
             # the MaxScore kernel — rank-identical to the relational
@@ -344,8 +428,6 @@ def create_server(index, port: int = 0, spellchecker=None,
             # scores — the artifact's serving contract (error bounded
             # by the quantizer) — while kernel=relational stays exact
             # via the sidecar; documented divergence, disclosed by "path".
-            from search_engine_spark.plans import planner as _planner
-
             relational_only = (
                 ds is not None or de is not None or bool(collapse_host)
                 or rm3_alpha is not None or fuzzy_max_dist is not None
@@ -353,20 +435,16 @@ def create_server(index, port: int = 0, spellchecker=None,
                 or recency_hl is not None or after is not None
                 or model != "bm25")
             if (not relational_only and hasattr(index, "mini_index")
-                    and maxscore.kernel_eligible(
-                        _planner.classify(query, index.analyzer))):
+                    and maxscore.kernel_eligible(plan)):
                 use_kernel = True
         corrected = query
         executed = corrected
         if first_execution and (spellchecker is not None or abbreviations):
-            from search_engine_spark.plans import planner
-
             # Mirror executor.execute's guard: the reference applies
             # spellcheck/expansion AFTER classification and to FREE-TEXT
             # queries only (retrieval_execution.py:77-79) — correcting a
             # boolean/proximity query would rewrite operator words into
             # vocabulary terms and silently change the parse.
-            plan = planner.classify(query, index.analyzer)
             # kernel path: the stricter shared predicate (kernel_eligible
             # also excludes phrase-bearing free text, which the kernel
             # 400s) — correcting a query the kernel will refuse anyway
@@ -388,16 +466,16 @@ def create_server(index, port: int = 0, spellchecker=None,
                     # so expand to bare terms there instead of a phrase
                     executed = expand_abbreviations(
                         corrected, abbreviations, quote=not use_kernel)
-        if auto_route and use_kernel and executed != query:
-            # belt-and-braces: a rewrite (spellcheck/expansion) cannot
-            # introduce phrases on the kernel path (quote=False above),
-            # but if the executed query ever stopped being
-            # kernel-eligible, FALL BACK rather than let the kernel
-            # refuse a request the user never made explicit
-            from search_engine_spark.plans import planner as _planner
-
-            if not maxscore.kernel_eligible(
-                    _planner.classify(executed, index.analyzer)):
+        if use_kernel and executed != query:
+            # the kernel scores the plan of the query it executes
+            plan = planner.classify(executed, index.analyzer)
+            if auto_route and not maxscore.kernel_eligible(plan):
+                # belt-and-braces: a rewrite (spellcheck/expansion)
+                # cannot introduce phrases on the kernel path
+                # (quote=False above), but if the executed query ever
+                # stopped being kernel-eligible, FALL BACK rather than
+                # let the kernel refuse a request the user never made
+                # explicit
                 use_kernel = False
         # the kernel reports the terms its fetch cap cut short; the
         # relational path always scores every posting
@@ -412,7 +490,8 @@ def create_server(index, port: int = 0, spellchecker=None,
                 # that wraps maxscore.search_maxscore sees every call
                 hits = maxscore.search_maxscore(
                     index, executed, k=k,
-                    prior=prior, prior_lam=prior_lam, stats=kstats)
+                    prior=prior, prior_lam=prior_lam, stats=kstats,
+                    plan=plan)
             elif collapse_host:
                 from search_engine_spark.operators import serp
 
@@ -471,13 +550,7 @@ def create_server(index, port: int = 0, spellchecker=None,
                 snips = {r["doc_id"]: r["snippet"] for r in
                          _S.snippets(sdf, index.documents, terms).collect()}
         truncated = kstats.get("truncated_terms", [])
-        return {
-            "results": [
-                {"rank": i, "doc_id": int(d), "score": float(s),
-                 **({"snippet": snips.get(int(d), "")}
-                    if want_snippets else {})}
-                for i, (d, s) in enumerate(hits, 1)
-            ],
+        return hits, (snips if want_snippets else None), {
             "number_of_results": len(hits),
             "retrieval_time": round(time.perf_counter() - t0, 4),
             "term_been_corrected": corrected != query,
@@ -554,8 +627,8 @@ def create_server(index, port: int = 0, spellchecker=None,
             + "</form>")
         if not query:
             return head + "</body></html>"
-        out = run_query(query, k, "bm25", ds, de,
-                        first_execution=not rerun, kernel=None)
+        hits, _, out = run_query(query, k, "bm25", ds, de,
+                                 first_execution=not rerun, kernel=None)
         parts = [head,
                  f"<p>Retrieved {out['number_of_results']} documents "
                  f"({out['retrieval_time']} seconds, "
@@ -574,12 +647,11 @@ def create_server(index, port: int = 0, spellchecker=None,
                 "Search instead for: "
                 f"<a href='/web?query={rerun_q}&rerun=1{dq}'>"
                 f"{_html.escape(out['original_query'])}</a></p>")
-        hits = out["results"]
         meta: dict[int, dict] = {}
         if hits and index.documents is not None:
             from pyspark.sql import functions as _F
 
-            ids = [h["doc_id"] for h in hits]
+            ids = [int(d) for d, _ in hits]
             cols = [c for c in ("doc_id", "url", "source", "warc_ts",
                                 "warc_date", "title")
                     if c in index.documents.columns]
@@ -590,16 +662,16 @@ def create_server(index, port: int = 0, spellchecker=None,
                     meta[r["doc_id"]] = r.asDict()
         from urllib.parse import urlparse as _urlparse
 
-        for h in hits:
-            m = meta.get(h["doc_id"], {})
+        for rank, (d, s) in enumerate(hits, 1):
+            m = meta.get(int(d), {})
             url = m.get("url")
             host = _urlparse(url).netloc if url else None
             when = m.get("warc_date") or m.get("warc_ts")
-            lines = [f"<b>#{h['rank']}</b> "
-                     f"<a href='/article/{h['doc_id']}'>"
-                     f"doc {h['doc_id']}</a> "
+            lines = [f"<b>#{rank}</b> "
+                     f"<a href='/article/{int(d)}'>"
+                     f"doc {int(d)}</a> "
                      f"<span class='muted'>score "
-                     f"{round(h['score'], 4)}</span>"]
+                     f"{round(float(s), 4)}</span>"]
             if m.get("title"):
                 lines.append(f"<div>{_html.escape(str(m['title']))}</div>")
             if host:
@@ -620,24 +692,27 @@ def create_server(index, port: int = 0, spellchecker=None,
         return "".join(parts)
 
     class Handler(BaseHTTPRequestHandler):
+        timeout = HANDLER_TIMEOUT_S
+
         def log_message(self, fmt, *args):  # quiet server
             pass
 
-        def _json(self, code: int, payload: dict) -> None:
-            body = json.dumps(payload).encode()
+        def _send(self, code: int, ctype: str, body: bytes) -> None:
             self.send_response(code)
-            self.send_header("Content-Type", "application/json")
+            self.send_header("Content-Type", ctype)
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
 
+        def _json(self, code: int, payload: dict) -> None:
+            self._send(code, "application/json", json.dumps(payload).encode())
+
+        def _results(self, *args, **kwargs) -> None:
+            self._send(200, "application/json",
+                       results_json(*run_query(*args, **kwargs)))
+
         def _page(self, code: int, html_body: str) -> None:
-            body = html_body.encode()
-            self.send_response(code)
-            self.send_header("Content-Type", "text/html; charset=utf-8")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+            self._send(code, "text/html; charset=utf-8", html_body.encode())
 
         def do_GET(self):  # noqa: N802 (http.server API)
             try:
@@ -693,7 +768,7 @@ def create_server(index, port: int = 0, spellchecker=None,
                             + ("kernel=maxscore" if q["wand"][0] == "1"
                                else "kernel=relational"))
                     kern = q.get("kernel", [None])[0]
-                    self._json(200, run_query(
+                    self._results(
                         query, int(q.get("k", ["100"])[0]), model,
                         _parse_date(q.get("date_start", [None])[0]),
                         _parse_date(q.get("date_end", [None])[0]),
@@ -713,7 +788,7 @@ def create_server(index, port: int = 0, spellchecker=None,
                         recency_hl=(float(q["recency"][0])
                                     if "recency" in q else None),
                         recency_as_of=_parse_date(
-                            q.get("as_of", [None])[0])))
+                            q.get("as_of", [None])[0]))
                 elif parts[0] == "complete":
                     q = parse_qs(u.query)
                     prefix = q.get("prefix", [None])[0]
@@ -736,11 +811,11 @@ def create_server(index, port: int = 0, spellchecker=None,
                                         for r in rows],
                     })
                 elif parts[0] == "rerun_query" and len(parts) == 4:
-                    self._json(200, run_query(
+                    self._results(
                         unquote(parts[1]), 100, "bm25",
                         _parse_date(unquote(parts[2])),
                         _parse_date(unquote(parts[3])),
-                        first_execution=False, kernel=None))
+                        first_execution=False, kernel=None)
                 elif parts[0] == "mlt" and len(parts) == 2:
                     # related documents: GET /mlt/<doc_id>?k=&terms=
                     q = parse_qs(u.query)
@@ -796,7 +871,6 @@ def create_server(index, port: int = 0, spellchecker=None,
                     from pyspark.sql import functions as _F
 
                     from search_engine_spark.operators import fusion
-                    from search_engine_spark.plans import planner
 
                     kind = planner.classify(query, index.analyzer)
                     if (not isinstance(kind, planner.FreeTextPlan)
@@ -958,7 +1032,6 @@ def create_server(index, port: int = 0, spellchecker=None,
                             f"(bm25/bm25-reference/lm-*), got {model!r}")
                     from search_engine_spark.operators import (
                         search as _search)
-                    from search_engine_spark.plans import planner
 
                     kind = planner.classify(query, index.analyzer)
                     if not isinstance(kind, planner.FreeTextPlan):
@@ -1022,7 +1095,7 @@ def create_server(index, port: int = 0, spellchecker=None,
                 "<p><a href='/web'>Back to search</a></p>"
                 "</body></html>"))
 
-    return ThreadingHTTPServer(("127.0.0.1", port), Handler)
+    return PooledHTTPServer(("127.0.0.1", port), Handler)
 
 
 def main() -> None:

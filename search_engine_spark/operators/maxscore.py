@@ -49,7 +49,6 @@ from collections import defaultdict
 import numpy as np
 from pyspark.sql import functions as F
 
-from ..functions.analyzer import analyze_query
 from . import segments as SEG
 
 
@@ -92,7 +91,8 @@ def search_maxscore(index, query: str, k: int = 100,
                     max_blocks_per_term: int | None | str = "auto",
                     prior=None, prior_lam: float = 0.3,
                     prior_id_col: str = "node", prior_col: str = "rank",
-                    stats: dict | None = None) -> list[tuple[int, float]]:
+                    stats: dict | None = None,
+                    plan=None) -> list[tuple[int, float]]:
     """BM25 top-k over a SegmentIndex via block-max MaxScore.
 
     Returns [(doc_id, score)] — a driver-side result (the serving path);
@@ -127,21 +127,27 @@ def search_maxscore(index, query: str, k: int = 100,
     ``prior`` (a (node, rank) DataFrame, canonically a PageRank
     artifact) blends the static document prior EXACTLY like the
     relational path's search.blend_doc_prior (see _blend_prior_topk).
+
+    ``plan`` (optional) is ``planner.classify(query, index.analyzer)``
+    when the caller already holds it (jobs/serve.py classifies each
+    request once); None classifies here. The kernel scores the plan's
+    terms, the same terms the relational path scores.
     """
     if not hasattr(index, "mini_index"):
         raise TypeError(
             "search_maxscore needs a SegmentIndex (durable block-encoded "
             "index); use operators.search.search_freetext for in-memory "
             "indexes")
-    from ..plans import planner
+    if plan is None:
+        from ..plans import planner
 
-    plan = planner.classify(query, index.analyzer)
+        plan = planner.classify(query, index.analyzer)
     if not kernel_eligible(plan):
         raise ValueError(
             "search_maxscore is a bag-of-words BM25 kernel: phrase, "
             "boolean and proximity queries have no MaxScore semantics "
             "here — use operators.executor.execute (the relational path)")
-    toks = analyze_query(query, index.analyzer)
+    toks = plan.terms
     if not toks or k <= 0:
         return []
     q_tf: dict[str, int] = {}
@@ -165,10 +171,8 @@ def search_maxscore(index, query: str, k: int = 100,
                 f"(k1={baked[0]}, b={baked[1]}) — requested ({k1}, {b}); "
                 "re-quantize from the source index to change the model")
         impact_scale = (k1 + 1.0) / ((1 << index.meta["impact_bits"]) - 1)
-    deleted = (index.deleted_ids() if hasattr(index, "deleted_ids")
-               else frozenset())
-    del_arr = (np.fromiter(deleted, dtype=np.int64, count=len(deleted))
-               if deleted else None)
+    # sorted tombstone ids, built once per index handle (None: no deletes)
+    del_arr = index.deleted_id_array()
     cap = (FETCH_CAP if max_blocks_per_term == "auto"
            else max_blocks_per_term)
     mini = index.mini_index(terms, cap=cap, stats=stats)
@@ -205,7 +209,9 @@ def search_maxscore(index, query: str, k: int = 100,
                     "index from postings that include dl (the durable "
                     "build does)")
         if del_arr is not None:
-            live = ~np.isin(docs, del_arr)
+            pos = np.searchsorted(del_arr, docs)
+            pos[pos == len(del_arr)] = 0
+            live = del_arr[pos] != docs
             if not live.all():
                 if not live.any():
                     return None

@@ -664,6 +664,8 @@ class SegmentIndex(InvertedIndex):
                     else index_dir)
         self._tomb_paths = _tombstone_paths(tomb_dir, as_of_batch)
         self._deleted_set: frozenset[int] | None = None
+        # (the deleted_ids set it was built from, its sorted array)
+        self._deleted_arr: tuple | None = None
 
     def __repr__(self) -> str:
         # the dataclass repr would read every lazy frame
@@ -772,6 +774,24 @@ class SegmentIndex(InvertedIndex):
                 "max_ids explicitly if the driver has the memory.")
         self._deleted_set = ids
         return ids
+
+    def deleted_id_array(self):
+        """``deleted_ids()`` as a sorted int64 array (None when nothing
+        is deleted), the form the kernel masks blocks with. The set is
+        checked against its bound on every call, as ``deleted_ids``
+        does; the array is built once per set, not once per request."""
+        import numpy as np
+
+        ids = self.deleted_ids()
+        if not ids:
+            return None
+        memo = self._deleted_arr
+        if memo is None or memo[0] is not ids:
+            arr = np.fromiter(ids, dtype=np.int64, count=len(ids))
+            arr.sort()
+            arr.flags.writeable = False
+            memo = self._deleted_arr = (ids, arr)
+        return memo[1]
 
     def _buckets_for(self, terms: list[str]) -> list[int]:
         # must equal pmod(xxhash64(term), buckets): computed driver-side

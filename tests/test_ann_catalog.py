@@ -235,6 +235,7 @@ def test_ann_served_over_http(spark, ann_index):
             assert e.value.code == 400, path
     finally:
         srv.shutdown()
+        srv.server_close()
     # no embeddings loaded: refine and vec_id lookup refuse, ADC works
     bare = create_server(idx, port=0)
     t2 = threading.Thread(target=bare.serve_forever, daemon=True)
@@ -250,6 +251,7 @@ def test_ann_served_over_http(spark, ann_index):
             assert e.value.code == 400, path
     finally:
         bare.shutdown()
+        bare.server_close()
 
 
 def test_ann_endpoint_requires_artifact(tmp_path, spark, corpus_sdf):
@@ -275,6 +277,7 @@ def test_ann_endpoint_requires_artifact(tmp_path, spark, corpus_sdf):
         assert "artifact" in _json.loads(e.value.read())["error"]
     finally:
         srv.shutdown()
+        srv.server_close()
 
 
 def test_ann_excludes_tombstones(tmp_path, spark, corpus_sdf):

@@ -213,6 +213,77 @@ def test_maxscore_golden(seg_index):
     assert_golden(seg_index, "tf")
 
 
+def _fuzz_query_shapes(seed: int = 2024, n: int = 2000) -> list[str]:
+    """Free-text queries mixing words, stopwords, quoted phrases (some
+    stopword-only, some unbalanced or glued to a word), prefix, wildcard
+    and regexp tokens, digits and punctuation, joined by odd runs of
+    whitespace."""
+    import numpy as np
+
+    from search_engine_spark.sources.corpus import _VOCAB
+
+    toks = ([w for w in _VOCAB if w.isalpha()][:40]
+            + ["the", "of", "a", "and", "is", "2024", "x1", "e-mail",
+               "market,", "(price)", "o'neil", "mérket"]
+            + ['"market price"', '"the of"', '"a"', '""', '"price',
+               'market"', 'x"the"y', '"germany economy" china',
+               "mark*", "te?t", "*ing", "/gro.p/", "/x/", "*", "?"])
+    seps = [" ", "  ", "\t", "\n", " \u00a0 ", "\r\n "]
+    rng = np.random.default_rng(seed)
+    out = []
+    for _ in range(n):
+        parts = [toks[int(i)] for i in rng.integers(0, len(toks),
+                                                    int(rng.integers(1, 6)))]
+        q = parts[0]
+        for p in parts[1:]:
+            q += seps[int(rng.integers(0, len(seps)))] + p
+        out.append(seps[int(rng.integers(0, len(seps)))] + q)
+    return out
+
+
+def test_plan_terms_are_the_query_analysis():
+    """For every kernel-eligible plan the planner's terms equal the
+    whole query's analysis, so the kernel scoring ``plan.terms`` (the
+    plan jobs/serve.py hands it) scores what analyzing the query did."""
+    from search_engine_spark.functions.analyzer import (AnalyzerConfig,
+                                                        analyze_query)
+    from search_engine_spark.plans import planner
+
+    conf = AnalyzerConfig.full()
+    eligible = 0
+    for q in _fuzz_query_shapes():
+        plan = planner.classify(q, conf)
+        if MS.kernel_eligible(plan):
+            eligible += 1
+            assert plan.terms == analyze_query(q, conf), repr(q)
+    # both sides of the predicate are exercised
+    assert 500 < eligible < 1900
+
+
+@pytest.mark.parametrize("q", ['"the of"~3 market',
+                               'market"the a"~2price'])
+def test_kernel_scores_the_plan_terms(seg_index, oracle_index, q):
+    """A slop suffix on a stopword-only phrase leaves the plan with the
+    phrase (and its slop digits) dropped; the kernel scores the plan's
+    terms like the relational path and the oracle, not the raw
+    analysis that kept '3' or '2price' as terms."""
+    o_index, doc_sizes = oracle_index
+    want = oracle.execute(o_index, doc_sizes, q)[:20]
+    assert want
+    _same_ranking(MS.search_maxscore(seg_index, q, k=20), want)
+
+
+def test_handed_plan_ranks_like_classifying_inside(seg_index):
+    """search_maxscore(plan=classify(q)) == search_maxscore(q)."""
+    from search_engine_spark.plans import planner
+
+    for q in QUERIES + _fuzz_freetext():
+        plan = planner.classify(q, seg_index.analyzer)
+        for k in (15, 1 << 30):
+            assert MS.search_maxscore(seg_index, q, k=k, plan=plan) \
+                == MS.search_maxscore(seg_index, q, k=k), (q, k)
+
+
 def test_warm_repeat_query_decodes_nothing(seg_index, monkeypatch):
     """The mini-index LRU keeps each block's decoded arrays: once a
     query has scored every block, repeating it (at any k) decodes

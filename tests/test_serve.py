@@ -14,7 +14,8 @@ from search_engine_spark.sources import catalog
 
 
 @pytest.fixture(scope="module")
-def server(tmp_path_factory, spark, corpus_sdf):
+def served(tmp_path_factory, spark, corpus_sdf):
+    """(base url, server) of one running server for the module."""
     from jobs.serve import create_server
     from search_engine_spark.plans.spellcheck import VocabularySpellchecker
 
@@ -31,8 +32,14 @@ def server(tmp_path_factory, spark, corpus_sdf):
         abbreviations={"gdp": "germany economy"})
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
-    yield f"http://127.0.0.1:{srv.server_address[1]}"
+    yield f"http://127.0.0.1:{srv.server_address[1]}", srv
     srv.shutdown()
+    srv.server_close()
+
+
+@pytest.fixture()
+def server(served):
+    return served[0]
 
 
 def _get(url: str):
@@ -211,6 +218,7 @@ def test_prior_blend_through_results(spark, corpus_sdf, tmp_path):
             [(h["doc_id"], round(h["score"], 9)) for h in body["results"]]
     finally:
         srv.shutdown()
+        srv.server_close()
 
 
 def test_snippets_through_results(server):
@@ -499,6 +507,7 @@ def test_synonyms_through_results(spark, corpus_sdf, tmp_path):
         assert e.value.code == 400
     finally:
         srv.shutdown()
+        srv.server_close()
     bare = create_server(idx, port=0)  # no table loaded
     t2 = threading.Thread(target=bare.serve_forever, daemon=True)
     t2.start()
@@ -509,6 +518,7 @@ def test_synonyms_through_results(spark, corpus_sdf, tmp_path):
         assert e.value.code == 400
     finally:
         bare.shutdown()
+        bare.server_close()
 
 
 def test_explain_plan_endpoint(server):
@@ -657,6 +667,7 @@ def test_hybrid_through_results(spark, corpus_sdf, tmp_path):
             assert e.value.code == 400, path
     finally:
         srv.shutdown()
+        srv.server_close()
     # no embedding table loaded → 400
     bare = create_server(idx, port=0)
     t2 = threading.Thread(target=bare.serve_forever, daemon=True)
@@ -668,6 +679,7 @@ def test_hybrid_through_results(spark, corpus_sdf, tmp_path):
         assert e.value.code == 400
     finally:
         bare.shutdown()
+        bare.server_close()
 
 
 def test_maxscore_kernel_matches_relational(server):
@@ -793,6 +805,7 @@ def test_auto_kernel_requires_durable_index(spark, corpus_sdf):
         assert body["number_of_results"] > 0
     finally:
         srv.shutdown()
+        srv.server_close()
 
 
 def test_auto_kernel_serves_impact_store(spark, corpus_sdf, tmp_path):
@@ -822,6 +835,7 @@ def test_auto_kernel_serves_impact_store(spark, corpus_sdf, tmp_path):
             [r["doc_id"] for r in wnd["results"]]
     finally:
         srv.shutdown()
+        srv.server_close()
 
 
 def _get_html(url: str):
@@ -919,3 +933,168 @@ def test_stats_reports_mini_index_counters(server, spark):
     assert c1["hits"] >= c0["hits"] + 3
     assert c1["misses"] + c1["hits"] == c0["misses"] + c0["hits"] + 6
     assert c1["blocks_fetched"] >= c0["blocks_fetched"]
+
+
+def _old_results_form(hits, snippets, meta) -> bytes:
+    """The /results body as it was built before results_json: one dict
+    per hit, the whole payload through json.dumps."""
+    return json.dumps({
+        "results": [
+            {"rank": i, "doc_id": int(d), "score": float(s),
+             **({"snippet": snippets.get(int(d), "")}
+                if snippets is not None else {})}
+            for i, (d, s) in enumerate(hits, 1)],
+        **meta}).encode()
+
+
+def test_results_json_matches_json_dumps():
+    """results_json writes the same bytes as json.dumps of the dict
+    form, non-finite and numpy-typed scores and escaped snippets
+    included."""
+    import numpy as np
+
+    from jobs.serve import results_json
+
+    hits = [(1, 2.5), (np.int64(2), np.float64(0.1)), (3, float("nan")),
+            (4, float("inf")), (5, float("-inf")), (6, 1e-300),
+            (7, 1e22), (8, -0.0)]
+    meta = {"number_of_results": len(hits), "retrieval_time": 0.0012,
+            "term_been_corrected": True, "corrected_query": 'mérket "x"',
+            "path": "maxscore", "exact": False,
+            "truncated_terms": ["market"]}
+    snips = {1: 'a "quoted"\n, snippet…', 3: ""}
+    for h in (hits, []):
+        for sn in (None, snips):
+            assert results_json(h, sn, meta) == _old_results_form(
+                h, sn, meta)
+    assert results_json([], None, {}) == b'{"results": []}'
+
+
+@pytest.mark.parametrize("path", [
+    "/results?query=market+price&k=10",                    # kernel
+    "/results?query=market+price&k=10&kernel=relational",  # relational
+    "/results?query=market&k=3&snippets=1",                # snippets
+    "/results?query=zzzqq&k=5",                            # zero hits
+    "/rerun_query/market/None/None",
+])
+def test_results_body_is_json_dumps(server, path):
+    """Every /results-shaped body is byte for byte what json.dumps
+    writes for the same payload in the dict-per-hit form."""
+    with urllib.request.urlopen(server + path, timeout=120) as r:
+        raw = r.read()
+    body = json.loads(raw)
+    hits = [(h["doc_id"], h["score"]) for h in body["results"]]
+    snippets = ({h["doc_id"]: h["snippet"] for h in body["results"]}
+                if "snippets=1" in path else None)
+    meta = {k: v for k, v in body.items() if k != "results"}
+    assert raw == _old_results_form(hits, snippets, meta)
+    assert ("zzzqq" in path) == (hits == [])
+
+
+def test_handler_pool_starts_no_thread_per_request(served):
+    """200 requests over 4 concurrent clients, with a short switch
+    interval, run on the fixed handler pool: every one answers with the
+    same page, and no thread appears besides the clients."""
+    import sys
+    import time
+
+    from jobs.serve import HANDLER_THREADS
+
+    base, srv = served
+    assert len(srv.workers) == HANDLER_THREADS
+    assert all(t.is_alive() for t in srv.workers)
+    url = base + "/results?query=market&k=5"
+    want = [h["doc_id"] for h in _get(url)[1]["results"]]
+    known = set(threading.enumerate())
+    extra: set = set()
+    pages: list = []
+    done = threading.Event()
+
+    def sample():
+        while not done.is_set():
+            extra.update(set(threading.enumerate()) - known)
+            time.sleep(0.001)
+
+    def client():
+        for _ in range(50):
+            status, body = _get(url)
+            pages.append((status, [h["doc_id"] for h in body["results"]]))
+
+    sampler = threading.Thread(target=sample, name="sampler")
+    clients = [threading.Thread(target=client, name=f"client-{i}")
+               for i in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        sampler.start()
+        for c in clients:
+            c.start()
+        for c in clients:
+            c.join(timeout=120)
+    finally:
+        done.set()
+        sys.setswitchinterval(interval)
+    sampler.join(timeout=30)
+    assert not any(c.is_alive() for c in clients + [sampler])
+    assert pages == [(200, want)] * 200
+    assert {t.name for t in extra} <= {t.name for t in clients + [sampler]}
+    assert threading.active_count() <= len(known)
+
+
+def test_idle_connections_time_out_of_the_pool(served, monkeypatch):
+    """As many idle sockets as handler threads cannot starve the pool:
+    each is dropped after the handler timeout, then /results answers."""
+    import socket
+    import time
+
+    from jobs.serve import HANDLER_THREADS
+
+    base, srv = served
+    monkeypatch.setattr(srv.RequestHandlerClass, "timeout", 0.5)
+    idle = [socket.create_connection(srv.server_address, timeout=30)
+            for _ in range(HANDLER_THREADS)]
+    try:
+        t0 = time.perf_counter()
+        status, body = _get(base + "/results?query=market&k=3")
+        assert status == 200 and body["number_of_results"] == 3
+        # the request waited for a handler to drop its idle socket
+        assert time.perf_counter() - t0 >= 0.4
+        for s in idle:
+            assert s.recv(1) == b""  # the server closed it
+    finally:
+        for s in idle:
+            s.close()
+
+
+def test_server_close_joins_handler_threads():
+    """server_close() stops and joins every handler thread, also when
+    the bind fails inside the constructor."""
+    from http.server import BaseHTTPRequestHandler
+
+    from jobs.serve import PooledHTTPServer
+
+    class Hello(BaseHTTPRequestHandler):
+        def log_message(self, fmt, *args):
+            pass
+
+        def do_GET(self):  # noqa: N802
+            self.send_response(200)
+            self.send_header("Content-Length", "2")
+            self.end_headers()
+            self.wfile.write(b"ok")
+
+    srv = PooledHTTPServer(("127.0.0.1", 0), Hello)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    with urllib.request.urlopen(
+            f"http://127.0.0.1:{srv.server_address[1]}/", timeout=30) as r:
+        assert r.read() == b"ok"
+    before = threading.active_count()
+    with pytest.raises(OSError):
+        PooledHTTPServer(srv.server_address, Hello)  # port in use
+    assert threading.active_count() == before
+    srv.shutdown()
+    closer = threading.Thread(target=srv.server_close)
+    closer.start()
+    closer.join(timeout=30)
+    assert not closer.is_alive()
+    assert not any(t.is_alive() for t in srv.workers)

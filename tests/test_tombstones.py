@@ -25,7 +25,7 @@ def _top(idx, q="market price growth", k=25):
 
 
 def test_deletes_exclude_from_every_query_path(spark, corpus_sdf,
-                                               live_index):
+                                               live_index, monkeypatch):
     idx = catalog.load_index(spark, live_index)
     before = _top(idx)
     assert before
@@ -47,6 +47,25 @@ def test_deletes_exclude_from_every_query_path(spark, corpus_sdf,
     assert not set(victims) & {d for d, _ in kernel_hits}
     rel = _top(idx, k=25)
     assert [(d, round(s, 9)) for d, s in kernel_hits] == rel
+
+    # a handle turns its tombstone set into the kernel's sorted array
+    # once, not once per request
+    import numpy as np
+
+    converted = []
+    fromiter = np.fromiter
+
+    def counting(it, *args, **kwargs):
+        if isinstance(it, frozenset):
+            converted.append(len(it))
+        return fromiter(it, *args, **kwargs)
+
+    monkeypatch.setattr(np, "fromiter", counting)
+    fresh = catalog.load_index(spark, live_index)
+    for _ in range(2):
+        assert MS.search_maxscore(fresh, "market price growth",
+                                  k=25) == kernel_hits
+    assert converted == [len(victims)]
 
     # phrase/positional path goes through the same lookup
     pos = idx.lookup(["market"], positional=True)
