@@ -90,6 +90,14 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     from perfbench.host import tree_cpu_s
 
+    def others_cpu_s() -> float:
+        """CPU seconds of the JVM and the Python workers: the process
+        tree's /proc ticks minus the driver's own, read right after."""
+        tree = tree_cpu_s(os.getpid())
+        with open("/proc/self/stat") as f:
+            st = f.read().rsplit(")", 1)[1].split()  # fields from 3 on
+        return tree - (int(st[11]) + int(st[12])) / os.sysconf("SC_CLK_TCK")
+
     timings: dict[str, float] = {}
     cpu_timings: dict[str, float] = {}
     samples: dict[str, int] = {}
@@ -97,7 +105,9 @@ def main() -> None:
     def timed(name, fn, n=SAMPLES):
         """Run ``fn`` ``n`` times; record the median wall seconds in
         ``timings[name]`` and the median CPU seconds of the process tree
-        (driver, JVM, Python workers) in ``cpu_timings[name]``. The host
+        (driver, JVM, Python workers) in ``cpu_timings[name]``. /proc
+        counts CPU in 10 ms ticks, so the driver's own share comes from
+        process_time() (ns resolution) and only the rest from ticks. The host
         throttles wall time in bursts (BENCH/BASELINE.md) while CPU time
         stays flat, so the two go side by side. The line's Spark jobs
         carry its name as their job description. Build lines pass a
@@ -109,10 +119,12 @@ def main() -> None:
         sc.setJobDescription(name)
         try:
             for _ in range(n):
-                c0, t0 = tree_cpu_s(os.getpid()), time.perf_counter()
+                c0, p0 = others_cpu_s(), time.process_time()
+                t0 = time.perf_counter()
                 out = fn()
                 wall_s.append(time.perf_counter() - t0)
-                cpu_s.append(tree_cpu_s(os.getpid()) - c0)
+                p1 = time.process_time()
+                cpu_s.append(p1 - p0 + others_cpu_s() - c0)
         finally:
             sc.setJobDescription(None)
         timings[name] = round(statistics.median(wall_s), 4)

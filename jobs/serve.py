@@ -130,13 +130,19 @@ the same refusals as jobs/query_topk.py); ``kernel=relational`` forces
 the relational path. The retired selectors ``kernel=wand`` and
 ``wand=0|1`` answer 400 naming their replacement.
 
-Requests run on a fixed pool of HANDLER_THREADS handler threads fed
-from one queue by the accept loop (no thread is started per
-connection). Each connection has a socket timeout of
-HANDLER_TIMEOUT_S, so an idle or slow client frees its handler instead
-of holding it, and with it a share of the pool, for good. Inside the
-handlers a single lock serializes query execution: one Spark driver
-serves the plans, and the kernel mutates the driver-side LRU.
+One thread serves every request: the thread that calls serve_forever
+runs a selector loop (LoopHTTPServer) that accepts without blocking,
+buffers each request until its head is complete, runs the handler
+inline on the buffered bytes and sends the response without blocking.
+No handler touches a socket, so an idle or slow client costs one
+buffered entry and a deadline (HANDLER_TIMEOUT_S from accept until the
+response is sent), never a thread; a head over MAX_HEAD_BYTES gets a
+431. The loop thread is also what serializes query execution (one
+Spark driver serves the plans, and the kernel mutates the driver-side
+LRU), so there is no serving lock. Known limit: a relational (Spark)
+request blocks the loop for its duration, so every other request, `/`
+and a memoized `/stats` included, waits for it in the listen backlog
+(request_queue_size = 128) rather than being refused.
 
 Usage:
     spark-submit --py-files dist/engine.zip jobs/serve.py \
@@ -147,9 +153,11 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import io
 import json
 import os
-import queue
+import re
+import selectors
 import sys
 import threading
 import time
@@ -161,51 +169,146 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _MODELS = ("bm25", "bm25-reference", "vsm", "lm-dirichlet", "lm-pyp")
 
-#: handler threads per server: requests beyond this many wait in the
-#: accept queue (query execution is serialized on one lock anyway)
-HANDLER_THREADS = 8
-#: socket timeout (s) of an accepted connection: a client that sends
-#: nothing, or reads nothing, for this long is dropped and frees its
-#: handler thread
+#: connection deadline (s): a connection whose response has not been
+#: sent this long after it was accepted is closed, whatever it waits on
 HANDLER_TIMEOUT_S = 10.0
+#: most bytes a request head (request line and headers) may take before
+#: its blank line; a longer head is answered 431 and closed (the line
+#: limit of http.server)
+MAX_HEAD_BYTES = 65536
+
+_HEAD_END = re.compile(rb"\n\r?\n")
+_HEAD_TOO_LARGE = (b"HTTP/1.0 431 Request Header Fields Too Large\r\n"
+                   b"Content-Type: application/json\r\n"
+                   b"Content-Length: 36\r\n\r\n"
+                   b'{"error": "request head too large"}\n')
 
 
-class PooledHTTPServer(HTTPServer):
-    """HTTPServer whose requests run on HANDLER_THREADS long-lived
-    handler threads: ``process_request`` only queues the accepted
-    socket. ``server_close()`` closes the listening socket, lets the
-    handlers finish what is queued, and joins them."""
+class InMemoryIO:
+    """Request-handler mixin for LoopHTTPServer: the handler reads the
+    buffered request from ``rfile`` and writes its response to
+    ``wfile``, both in memory; it never touches the socket."""
+
+    def setup(self) -> None:
+        self.rfile = io.BytesIO(self.request)
+        self.wfile = io.BytesIO()
+
+    def finish(self) -> None:
+        pass
+
+
+class _Conn:
+    __slots__ = ("sock", "addr", "deadline", "buf", "out")
+
+    def __init__(self, sock, addr, deadline: float):
+        self.sock, self.addr, self.deadline = sock, addr, deadline
+        self.buf = bytearray()
+        self.out = None  # the unsent response, once the handler ran
+
+
+class LoopHTTPServer(HTTPServer):
+    """HTTPServer whose ``serve_forever`` thread does all the work in one
+    selector loop: it accepts without blocking, buffers each request
+    until its head is complete, runs the handler (which mixes in
+    InMemoryIO) inline on the buffered bytes and sends the response
+    without blocking; what does not fit goes out as the socket drains,
+    then the connection is closed. A connection not answered
+    HANDLER_TIMEOUT_S after accept is closed. ``shutdown()`` waits for
+    the loop to exit, and the loop closes every open connection as it
+    exits."""
+
+    request_queue_size = 128
 
     def __init__(self, server_address, handler_class):
-        self._requests: queue.SimpleQueue = queue.SimpleQueue()
-        self.workers = tuple(
-            threading.Thread(target=self._work, daemon=True,
-                             name=f"serve-handler-{i}")
-            for i in range(HANDLER_THREADS))
-        for t in self.workers:
-            t.start()
-        # a failed bind calls server_close(), which stops the workers
+        self._conns: dict = {}
+        self._stop = False
+        self._stopped = threading.Event()
         super().__init__(server_address, handler_class)
+        self.socket.setblocking(False)
 
-    def process_request(self, request, client_address):
-        self._requests.put((request, client_address))
+    def serve_forever(self, poll_interval: float = 0.5) -> None:
+        self._stopped.clear()
+        try:
+            with selectors.DefaultSelector() as sel:
+                sel.register(self.socket, selectors.EVENT_READ)
+                while not self._stop:
+                    now = time.monotonic()
+                    for c in [c for c in self._conns.values()
+                              if c.deadline <= now]:
+                        self._close(sel, c)
+                    wait = min([poll_interval] + [
+                        c.deadline - now for c in self._conns.values()])
+                    for key, _ in sel.select(wait):
+                        if key.data is None:
+                            self._accept(sel)
+                        elif key.data.out is None:
+                            self._read(sel, key.data)
+                        else:
+                            self._send(sel, key.data)
+                for c in list(self._conns.values()):
+                    self._close(sel, c)
+        finally:
+            self._stop = False
+            self._stopped.set()
 
-    def _work(self) -> None:
-        while (item := self._requests.get()) is not None:
-            request, client_address = item
+    def shutdown(self) -> None:
+        self._stop = True
+        self._stopped.wait()
+
+    def _accept(self, sel) -> None:
+        while True:
             try:
-                self.finish_request(request, client_address)
-            except Exception:
-                self.handle_error(request, client_address)
-            finally:
-                self.shutdown_request(request)
+                sock, addr = self.socket.accept()
+            except OSError:  # backlog drained (or out of descriptors)
+                return
+            sock.setblocking(False)
+            c = _Conn(sock, addr, time.monotonic() + HANDLER_TIMEOUT_S)
+            self._conns[sock] = c
+            sel.register(sock, selectors.EVENT_READ, c)
 
-    def server_close(self) -> None:
-        super().server_close()
-        for _ in self.workers:
-            self._requests.put(None)
-        for t in self.workers:
-            t.join()
+    def _read(self, sel, c: _Conn) -> None:
+        try:
+            data = c.sock.recv(65536)
+        except (BlockingIOError, InterruptedError):
+            return
+        except OSError:
+            data = b""
+        if not data:  # the client left before its head was complete
+            self._close(sel, c)
+            return
+        start = len(c.buf)
+        c.buf += data
+        end = _HEAD_END.search(c.buf, max(0, start - 2))
+        if end is not None and end.end() <= MAX_HEAD_BYTES:
+            try:
+                out = self.RequestHandlerClass(
+                    bytes(c.buf), c.addr, self).wfile.getvalue()
+            except Exception:
+                self.handle_error(c.sock, c.addr)
+                out = b""
+        elif len(c.buf) > MAX_HEAD_BYTES:
+            out = _HEAD_TOO_LARGE
+        else:
+            return
+        c.out = memoryview(out)
+        self._send(sel, c)
+        if c.out:
+            sel.modify(c.sock, selectors.EVENT_WRITE, c)
+
+    def _send(self, sel, c: _Conn) -> None:
+        try:
+            c.out = c.out[c.sock.send(c.out):]
+        except (BlockingIOError, InterruptedError):
+            return
+        except OSError:  # the client left: nothing more to send
+            c.out = c.out[:0]
+        if not c.out:
+            self._close(sel, c)
+
+    def _close(self, sel, c: _Conn) -> None:
+        sel.unregister(c.sock)
+        del self._conns[c.sock]
+        self.shutdown_request(c.sock)
 
 
 def results_json(hits, snippets: dict | None, meta: dict) -> bytes:
@@ -243,7 +346,7 @@ def create_server(index, port: int = 0, spellchecker=None,
                   synonyms: dict[str, list[str]] | None = None,
                   synonym_weight: float = 0.7,
                   embeddings=None,
-                  ) -> PooledHTTPServer:
+                  ) -> LoopHTTPServer:
     """Build (without starting) the HTTP server around a loaded index.
     ``port=0`` binds an ephemeral port (see ``server.server_address``).
     ``abbreviations`` (term→expansion, e.g. from
@@ -262,7 +365,6 @@ def create_server(index, port: int = 0, spellchecker=None,
     from search_engine_spark.operators import executor, maxscore
     from search_engine_spark.plans import planner
 
-    lock = threading.Lock()
 
     MAX_K = 10_000
     WEB_K = 20  # /web's default result count
@@ -330,7 +432,7 @@ def create_server(index, port: int = 0, spellchecker=None,
         if not 1 <= k <= MAX_K:
             # negative k raises deep inside Spark's limit() (a 500), and
             # an unbounded k lets one request collect the whole index
-            # through the serving lock — reject as a 400 like the
+            # while it holds the serving loop — reject as a 400 like the
             # kernel/date and half-open-range checks
             raise ValueError(f"k must be in [1, {MAX_K}], got {k}")
         if collapse_host:
@@ -480,58 +582,57 @@ def create_server(index, port: int = 0, spellchecker=None,
         # the kernel reports the terms its fetch cap cut short; the
         # relational path always scores every posting
         kstats: dict = {}
-        with lock:
-            if use_kernel:
-                if ds or de:
-                    raise ValueError(
-                        "kernel=maxscore does not support date filtering; "
-                        "use the relational path")
-                # resolved through the module at call time, so a tracer
-                # that wraps maxscore.search_maxscore sees every call
-                hits = maxscore.search_maxscore(
-                    index, executed, k=k,
-                    prior=prior, prior_lam=prior_lam, stats=kstats,
-                    plan=plan)
-            elif collapse_host:
-                from search_engine_spark.operators import serp
+        if use_kernel:
+            if ds or de:
+                raise ValueError(
+                    "kernel=maxscore does not support date filtering; "
+                    "use the relational path")
+            # resolved through the module at call time, so a tracer
+            # that wraps maxscore.search_maxscore sees every call
+            hits = maxscore.search_maxscore(
+                index, executed, k=k,
+                prior=prior, prior_lam=prior_lam, stats=kstats,
+                plan=plan)
+        elif collapse_host:
+            from search_engine_spark.operators import serp
 
-                # full ranking (df-bounded, never corpus-scale), THEN
-                # the per-host cap, THEN the page cut — cutting first
-                # would under-fill the page when a host dominates it
-                df = executor.execute(index, executed, k=None, model=model,
-                                      date_start=ds, date_end=de,
-                                      prior=prior, prior_lam=prior_lam,
-                                      rm3_alpha=rm3_alpha,
-                                      fuzzy_max_dist=fuzzy_max_dist,
-                                      min_should_match=min_should_match,
-                                      synonyms=(synonyms if use_synonyms
-                                                else None),
-                                      synonym_weight=synonym_weight,
-                                      recency=(doc_dates
-                                               if recency_hl is not None
-                                               else None),
-                                      recency_as_of=recency_as_of,
-                                      recency_half_life=recency_hl or 30.0)
-                div = serp.diversify_by_host(
-                    df, doc_hosts, per_host=collapse_host, k=k)
-                hits = [(r.doc_id, r.score) for r in div.collect()]
-            else:
-                df = executor.execute(index, executed, k=k, model=model,
-                                      date_start=ds, date_end=de,
-                                      prior=prior, prior_lam=prior_lam,
-                                      rm3_alpha=rm3_alpha,
-                                      fuzzy_max_dist=fuzzy_max_dist,
-                                      after=after,
-                                      min_should_match=min_should_match,
-                                      synonyms=(synonyms if use_synonyms
-                                                else None),
-                                      synonym_weight=synonym_weight,
-                                      recency=(doc_dates
-                                               if recency_hl is not None
-                                               else None),
-                                      recency_as_of=recency_as_of,
-                                      recency_half_life=recency_hl or 30.0)
-                hits = [(r.doc_id, r.score) for r in df.collect()]
+            # full ranking (df-bounded, never corpus-scale), THEN
+            # the per-host cap, THEN the page cut — cutting first
+            # would under-fill the page when a host dominates it
+            df = executor.execute(index, executed, k=None, model=model,
+                                  date_start=ds, date_end=de,
+                                  prior=prior, prior_lam=prior_lam,
+                                  rm3_alpha=rm3_alpha,
+                                  fuzzy_max_dist=fuzzy_max_dist,
+                                  min_should_match=min_should_match,
+                                  synonyms=(synonyms if use_synonyms
+                                            else None),
+                                  synonym_weight=synonym_weight,
+                                  recency=(doc_dates
+                                           if recency_hl is not None
+                                           else None),
+                                  recency_as_of=recency_as_of,
+                                  recency_half_life=recency_hl or 30.0)
+            div = serp.diversify_by_host(
+                df, doc_hosts, per_host=collapse_host, k=k)
+            hits = [(r.doc_id, r.score) for r in div.collect()]
+        else:
+            df = executor.execute(index, executed, k=k, model=model,
+                                  date_start=ds, date_end=de,
+                                  prior=prior, prior_lam=prior_lam,
+                                  rm3_alpha=rm3_alpha,
+                                  fuzzy_max_dist=fuzzy_max_dist,
+                                  after=after,
+                                  min_should_match=min_should_match,
+                                  synonyms=(synonyms if use_synonyms
+                                            else None),
+                                  synonym_weight=synonym_weight,
+                                  recency=(doc_dates
+                                           if recency_hl is not None
+                                           else None),
+                                  recency_as_of=recency_as_of,
+                                  recency_half_life=recency_hl or 30.0)
+            hits = [(r.doc_id, r.score) for r in df.collect()]
         snips: dict[int, str] = {}
         if want_snippets and hits:
             if index.documents is None:
@@ -543,12 +644,11 @@ def create_server(index, port: int = 0, spellchecker=None,
             from search_engine_spark.operators import search as _S
 
             terms = _re.findall(r"[a-z0-9]+", executed.lower())
-            with lock:
-                sdf = index.documents.sparkSession.createDataFrame(
-                    [(int(d), float(s)) for d, s in hits],
-                    "doc_id long, score double")
-                snips = {r["doc_id"]: r["snippet"] for r in
-                         _S.snippets(sdf, index.documents, terms).collect()}
+            sdf = index.documents.sparkSession.createDataFrame(
+                [(int(d), float(s)) for d, s in hits],
+                "doc_id long, score double")
+            snips = {r["doc_id"]: r["snippet"] for r in
+                     _S.snippets(sdf, index.documents, terms).collect()}
         truncated = kstats.get("truncated_terms", [])
         return hits, (snips if want_snippets else None), {
             "number_of_results": len(hits),
@@ -582,9 +682,8 @@ def create_server(index, port: int = 0, spellchecker=None,
             return None
         from pyspark.sql import functions as F
 
-        with lock:
-            rows = index.documents.filter(
-                F.col("doc_id") == doc_id).limit(1).collect()
+        rows = index.documents.filter(
+            F.col("doc_id") == doc_id).limit(1).collect()
         if not rows:
             return None
         return {k: (v.isoformat() if hasattr(v, "isoformat") else v)
@@ -655,11 +754,10 @@ def create_server(index, port: int = 0, spellchecker=None,
             cols = [c for c in ("doc_id", "url", "source", "warc_ts",
                                 "warc_date", "title")
                     if c in index.documents.columns]
-            with lock:
-                for r in (index.documents
-                          .filter(_F.col("doc_id").isin(ids))
-                          .select(*cols).limit(len(ids)).collect()):
-                    meta[r["doc_id"]] = r.asDict()
+            for r in (index.documents
+                      .filter(_F.col("doc_id").isin(ids))
+                      .select(*cols).limit(len(ids)).collect()):
+                meta[r["doc_id"]] = r.asDict()
         from urllib.parse import urlparse as _urlparse
 
         for rank, (d, s) in enumerate(hits, 1):
@@ -691,9 +789,7 @@ def create_server(index, port: int = 0, spellchecker=None,
         parts.append("</body></html>")
         return "".join(parts)
 
-    class Handler(BaseHTTPRequestHandler):
-        timeout = HANDLER_TIMEOUT_S
-
+    class Handler(InMemoryIO, BaseHTTPRequestHandler):
         def log_message(self, fmt, *args):  # quiet server
             pass
 
@@ -729,11 +825,10 @@ def create_server(index, port: int = 0, spellchecker=None,
                     # deletes load a new handle): parquet footers on a
                     # durable index, ONE count job on an in-memory one
                     if "n_terms" not in stats_memo:
-                        with lock:
-                            stats_memo["n_terms"] = (
-                                index.vocabulary_size()
-                                if hasattr(index, "vocabulary_size")
-                                else index.term_stats.count())
+                        stats_memo["n_terms"] = (
+                            index.vocabulary_size()
+                            if hasattr(index, "vocabulary_size")
+                            else index.term_stats.count())
                     body = {
                         "n_docs": index.stats["n_docs"],
                         "total_tokens": int(index.stats["total_len"]),
@@ -742,8 +837,7 @@ def create_server(index, port: int = 0, spellchecker=None,
                         "documents_loaded": index.documents is not None,
                     }
                     if hasattr(index, "mini_counters"):
-                        with lock:
-                            body["mini_index"] = dict(index.mini_counters)
+                        body["mini_index"] = dict(index.mini_counters)
                     self._json(200, body)
                 elif parts[0] == "results":
                     q = parse_qs(u.query)
@@ -802,9 +896,8 @@ def create_server(index, port: int = 0, spellchecker=None,
                             f"k must be in [1, {MAX_COMPLETIONS}], got {kk}")
                     from search_engine_spark.operators import serp
 
-                    with lock:
-                        rows = serp.autocomplete(
-                            index.term_stats, prefix, k=kk).collect()
+                    rows = serp.autocomplete(
+                        index.term_stats, prefix, k=kk).collect()
                     self._json(200, {
                         "prefix": prefix,
                         "completions": [{"term": r["term"], "cf": int(r["cf"])}
@@ -832,10 +925,9 @@ def create_server(index, port: int = 0, spellchecker=None,
                         search as _search)
 
                     t0 = time.perf_counter()
-                    with lock:
-                        rows = _search.more_like_this(
-                            index, int(parts[1]), k=kk,
-                            max_query_terms=n_terms).collect()
+                    rows = _search.more_like_this(
+                        index, int(parts[1]), k=kk,
+                        max_query_terms=n_terms).collect()
                     self._json(200, {
                         "doc_id": int(parts[1]),
                         "results": [
@@ -889,10 +981,9 @@ def create_server(index, port: int = 0, spellchecker=None,
                         if not qvec:
                             raise ValueError("vec= must carry floats")
                     elif "vec_id" in q:
-                        with lock:
-                            rows = embeddings.filter(
-                                _F.col("vec_id") == int(q["vec_id"][0])
-                            ).limit(1).collect()
+                        rows = embeddings.filter(
+                            _F.col("vec_id") == int(q["vec_id"][0])
+                        ).limit(1).collect()
                         if not rows:
                             self._json(404, {
                                 "error": "vec_id not in the embedding "
@@ -904,10 +995,9 @@ def create_server(index, port: int = 0, spellchecker=None,
                             "hybrid needs vec= (inline floats) or "
                             "vec_id= (lookup)")
                     t0 = time.perf_counter()
-                    with lock:
-                        rows = fusion.search_hybrid(
-                            index, embeddings, kind.terms, qvec,
-                            k=kk, depth=depth).collect()
+                    rows = fusion.search_hybrid(
+                        index, embeddings, kind.terms, qvec,
+                        k=kk, depth=depth).collect()
                     self._json(200, {
                         "query": query,
                         "results": [
@@ -971,10 +1061,9 @@ def create_server(index, port: int = 0, spellchecker=None,
                                 "vec_id lookup requires --embeddings")
                         from pyspark.sql import functions as _F
 
-                        with lock:
-                            rows = embeddings.filter(
-                                _F.col("vec_id") == int(q["vec_id"][0])
-                            ).limit(1).collect()
+                        rows = embeddings.filter(
+                            _F.col("vec_id") == int(q["vec_id"][0])
+                        ).limit(1).collect()
                         if not rows:
                             self._json(404, {
                                 "error": "vec_id not in the embedding "
@@ -986,10 +1075,9 @@ def create_server(index, port: int = 0, spellchecker=None,
                             "ann needs vec= (inline floats) or "
                             "vec_id= (lookup)")
                     t0 = time.perf_counter()
-                    with lock:
-                        rows = index.ann_topk(
-                            qvec, k=kk, nprobe=nprobe, refine=refine,
-                            embeddings=embeddings).collect()
+                    rows = index.ann_topk(
+                        qvec, k=kk, nprobe=nprobe, refine=refine,
+                        embeddings=embeddings).collect()
                     self._json(200, {
                         "results": [
                             {"rank": i, "vec_id": int(r.vec_id),
@@ -1011,10 +1099,9 @@ def create_server(index, port: int = 0, spellchecker=None,
                     from search_engine_spark.plans.explain import (
                         explain_plan)
 
-                    with lock:
-                        self._json(200, explain_plan(
-                            index, query,
-                            model=q.get("model", ["bm25"])[0]))
+                    self._json(200, explain_plan(
+                        index, query,
+                        model=q.get("model", ["bm25"])[0]))
                 elif parts[0] == "explain":
                     # Lucene-Explanation analog: per-term score breakdown
                     # for one (query, doc) pair — GET /explain?query=&doc=
@@ -1046,9 +1133,8 @@ def create_server(index, port: int = 0, spellchecker=None,
                             "per-term sums")
                     toks = kind.terms
                     t0 = time.perf_counter()
-                    with lock:
-                        rows = _search.explain_scores(
-                            index, toks, int(doc_s), model=model).collect()
+                    rows = _search.explain_scores(
+                        index, toks, int(doc_s), model=model).collect()
                     self._json(200, {
                         "query": query, "doc_id": int(doc_s),
                         "model": model,
@@ -1095,7 +1181,7 @@ def create_server(index, port: int = 0, spellchecker=None,
                 "<p><a href='/web'>Back to search</a></p>"
                 "</body></html>"))
 
-    return PooledHTTPServer(("127.0.0.1", port), Handler)
+    return LoopHTTPServer(("127.0.0.1", port), Handler)
 
 
 def main() -> None:

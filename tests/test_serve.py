@@ -991,18 +991,14 @@ def test_results_body_is_json_dumps(server, path):
     assert ("zzzqq" in path) == (hits == [])
 
 
-def test_handler_pool_starts_no_thread_per_request(served):
+def test_requests_start_no_thread(served):
     """200 requests over 4 concurrent clients, with a short switch
-    interval, run on the fixed handler pool: every one answers with the
-    same page, and no thread appears besides the clients."""
+    interval, all run on the server's loop thread: every one answers
+    with the same page, and no thread appears besides the clients."""
     import sys
     import time
 
-    from jobs.serve import HANDLER_THREADS
-
     base, srv = served
-    assert len(srv.workers) == HANDLER_THREADS
-    assert all(t.is_alive() for t in srv.workers)
     url = base + "/results?query=market&k=5"
     want = [h["doc_id"] for h in _get(url)[1]["results"]]
     known = set(threading.enumerate())
@@ -1041,39 +1037,126 @@ def test_handler_pool_starts_no_thread_per_request(served):
     assert threading.active_count() <= len(known)
 
 
-def test_idle_connections_time_out_of_the_pool(served, monkeypatch):
-    """As many idle sockets as handler threads cannot starve the pool:
-    each is dropped after the handler timeout, then /results answers."""
+def test_idle_connections_do_not_stall_the_loop(served, monkeypatch):
+    """Eight idle sockets cost the loop nothing: /results answers at
+    once, well under the connection deadline, and each idle socket is
+    closed (reads EOF) once the deadline passes."""
     import socket
     import time
 
-    from jobs.serve import HANDLER_THREADS
+    import jobs.serve
 
     base, srv = served
-    monkeypatch.setattr(srv.RequestHandlerClass, "timeout", 0.5)
+    _get(base + "/results?query=market&k=3")  # warm the terms
+    monkeypatch.setattr(jobs.serve, "HANDLER_TIMEOUT_S", 2.0)
+    t0 = time.perf_counter()
     idle = [socket.create_connection(srv.server_address, timeout=30)
-            for _ in range(HANDLER_THREADS)]
+            for _ in range(8)]
     try:
-        t0 = time.perf_counter()
         status, body = _get(base + "/results?query=market&k=3")
         assert status == 200 and body["number_of_results"] == 3
-        # the request waited for a handler to drop its idle socket
-        assert time.perf_counter() - t0 >= 0.4
+        assert time.perf_counter() - t0 < 1.0
         for s in idle:
             assert s.recv(1) == b""  # the server closed it
+        assert time.perf_counter() - t0 >= 1.9
     finally:
         for s in idle:
             s.close()
 
 
-def test_server_close_joins_handler_threads():
-    """server_close() stops and joins every handler thread, also when
-    the bind fails inside the constructor."""
+def test_half_sent_head_is_dropped(served, monkeypatch):
+    """A connection that has not finished its request head by the
+    deadline is closed without an answer; the loop keeps serving."""
+    import socket
+    import time
+
+    import jobs.serve
+
+    base, srv = served
+    monkeypatch.setattr(jobs.serve, "HANDLER_TIMEOUT_S", 0.5)
+    with socket.create_connection(srv.server_address, timeout=30) as s:
+        t0 = time.perf_counter()
+        s.sendall(b"GET /results?query=market HTTP/1.0\r\nHost: x\r\n")
+        assert s.recv(1) == b""
+        assert time.perf_counter() - t0 >= 0.4
+    assert _get(base + "/")[0] == 200
+
+
+def test_oversized_head_gets_431(served):
+    """A request head over MAX_HEAD_BYTES is answered 431 and closed,
+    without waiting for its blank line."""
+    import socket
+
+    from jobs.serve import MAX_HEAD_BYTES
+
+    base, srv = served
+    with socket.create_connection(srv.server_address, timeout=30) as s:
+        s.sendall(b"GET / HTTP/1.0\r\nX-Pad: "
+                  + b"a" * MAX_HEAD_BYTES + b"\r\n")
+        reply = b""
+        while chunk := s.recv(4096):
+            reply += chunk
+    assert reply.startswith(b"HTTP/1.0 431 ")
+    head, body = reply.split(b"\r\n\r\n", 1)
+    assert json.loads(body) == {"error": "request head too large"}
+    assert int(head.split(b"Content-Length: ")[1].split(b"\r")[0]) \
+        == len(body)
+    assert _get(base + "/")[0] == 200
+
+
+def test_requests_queue_behind_a_slow_inline_request(served, monkeypatch):
+    """While a slow relational request runs on the loop, 16 concurrent
+    /results requests wait in the listen backlog: all answer 200 after
+    it, and none is refused."""
+    import time
+
+    from search_engine_spark.operators import executor
+
+    base, srv = served
+    real = executor.execute
+    started, ended = threading.Event(), []
+
+    def slow(*args, **kwargs):
+        started.set()
+        time.sleep(1.0)
+        ended.append(time.perf_counter())
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(executor, "execute", slow)
+    out: dict = {}
+
+    def get(name, path):
+        try:
+            status = _get(base + path)[0]
+        except OSError as e:  # refused or reset: no HTTP answer
+            status = repr(e)
+        out[name] = (status, time.perf_counter())
+
+    first = threading.Thread(target=get, args=(
+        "slow", "/results?query=market&k=3&kernel=relational"))
+    first.start()
+    assert started.wait(timeout=120)
+    fast = [threading.Thread(target=get, args=(
+        i, "/results?query=market&k=3")) for i in range(16)]
+    for t in fast:
+        t.start()
+    for t in [first] + fast:
+        t.join(timeout=120)
+    assert out["slow"][0] == 200
+    assert [out[i][0] for i in range(16)] == [200] * 16
+    assert min(out[i][1] for i in range(16)) > ended[0]
+
+
+def test_shutdown_and_close_release_every_socket():
+    """shutdown() then server_close() closes the listener and every open
+    connection, and a failed bind leaves no thread and no socket behind."""
+    import os
+    import socket
     from http.server import BaseHTTPRequestHandler
 
-    from jobs.serve import PooledHTTPServer
+    from jobs.serve import InMemoryIO, LoopHTTPServer
 
-    class Hello(BaseHTTPRequestHandler):
+    class Hello(InMemoryIO, BaseHTTPRequestHandler):
         def log_message(self, fmt, *args):
             pass
 
@@ -1083,18 +1166,29 @@ def test_server_close_joins_handler_threads():
             self.end_headers()
             self.wfile.write(b"ok")
 
-    srv = PooledHTTPServer(("127.0.0.1", 0), Hello)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    def fds() -> int:
+        return len(os.listdir("/proc/self/fd"))
+
+    srv = LoopHTTPServer(("127.0.0.1", 0), Hello)
+    loop = threading.Thread(target=srv.serve_forever, daemon=True)
+    loop.start()
+    idle = [socket.create_connection(srv.server_address, timeout=30)
+            for _ in range(3)]
     with urllib.request.urlopen(
             f"http://127.0.0.1:{srv.server_address[1]}/", timeout=30) as r:
-        assert r.read() == b"ok"
-    before = threading.active_count()
+        assert r.read() == b"ok"  # the idle sockets were accepted first
+    threads, open_fds = threading.active_count(), fds()
     with pytest.raises(OSError):
-        PooledHTTPServer(srv.server_address, Hello)  # port in use
-    assert threading.active_count() == before
+        LoopHTTPServer(srv.server_address, Hello)  # port in use
+    assert threading.active_count() == threads
+    assert fds() == open_fds
     srv.shutdown()
-    closer = threading.Thread(target=srv.server_close)
-    closer.start()
-    closer.join(timeout=30)
-    assert not closer.is_alive()
-    assert not any(t.is_alive() for t in srv.workers)
+    loop.join(timeout=30)
+    assert not loop.is_alive()
+    for s in idle:
+        assert s.recv(1) == b""  # closed by the loop as it exited
+        s.close()
+    srv.server_close()
+    assert srv.socket.fileno() == -1
+    with pytest.raises(ConnectionRefusedError):
+        socket.create_connection(srv.server_address, timeout=30)
