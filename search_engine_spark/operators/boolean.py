@@ -16,7 +16,6 @@ pin doc_id ascending (SURVEY §2.8 pin 3 family).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..plans.planner import BooleanPlan
 from .phrase import phrase_occurrences
@@ -67,10 +66,3 @@ def boolean_docs(index: InvertedIndex, plan: BooleanPlan,
     for op, nxt in zip(operators, clauses[1:]):
         acc = _apply(acc, op, nxt)
     return acc
-
-
-def search_boolean(index: InvertedIndex, plan: BooleanPlan,
-                   cut: int = BOOLEAN_RESULT_CUT) -> DataFrame:
-    """Boolean top-N by doc_id asc (pinned order for the reference's
-    insertion-order slice)."""
-    return boolean_docs(index, plan).orderBy("doc_id").limit(cut)

@@ -11,8 +11,7 @@ for the DuckDB oracle:
                     window fn; the name is historical — windows do not
                     overlap)
 * sessionize      — gap-based sessions: lag + cumulative-sum-of-breaks
-                    (the batch formulation of session windows; the
-                    streaming formulation lives in streaming/incremental)
+                    (the batch formulation of session windows)
 * session_cooccurrence — within-session type co-occurrence with lift
                     (the "related searches" / market-basket shape)
 * user_stats      — per-user aggregates incl. exact value percentiles

@@ -99,24 +99,3 @@ def percolate(docs: DataFrame, stored: DataFrame,
     else:
         out = agg.filter(F.col("n_matched") >= F.lit(int(mm)))
     return out.select("doc_id", "query_id", "n_matched")
-
-
-def percolate_stream(docs_stream: DataFrame, stored: DataFrame,
-                     out_path: str, checkpoint: str,
-                     conf: AnalyzerConfig = AnalyzerConfig.full(),
-                     mm: int | None = None,
-                     text_col: str = "text"):
-    """Streaming percolation: every micro-batch of crawled docs is
-    matched against the stored queries and appended as parquet — the
-    standing-alert pipeline. foreachBatch reuses the BATCH operator
-    verbatim (one code path to gate), the same pattern as
-    streaming/incremental.py's index absorb; exactly-once via the
-    checkpoint. Returns the StreamingQuery handle."""
-    def absorb(batch_df: DataFrame, batch_id: int) -> None:
-        (percolate(batch_df, stored, conf, mm=mm, text_col=text_col)
-         .withColumn("batch_id", F.lit(int(batch_id)))
-         .write.mode("append").parquet(out_path))
-
-    return (docs_stream.writeStream.foreachBatch(absorb)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True).start())

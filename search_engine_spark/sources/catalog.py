@@ -395,86 +395,6 @@ def build_durable_index(
     return index_dir
 
 
-def compact_streaming_index(
-    spark: SparkSession,
-    stream_dir: str,
-    out_dir: str,
-    conf: AnalyzerConfig = AnalyzerConfig.full(),
-    block_span: int = SEG.DEFAULT_BLOCK_SPAN,
-    shards: int = 1,
-) -> str:
-    """Re-encode a streaming index's (batch, bucket)-staged postings into
-    the durable segment layout — the job that completes the streaming
-    growth story: ``streaming.incremental_index_build`` absorbs new files
-    continuously into staging tables that serve queries directly, and a
-    periodic compaction turns the accumulated batches into block-encoded,
-    kernel-servable segments (this exact ``build_durable_index`` format).
-
-    A pure LAYOUT transform: no re-tokenization, no re-hashing — term
-    buckets are reused from the staged partition values (the absorb step
-    hashed with the same pmod(xxhash64(term))), the batch dimension is
-    dropped by the range-repartition, and doc_stats comes from the staged
-    per-batch doc_stats (dl=0 rows included). Everything downstream
-    (term_stats, stats, per-shard block encode, vsm_norms) runs through
-    build_durable_index's own resumable manifest steps, so a killed
-    compaction resumes like a killed build. ``conf`` must be the
-    analyzer the ingest used (validated against stream_meta.json).
-    """
-    meta_path = os.path.join(stream_dir, "manifest", "stream_meta.json")
-    if not os.path.exists(meta_path):
-        raise ValueError(f"{stream_dir} is not a streaming index "
-                         "(no manifest/stream_meta.json)")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    buckets = meta.get("buckets")
-    if buckets is None:
-        raise ValueError(
-            f"{stream_dir} predates bucket-recording ingest metadata; "
-            "re-run the ingest (same checkpoint) to refresh stream_meta")
-    want = {"lowercase": conf.lowercase,
-            "remove_stopwords": conf.remove_stopwords, "stem": conf.stem}
-    if meta.get("analyzer") != want:
-        raise ValueError(
-            f"compaction analyzer {want} != ingest analyzer "
-            f"{meta.get('analyzer')} — stats.json would misdeclare the "
-            "tokens' provenance")
-    if os.path.abspath(out_dir) == os.path.abspath(stream_dir):
-        raise ValueError("compact into a NEW dir: the streaming dir's "
-                         "(batch, bucket) layout cannot hold the durable "
-                         "bucket-only layout (conflicting partition depth)")
-
-    os.makedirs(os.path.join(out_dir, "manifest"), exist_ok=True)
-    stage_out = os.path.join(out_dir, "postings_stage")
-    if not _done(out_dir, "postings_stage"):
-        t0 = time.perf_counter()
-        staged = spark.read.parquet(os.path.join(stream_dir, "postings_stage"))
-        cols = [c for c in staged.columns if c != "batch"]
-        range_layout(staged.select(*cols), "bucket", "term", "doc_id") \
-            .write.mode("overwrite").options(**TERM_BLOOM) \
-            .partitionBy("bucket").parquet(stage_out)
-        _record(out_dir, "postings_stage", source=os.path.abspath(stream_dir),
-                duration_sec=round(time.perf_counter() - t0, 3))
-    if not _done(out_dir, "doc_stats"):
-        t0 = time.perf_counter()
-        ds = spark.read.parquet(os.path.join(stream_dir, "doc_stats"))
-        ds.select("doc_id", "dl").distinct().write.mode("overwrite") \
-            .parquet(os.path.join(out_dir, "doc_stats"))
-        _record(out_dir, "doc_stats",
-                duration_sec=round(time.perf_counter() - t0, 3))
-    # the staged inputs carry everything build_durable_index's remaining
-    # steps need; its docs argument is only read on the (skipped)
-    # doc_stats-derivation path
-    build_durable_index(
-        spark, docs=None, index_dir=out_dir, conf=conf, buckets=buckets,
-        block_span=block_span, shards=shards, positional=True, resume=True,
-    )
-    n_batches = len([m for m in os.listdir(os.path.join(stream_dir, "manifest"))
-                     if m.startswith("stream_batch_")])
-    _record(out_dir, "compacted_from", stream_dir=os.path.abspath(stream_dir),
-            stream_batches=n_batches)
-    return out_dir
-
-
 def lineage_rows(index_dir: str) -> list[dict]:
     mdir = os.path.join(index_dir, "manifest")
     out = []

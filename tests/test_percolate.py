@@ -1,9 +1,7 @@
 """Percolator (reverse search): stored queries matched against
-incoming docs — conjunctive coverage counting over one broadcast join,
-with the streaming form reusing the batch operator per micro-batch."""
+incoming docs — conjunctive coverage counting over one broadcast join."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from search_engine_spark.functions.analyzer import AnalyzerConfig
 from search_engine_spark.operators import percolate as PC
@@ -70,26 +68,3 @@ def test_plan_broadcasts_stored_queries(spark, pdocs):
         ._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_streaming_percolation_equals_batch(spark, pdocs, tmp_path):
-    st = PC.register_queries(
-        spark, [(1, "join hash"), (2, "scan")], conf=SIMPLE)
-    src = str(tmp_path / "src")
-    pdocs.repartition(2).write.parquet(src)
-    stream = spark.readStream.schema(pdocs.schema).parquet(src)
-    out = str(tmp_path / "matches")
-    q = PC.percolate_stream(stream, st, out, str(tmp_path / "ckpt"),
-                            conf=SIMPLE)
-    q.awaitTermination(120)
-    got = {(r.doc_id, r.query_id)
-           for r in spark.read.parquet(out).collect()}
-    want = {(r.doc_id, r.query_id)
-            for r in PC.percolate(pdocs, st, conf=SIMPLE).collect()}
-    assert got == want
-    # replay with the same checkpoint is exactly-once (no new rows)
-    stream2 = spark.readStream.schema(pdocs.schema).parquet(src)
-    q2 = PC.percolate_stream(stream2, st, out, str(tmp_path / "ckpt"),
-                             conf=SIMPLE)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == len(want)

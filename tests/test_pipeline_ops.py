@@ -1,4 +1,4 @@
-"""Dedup / similarity / text-quality / multimodal / events operators —
+"""Dedup / similarity / text-quality / events operators —
 exact paths checked against plain-Python ground truth on the driver
 testdata; probabilistic paths checked for recall against the exact ones."""
 
@@ -8,8 +8,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from search_engine_spark.operators import (dedup, events, multimodal,
-                                           similarity, textquality)
+from search_engine_spark.operators import (dedup, events, similarity,
+                                           textquality)
 
 SF = "/root/testdata/sf0.001"
 
@@ -220,20 +220,6 @@ def test_language_id(spark):
     assert got == {1: "en", 2: "de", 3: "fr", 4: "es"}
 
 
-def test_multimodal_plumbing(spark):
-    media = multimodal.synthesize_media(spark, 30)
-    feats = multimodal.extract_features(media, multimodal.fake_image_decoder)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(len(r.feature) == 8 and r.n_bytes > 0 for r in rows)
-    # real decoder is stubbed: surfaces NotImplementedError through Spark
-    with pytest.raises(Exception, match="NotImplementedError|media decode"):
-        multimodal.extract_features(media).collect()
-    plan = multimodal.frame_sample_plan(media, every_ms=250)
-    vids = media.filter("kind = 'video'").count()
-    assert plan.count() == vids * 4
-
-
 def test_events_sessionize(spark):
     ev = spark.read.parquet(f"{SF}/events.parquet")
     sess = events.sessionize(ev, gap_minutes=30)
@@ -418,259 +404,6 @@ def test_embedding_near_dups_band_join_ships_ids_only(spark, emb):
     for b in gen_blocks:
         assert "embedding" not in b, (
             "band explode carries the vector column:\n" + b)
-
-
-def test_multimodal_resize(spark):
-    import numpy as np
-
-    media = multimodal.synthesize_media(spark, 30)
-
-    def raster_decoder(payload, kind):
-        arr = np.frombuffer(payload, dtype=np.uint8)
-        side = max(int(len(arr) ** 0.5), 1)
-        return np.resize(arr, (side, side))
-
-    out = multimodal.resize_images(media, 16, 16,
-                                   decoder=raster_decoder).collect()
-    n_images = media.filter("kind = 'image'").count()
-    assert len(out) == n_images
-    for r in out:
-        assert (r.width, r.height) == (16, 16)
-        assert len(bytes(r.payload)) == 16 * 16  # uint8 raster re-encode
-
-
-def test_bmp_codec_roundtrip():
-    rng = np.random.default_rng(5)
-    img = rng.integers(0, 256, size=(13, 17, 3), dtype=np.uint8)  # odd dims → row padding
-    assert np.array_equal(multimodal.bmp_decode(multimodal.bmp_encode(img)), img)
-    gray = rng.integers(0, 256, size=(8, 8), dtype=np.uint8)
-    assert np.array_equal(
-        multimodal.bmp_decode(multimodal.bmp_encode(gray)),
-        np.repeat(gray[:, :, None], 3, axis=2))
-
-
-def test_png_codec_roundtrip_every_filter():
-    """Round-trip 8-bit gray / gray+alpha / RGB / RGBA through EVERY PNG
-    filter type (0=None 1=Sub 2=Up 3=Average 4=Paeth) — each encoder
-    filter exercises the matching decoder unfilter branch."""
-    rng = np.random.default_rng(7)
-    shapes = [(11, 13), (9, 7, 2), (13, 17, 3), (6, 5, 4)]
-    for shape in shapes:
-        img = rng.integers(0, 256, size=shape, dtype=np.uint8)
-        for ft in range(5):
-            got = multimodal.png_decode(multimodal.png_encode(img, ft))
-            assert np.array_equal(got, img), (shape, ft)
-
-
-def test_png_decode_rejects_unsupported():
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="not a PNG"):
-        multimodal.png_decode(b"JFIF not a png")
-    # palette (color type 3) PNG header → declared NotImplementedError
-    import struct
-    import zlib
-
-    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0)
-    payload = (multimodal._PNG_SIG
-               + multimodal._png_chunk(b"IHDR", ihdr)
-               + multimodal._png_chunk(b"IDAT", zlib.compress(b"\x00\x00\x00"))
-               + multimodal._png_chunk(b"IEND", b""))
-    with _pt.raises(NotImplementedError, match="color=3"):
-        multimodal.png_decode(payload)
-
-
-def test_image_decode_magic_dispatch():
-    """image_decode routes BMP/PNG/JPEG payloads to the real codecs
-    (JPEG is lossy: decode(encode(x)) is shape-preserving, not
-    byte-exact) and keeps unknown formats on the declared stub; a
-    JPEG-magic payload with corrupt structure fails loudly in the
-    codec, never silently."""
-    import pytest as _pt
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, size=(5, 4, 3), dtype=np.uint8)
-    assert np.array_equal(
-        multimodal.image_decode(multimodal.png_encode(img)), img)
-    assert np.array_equal(
-        multimodal.image_decode(multimodal.bmp_encode(img)), img)
-    from search_engine_spark.operators import jpegcodec as _J
-    assert multimodal.image_decode(_J.jpeg_encode(img, 90)).shape == img.shape
-    with _pt.raises(ValueError):  # JPEG magic but truncated/garbage body
-        multimodal.image_decode(b"\xff\xd8\xff\xe0 jpeg soi marker")
-    with _pt.raises(NotImplementedError):  # genuinely unknown format
-        multimodal.image_decode(b"GIF89a not a supported codec")
-
-
-def test_jpeg_codec_anchors():
-    """Baseline JPEG codec (operators/jpegcodec.py) against the
-    standard's own math: a flat image is a single quantized DC
-    coefficient and round-trips EXACTLY; q=100 (all-ones tables) bounds
-    the round-trip error at DCT-rounding level (±2 LSB); a pure
-    cosine-basis block concentrates its DCT energy on the matching
-    coefficient — an external anchor, not codec self-consistency."""
-    from search_engine_spark.operators import jpegcodec as J
-
-    flat = np.full((16, 24), 130, np.uint8)
-    assert np.array_equal(J.jpeg_decode(J.jpeg_encode(flat, 100)), flat)
-
-    rng = np.random.default_rng(0)
-    img = rng.integers(0, 256, (24, 32), np.uint8)
-    out = J.jpeg_decode(J.jpeg_encode(img, quality=100))
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 2
-
-    rgb = rng.integers(0, 256, (17, 19, 3), np.uint8)  # non-multiple-of-8
-    out = J.jpeg_decode(J.jpeg_encode(rgb, quality=100))
-    assert out.shape == rgb.shape
-    assert np.abs(out.astype(int) - rgb.astype(int)).max() <= 3
-
-    n = np.arange(8)
-    basis = np.outer(np.cos((2 * n + 1) * 2 * np.pi / 16),
-                     np.cos((2 * n + 1) * 1 * np.pi / 16))
-    blk = np.clip(np.round(128 + 60 * basis), 0, 255).astype(np.uint8)
-    coef = J._C @ (blk.astype(float) - 128.0) @ J._C.T
-    idx = np.unravel_index(np.argmax(np.abs(coef)), coef.shape)
-    assert idx == (2, 1)
-    assert np.abs(coef[idx]) / np.abs(coef).sum() > 0.9
-
-
-def test_jpeg_subsampling_and_restarts():
-    """4:2:0 keeps smooth images close (chroma is 2x2-averaged, luma
-    near-exact) and restart markers decode to the same pixels as the
-    unsegmented stream (DRI/RSTn handling, DC predictor resets)."""
-    from search_engine_spark.operators import jpegcodec as J
-
-    yy, xx = np.mgrid[0:32, 0:32]
-    smooth = np.stack([(yy * 3 + 20) % 256, (xx * 2 + 50) % 256,
-                       ((yy + xx) * 2) % 256], axis=2).astype(np.uint8)
-    out = J.jpeg_decode(J.jpeg_encode(smooth, quality=90, subsample=True))
-    assert out.shape == smooth.shape
-    assert np.abs(out.astype(int) - smooth.astype(int)).mean() < 3.0
-
-    rng = np.random.default_rng(1)
-    img = rng.integers(0, 256, (24, 40), np.uint8)
-    with_rst = J.jpeg_decode(J.jpeg_encode(img, 100, restart_interval=2))
-    without = J.jpeg_decode(J.jpeg_encode(img, 100))
-    assert np.array_equal(with_rst, without)
-
-    # lossy quality still decodes to something structurally close
-    q50 = J.jpeg_decode(J.jpeg_encode(smooth, quality=50))
-    assert np.abs(q50.astype(int) - smooth.astype(int)).mean() < 10.0
-
-
-def test_jpeg_rejects_non_baseline():
-    import struct
-
-    import pytest as _pt
-
-    from search_engine_spark.operators import jpegcodec as J
-
-    with _pt.raises(ValueError, match="not a JPEG"):
-        J.jpeg_decode(b"\x89PNG not jpeg")
-    # progressive SOF2 header → declared NotImplementedError
-    prog = (b"\xff\xd8\xff\xc2" + struct.pack(">H", 11)
-            + struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0]))
-    with _pt.raises(NotImplementedError, match="SOF marker 0xC2"):
-        J.jpeg_decode(prog)
-
-
-def test_multimodal_resize_real_jpeg_raster(spark):
-    """End-to-end resize over ACTUAL JPEG payloads through the Spark
-    mapInPandas path via the image_decode magic dispatch; JPEG is lossy
-    so the gate is closeness of the resampled raster, not equality."""
-    import pandas as pd
-
-    from search_engine_spark.operators import jpegcodec as J
-
-    rng = np.random.default_rng(23)
-    base = rng.integers(0, 200, (6, 9, 3))
-    # smooth 24x36 gradient images (block-upsampled noise)
-    imgs = {i: np.repeat(np.repeat(base + i * 5, 4, axis=0), 4, axis=1)
-            .astype(np.uint8) for i in range(3)}
-    pdf = pd.DataFrame([{
-        "media_id": i, "kind": "image", "mime": "image/jpeg",
-        "payload": J.jpeg_encode(imgs[i], quality=95),
-        "width": 36, "height": 24, "duration_ms": 0,
-    } for i in imgs])
-    media = spark.createDataFrame(pdf, multimodal.MEDIA_SCHEMA)
-    out = multimodal.resize_images(
-        media, 12, 8, decoder=multimodal.image_decode,
-        encoder=lambda a: J.jpeg_encode(a, quality=100)).collect()
-    assert len(out) == 3
-    for r in out:
-        src = imgs[r.media_id]
-        got = J.jpeg_decode(bytes(r.payload))
-        ys = np.arange(8) * 24 // 8
-        xs = np.arange(12) * 36 // 12
-        want = src[np.ix_(ys, xs)]
-        assert got.shape == want.shape
-        assert np.abs(got.astype(int) - want.astype(int)).mean() < 6.0
-
-
-def test_multimodal_resize_real_png_raster(spark):
-    """End-to-end resize over ACTUAL PNG payloads through the Spark
-    mapInPandas path, mirroring the BMP raster test: decode (zlib
-    inflate + unfilter) → nearest-neighbor resample → re-encode."""
-    import pandas as pd
-
-    rng = np.random.default_rng(19)
-    imgs = {i: rng.integers(0, 256, size=(24, 36, 3), dtype=np.uint8)
-            for i in range(4)}
-    pdf = pd.DataFrame([{
-        "media_id": i, "kind": "image", "mime": "image/png",
-        "payload": multimodal.png_encode(imgs[i], filter_type=4),
-        "width": 36, "height": 24, "duration_ms": 0,
-    } for i in imgs])
-    media = spark.createDataFrame(pdf, multimodal.MEDIA_SCHEMA)
-    out = multimodal.resize_images(media, 12, 8,
-                                   decoder=multimodal.image_decode,
-                                   encoder=multimodal.png_encode).collect()
-    assert len(out) == 4
-    for r in out:
-        src = imgs[r.media_id]
-        got = multimodal.png_decode(bytes(r.payload))
-        ys = np.arange(8) * 24 // 8
-        xs = np.arange(12) * 36 // 12
-        assert np.array_equal(got, src[np.ix_(ys, xs)])
-        assert (r.width, r.height) == (12, 8)
-
-
-def test_multimodal_resize_real_bmp_raster(spark):
-    """End-to-end resize over an ACTUAL encoded raster (pure-numpy BMP
-    codec, no external image libs): decode → nearest-neighbor resample →
-    re-encode, through the Spark mapInPandas path."""
-    import pandas as pd
-
-    rng = np.random.default_rng(11)
-    imgs = {i: rng.integers(0, 256, size=(24, 36, 3), dtype=np.uint8)
-            for i in range(4)}
-    pdf = pd.DataFrame([{
-        "media_id": i, "kind": "image", "mime": "image/bmp",
-        "payload": multimodal.bmp_encode(imgs[i]),
-        "width": 36, "height": 24, "duration_ms": 0,
-    } for i in imgs])
-    media = spark.createDataFrame(pdf, multimodal.MEDIA_SCHEMA)
-    out = multimodal.resize_images(media, 12, 8,
-                                   decoder=multimodal.bmp_decode,
-                                   encoder=multimodal.bmp_encode).collect()
-    assert len(out) == 4
-    for r in out:
-        src = imgs[r.media_id]
-        got = multimodal.bmp_decode(bytes(r.payload))
-        ys = np.arange(8) * 24 // 8
-        xs = np.arange(12) * 36 // 12
-        assert np.array_equal(got, src[np.ix_(ys, xs)])
-        assert (r.width, r.height) == (12, 8)
-
-
-def test_multimodal_resize_stub_surface(spark):
-    import pytest as _pt
-
-    media = multimodal.synthesize_media(spark, 6)
-    with _pt.raises(Exception) as e:
-        multimodal.resize_images(media, 8, 8).collect()
-    assert "NotImplementedError" in str(e.value) or \
-        isinstance(e.value, NotImplementedError)
 
 
 def test_simhash_band_guarantee_adversarial(spark):
@@ -1012,78 +745,6 @@ def test_pq_adc_scan_is_jvm_only(spark, emb, tmp_path):
     txt = df._jdf.queryExecution().explainString(mode)
     assert "EvalPython" not in txt  # no BatchEvalPython / ArrowEvalPython
     assert "TakeOrderedAndProject" in txt
-
-
-# ---------------------------------------------------------------------------
-# WAV/PCM audio (multimodal.wav_* / audio_features / resample_audio)
-# ---------------------------------------------------------------------------
-
-def test_wav_roundtrip_exact():
-    rng = np.random.default_rng(3)
-    pcm = rng.integers(-32768, 32768, size=(1000, 2)).astype(np.int64)
-    x = pcm / 32768.0
-    decoded, rate = multimodal.wav_decode(multimodal.wav_encode(x, 22050))
-    assert rate == 22050
-    assert decoded.shape == (1000, 2)
-    assert np.array_equal(np.round(decoded * 32768.0).astype(np.int64), pcm)
-
-
-def test_wav_decode_rejects_garbage():
-    with pytest.raises(ValueError):
-        multimodal.wav_decode(b"not a wav at all")
-
-
-def test_audio_features_pure_tone(spark):
-    """440 Hz sine at 16 kHz: zero-crossing rate ≈ 2f, spectral centroid
-    ≈ f (leakage + the faint 2nd harmonic push it slightly up), rms ≈
-    a/√2 — the physics anchors that make the features trustworthy."""
-    sr = 16_000
-    t = np.arange(sr) / sr
-    x = 0.5 * np.sin(2 * np.pi * 440.0 * t)
-    from pyspark.sql import Row
-    media = spark.createDataFrame(
-        [Row(media_id=0, kind="audio", mime="audio/wav",
-             payload=bytearray(multimodal.wav_encode(x, sr)),
-             width=0, height=0, duration_ms=1000)],
-        multimodal.MEDIA_SCHEMA)
-    f = multimodal.audio_features(media).collect()[0]
-    assert f.sample_rate == sr and f.n_samples == sr
-    assert f.zcr_hz / 2 == pytest.approx(440.0, abs=2.0)
-    assert f.spectral_centroid_hz == pytest.approx(440.0, abs=25.0)
-    assert f.rms == pytest.approx(0.5 / np.sqrt(2), abs=1e-3)
-    assert f.peak == pytest.approx(0.5, abs=1e-3)
-
-
-def test_audio_features_over_synthesized_table(spark):
-    media = multimodal.synthesize_audio_media(spark, 16)
-    feats = {r.media_id: r for r in multimodal.audio_features(media).collect()}
-    assert len(feats) == 16
-    for i, r in feats.items():
-        want = 220.0 + 20.0 * i
-        assert r.zcr_hz / 2 == pytest.approx(want, rel=0.02), i
-        assert r.peak <= 0.66
-
-
-def test_resample_audio_preserves_signal(spark):
-    media = multimodal.synthesize_audio_media(spark, 6, sample_rate=16_000)
-    down = multimodal.resample_audio(media, target_hz=8_000)
-    orig = {r.media_id: r for r in media.collect()}
-    feats = {r.media_id: r for r in multimodal.audio_features(down).collect()}
-    for i, r in feats.items():
-        assert r.sample_rate == 8_000
-        # duration preserved within one sample
-        assert r.n_samples == pytest.approx(
-            orig[i].duration_ms * 8, abs=8)
-        # tone survives downsampling (all tones < 4 kHz Nyquist)
-        assert r.zcr_hz / 2 == pytest.approx(220.0 + 20.0 * i, rel=0.03)
-
-
-def test_audio_features_skip_non_audio(spark):
-    media = multimodal.synthesize_media(spark, 30)  # random-byte payloads
-    only_audio = multimodal.synthesize_audio_media(spark, 5)
-    both = media.filter(F.col("kind") != "audio").unionByName(only_audio)
-    out = multimodal.audio_features(both).collect()
-    assert {r.media_id for r in out} == set(range(5))
 
 
 # ---------------------------------------------------------------------------
