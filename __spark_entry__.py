@@ -478,7 +478,7 @@ def q_impact_maxscore_identity(spark: SparkSession,
     tmp = tempfile.mkdtemp(prefix="impact_contract_")
     try:
         d = tmp + "/idx"
-        catalog.build_durable_index(spark, docs, d, conf=SIMPLE, shards=2,
+        catalog.build_durable_index(spark, docs, d, conf=SIMPLE,
                                     buckets=16, block_span=64,
                                     positional=False)
         qdir = catalog.quantize_index(spark, d, tmp + "/impact", bits=8)
@@ -512,7 +512,7 @@ def q_maxscore_bm25_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="ms_contract_")
     try:
         d = tmp + "/idx"
-        catalog.build_durable_index(spark, docs, d, conf=SIMPLE, shards=2,
+        catalog.build_durable_index(spark, docs, d, conf=SIMPLE,
                                     buckets=16, block_span=64,
                                     positional=False)
         idx = catalog.load_index(spark, d)
@@ -723,7 +723,7 @@ def q_maxscore_prior_identity(spark: SparkSession,
     tmp = tempfile.mkdtemp(prefix="prior_contract_")
     try:
         d = tmp + "/idx"
-        catalog.build_durable_index(spark, docs, d, conf=SIMPLE, shards=2,
+        catalog.build_durable_index(spark, docs, d, conf=SIMPLE,
                                     buckets=16, block_span=64,
                                     positional=False)
         idx = catalog.load_index(spark, d)
@@ -755,7 +755,7 @@ def q_vacuum_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         d = tmp + "/idx"
         vac = tmp + "/vacuumed"
-        catalog.build_durable_index(spark, docs, d, conf=SIMPLE, shards=2,
+        catalog.build_durable_index(spark, docs, d, conf=SIMPLE,
                                     buckets=16, block_span=64,
                                     positional=False)
         victims = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")

@@ -222,8 +222,8 @@ def main() -> None:
         prepared = w.select(
             "doc_id", make_extract_text_udf()(F.col("html")).alias("text")
         )
-        # default fused build (shards=1): one range exchange, shuffle-free
-        # consecutive-run segment encode — the path production uses
+        # the durable build: one range exchange, shuffle-free
+        # consecutive-run segment encode
         catalog.build_durable_index(spark, prepared, out, block_span=4096)
         return catalog.load_index(spark, out)
 

@@ -2,15 +2,15 @@
 
 spark-submit --py-files dist/engine.zip jobs/build_index.py \
     --input /data/documents_parquet --output /data/index \
-    [--buckets 64] [--block-span 131072] [--shards 1] [--no-positions] \
+    [--buckets 64] [--block-span 131072] [--no-positions] \
     [--analyzer full|simple] [--text-col text] [--html] [--resume/--no-resume] \
     [--phrase-index-min-df 100] [--ann-embeddings /data/emb_parquet]
 
 Input: parquet with (doc_id, text, ...) — or, with --html, the input_hint
 web shape (url, warc_ts, html, ...) where doc_id is derived via
 xxhash64(url) and text is extracted from html by the vectorized UDF.
-The build is resumable: per-shard lineage manifests make a re-run skip
-completed work (see sources/catalog.py).
+The build is resumable: per-step lineage manifests make a re-run skip
+completed steps (see sources/catalog.py).
 """
 
 from __future__ import annotations
@@ -28,8 +28,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--block-span", type=int, default=1 << 17)
-    ap.add_argument("--shards", type=int, default=1,
-                    help="1 = fused single-exchange build (default); >1 = per-shard encode jobs with bounded-rework resume")
     ap.add_argument("--no-positions", action="store_true")
     ap.add_argument("--analyzer", choices=["full", "simple"], default="full")
     ap.add_argument("--text-col", default="text")
@@ -108,7 +106,7 @@ def main() -> None:
     conf = AnalyzerConfig.full() if args.analyzer == "full" else AnalyzerConfig.simple()
     catalog.build_durable_index(
         spark, docs, args.output, conf=conf, buckets=args.buckets,
-        block_span=args.block_span, shards=args.shards,
+        block_span=args.block_span,
         positional=not args.no_positions, resume=not args.no_resume,
     )
     if args.phrase_index_min_df is not None:

@@ -9,7 +9,7 @@ optional artifacts (VSM norms, phrase index, trigram index), tombstone
 batches + deleted fraction, per-bucket segment balance (blocks,
 postings, payload bytes, and the max/mean SKEW factor — the number
 that says whether the bucket hash still spreads the term mass), the
-payload codec mix (varint / Elias-Fano / impact, from the
+payload codec mix (varint / impact, from the
 self-describing payload tags), and the head of the df distribution.
 Everything is DataFrame aggregates over segment metadata and side
 tables — no payload decode, so the report is cheap even on a huge
@@ -43,13 +43,12 @@ def collect_stats(spark, index_dir: str) -> dict:
     postings = [int(r.postings or 0) for r in per_bucket]
     mean_p = (sum(postings) / len(postings)) if postings else 0.0
 
-    # codec mix from the self-describing payload tag: legacy varint
-    # payloads never start with 0x00; tagged formats are 0x00 + a
-    # format letter ('B' EF block, 'I' impact) — 2 bytes per block
+    # codec mix from the self-describing payload tag: varint payloads
+    # never start with 0x00; tagged formats are 0x00 + a format letter
+    # ('I' impact) — 2 bytes per block
     tag = F.hex(F.expr("substring(payload, 1, 2)"))
     mix_rows = (seg.select(
         F.when(~tag.startswith("00"), "vb")
-        .when(tag == "0042", "ef")
         .when(tag == "0049", "impact")
         .otherwise("unknown").alias("codec"))
         .groupBy("codec").count().collect())

@@ -26,7 +26,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("inputs", nargs="+", help="two or more index dirs")
     ap.add_argument("--output", required=True)
-    ap.add_argument("--shards", type=int, default=1)
     ap.add_argument("--rebuild-artifacts", action="store_true",
                     help="re-derive the FIRST input's optional serving "
                          "artifacts (phrase index, trigram vocabulary "
@@ -38,8 +37,7 @@ def main() -> None:
     from search_engine_spark.sources import catalog
 
     spark = get_spark("merge_index")
-    catalog.merge_indexes(spark, args.inputs, args.output,
-                          shards=args.shards)
+    catalog.merge_indexes(spark, args.inputs, args.output)
     if args.rebuild_artifacts:
         print({"artifacts": catalog.rebuild_artifacts(
             spark, args.inputs[0], args.output)})

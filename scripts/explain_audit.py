@@ -74,7 +74,7 @@ def main() -> int:
     # 1. segment lookup
     tmp = tempfile.mkdtemp(prefix="audit_idx_")
     catalog.build_durable_index(spark, docs, os.path.join(tmp, "idx"),
-                                shards=2, buckets=16, block_span=64)
+                                buckets=16, block_span=64)
     idx = catalog.load_index(spark, os.path.join(tmp, "idx"))
     lookup = idx.lookup(["market", "price"])
     check(

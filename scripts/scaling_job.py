@@ -84,7 +84,6 @@ def main() -> None:
         span = max(4096, 1 << max(int(n / 128).bit_length(), 1))
         catalog.build_durable_index(
             spark, prepared(warm), os.path.join(tmp, "warm"),
-            shards=int(os.environ.get("SCALE_SHARDS", "1")),
             block_span=span,
         )
         best = None
@@ -92,7 +91,6 @@ def main() -> None:
             out = os.path.join(tmp, f"run{r}")
             t0 = time.perf_counter()
             catalog.build_durable_index(spark, prepared(web), out,
-                                        shards=int(os.environ.get("SCALE_SHARDS", "1")),
                                         block_span=span)
             sec = time.perf_counter() - t0
             shutil.rmtree(out)

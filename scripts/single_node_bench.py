@@ -99,12 +99,11 @@ def main() -> None:
     tmp = tempfile.mkdtemp(prefix="snb_")
     # warm-up (JIT) on 5%
     catalog.build_durable_index(spark, prepared(web.limit(args.docs // 20)),
-                                os.path.join(tmp, "warm"), shards=2,
-                                block_span=4096)
+                                os.path.join(tmp, "warm"), block_span=4096)
     quiesce()
     t0 = time.perf_counter()
     idx_dir = os.path.join(tmp, "idx")
-    catalog.build_durable_index(spark, prepared(web), idx_dir, shards=2,
+    catalog.build_durable_index(spark, prepared(web), idx_dir,
                                 block_span=4096)
     eng_build = time.perf_counter() - t0
     idx = catalog.load_index(spark, idx_dir)

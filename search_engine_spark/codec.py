@@ -103,16 +103,16 @@ def decode_block_full(payload: bytes):
     """→ (doc_ids, tfs, dls|None) depending on whether the dl run exists.
 
     Dispatches on the payload's first byte: 0x00 marks a tagged format
-    (Elias-Fano block, see encode_block_ef; quantized-impact block, see
-    encode_block_impact); anything else is the legacy varint stream,
-    whose first byte is never 0x00."""
+    (the quantized-impact block, see encode_block_impact), which has no
+    tf/dl and is refused, as is any other tag; anything else is the
+    varint stream, whose first byte is never 0x00."""
     if payload[:2] == _IMPACT_TAG:
         raise ValueError(
             "quantized-impact payload: tf/dl are not recoverable from an "
             "impact store — decode with decode_block_impact (serving "
             "kernels) or re-quantize from the SOURCE index (merge/vacuum)")
     if payload[:1] == b"\x00":
-        return _decode_block_ef(payload)
+        raise ValueError(f"unknown tagged payload format {payload[:2]!r}")
     stream = vb_decode(payload)
     n = int(stream[0])
     if n == 0:
@@ -167,124 +167,6 @@ def decode_positions(payload: bytes) -> tuple[np.ndarray, np.ndarray]:
 
 
 # ---------------------------------------------------------------------------
-# Elias-Fano doc-id encoding (Vigna 2013, "Quasi-succinct indices" —
-# the posting-list representation modern engines ship next to
-# varint-delta). A strictly increasing sequence of n ids below universe
-# U takes n·(2 + ⌈log₂(U/n)⌉) + o(n) bits — within half a bit per
-# element of the information-theoretic optimum, independent of the gap
-# DISTRIBUTION (varint pays a full byte minimum per gap; EF wins on
-# dense/head terms, which at web scale hold most of the bytes).
-#
-# Payload tagging: a legacy varint payload's first byte is the most
-# significant 7-bit group of the block's n and is therefore NEVER 0x00
-# (n=0 encodes as 0x80). New formats start with 0x00 + a format letter,
-# so ``decode_block_full`` dispatches without any table metadata and
-# mixed-codec segment stores (e.g. after a merge of old and new
-# segments) read correctly block by block.
-# ---------------------------------------------------------------------------
-
-_EF_TAG = b"\x00E"       # bare Elias-Fano monotone sequence
-_EF_BLOCK_TAG = b"\x00B"  # posting block: EF doc ids + varint tf/dl runs
-
-
-def _split_varints(raw: np.ndarray, count: int) -> tuple[np.ndarray, int]:
-    """First ``count`` varints of a byte array → (values, bytes used)."""
-    ends = np.flatnonzero((raw & 0x80) != 0)
-    used = int(ends[count - 1]) + 1
-    return vb_decode(raw[:used].tobytes()), used
-
-
-def ef_encode(values: np.ndarray, universe: int | None = None) -> bytes:
-    """Strictly increasing non-negative int64 array → Elias-Fano bytes.
-
-    Wire format: ``0x00 'E' varint([n, U, l, n_high_bytes])`` + the high
-    bitvector (unary parts: bit (vᵢ>>l)+i set) + the packed l-bit low
-    parts, both MSB-first via numpy packbits. ``universe`` defaults to
-    max+1; pass the true universe when callers need alignment (e.g. the
-    block span) — a larger U only changes l."""
-    v = np.asarray(values, dtype=np.uint64)
-    n = len(v)
-    if n == 0:
-        return _EF_TAG + vb_encode(np.array([0, 0, 0, 0], dtype=np.int64))
-    u = int(v[-1]) + 1 if universe is None else int(universe)
-    if u <= int(v[-1]):
-        raise ValueError(f"universe {u} <= max value {int(v[-1])}")
-    l = max(0, (u // n).bit_length() - 1)  # floor(log2(U/n)) for U/n >= 1
-    high = (v >> np.uint64(l)).astype(np.int64)
-    pos = high + np.arange(n, dtype=np.int64)
-    hb = np.zeros(n + (u >> l), dtype=np.uint8)
-    hb[pos] = 1
-    high_bytes = np.packbits(hb)
-    if l:
-        low = v & np.uint64((1 << l) - 1)
-        shifts = np.arange(l - 1, -1, -1, dtype=np.uint64)
-        bits = ((low[:, None] >> shifts[None, :]) & np.uint64(1)
-                ).astype(np.uint8)
-        low_bytes = np.packbits(bits.ravel())
-    else:
-        low_bytes = np.empty(0, dtype=np.uint8)
-    head = vb_encode(np.array([n, u, l, len(high_bytes)], dtype=np.int64))
-    return _EF_TAG + head + high_bytes.tobytes() + low_bytes.tobytes()
-
-
-def ef_decode(buf: bytes) -> np.ndarray:
-    """Inverse of ef_encode → int64 array."""
-    if buf[:2] != _EF_TAG:
-        raise ValueError("not an Elias-Fano payload")
-    raw = np.frombuffer(buf, dtype=np.uint8, offset=2)
-    (n, _u, l, nhb), used = _split_varints(raw, 4)
-    n, l, nhb = int(n), int(l), int(nhb)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    hb = np.unpackbits(raw[used:used + nhb])
-    pos = np.flatnonzero(hb)[:n].astype(np.int64)
-    high = (pos - np.arange(n, dtype=np.int64)).astype(np.uint64)
-    if l:
-        bits = np.unpackbits(raw[used + nhb:])[:n * l].reshape(n, l)
-        shifts = np.arange(l - 1, -1, -1, dtype=np.uint64)
-        low = (bits.astype(np.uint64) << shifts[None, :]).sum(axis=1)
-    else:
-        low = np.zeros(n, dtype=np.uint64)
-    return ((high << np.uint64(l)) | low).astype(np.int64)
-
-
-def ef_size_bits(n: int, universe: int) -> int:
-    """The EF space bound n·(2 + ⌈log₂(U/n)⌉) in bits (header excluded) —
-    what the property tests assert actual payloads stay within."""
-    if n == 0:
-        return 0
-    import math
-
-    return n * (2 + max(0, math.ceil(math.log2(universe / n))))
-
-
-def encode_block_ef(doc_ids: np.ndarray, tfs: np.ndarray,
-                    dls: np.ndarray | None = None) -> bytes:
-    """encode_block's Elias-Fano sibling: doc ids as an EF sequence, tf
-    (and optional dl) runs varint-coded exactly as in the legacy layout.
-    Same decode_block_full contract — payloads self-describe via the
-    0x00 tag, so readers (MaxScore, segment merge, tf-only
-    convert) work unchanged on either codec or a mix."""
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    tfs = np.asarray(tfs, dtype=np.int64)
-    n = len(doc_ids)
-    if n == 0:
-        return encode_block(doc_ids, tfs, dls)  # legacy empty form
-    # ids are stored RELATIVE to the block's first id (base rides in the
-    # header): at web scale a high block's absolute ids share an
-    # enormous common prefix the universe term would otherwise pay for —
-    # rebasing makes U the block's id SPAN, the quantity EF compresses
-    base = int(doc_ids[0])
-    ef = ef_encode(doc_ids - base)
-    parts = [tfs]
-    if dls is not None:
-        parts.append(np.asarray(dls, dtype=np.int64))
-    tail = vb_encode(np.concatenate(parts))
-    return _EF_BLOCK_TAG \
-        + vb_encode(np.array([base, len(ef)], dtype=np.int64)) + ef + tail
-
-
-# ---------------------------------------------------------------------------
 # Quantized-impact posting block (Anh & Moffat 2005, "Simplified
 # similarity scoring using term ranks" / the impact-sorted-index line of
 # work; Lucene's quantized norms are the production analogue — all
@@ -295,6 +177,11 @@ def encode_block_ef(doc_ids: np.ndarray, tfs: np.ndarray,
 # instead of the tf+dl varint pair. The quantization is defined in
 # EXACT int64 arithmetic (see operators.scoring.quantize_impacts) so an
 # ANSI-SQL oracle reproduces stored impacts bit-for-bit.
+#
+# Payload tagging: a varint payload's first byte is the most significant
+# 7-bit group of the block's n and is therefore NEVER 0x00 (n=0 encodes
+# as 0x80). Tagged formats start with 0x00 + a format letter, so
+# ``decode_block_full`` tells them apart without any table metadata.
 # ---------------------------------------------------------------------------
 
 _IMPACT_TAG = b"\x00I"
@@ -339,18 +226,3 @@ def is_impact_payload(payload: bytes) -> bool:
     """True iff the payload is a quantized-impact block."""
     return payload[:2] == _IMPACT_TAG
 
-
-def _decode_block_ef(payload: bytes):
-    """decode_block_full for the 0x00 'B' tagged EF block layout."""
-    if payload[:2] != _EF_BLOCK_TAG:
-        raise ValueError(f"unknown tagged payload format {payload[:2]!r}")
-    raw = np.frombuffer(payload, dtype=np.uint8, offset=2)
-    (base, nef), used = _split_varints(raw, 2)
-    nef = int(nef)
-    docs = ef_decode(raw[used:used + nef].tobytes()) + int(base)
-    n = len(docs)
-    rest = vb_decode(raw[used + nef:].tobytes())
-    tfs = np.asarray(rest[:n], dtype=np.int64)
-    dls = (np.asarray(rest[n:2 * n], dtype=np.int64)
-           if len(rest) >= 2 * n else None)
-    return docs, tfs, dls

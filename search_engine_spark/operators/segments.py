@@ -47,19 +47,6 @@ SEGMENT_SCHEMA = StructType([
 DEFAULT_BUCKETS = 64
 DEFAULT_BLOCK_SPAN = 1 << 17  # 131072 doc ids per block
 
-#: pluggable doc-id codecs for segment payloads — both produce
-#: self-describing bytes decode_block_full dispatches on
-BLOCK_CODECS = ("vb", "ef")
-
-
-def _block_encoder(name: str):
-    if name == "vb":
-        return codec.encode_block
-    if name == "ef":
-        return codec.encode_block_ef
-    raise ValueError(f"block_codec must be one of {BLOCK_CODECS}: {name!r}")
-
-
 def bm25_upper_bound(df: int, n_docs: int, max_tf: int,
                      k1: float = 1.2, b: float = 0.75) -> float:
     """Per-block BM25 score ceiling (dl→0 bound), used by block-max
@@ -70,16 +57,13 @@ def bm25_upper_bound(df: int, n_docs: int, max_tf: int,
 
 def encode_segments(postings: DataFrame, buckets: int = DEFAULT_BUCKETS,
                     block_span: int = DEFAULT_BLOCK_SPAN,
-                    positional: bool = True,
-                    block_codec: str = "vb") -> DataFrame:
+                    positional: bool = True) -> DataFrame:
     """postings (term, doc_id, tf[, positions]) → segment blocks.
 
     One shuffle (groupBy term, block_id — bounded groups), Arrow-batched
-    encode in applyInPandas. ``block_codec``: "vb" (legacy varint-delta)
-    or "ef" (Elias-Fano doc ids, codec.encode_block_ef) — payloads
-    self-describe, so readers and merges handle either or a mix.
+    encode in applyInPandas. The reference encoder: no build runs it;
+    tests compare ``encode_sorted``'s blocks against it.
     """
-    enc = _block_encoder(block_codec)
     has_pos = positional and "positions" in postings.columns
     has_dl = "dl" in postings.columns
     cols = ["term", "doc_id", "tf"] + (["dl"] if has_dl else []) \
@@ -93,7 +77,7 @@ def encode_segments(postings: DataFrame, buckets: int = DEFAULT_BUCKETS,
         docs = pdf["doc_id"].to_numpy()
         tfs = pdf["tf"].to_numpy()
         dls = pdf["dl"].to_numpy() if has_dl else None
-        payload = enc(docs, tfs, dls)
+        payload = codec.encode_block(docs, tfs, dls)
         if has_pos:
             counts = [len(p) for p in pdf["positions"]]
             flat = [x for p in pdf["positions"] for x in p]
@@ -118,8 +102,7 @@ def encode_segments(postings: DataFrame, buckets: int = DEFAULT_BUCKETS,
     return base.groupBy("term", "block_id").applyInPandas(encode, SEGMENT_SCHEMA)
 
 
-def encode_sorted(postings: DataFrame, positional: bool = True,
-                  block_codec: str = "vb") -> DataFrame:
+def encode_sorted(postings: DataFrame, positional: bool = True) -> DataFrame:
     """Shuffle-FREE segment encoder for postings that are already
     range-partitioned by (bucket, term, block_id) and sorted within
     partitions by (bucket, term, block_id, doc_id) — the exact layout the
@@ -143,7 +126,6 @@ def encode_sorted(postings: DataFrame, positional: bool = True,
     """
     import numpy as np
 
-    enc = _block_encoder(block_codec)
     has_pos = positional and "positions" in postings.columns
     has_dl = "dl" in postings.columns
     cols = ["term", "bucket", "block_id", "doc_id", "tf"] \
@@ -166,7 +148,7 @@ def encode_sorted(postings: DataFrame, positional: bool = True,
             bounds = list(starts) + [len(pdf)]
             for s, e in zip(bounds[:-1], bounds[1:]):
                 docs, tfs = docs_all[s:e], tfs_all[s:e]
-                payload = enc(
+                payload = codec.encode_block(
                     docs, tfs, dls_all[s:e] if has_dl else None)
                 if has_pos:
                     plist = pos_all[s:e]

@@ -1,4 +1,4 @@
-"""Durable index catalog: Iceberg-layout segment writer with per-shard
+"""Durable index catalog: Iceberg-layout segment writer with per-bucket
 lineage and resumable checkpoints (BASELINE.json north rule).
 
 Layout (parquet in this sandbox; every decision is Iceberg-shaped — a
@@ -9,24 +9,22 @@ calls for ``writeTo(...).using("iceberg")`` without touching the plan):
       stats.json                 corpus scalars + build config
       postings_stage/            postings parquet, partitioned by bucket
       doc_stats/  term_stats/    parquet side tables
-      segments/bucket=B/         encoded blocks (default fused build;
-                                 shards>1 adds a shard=K level above it)
-      manifest/<step>.json       one lineage row per completed step, with
-                                 per-bucket (fused) or per-shard detail
+      segments/bucket=B/         encoded blocks
+      manifest/<step>.json       one lineage row per completed step; the
+                                 segments row carries per-bucket detail
 
 Resume semantics: each step writes its data, then atomically records a
 manifest entry (rows, bytes, checksum, duration). A re-run skips every
 step whose manifest entry exists — the anti-join of "work" against
 "lineage" from the north rule, realized as a driver-side loop over
-independent Spark jobs so a kill between any two steps loses at most one
-shard's work. tests/test_segments.py kills mid-build and asserts the
+independent Spark jobs so a kill between any two steps loses at most
+one step's work. tests/test_segments.py kills mid-build and asserts the
 resumed index is identical.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 import time
 from functools import cached_property
@@ -109,23 +107,19 @@ def build_durable_index(
     conf: AnalyzerConfig = AnalyzerConfig.full(),
     buckets: int = SEG.DEFAULT_BUCKETS,
     block_span: int = SEG.DEFAULT_BLOCK_SPAN,
-    shards: int = 1,
     positional: bool = True,
     resume: bool = True,
-    block_codec: str = "vb",
 ) -> str:
     """Build (or resume building) the segment index under ``index_dir``.
 
-    ``shards=1`` (default) is the FUSED path: one range exchange lays the
-    postings out by (bucket, term, block_id); the staged postings table,
-    the encoded segments, doc/term stats and VSM norms are all derived
-    from that one sorted, persisted exchange — the segment encode is a
-    shuffle-free mapInPandas over it (``SEG.encode_sorted``). Lineage is
-    per BUCKET (finer than the old per-shard rows). ``shards>1`` keeps
-    the per-shard encode jobs (each its own exchange + manifest) for
-    bounded re-work on driver loss mid-encode; the fused path's resume
-    granularity is the whole segments step, re-derived from the staged
-    parquet with one fresh exchange."""
+    One range exchange lays the postings out by (bucket, term,
+    block_id); the staged postings table, the encoded segments, doc/term
+    stats and VSM norms are all derived from that one sorted, persisted
+    exchange — the segment encode is a shuffle-free mapInPandas over it
+    (``SEG.encode_sorted``). The segments step records per-BUCKET
+    lineage. Resume granularity is the step: an interrupted segments
+    step is re-derived from the staged parquet with one fresh
+    exchange."""
     if not resume and os.path.exists(os.path.join(index_dir, "manifest")):
         import shutil
         shutil.rmtree(index_dir)
@@ -138,8 +132,8 @@ def build_durable_index(
     # same-block-id-covers-same-doc-range invariant). The config commits
     # to the manifest up front and every re-run validates against it.
     config = {
-        "buckets": buckets, "block_span": block_span, "shards": shards,
-        "positional": positional, "block_codec": block_codec,
+        "buckets": buckets, "block_span": block_span,
+        "positional": positional,
         "analyzer": {"lowercase": conf.lowercase,
                      "remove_stopwords": conf.remove_stopwords,
                      "stem": conf.stem},
@@ -148,9 +142,6 @@ def build_durable_index(
     if os.path.exists(cfg_path):
         with open(cfg_path) as f:
             prev = json.load(f).get("config")
-        if prev is not None:
-            # indexes recorded before the codec knob existed are varint
-            prev.setdefault("block_codec", "vb")
         if prev != config:
             raise ValueError(
                 f"resume of {index_dir} with a DIFFERENT build config "
@@ -162,7 +153,7 @@ def build_durable_index(
     from pyspark import StorageLevel
 
     stage_dir = os.path.join(index_dir, "postings_stage")
-    # the fused path's sorted exchange output, persisted for the session:
+    # the sorted exchange output, persisted for the session:
     # segments/doc_stats/term_stats/vsm_norms all read it cache-hit
     sorted_post: DataFrame | None = None
     post_cache: DataFrame | None = None
@@ -233,7 +224,7 @@ def build_durable_index(
             "n_docs": row["n"], "total_len": int(row["t"] or 0),
             "avgdl": (row["t"] / row["n"]) if row["n"] else 0.0,
             "buckets": buckets, "block_span": block_span,
-            "positional": positional, "shards": shards,
+            "positional": positional,
             "analyzer": {"lowercase": conf.lowercase,
                          "remove_stopwords": conf.remove_stopwords,
                          "stem": conf.stem},
@@ -256,7 +247,7 @@ def build_durable_index(
         # precomputes them the same way, vsm_model.py:44-54): computing
         # them lazily would re-aggregate the full postings table once per
         # session on the first VSM query. Depends on stats + term_stats,
-        # so runs after the concurrent pool.
+        # so runs after both.
         if _done(index_dir, "vsm_norms"):
             return
         t0 = time.perf_counter()
@@ -278,7 +269,7 @@ def build_durable_index(
             return sorted_post.drop("block_id")
         return spark.read.parquet(stage_dir)
 
-    def _build_segments_fused() -> None:
+    def _build_segments() -> None:
         if _done(index_dir, "segments"):
             return
         t0 = time.perf_counter()
@@ -292,8 +283,7 @@ def build_durable_index(
                 "block_id",
                 (F.col("doc_id") / F.lit(block_span)).cast("long")),
                 "bucket", "term", "block_id", tiebreak="doc_id")
-        seg = SEG.encode_sorted(src, positional=positional,
-                                block_codec=block_codec) \
+        seg = SEG.encode_sorted(src, positional=positional) \
             .persist(StorageLevel.MEMORY_AND_DISK)
         out = os.path.join(index_dir, "segments")
         try:
@@ -325,74 +315,21 @@ def build_durable_index(
                 bucket_lineage=per_bucket,
                 duration_sec=round(time.perf_counter() - t0, 3))
 
-    per_shard = math.ceil(buckets / shards)
-
-    def _build_shard(k: int) -> None:
-        step = f"segments_shard_{k}"
-        if _done(index_dir, step):
-            return
-        t0 = time.perf_counter()
-        lo, hi = k * per_shard, min((k + 1) * per_shard, buckets)
-        part = _staged().filter(
-            (F.col("bucket") >= lo) & (F.col("bucket") < hi))
-        seg = SEG.encode_segments(part, buckets=buckets, block_span=block_span,
-                                  positional=positional,
-                                  block_codec=block_codec)
-        out = os.path.join(index_dir, "segments", f"shard={k}")
-        from pyspark import StorageLevel
-        seg = seg.persist(StorageLevel.MEMORY_AND_DISK)  # sampling reuse
-        try:
-            range_layout(seg, "bucket", "term", "block_id") \
-                .write.mode("overwrite").options(**TERM_BLOOM) \
-                .partitionBy("bucket").parquet(out)
-            # lineage from the persisted frame (cache hit) — identical rows
-            # to the files just written, no re-read job
-            lineage = seg.agg(
-            F.count("*").alias("blocks"),
-            F.sum("n_docs").alias("postings"),
-            F.sum(F.length("payload")).alias("payload_bytes"),
-            F.sum(F.crc32(F.col("payload"))).alias("checksum"),
-            ).collect()[0]
-        finally:
-            seg.unpersist()
-        _record(index_dir, step, bucket_lo=lo, bucket_hi=hi,
-                blocks=lineage["blocks"], postings=int(lineage["postings"] or 0),
-                payload_bytes=int(lineage["payload_bytes"] or 0),
-                checksum=int(lineage["checksum"] or 0),
-                duration_sec=round(time.perf_counter() - t0, 3))
-
     try:
-        if shards > 1:
-            # bounded-rework sharded path: stats + shards concurrently so
-            # the scheduler backfills one job's commit/tail with another's
-            # tasks (Spark FIFO interleaves jobs from multiple submitter
-            # threads). Failures propagate; completed steps keep their
-            # manifests (resume).
-            from concurrent.futures import ThreadPoolExecutor
-
-            tasks = [(_build_doc_stats, ()), (_build_term_stats, ())] + [
-                (_build_shard, (k,)) for k in range(shards)
-            ]
-            workers = min(6, len(tasks))
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                futures = [pool.submit(fn, *args) for fn, args in tasks]
-                for f in futures:
-                    f.result()
-        else:
-            # fused path: each of these jobs saturates the cluster on its
-            # own (the encode is a map-only scan of the cached exchange),
-            # so they run serially — measured on 2 vs 8 cores, concurrent
-            # submission only added contention here
-            _build_segments_fused()
-            _build_doc_stats()
-            _build_term_stats()
-
+        # each of these jobs saturates the cluster on its own (the encode
+        # is a map-only scan of the cached exchange), so they run
+        # serially — measured on 2 vs 8 cores, concurrent submission only
+        # added contention here
+        _build_segments()
+        _build_doc_stats()
+        _build_term_stats()
         _build_vsm_norms()  # needs stats.json + term_stats from above
     finally:
         if sorted_post is not None:
             sorted_post.unpersist()
-    _record(index_dir, "build_complete", shards=shards, buckets=buckets)
+    _record(index_dir, "build_complete", buckets=buckets)
     return index_dir
+
 
 
 def lineage_rows(index_dir: str) -> list[dict]:
@@ -1065,8 +1002,7 @@ def deleted_fraction(spark: SparkSession, index_dir: str) -> float:
     return t.count() / max(n_docs, 1)
 
 
-def vacuum_index(spark: SparkSession, index_dir: str, out_dir: str,
-                 shards: int = 1) -> str:
+def vacuum_index(spark: SparkSession, index_dir: str, out_dir: str) -> str:
     """Physically drop tombstoned postings and refresh corpus stats:
     the single-input ``merge_indexes`` named as the operation it is.
     The output at ``out_dir`` carries no tombstones and its df/n_docs/
@@ -1074,7 +1010,7 @@ def vacuum_index(spark: SparkSession, index_dir: str, out_dir: str,
     fresh build over the live corpus). Immutable-layout engines vacuum
     into a NEW directory — the old index stays readable until the caller
     swaps the serving path, exactly like a segment-file engine's merge."""
-    return merge_indexes(spark, [index_dir], out_dir, shards=shards)
+    return merge_indexes(spark, [index_dir], out_dir)
 
 
 def quantize_index(spark: SparkSession, index_dir: str, out_dir: str,
@@ -1628,7 +1564,7 @@ def _tombstone_paths(index_dir: str, as_of_batch: int | None) -> list[str]:
 
 
 def merge_indexes(spark: SparkSession, index_dirs: list[str],
-                  out_dir: str, shards: int = 1) -> str:
+                  out_dir: str) -> str:
     """Merge N durable segment indexes into one — the engine's analog of
     the reference's 2-way external index merge
     (/root/reference/indexing/index_merging/index_merging.py:4-64, which
@@ -1678,9 +1614,8 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str],
                              "(no build_complete manifest)")
         with open(_manifest_path(d, "build_config")) as f:
             configs.append(json.load(f)["config"])
-    base = {k: v for k, v in configs[0].items() if k != "shards"}
-    for d, c in zip(index_dirs[1:], configs[1:]):
-        got = {k: v for k, v in c.items() if k != "shards"}
+    base = configs[0]
+    for d, got in zip(index_dirs[1:], configs[1:]):
         if got != base:
             raise ValueError(
                 f"cannot merge indexes with different build configs: "
@@ -1751,8 +1686,7 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str],
     # the (pre-recorded, skipped) doc_stats derivation path
     build_durable_index(
         spark, docs=None, index_dir=out_dir, conf=conf, buckets=buckets,
-        block_span=block_span, shards=shards, positional=positional,
-        resume=True,
+        block_span=block_span, positional=positional, resume=True,
     )
     _record(out_dir, "merged_from",
             sources=[os.path.abspath(d) for d in index_dirs],
@@ -1841,11 +1775,9 @@ def refresh_index(spark: SparkSession, index_dir: str,
     delta_dir = out_dir.rstrip("/") + ".delta"
     build_durable_index(
         spark, delta_docs, delta_dir, conf=conf, buckets=cfg["buckets"],
-        block_span=cfg["block_span"], shards=cfg["shards"],
-        positional=cfg["positional"])
+        block_span=cfg["block_span"], positional=cfg["positional"])
 
-    merge_indexes(spark, [index_dir, delta_dir], out_dir,
-                  shards=cfg["shards"])
+    merge_indexes(spark, [index_dir, delta_dir], out_dir)
 
     docs_out = _live(main_docs).unionByName(delta_docs,
                                             allowMissingColumns=True)

@@ -73,7 +73,7 @@ def seg_index_dir(tmp_path_factory, spark, corpus_sdf):
     from search_engine_spark.sources import catalog
 
     d = str(tmp_path_factory.mktemp("segidx") / "index")
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=4, buckets=16,
+    catalog.build_durable_index(spark, corpus_sdf, d, buckets=16,
                                 block_span=16)
     return d
 

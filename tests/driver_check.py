@@ -13,9 +13,10 @@ results as a CORRECTNESS_r{N}-shaped artifact. The official driver
 snapshot caps at 50 entries while the repo registers far more; the
 committed ``CORRECTNESS_full_r{N}.json`` files are this script's full
 replay, regenerated and committed each round so every gate has a
-durable record (VERDICT r4 item 2). The artifact records git HEAD and
-a digest of the code the gates run (``search_engine_spark/`` and
-``__spark_entry__.py``).
+durable record (VERDICT r4 item 2). The artifact records a digest of
+the code the gates run (``search_engine_spark/`` and
+``__spark_entry__.py``); that digest, not a commit id, identifies what
+was replayed, since a replay is usually taken before its commit.
 
 ``python tests/driver_check.py --stale PATH`` checks an artifact
 against the working tree without starting Spark: it exits 1 when the
@@ -27,7 +28,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import subprocess
 import sys
 import traceback
 
@@ -50,15 +50,6 @@ def code_digest() -> str:
         with open(f, "rb") as fh:
             h.update(fh.read() + b"\0")
     return h.hexdigest()
-
-
-def git_head() -> str | None:
-    try:
-        return subprocess.run(["git", "-C", ROOT, "rev-parse", "HEAD"],
-                              capture_output=True, text=True,
-                              check=True).stdout.strip()
-    except (OSError, subprocess.CalledProcessError):
-        return None
 
 
 def stale(path: str) -> int:
@@ -161,7 +152,6 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: str = "") -> int:
         with open(out, "w") as f:
             json.dump({
                 "sf_dir": sf_dir,
-                "git_head": git_head(),
                 "code_digest": code_digest(),
                 "n_entries": len(report),
                 "n_failures": failures,

@@ -49,69 +49,17 @@ def test_empty_block():
     assert len(d) == 0 and len(t) == 0
 
 
-# --- Elias-Fano (SURVEY §2.4 compression family, Vigna 2013) ---------------
-
-@given(st.sets(st.integers(0, 2**50), min_size=0, max_size=300),
-       st.integers(0, 10**6))
-@settings(max_examples=200, deadline=None)
-def test_ef_roundtrip(ids, slack):
-    v = np.array(sorted(ids), dtype=np.int64)
-    u = (int(v[-1]) + 1 + slack) if len(v) else None
-    assert (codec.ef_decode(codec.ef_encode(v, universe=u)) == v).all()
-
-
-@given(st.sets(st.integers(0, 10**9), min_size=1, max_size=300))
-@settings(max_examples=100, deadline=None)
-def test_ef_size_bound(ids):
-    """Actual payload stays within the published n·(2+⌈log₂(U/n)⌉)+o(n)
-    bound (header + byte padding ≤ ~24 bytes + n/8 slack for the unary
-    terminators)."""
-    v = np.array(sorted(ids), dtype=np.int64)
-    buf = codec.ef_encode(v)
-    bound = codec.ef_size_bits(len(v), int(v[-1]) + 1)
-    assert (len(buf) - 24) * 8 <= bound + len(v) // 4 + 16
-
-
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 10**9), st.integers(1, 10**4),
-                  st.integers(1, 10**4)),
-        min_size=0, max_size=300, unique_by=lambda t: t[0],
-    )
-)
-@settings(max_examples=150, deadline=None)
-def test_ef_block_roundtrip_and_dispatch(postings):
-    """encode_block_ef payloads decode through the SAME
-    decode_block_full entry as legacy varint blocks (0x00 tag
-    dispatch) — with and without the dl run."""
-    postings.sort()
-    docs = np.array([d for d, _, _ in postings], dtype=np.int64)
-    tfs = np.array([t for _, t, _ in postings], dtype=np.int64)
-    dls = np.array([l for _, _, l in postings], dtype=np.int64)
-    d2, t2, l2 = codec.decode_block_full(codec.encode_block_ef(docs, tfs, dls))
-    assert (d2 == docs).all() and (t2 == tfs).all()
-    assert (len(docs) == 0 and l2 is None) or (l2 == dls).all()
-    d3, t3, l3 = codec.decode_block_full(codec.encode_block_ef(docs, tfs))
-    assert (d3 == docs).all() and l3 is None
-
-
-def test_ef_beats_varint_on_dense_blocks():
-    """The motivating case: a head term present in (nearly) every doc of
-    a block — EF pays ~2 bits/doc for the ids where varint pays ≥8."""
-    docs = np.arange(4096, dtype=np.int64)
-    tfs = np.ones(4096, dtype=np.int64)
-    vb = len(codec.encode_block(docs, tfs))
-    ef = len(codec.encode_block_ef(docs, tfs))
-    assert ef < 0.7 * vb
-    # and it is never catastrophically worse on sparse blocks
-    sparse = np.sort(np.random.default_rng(2).choice(
-        10**9, 4096, replace=False)).astype(np.int64)
-    assert len(codec.encode_block_ef(sparse, tfs)) < \
-        1.1 * len(codec.encode_block(sparse, tfs))
-
-
-def test_ef_rejects_bad_universe():
+def test_decode_block_full_refuses_unknown_tag():
+    """A payload whose first byte is 0x00 is a tagged format, never a
+    varint stream (whose first byte cannot be 0x00): an unknown tag is
+    refused rather than varint-decoded into garbage postings."""
     import pytest
 
-    with pytest.raises(ValueError, match="universe"):
-        codec.ef_encode(np.array([5, 9], dtype=np.int64), universe=9)
+    body = codec.encode_block(np.array([3, 7], dtype=np.int64),
+                              np.array([1, 2], dtype=np.int64))
+    for tag in (b"\x00B", b"\x00E", b"\x00Z"):
+        with pytest.raises(ValueError, match="unknown tagged payload"):
+            codec.decode_block_full(tag + body)
+    with pytest.raises(ValueError, match="quantized-impact"):
+        codec.decode_block_full(codec.encode_block_impact(
+            np.array([3, 7], dtype=np.int64), np.array([1, 2], dtype=np.int64)))

@@ -16,7 +16,7 @@ from search_engine_spark.sources import catalog
 @pytest.fixture(scope="module")
 def index_dir(tmp_path_factory, spark, corpus_sdf):
     d = str(tmp_path_factory.mktemp("segidx") / "index")
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=4, buckets=16)
+    catalog.build_durable_index(spark, corpus_sdf, d, buckets=16)
     return d
 
 
@@ -62,37 +62,42 @@ def test_pruned_lookup_parity(spark, index_dir, built_index):
 
 
 def test_lineage_complete(index_dir):
-    rows = catalog.lineage_rows(index_dir)
-    steps = {r["step"] for r in rows}
-    assert "build_complete" in steps
-    assert {f"segments_shard_{k}" for k in range(4)} <= steps
-    shard_rows = [r for r in rows if r["step"].startswith("segments_shard_")]
-    assert all(r["payload_bytes"] > 0 or r["blocks"] == 0 for r in shard_rows)
-    assert all("checksum" in r and "duration_sec" in r for r in shard_rows)
+    """The segments row's per-bucket lineage sums to its totals."""
+    rows = {r["step"]: r for r in catalog.lineage_rows(index_dir)}
+    assert "build_complete" in rows
+    seg = rows["segments"]
+    assert seg["blocks"] > 0 and seg["payload_bytes"] > 0
+    assert "checksum" in seg and "duration_sec" in seg
+    per_bucket = seg["bucket_lineage"].values()
+    for k in ("blocks", "postings", "payload_bytes", "checksum"):
+        assert sum(b[k] for b in per_bucket) == seg[k], k
 
 
-def test_kill_resume_identity(spark, corpus_sdf, tmp_path, index_dir):
-    """Simulate a crash after shard 1: delete two shard manifests + one
-    shard's data; the resumed build must reproduce identical segments."""
+def test_kill_resume_identity(spark, corpus_sdf, tmp_path):
+    """Simulate a crash after the staged postings and doc stats: lose the
+    segments and term_stats manifests and the segment data; the resumed
+    build must reproduce identical segments without re-running the
+    completed steps."""
     d = str(tmp_path / "index2")
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=4, buckets=16)
+    catalog.build_durable_index(spark, corpus_sdf, d, buckets=16)
     ref = {(r.term, r.block_id): (r.n_docs, bytes(r.payload))
            for r in spark.read.parquet(os.path.join(d, "segments")).collect()}
+    before = {r["step"]: r for r in catalog.lineage_rows(d)}
 
-    # "kill": lose shard 2's manifest and data, shard 3's manifest only
-    os.remove(catalog._manifest_path(d, "segments_shard_2"))
-    os.remove(catalog._manifest_path(d, "segments_shard_3"))
-    os.remove(catalog._manifest_path(d, "build_complete"))
-    shutil.rmtree(os.path.join(d, "segments", "shard=2"))
+    for step in ("segments", "term_stats", "build_complete"):
+        os.remove(catalog._manifest_path(d, step))
+    shutil.rmtree(os.path.join(d, "segments"))
 
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=4, buckets=16)
+    catalog.build_durable_index(spark, corpus_sdf, d, buckets=16)
     got = {(r.term, r.block_id): (r.n_docs, bytes(r.payload))
            for r in spark.read.parquet(os.path.join(d, "segments")).collect()}
-    assert got == ref
+    assert got == ref and got
 
-    # completed shards were NOT rebuilt (manifest ts preserved for 0/1)
-    rows = {r["step"]: r for r in catalog.lineage_rows(d)}
-    assert rows["segments_shard_2"]["ts"] > rows["segments_shard_0"]["ts"]
+    # completed steps were NOT re-run (manifest ts preserved)
+    after = {r["step"]: r for r in catalog.lineage_rows(d)}
+    for step in ("postings_stage", "doc_stats"):
+        assert after[step]["ts"] == before[step]["ts"], step
+    assert after["segments"]["ts"] > before["segments"]["ts"]
 
 
 def test_block_max_consistency(spark, index_dir):
@@ -159,31 +164,27 @@ def test_resume_rejects_changed_build_config(spark, corpus_sdf, tmp_path):
     from search_engine_spark.functions.analyzer import AnalyzerConfig
 
     d = str(tmp_path / "idx")
-    catalog.build_durable_index(spark, corpus_sdf.limit(30), d, shards=2,
+    catalog.build_durable_index(spark, corpus_sdf.limit(30), d,
                                 buckets=8, block_span=64)
     with _pt.raises(ValueError, match="DIFFERENT build config"):
-        catalog.build_durable_index(spark, corpus_sdf.limit(30), d, shards=2,
+        catalog.build_durable_index(spark, corpus_sdf.limit(30), d,
                                     buckets=8, block_span=128)
     with _pt.raises(ValueError, match="DIFFERENT build config"):
-        catalog.build_durable_index(spark, corpus_sdf.limit(30), d, shards=2,
+        catalog.build_durable_index(spark, corpus_sdf.limit(30), d,
                                     buckets=8, block_span=64,
                                     conf=AnalyzerConfig.simple())
     # same config: resume is a clean no-op
-    catalog.build_durable_index(spark, corpus_sdf.limit(30), d, shards=2,
+    catalog.build_durable_index(spark, corpus_sdf.limit(30), d,
                                 buckets=8, block_span=64)
 
 
-def test_fused_build_matches_sharded(spark, corpus_sdf, tmp_path, index_dir):
-    """shards=1 (fused single-exchange encode, SEG.encode_sorted) must
-    produce byte-identical segment blocks to the per-shard
-    encode_segments path, per-bucket lineage, and an identical resumed
-    rebuild after losing the segments step."""
-    d = str(tmp_path / "fused")
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=1, buckets=16)
-
+def test_fused_build_matches_sharded(spark, index_dir):
+    """The build's segment blocks (one range exchange, SEG.encode_sorted)
+    are byte-identical to the reference groupBy encoder
+    (SEG.encode_segments) over the same staged postings."""
     def n_segment_files():
         return sum(f.endswith(".parquet") for _, _, fs in
-                   os.walk(os.path.join(d, "segments")) for f in fs)
+                   os.walk(os.path.join(index_dir, "segments")) for f in fs)
 
     # the layout exchange is data-sized (session shuffle partitions, AQE
     # coalescing): each task writes the buckets its contiguous range
@@ -194,39 +195,12 @@ def test_fused_build_matches_sharded(spark, corpus_sdf, tmp_path, index_dir):
     key = (lambda r: (r.term, r.block_id))
     val = (lambda r: (r.n_docs, r.min_doc_id, r.max_doc_id, r.block_max_tf,
                       r.bucket, bytes(r.payload), bytes(r.pos_payload)))
-    fused = {key(r): val(r) for r in
-             spark.read.parquet(os.path.join(d, "segments")).collect()}
-    sharded = {key(r): val(r) for r in
-               spark.read.parquet(os.path.join(index_dir, "segments")).collect()}
-    assert fused == sharded and fused
-
-    # per-bucket lineage with totals and checksums
-    rows = {r["step"]: r for r in catalog.lineage_rows(d)}
-    seg_row = rows["segments"]
-    assert seg_row["blocks"] == len(fused)
-    assert seg_row["payload_bytes"] > 0 and seg_row["checksum"] > 0
-    per_bucket = seg_row["bucket_lineage"]
-    assert sum(b["blocks"] for b in per_bucket.values()) == len(fused)
-
-    # kill after the stage: lose segments data + manifest, resume rebuilds
-    # identically through the staged-parquet re-exchange path
-    os.remove(catalog._manifest_path(d, "segments"))
-    os.remove(catalog._manifest_path(d, "build_complete"))
-    shutil.rmtree(os.path.join(d, "segments"))
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=1, buckets=16)
-    resumed = {key(r): val(r) for r in
-               spark.read.parquet(os.path.join(d, "segments")).collect()}
-    assert resumed == fused
-    assert 0 < n_segment_files() <= max_files
-
-    # end to end: identical ranking through the loaded index
-    f_idx = catalog.load_index(spark, d, documents=corpus_sdf)
-    s_idx = catalog.load_index(spark, index_dir, documents=corpus_sdf)
-    got = [(r.doc_id, round(r.score, 9))
-           for r in S.search_freetext(f_idx, "market price growth", k=30).collect()]
-    want = [(r.doc_id, round(r.score, 9))
-            for r in S.search_freetext(s_idx, "market price growth", k=30).collect()]
-    assert got == want and got
+    built = {key(r): val(r) for r in
+             spark.read.parquet(os.path.join(index_dir, "segments")).collect()}
+    staged = spark.read.parquet(os.path.join(index_dir, "postings_stage"))
+    ref = {key(r): val(r) for r in SEG.encode_segments(
+        staged, buckets=16, block_span=SEG.DEFAULT_BLOCK_SPAN).collect()}
+    assert built == ref and built
 
 
 def test_encode_sorted_equals_encode_segments(spark, built_index):
@@ -370,38 +344,6 @@ def test_term_bloom_filter_mechanism(spark, tmp_path):
     got = (spark.read.parquet(p_bloom)
            .join(probe, "term", "left_semi").count())
     assert got == 5  # pushed-filter reads see every row through the bloom
-
-
-def test_ef_codec_index_rank_identical(spark, corpus_sdf, tmp_path,
-                                       index_dir):
-    """block_codec='ef' builds a byte-different, SMALLER segment store
-    whose MaxScore results are rank-identical to the default
-    varint index — payloads self-describe (0x00 tag), so every reader
-    works unchanged."""
-    from search_engine_spark.operators import maxscore as MS
-
-    d = str(tmp_path / "efidx")
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=2, buckets=16,
-                                block_span=16, block_codec="ef")
-    ef_idx = catalog.load_index(spark, d)
-    vb_idx = catalog.load_index(spark, index_dir)
-    for q in ("market price", "germany economy china", "market"):
-        ef_m = MS.search_maxscore(ef_idx, q, k=20)
-        vb_m = MS.search_maxscore(vb_idx, q, k=20)
-        assert [x for x, _ in ef_m] == [x for x, _ in vb_m], q
-        for (_, a), (_, b) in zip(ef_m, vb_m):
-            assert a == pytest.approx(b, abs=1e-9)
-    # size claims live in test_codec.test_ef_beats_varint_on_dense_blocks
-    # at realistic block occupancy; this fixture's span-16 blocks are
-    # header-dominated for EITHER codec and prove only identity
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def test_bad_block_codec_refused(spark, corpus_sdf, tmp_path):
-    with pytest.raises(ValueError, match="block_codec"):
-        SEG.encode_segments(
-            spark.createDataFrame([(1, "t", 1)], "doc_id long, term string, tf long"),
-            block_codec="zstd").count()
 
 
 def test_json_commit_is_atomic(tmp_path, monkeypatch):

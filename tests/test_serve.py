@@ -20,7 +20,7 @@ def served(tmp_path_factory, spark, corpus_sdf):
     from search_engine_spark.plans.spellcheck import VocabularySpellchecker
 
     d = str(tmp_path_factory.mktemp("serveidx") / "index")
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=2, buckets=16,
+    catalog.build_durable_index(spark, corpus_sdf, d, buckets=16,
                                 block_span=64)
     idx = catalog.load_index(spark, d, documents=corpus_sdf)
     checker = VocabularySpellchecker.from_index(idx)
@@ -187,7 +187,7 @@ def test_prior_blend_through_results(spark, corpus_sdf, tmp_path):
     from search_engine_spark.operators import executor as EX
 
     d = str(tmp_path / "prior_idx")
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=2, buckets=16,
+    catalog.build_durable_index(spark, corpus_sdf, d, buckets=16,
                                 block_span=64)
     idx = catalog.load_index(spark, d, documents=corpus_sdf)
     base = [r["doc_id"] for r in EX.execute(idx, "market", k=3).collect()]
@@ -478,7 +478,7 @@ def test_synonyms_through_results(spark, corpus_sdf, tmp_path):
     from search_engine_spark.operators import search as S3
 
     d = str(tmp_path / "syn_idx")
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=2, buckets=16,
+    catalog.build_durable_index(spark, corpus_sdf, d, buckets=16,
                                 block_span=64)
     idx = catalog.load_index(spark, d, documents=corpus_sdf)
     table = {"market": ["stock"]}
@@ -620,7 +620,7 @@ def test_hybrid_through_results(spark, corpus_sdf, tmp_path):
     from search_engine_spark.operators import fusion
 
     d = str(tmp_path / "hyb_idx")
-    catalog.build_durable_index(spark, corpus_sdf, d, shards=2, buckets=16,
+    catalog.build_durable_index(spark, corpus_sdf, d, buckets=16,
                                 block_span=64)
     idx = catalog.load_index(spark, d, documents=corpus_sdf)
     # deterministic 4-dim vectors keyed by doc_id (test_fusion's shape)

@@ -66,7 +66,7 @@ def test_build_with_partitioned_document_store(tmp_path, spark):
         [sys.executable, os.path.join(ROOT, "jobs", "build_index.py"),
          "--input", src, "--output", idx, "--html",
          "--write-documents", store,
-         "--buckets", "8", "--shards", "2", "--block-span", "4096"],
+         "--buckets", "8", "--block-span", "4096"],
         capture_output=True, text=True, timeout=420, env=env,
     )
     assert b.returncode == 0, b.stderr[-3000:]
@@ -165,7 +165,7 @@ def test_jobs_ship_via_py_files(tmp_path):
     b = subprocess.run(
         common + [str(neutral / "build_index.py"),
                   "--input", "/root/testdata/sf0.001/documents.parquet",
-                  "--output", idx, "--buckets", "8", "--shards", "2",
+                  "--output", idx, "--buckets", "8",
                   "--block-span", "4096"],
         cwd=str(neutral), env=env, capture_output=True, text=True,
         timeout=420,

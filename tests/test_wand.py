@@ -146,7 +146,7 @@ def seg_index_5k(tmp_path_factory, spark):
     prepared = web.select(
         "doc_id", make_extract_text_udf()(F.col("html")).alias("text"))
     d = str(tmp_path_factory.mktemp("kernel5k") / "index")
-    catalog.build_durable_index(spark, prepared, d, shards=2, buckets=16,
+    catalog.build_durable_index(spark, prepared, d, buckets=16,
                                 block_span=256)
     return catalog.load_index(spark, d)
 
