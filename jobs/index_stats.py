@@ -31,9 +31,12 @@ def collect_stats(spark, index_dir: str) -> dict:
 
     from search_engine_spark.sources import catalog
 
-    with open(os.path.join(index_dir, "stats.json")) as f:
-        meta = json.load(f)
-    seg = spark.read.parquet(os.path.join(index_dir, "segments"))
+    # every path resolves through the catalog's handle (zero-job open):
+    # a quantized store's term stats, artifacts and tombstones are its
+    # source's (``source_dir``)
+    idx = catalog.load_index(spark, index_dir)
+    meta, src = idx.meta, idx.source_dir
+    seg = idx.segments
 
     per_bucket = (seg.groupBy("bucket").agg(
         F.count("*").alias("blocks"),
@@ -53,16 +56,9 @@ def collect_stats(spark, index_dir: str) -> dict:
         .otherwise("unknown").alias("codec"))
         .groupBy("codec").count().collect())
 
-    # quantized artifacts hold only segments + stats.json; side tables
-    # resolve from the source via the sidecar pointer
-    ts_dir = os.path.join(index_dir, "term_stats")
-    if not os.path.isdir(ts_dir) and meta.get("sidecar_dir"):
-        ts_dir = os.path.join(meta["sidecar_dir"], "term_stats")
-    ts = spark.read.parquet(ts_dir)
-    head = [(r.term, int(r.df)) for r in
-            ts.orderBy(F.desc("df"), F.asc("term")).limit(10).collect()]
+    head = [(r.term, int(r.df)) for r in idx.term_stats
+            .orderBy(F.desc("df"), F.asc("term")).limit(10).collect()]
 
-    batches = catalog.tombstone_batches(index_dir)
     report = {
         "index_dir": os.path.abspath(index_dir),
         "store": meta.get("store", "tf"),
@@ -73,26 +69,19 @@ def collect_stats(spark, index_dir: str) -> dict:
         "buckets": meta["buckets"],
         "block_span": meta["block_span"],
         "positional": meta.get("positional", True),
-        "n_terms": ts.count(),
+        "n_terms": idx.vocabulary_size(),
         "blocks": sum(int(r.blocks) for r in per_bucket),
         "postings": sum(postings),
         "payload_bytes": sum(int(r.payload_bytes or 0) for r in per_bucket),
         "bucket_skew_max_over_mean":
             round(max(postings) / mean_p, 3) if mean_p else None,
         "codec_mix": {r.codec: int(r["count"]) for r in mix_rows},
-        # mirror SegmentIndex's resolution order: an impact store's
-        # phrase/trigram/VSM artifacts resolve through the sidecar at
-        # serving time, so the report must probe it too (consistent with
-        # the term_stats fallback above)
         "artifacts": sorted(
             a for a in ("vsm_norms", "phrase_index", "term_ngram_index",
-                        "ann_index")
-            if catalog._done(index_dir, a)
-            or (meta.get("sidecar_dir")
-                and catalog._done(meta["sidecar_dir"], a))),
-        "tombstone_batches": batches,
+                        "ann_index") if catalog._done(src, a)),
+        "tombstone_batches": catalog.tombstone_batches(src),
         "deleted_fraction":
-            round(catalog.deleted_fraction(spark, index_dir), 4),
+            round(catalog.deleted_fraction(spark, src), 4),
         "df_head": head,
     }
     if meta.get("sidecar_dir"):

@@ -117,8 +117,7 @@ def explain_plan(index, query: str, model: str = "bm25") -> dict[str, Any]:
             anchor = wildcard_anchor(p)
             grams = _pattern_trigrams(p) if not anchor else []
             bounded = (not anchor and grams
-                       and getattr(index, "_trigram_dir", None)
-                       is not None)
+                       and getattr(index, "_has_trigrams", False))
             per.append({
                 "pattern": p,
                 "pruning": ("startswith-anchor" if anchor else

@@ -8,18 +8,37 @@ calls for ``writeTo(...).using("iceberg")`` without touching the plan):
     index_dir/
       stats.json                 corpus scalars + build config
       postings_stage/            postings parquet, partitioned by bucket
-      doc_stats/  term_stats/    parquet side tables
+      doc_stats/  term_stats/  vsm_norms/   parquet side tables
       segments/bucket=B/         encoded blocks
-      manifest/<step>.json       one lineage row per completed step; the
-                                 segments row carries per-bucket detail
+      phrase_segments/bucket=B/  next-word blocks (build_phrase_index)
+      term_trigrams/gbucket=G/   vocabulary trigrams (build_term_ngram_index)
+      ann_centroids/  ann_codebooks/  ann_coded/cell=C/
+                                 IVF+PQ artifacts (build_ann_index)
+      tombstones/batch=N/        deleted doc ids, one batch per delete_docs
+      manifest/<step>.json       one row per committed step; the segments
+                                 row carries per-bucket detail
 
-Resume semantics: each step writes its data, then atomically records a
-manifest entry (rows, bytes, checksum, duration). A re-run skips every
-step whose manifest entry exists — the anti-join of "work" against
-"lineage" from the north rule, realized as a driver-side loop over
-independent Spark jobs so a kill between any two steps loses at most
-one step's work. tests/test_segments.py kills mid-build and asserts the
-resumed index is identical.
+A quantized-impact store (quantize_index) holds only ``segments/``,
+``stats.json`` (the source's, plus ``store``, ``impact_bits`` and the
+absolute ``sidecar_dir``) and its ``quantize_complete`` row. Everything
+else — side tables, artifacts, tombstones — is read from the source
+directory ``sidecar_dir`` names (``SegmentIndex.source_dir``).
+
+Commit rule: a step's manifest row is its only commit and carries all
+of its metadata — its duration, its counts and what readers need (the
+phrase index's covered terms, the ANN fit parameters). A step that
+writes data first removes any row it committed earlier, then writes,
+then records its row (``_step``), so a step that fails at any point is
+left with no row. Readers decide what exists from rows only, never from
+whether a file or directory is present: ``load_index`` refuses a
+directory with no ``build_complete`` (or ``quantize_complete``) row,
+and a handle serves an artifact only when its row is committed.
+
+Resume semantics: a re-run skips every build step whose row exists —
+the anti-join of "work" against "lineage" from the north rule, realized
+as a driver-side loop over independent Spark jobs so a kill between any
+two steps loses at most one step's work. tests/test_segments.py kills
+mid-build and asserts the resumed index is identical.
 """
 
 from __future__ import annotations
@@ -27,6 +46,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +55,7 @@ from pyspark.sql import functions as F
 from .. import codec
 from ..functions.analyzer import AnalyzerConfig
 from ..operators import postings as P
+from ..operators import scoring
 from ..operators import segments as SEG
 from ..operators.search import InvertedIndex
 
@@ -100,6 +121,71 @@ def _done(index_dir: str, step: str) -> bool:
     return os.path.exists(_manifest_path(index_dir, step))
 
 
+def _row(index_dir: str, step: str) -> dict | None:
+    """The committed manifest row of ``step``, or None."""
+    try:
+        with open(_manifest_path(index_dir, step)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+@contextmanager
+def _step(index_dir: str, step: str):
+    """The one commit rule of a step that writes data: remove the
+    step's earlier row, run the body (which writes the data and fills
+    the yielded dict with the row's metadata), then record one row with
+    that metadata and the duration. A body that raises leaves the step
+    with no row, so no reader pairs old metadata with new data."""
+    try:
+        os.remove(_manifest_path(index_dir, step))
+    except FileNotFoundError:
+        pass
+    row: dict = {}
+    t0 = time.perf_counter()
+    yield row
+    _record(index_dir, step, **row,
+            duration_sec=round(time.perf_counter() - t0, 3))
+
+
+def _completed_tf_index(index_dir: str, what: str) -> dict:
+    """The precondition of every step that reads a completed tf/dl
+    index (quantize, the phrase/trigram/ANN artifacts, merge, deletes
+    and refresh). Checks, in order: not an impact store, a committed
+    ``build_complete`` row, a ``stats.json``. Returns the stats."""
+    if _done(index_dir, "quantize_complete"):
+        raise ValueError(
+            f"{what} needs a tf/dl index, and {index_dir} is already an "
+            "impact store: it holds only quantized segments and reads "
+            "everything else from its SOURCE index. Run it on the source "
+            "index, then re-quantize (quantize_index).")
+    if not _done(index_dir, "build_complete"):
+        raise ValueError(f"{index_dir} is not a completed index (no "
+                         "build_complete row) — resume its build first")
+    path = os.path.join(index_dir, "stats.json")
+    if not os.path.exists(path):
+        raise ValueError(f"{index_dir} has a build_complete row but no "
+                         "stats.json — the index directory is damaged or "
+                         "was copied without its stats file")
+    with open(path) as f:
+        return json.load(f)
+
+
+def _build_config(index_dir: str) -> dict | None:
+    """The build config committed in the ``build_config`` row (None
+    before a build records one): what resume validates against and what
+    merge and refresh rebuild with (``_build_args``)."""
+    row = _row(index_dir, "build_config")
+    return None if row is None else row["config"]
+
+
+def _build_args(cfg: dict) -> dict:
+    """``build_durable_index`` keyword arguments of a recorded config."""
+    return {"conf": AnalyzerConfig(**cfg["analyzer"]),
+            "buckets": cfg["buckets"], "block_span": cfg["block_span"],
+            "positional": cfg["positional"]}
+
+
 def build_durable_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -138,17 +224,14 @@ def build_durable_index(
                      "remove_stopwords": conf.remove_stopwords,
                      "stem": conf.stem},
     }
-    cfg_path = os.path.join(index_dir, "manifest", "build_config.json")
-    if os.path.exists(cfg_path):
-        with open(cfg_path) as f:
-            prev = json.load(f).get("config")
-        if prev != config:
-            raise ValueError(
-                f"resume of {index_dir} with a DIFFERENT build config "
-                f"(recorded {prev}, requested {config}) would mix "
-                "incompatible artifacts — pass resume=False to rebuild")
-    else:
+    prev = _build_config(index_dir)
+    if prev is None:
         _record(index_dir, "build_config", config=config)
+    elif prev != config:
+        raise ValueError(
+            f"resume of {index_dir} with a DIFFERENT build config "
+            f"(recorded {prev}, requested {config}) would mix "
+            "incompatible artifacts — pass resume=False to rebuild")
 
     from pyspark import StorageLevel
 
@@ -156,50 +239,49 @@ def build_durable_index(
     # the sorted exchange output, persisted for the session:
     # segments/doc_stats/term_stats/vsm_norms all read it cache-hit
     sorted_post: DataFrame | None = None
-    post_cache: DataFrame | None = None
     if not _done(index_dir, "postings_stage"):
-        t0 = time.perf_counter()
-        post = P.build_postings(docs, conf, positional=positional).withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
-        ).withColumn(
-            "block_id",
-            (F.col("doc_id") / F.lit(block_span)).cast("long"))
-        # Range-partition on (bucket, term, block_id) before the
-        # partitionBy write. Four birds: (1) without a pre-partition,
-        # every task writes into every bucket dir — file count scales as
-        # tasks x buckets and commit overhead WORSENS with more cores;
-        # (2) a plain hash repartition(buckets) makes one task per
-        # bucket, and Zipf head-term buckets become stragglers that cap
-        # scaling — range sampling balances them, and block_id lets one
-        # huge term split across tasks in doc-partitioned-block units
-        # (the skew handling of the north rule: a key's rows are bounded
-        # by block occupancy ≤ block_span); (3) sortWithinPartitions
-        # gives term-ordered files whose parquet min/max term stats prune
-        # term lookups (the word2byte analog); (4) equal (bucket, term,
-        # block_id) keys form one consecutive run (range_layout).
-        # persist pre-exchange too: repartitionByRange runs a boundary-
-        # SAMPLING job that would otherwise re-execute the whole analysis
-        # pipeline (extract+tokenize+stem UDFs) a second time
-        post_cache = post.persist(StorageLevel.MEMORY_AND_DISK)
-        sorted_post = range_layout(post_cache, "bucket", "term", "block_id",
-                                   tiebreak="doc_id") \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        # block_id is derivable (doc_id // block_span) — keep the staged
-        # files free of it so readers of postings_stage see the plain
-        # postings schema
-        try:
-            sorted_post.drop("block_id").write.mode("overwrite") \
-                .options(**TERM_BLOOM) \
-                .partitionBy("bucket").parquet(stage_dir)
-            n = sorted_post.count()  # cache hit — no parquet re-read job
-        except BaseException:
-            sorted_post.unpersist()
-            raise
-        finally:
-            post_cache.unpersist()   # its rows live on in sorted_post
-            post_cache = None
-        _record(index_dir, "postings_stage", rows=n,
-                duration_sec=round(time.perf_counter() - t0, 3))
+        with _step(index_dir, "postings_stage") as row:
+            post = P.build_postings(docs, conf, positional=positional) \
+                .withColumn("bucket", F.pmod(F.xxhash64("term"),
+                                             F.lit(buckets)).cast("int")) \
+                .withColumn("block_id", (F.col("doc_id")
+                                         / F.lit(block_span)).cast("long"))
+            # Range-partition on (bucket, term, block_id) before the
+            # partitionBy write. Four birds: (1) without a pre-partition,
+            # every task writes into every bucket dir — file count scales
+            # as tasks x buckets and commit overhead WORSENS with more
+            # cores; (2) a plain hash repartition(buckets) makes one task
+            # per bucket, and Zipf head-term buckets become stragglers
+            # that cap scaling — range sampling balances them, and
+            # block_id lets one huge term split across tasks in
+            # doc-partitioned-block units (the skew handling of the north
+            # rule: a key's rows are bounded by block occupancy ≤
+            # block_span); (3) sortWithinPartitions gives term-ordered
+            # files whose parquet min/max term stats prune term lookups
+            # (the word2byte analog); (4) equal (bucket, term, block_id)
+            # keys form one consecutive run (range_layout).
+            # persist pre-exchange too: repartitionByRange runs a
+            # boundary-SAMPLING job that would otherwise re-execute the
+            # whole analysis pipeline (extract+tokenize+stem UDFs) a
+            # second time
+            post_cache = post.persist(StorageLevel.MEMORY_AND_DISK)
+            sorted_post = range_layout(post_cache, "bucket", "term",
+                                       "block_id", tiebreak="doc_id") \
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            # block_id is derivable (doc_id // block_span) — keep the
+            # staged files free of it so readers of postings_stage see
+            # the plain postings schema
+            try:
+                sorted_post.drop("block_id").write.mode("overwrite") \
+                    .options(**TERM_BLOOM) \
+                    .partitionBy("bucket").parquet(stage_dir)
+                # cache hit — no parquet re-read job
+                row["rows"] = sorted_post.count()
+            except BaseException:
+                sorted_post.unpersist()
+                raise
+            finally:
+                post_cache.unpersist()   # its rows live on in sorted_post
 
     def _build_doc_stats() -> None:
         if _done(index_dir, "stats"):
@@ -208,39 +290,28 @@ def build_durable_index(
             # dl already rides on every posting row — deriving doc_stats
             # from the staged postings avoids a SECOND full tokenization
             # pass; docs that produced no tokens are re-added with dl=0
-            t0 = time.perf_counter()
-            st = _staged()
-            ds = st.select("doc_id", "dl").distinct()
-            empties = docs.select("doc_id").join(
-                ds.select("doc_id"), "doc_id", "left_anti"
-            ).withColumn("dl", F.lit(0))
-            ds.unionByName(empties).write.mode("overwrite") \
-                .parquet(os.path.join(index_dir, "doc_stats"))
-            _record(index_dir, "doc_stats",
-                    duration_sec=round(time.perf_counter() - t0, 3))
-        dsr = spark.read.parquet(os.path.join(index_dir, "doc_stats"))
-        row = dsr.agg(F.count("*").alias("n"), F.sum("dl").alias("t")).collect()[0]
-        stats = {
-            "n_docs": row["n"], "total_len": int(row["t"] or 0),
-            "avgdl": (row["t"] / row["n"]) if row["n"] else 0.0,
-            "buckets": buckets, "block_span": block_span,
-            "positional": positional,
-            "analyzer": {"lowercase": conf.lowercase,
-                         "remove_stopwords": conf.remove_stopwords,
-                         "stem": conf.stem},
-        }
+            with _step(index_dir, "doc_stats"):
+                ds = _staged().select("doc_id", "dl").distinct()
+                empties = docs.select("doc_id").join(
+                    ds.select("doc_id"), "doc_id", "left_anti"
+                ).withColumn("dl", F.lit(0))
+                ds.unionByName(empties).write.mode("overwrite") \
+                    .parquet(os.path.join(index_dir, "doc_stats"))
+        row = spark.read.parquet(os.path.join(index_dir, "doc_stats")).agg(
+            F.count("*").alias("n"), F.sum("dl").alias("t")).collect()[0]
+        stats = {"n_docs": row["n"], "total_len": int(row["t"] or 0),
+                 "avgdl": (row["t"] / row["n"]) if row["n"] else 0.0,
+                 **config}
         _write_json(os.path.join(index_dir, "stats.json"), stats)
         _record(index_dir, "stats")
 
     def _build_term_stats() -> None:
         if _done(index_dir, "term_stats"):
             return
-        t0 = time.perf_counter()
-        P.term_stats(_staged()).write.mode("overwrite") \
-            .options(**TERM_BLOOM) \
-            .parquet(os.path.join(index_dir, "term_stats"))
-        _record(index_dir, "term_stats",
-                duration_sec=round(time.perf_counter() - t0, 3))
+        with _step(index_dir, "term_stats"):
+            P.term_stats(_staged()).write.mode("overwrite") \
+                .options(**TERM_BLOOM) \
+                .parquet(os.path.join(index_dir, "term_stats"))
 
     def _build_vsm_norms() -> None:
         # per-doc VSM norms are a BUILD artifact (the reference
@@ -250,17 +321,17 @@ def build_durable_index(
         # so runs after both.
         if _done(index_dir, "vsm_norms"):
             return
-        t0 = time.perf_counter()
         from ..operators.search import vsm_norms_frame
 
-        with open(os.path.join(index_dir, "stats.json")) as f:
-            n = json.load(f)["n_docs"]
-        vsm_norms_frame(
-            _staged(),
-            spark.read.parquet(os.path.join(index_dir, "term_stats")), n,
-        ).write.mode("overwrite").parquet(os.path.join(index_dir, "vsm_norms"))
-        _record(index_dir, "vsm_norms",
-                duration_sec=round(time.perf_counter() - t0, 3))
+        with _step(index_dir, "vsm_norms"):
+            with open(os.path.join(index_dir, "stats.json")) as f:
+                n = json.load(f)["n_docs"]
+            vsm_norms_frame(
+                _staged(),
+                spark.read.parquet(os.path.join(index_dir, "term_stats")),
+                n,
+            ).write.mode("overwrite") \
+                .parquet(os.path.join(index_dir, "vsm_norms"))
 
     def _staged() -> DataFrame:
         # the live sorted exchange when this session just produced it
@@ -272,48 +343,45 @@ def build_durable_index(
     def _build_segments() -> None:
         if _done(index_dir, "segments"):
             return
-        t0 = time.perf_counter()
-        if sorted_post is not None:
-            src = sorted_post
-        else:
-            # resume: the consecutive-run invariant must be
-            # re-established — parquet re-reads split/coalesce files
-            # arbitrarily, so pay one fresh exchange
-            src = range_layout(spark.read.parquet(stage_dir).withColumn(
-                "block_id",
-                (F.col("doc_id") / F.lit(block_span)).cast("long")),
-                "bucket", "term", "block_id", tiebreak="doc_id")
-        seg = SEG.encode_sorted(src, positional=positional) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        out = os.path.join(index_dir, "segments")
-        try:
-            # encode partitions each cover a narrow contiguous (bucket,
-            # term) range, so this write touches 1-2 bucket dirs per task
-            # and files stay term-sorted for min/max pruning
-            seg.sortWithinPartitions("bucket", "term", "block_id") \
-                .write.mode("overwrite").options(**TERM_BLOOM) \
-                .partitionBy("bucket").parquet(out)
-            # per-BUCKET lineage from the persisted frame (cache hit) —
-            # identical rows to the files just written, no re-read job
-            lin = seg.groupBy("bucket").agg(
-                F.count("*").alias("blocks"),
-                F.sum("n_docs").alias("postings"),
-                F.sum(F.length("payload")).alias("payload_bytes"),
-                F.sum(F.crc32(F.col("payload"))).alias("checksum"),
-            ).collect()
-        finally:
-            seg.unpersist()
-        per_bucket = {str(r["bucket"]): {
-            "blocks": r["blocks"], "postings": int(r["postings"] or 0),
-            "payload_bytes": int(r["payload_bytes"] or 0),
-            "checksum": int(r["checksum"] or 0)} for r in lin}
-        _record(index_dir, "segments",
-                blocks=sum(r["blocks"] for r in lin),
-                postings=sum(int(r["postings"] or 0) for r in lin),
-                payload_bytes=sum(int(r["payload_bytes"] or 0) for r in lin),
-                checksum=sum(int(r["checksum"] or 0) for r in lin),
-                bucket_lineage=per_bucket,
-                duration_sec=round(time.perf_counter() - t0, 3))
+        with _step(index_dir, "segments") as row:
+            if sorted_post is not None:
+                src = sorted_post
+            else:
+                # resume: the consecutive-run invariant must be
+                # re-established — parquet re-reads split/coalesce files
+                # arbitrarily, so pay one fresh exchange
+                src = range_layout(spark.read.parquet(stage_dir).withColumn(
+                    "block_id",
+                    (F.col("doc_id") / F.lit(block_span)).cast("long")),
+                    "bucket", "term", "block_id", tiebreak="doc_id")
+            seg = SEG.encode_sorted(src, positional=positional) \
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                # encode partitions each cover a narrow contiguous
+                # (bucket, term) range, so this write touches 1-2 bucket
+                # dirs per task and files stay term-sorted for min/max
+                # pruning
+                seg.sortWithinPartitions("bucket", "term", "block_id") \
+                    .write.mode("overwrite").options(**TERM_BLOOM) \
+                    .partitionBy("bucket") \
+                    .parquet(os.path.join(index_dir, "segments"))
+                # per-BUCKET lineage from the persisted frame (cache hit)
+                # — identical rows to the files just written, no re-read
+                lin = seg.groupBy("bucket").agg(
+                    F.count("*").alias("blocks"),
+                    F.sum("n_docs").alias("postings"),
+                    F.sum(F.length("payload")).alias("payload_bytes"),
+                    F.sum(F.crc32(F.col("payload"))).alias("checksum"),
+                ).collect()
+            finally:
+                seg.unpersist()
+            per_bucket = {str(r["bucket"]): {
+                "blocks": r["blocks"], "postings": int(r["postings"] or 0),
+                "payload_bytes": int(r["payload_bytes"] or 0),
+                "checksum": int(r["checksum"] or 0)} for r in lin}
+            for k in ("blocks", "postings", "payload_bytes", "checksum"):
+                row[k] = sum(b[k] for b in per_bucket.values())
+            row["bucket_lineage"] = per_bucket
 
     try:
         # each of these jobs saturates the cluster on its own (the encode
@@ -333,13 +401,11 @@ def build_durable_index(
 
 
 def lineage_rows(index_dir: str) -> list[dict]:
-    mdir = os.path.join(index_dir, "manifest")
-    out = []
-    for name in sorted(os.listdir(mdir)):
-        if name.endswith(".json"):
-            with open(os.path.join(mdir, name)) as f:
-                out.append(json.load(f))
-    return out
+    """Every committed manifest row of the index, by step name."""
+    rows = (_row(index_dir, name[:-len(".json")]) for name in
+            sorted(os.listdir(os.path.join(index_dir, "manifest")))
+            if name.endswith(".json"))
+    return [r for r in rows if r is not None]  # None: retracted meanwhile
 
 
 class MiniBlock:
@@ -415,40 +481,46 @@ class SegmentIndex(InvertedIndex):
     byte-range reads, index_loader.py:71-128).
 
     Opening is lazy. The constructor reads only the JSON manifests
-    (stats.json, manifest/, the phrase and ANN metadata) on the driver;
-    each Spark frame — segments, postings, doc_stats, term_stats, VSM
-    norms, the phrase and trigram tables, tombstones — is created on
-    first use. The serving kernels read segments and tombstones through
-    Arrow on the driver (``mini_index``, ``deleted_ids``), so a handle
-    that only serves them never starts a Spark job. The driver must see
-    ``index_dir``, as it must to read the manifests."""
+    (stats.json and manifest rows) on the driver; each Spark frame —
+    segments, postings, doc_stats, term_stats, VSM norms, the phrase and
+    trigram tables, tombstones — is created on first use. The serving
+    kernels read segments and tombstones through Arrow on the driver
+    (``mini_index``, ``deleted_ids``), so a handle that only serves them
+    never starts a Spark job. The driver must see ``index_dir``, as it
+    must to read the manifests."""
+
+    #: terms the driver-side mini-index LRU holds
+    MAX_CACHED_TERMS = 4096
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  documents: DataFrame | None = None,
-                 max_cached_terms: int = 4096,
                  as_of_batch: int | None = None):
+        if not (_done(index_dir, "build_complete")
+                or _done(index_dir, "quantize_complete")):
+            raise ValueError(
+                f"index at {index_dir} has no completion row "
+                "(build_complete, or quantize_complete for a quantized "
+                "store): its build stopped part-way. Resume the build "
+                "(build_durable_index with resume=True, the default of "
+                "jobs/build_index.py) or re-run quantize_index.")
         with open(os.path.join(index_dir, "stats.json")) as f:
             meta = json.load(f)
-        a = meta["analyzer"]
         self.spark = spark
         self.index_dir = index_dir
         self.meta = meta
         self.stats = {k: meta[k] for k in ("n_docs", "total_len", "avgdl")}
         self.documents = documents
-        self.analyzer = AnalyzerConfig(lowercase=a["lowercase"],
-                                       remove_stopwords=a["remove_stopwords"],
-                                       stem=a["stem"])
+        self.analyzer = AnalyzerConfig(**meta["analyzer"])
         # quantized-impact artifacts (quantize_index) carry only their
-        # re-coded segments + stats.json; score-free side tables
-        # (postings_stage, doc_stats, term_stats, vsm_norms, tombstones)
-        # resolve from the SOURCE index via ``sidecar_dir`` — Iceberg
+        # re-coded segments + stats.json; every side table, artifact and
+        # tombstone batch resolves from the SOURCE index — Iceberg
         # metadata-pointing-at-shared-data-files, not a copy
         sidecar = meta.get("sidecar_dir")
         if sidecar and not _done(sidecar, "build_complete"):
             # the pointer is persisted absolute; a moved/deleted/vacuumed
             # source would otherwise surface later as an opaque parquet
-            # read failure on the relational paths (and silently wrong
-            # tombstone inheritance) — diagnose it at open time
+            # read failure on the relational paths (and silently missing
+            # tombstones) — diagnose it at open time
             raise ValueError(
                 f"impact store at {index_dir} points at sidecar "
                 f"{sidecar}, which is missing or not a completed index "
@@ -456,14 +528,9 @@ class SegmentIndex(InvertedIndex):
                 "from the current source index (jobs/quantize_index.py) "
                 "— impact artifacts bake their source's stats and share "
                 "its side tables, so they cannot outlive it.")
-        self._sidecar = sidecar
-
-        def committed(step: str) -> str | None:
-            # the index's own artifact, else the sidecar's; gated on the
-            # MANIFEST entry, not directory existence: a build killed
-            # mid-write leaves a partial parquet dir that must not load
-            return next((d for d in (index_dir, sidecar)
-                         if d and _done(d, step)), None)
+        #: the directory of every side table, artifact and tombstone
+        #: batch this handle reads: the index's own, or its source's
+        self.source_dir = src = sidecar or index_dir
 
         # Driver-side mini-index LRU: per-term (df, [MiniBlock], cap_used)
         # — the moral equivalent of the reference's startup word2byte
@@ -472,39 +539,32 @@ class SegmentIndex(InvertedIndex):
         # once scored, zero block decodes.
         from collections import OrderedDict
         self._mini: OrderedDict[str, tuple[int, list]] = OrderedDict()
-        self._mini_cap = max_cached_terms
+        self._mini_cap = self.MAX_CACHED_TERMS
         self._segment_files = None
         #: cumulative mini-index traffic of this handle: term lookups
         #: served from the LRU (hits) or fetched (misses), payload blocks
         #: shipped and seconds spent in fetches
         self.mini_counters = {"hits": 0, "misses": 0, "blocks_fetched": 0,
                               "fetch_s": 0.0}
-        # VSM norms are a build artifact; indexes built before it existed
-        # (or interrupted before its commit) fall back to lazy compute
-        self._vsm_dir = committed("vsm_norms")
-        # next-word phrase index (build_phrase_index): coverage decides
-        # DRIVER-SIDE from the stored common-term list — no Spark job to
-        # test a pair
-        self._phrase_common: frozenset[str] = frozenset()
-        self._phrase_meta: dict = {}
-        self._phrase_dir = committed("phrase_index")
-        if self._phrase_dir:
-            with open(os.path.join(self._phrase_dir, PHRASE_INDEX_META)) as f:
-                self._phrase_meta = json.load(f)
-            self._phrase_common = frozenset(self._phrase_meta["terms"])
+        # every optional artifact is gated on its manifest row, never on
+        # its directory: a step killed mid-write (or a rebuild in
+        # progress) leaves data but no row, and must not load.
+        # next-word phrase index (build_phrase_index): its row carries
+        # the covered common terms, so coverage is decided DRIVER-SIDE —
+        # no Spark job to test a pair
+        self._phrase_meta = _row(src, "phrase_index")
+        self._phrase_common: frozenset[str] = frozenset(
+            self._phrase_meta["terms"] if self._phrase_meta else ())
         # character-trigram vocabulary index (build_term_ngram_index):
         # bounds leading-wildcard / infix pattern expansion
-        self._trigram_dir = committed("term_ngram_index")
-        # compressed-ANN artifact (build_ann_index): IVF centroids + PQ
-        # codebooks restore lazily (driver-sized collects on first use);
-        # the cell-partitioned coded table reads like any side table
-        self._ann_meta: dict | None = None
+        self._has_trigrams = _done(src, "term_ngram_index")
+        # compressed-ANN artifact (build_ann_index): its row carries the
+        # fit parameters; IVF centroids + PQ codebooks restore lazily
+        # (driver-sized collects on first use), the cell-partitioned
+        # coded table reads like any side table
+        self._ann_meta = _row(src, "ann_index")
         self._ann_centroids = None
         self._ann_codebooks = None
-        self._ann_dir = committed("ann_index")
-        if self._ann_dir:
-            with open(os.path.join(self._ann_dir, ANN_INDEX_META)) as f:
-                self._ann_meta = json.load(f)
         # Lucene-style live-docs: committed tombstone batches exclude
         # deleted docs from every query path NOW; postings vacuum (and
         # stats refresh) happens at merge_indexes. No paths when no
@@ -513,13 +573,10 @@ class SegmentIndex(InvertedIndex):
         # the pre-delete index, N applies batches 0..N, None is live.
         # The batch list is fixed at open, so the relational paths and
         # the kernels see the same deletes however late each first reads.
+        # A quantized store reads its source's batches (delete_docs
+        # refuses the store itself).
         self.as_of_batch = as_of_batch
-        # a quantized artifact inherits its SOURCE's tombstones (deletes
-        # committed against the source after quantization apply here
-        # too) unless it has committed batches of its own
-        tomb_dir = (sidecar if sidecar and not _tombstone_batches(index_dir)
-                    else index_dir)
-        self._tomb_paths = _tombstone_paths(tomb_dir, as_of_batch)
+        self._tomb_paths = _tombstone_paths(src, as_of_batch)
         self._deleted_set: frozenset[int] | None = None
         # (the deleted_ids set it was built from, its sorted array)
         self._deleted_arr: tuple | None = None
@@ -529,13 +586,9 @@ class SegmentIndex(InvertedIndex):
         return f"SegmentIndex({self.index_dir!r})"
 
     def table_path(self, name: str) -> str:
-        """Directory of side table ``name`` (postings_stage, doc_stats,
-        term_stats): the index's own, or its sidecar's on a quantized
-        artifact."""
-        p = os.path.join(self.index_dir, name)
-        if self._sidecar and not os.path.isdir(p):
-            return os.path.join(self._sidecar, name)
-        return p
+        """Directory of side table or artifact ``name`` (postings_stage,
+        doc_stats, term_stats, ...), resolved in ``source_dir``."""
+        return os.path.join(self.source_dir, name)
 
     @cached_property
     def segments(self) -> DataFrame:
@@ -555,27 +608,23 @@ class SegmentIndex(InvertedIndex):
         return self.spark.read.parquet(self.table_path("term_stats"))
 
     @cached_property
-    def _vsm_norms(self) -> DataFrame | None:
-        # search.vsm_doc_norms assigns the lazily computed frame when
-        # this is None (assignment replaces the cached value)
-        if self._vsm_dir is None:
-            return None
-        return self.spark.read.parquet(os.path.join(self._vsm_dir,
-                                                    "vsm_norms"))
+    def _vsm_norms(self) -> DataFrame:
+        # a build step before build_complete, so every openable index
+        # has them (search.vsm_doc_norms computes them for in-memory
+        # indexes)
+        return self.spark.read.parquet(self.table_path("vsm_norms"))
 
     @cached_property
     def _phrase_segments(self) -> DataFrame | None:
-        if self._phrase_dir is None:
+        if self._phrase_meta is None:
             return None
-        return self.spark.read.parquet(os.path.join(self._phrase_dir,
-                                                    "phrase_segments"))
+        return self.spark.read.parquet(self.table_path("phrase_segments"))
 
     @cached_property
     def _term_trigrams(self) -> DataFrame | None:
-        if self._trigram_dir is None:
+        if not self._has_trigrams:
             return None
-        return self.spark.read.parquet(os.path.join(self._trigram_dir,
-                                                    "term_trigrams"))
+        return self.spark.read.parquet(self.table_path("term_trigrams"))
 
     @cached_property
     def _tombstones(self) -> DataFrame | None:
@@ -664,10 +713,10 @@ class SegmentIndex(InvertedIndex):
         """True iff the committed phrase index serves "t1 t2" (both words
         in its common-term coverage, and positions stored when asked
         for). Decided from the driver-side metadata: no Spark job."""
-        return (self._phrase_dir is not None
+        return (self._phrase_meta is not None
                 and t1 in self._phrase_common and t2 in self._phrase_common
                 and (not positional
-                     or self._phrase_meta.get("positional", False)))
+                     or self._phrase_meta["positional"]))
 
     def bigram_lookup(self, t1: str, t2: str,
                       positional: bool = False) -> DataFrame | None:
@@ -742,12 +791,12 @@ class SegmentIndex(InvertedIndex):
             cent = np.empty((meta["n_centroids"], meta["dim"]),
                             dtype=np.float64)
             for r in spark.read.parquet(
-                    os.path.join(self._ann_dir, "ann_centroids")).collect():
+                    self.table_path("ann_centroids")).collect():
                 cent[r["cell"]] = r["centroid"]
             m, ksub = meta["pq_m"], meta["pq_ksub"]
             books = np.empty((m, ksub, meta["dim"] // m), dtype=np.float64)
             for r in spark.read.parquet(
-                    os.path.join(self._ann_dir, "ann_codebooks")).collect():
+                    self.table_path("ann_codebooks")).collect():
                 books[r["subspace"], r["code"]] = r["centroid"]
             self._ann_centroids, self._ann_codebooks = cent, books
         return self._ann_centroids, self._ann_codebooks
@@ -764,8 +813,7 @@ class SegmentIndex(InvertedIndex):
             raise ValueError(
                 f"index at {self.index_dir} has no committed ANN "
                 "artifact — run catalog.build_ann_index first")
-        coded = self.spark.read.parquet(
-            os.path.join(self._ann_dir, "ann_coded"))
+        coded = self.spark.read.parquet(self.table_path("ann_coded"))
         if self._tombstones is not None:
             coded = coded.join(
                 F.broadcast(self._tombstones.select(
@@ -804,21 +852,16 @@ class SegmentIndex(InvertedIndex):
         if self.store == "impact":
             # tf/dl are not recoverable from quantized blocks — the
             # relational paths (free-text/phrase/boolean/VSM/LM) read
-            # the SOURCE postings via the sidecar instead and score
-            # EXACT (unquantized) weights; the quantized scores are the
-            # serving kernel's (search_maxscore) and the
-            # explicit search_quantized path. Same bucket pruning as the
-            # segment scan — the stage is partitioned by bucket too.
-            src = self.postings
-            if "bucket" in src.columns:
-                src = src.filter(
-                    F.col("bucket").isin(self._buckets_for(terms)))
-            cols = ["term", "doc_id", "tf"]
-            if "dl" in src.columns:
-                cols.append("dl")
-            if positional and "positions" in src.columns:
-                cols.append("positions")
-            decoded = src.filter(F.col("term").isin(terms)).select(*cols)
+            # the SOURCE postings instead and score EXACT (unquantized)
+            # weights; the quantized scores are the serving kernel's
+            # (search_maxscore) and the explicit search_quantized path.
+            # Same bucket pruning as the segment scan — the stage is
+            # partitioned by bucket too.
+            cols = ["term", "doc_id", "tf", "dl"]
+            decoded = self.postings.filter(
+                F.col("bucket").isin(self._buckets_for(terms))
+                & F.col("term").isin(terms)
+            ).select(*cols + (["positions"] if positional else []))
             if self._tombstones is not None:
                 decoded = decoded.join(F.broadcast(self._tombstones),
                                        "doc_id", "left_anti")
@@ -965,7 +1008,10 @@ def load_index(spark: SparkSession, index_dir: str,
                documents: DataFrame | None = None,
                as_of_batch: int | None = None) -> SegmentIndex:
     """Open a durable index lazily: only its JSON manifests are read
-    here, and no Spark job runs (SegmentIndex). ``as_of_batch`` gives
+    here, and no Spark job runs (SegmentIndex). A directory without a
+    ``build_complete`` row (``quantize_complete`` for a quantized store)
+    is refused: its build stopped part-way and must be resumed.
+    ``as_of_batch`` gives
     snapshot-isolation time travel over DELETES: only tombstone batches
     with id <= as_of_batch are applied (-1 → before any delete; None →
     live).
@@ -976,16 +1022,17 @@ def load_index(spark: SparkSession, index_dir: str,
                         as_of_batch=as_of_batch)
 
 
-def _tombstone_batches(index_dir: str) -> list[int]:
-    """Batch ids of COMMITTED tombstone batches (manifest-gated, like
-    vsm_norms: a delete killed mid-write leaves no manifest row and its
-    partial parquet is ignored)."""
+def tombstone_batches(index_dir: str) -> list[int]:
+    """Committed tombstone batch ids in commit order — the index's
+    delete-snapshot points for ``load_index(as_of_batch=…)`` (each
+    batch is an immutable parquet dir + manifest row, so every past
+    delete-state stays readable, Iceberg-snapshot style). Row-gated: a
+    delete killed mid-write leaves no row and its partial parquet is
+    ignored."""
     mdir = os.path.join(index_dir, "manifest")
-    out = []
-    for name in os.listdir(mdir) if os.path.isdir(mdir) else []:
-        if name.startswith("tombstones_") and name.endswith(".json"):
-            out.append(int(name[len("tombstones_"):-len(".json")]))
-    return sorted(out)
+    return sorted(int(n[len("tombstones_"):-len(".json")])
+                  for n in (os.listdir(mdir) if os.path.isdir(mdir) else ())
+                  if n.startswith("tombstones_") and n.endswith(".json"))
 
 
 def deleted_fraction(spark: SparkSession, index_dir: str) -> float:
@@ -1028,10 +1075,15 @@ def quantize_index(spark: SparkSession, index_dir: str, out_dir: str,
     pruning (block_max_tf holds the block's max impact). Positions pass
     through unchanged, so phrase/proximity queries still work.
 
-    The artifact is segments + stats.json ONLY: score-free side tables
-    resolve from the source via ``sidecar_dir`` (SegmentIndex), so
-    nothing corpus-sized is copied. The scoring model (k1=1.2, b=0.75)
-    and the corpus stats are BAKED IN — after a merge or vacuum of the
+    The artifact is segments + stats.json + its ``quantize_complete``
+    row ONLY: every side table, artifact and tombstone batch resolves
+    from the source via ``sidecar_dir`` (``SegmentIndex.source_dir``),
+    so nothing corpus-sized is copied; artifact builds, deletes and
+    merges refuse the store and point at its SOURCE. Re-quantizing into
+    an existing ``out_dir`` first removes its ``quantize_complete`` row,
+    so a failed re-quantize leaves a store ``load_index`` refuses, never
+    new blocks under old stats. The scoring model (k1=1.2, b=0.75) and
+    the corpus stats are BAKED IN — after a merge or vacuum of the
     source, re-quantize from the new index (global stats change);
     merge_indexes/vacuum_index refuse impact stores for that reason.
 
@@ -1039,58 +1091,28 @@ def quantize_index(spark: SparkSession, index_dir: str, out_dir: str,
     (/root/reference/indexing/index_converter — re-code an existing
     index into a cheaper serving layout without re-tokenizing).
     """
-    stats = None
-    stats_path = os.path.join(index_dir, "stats.json")
-    if os.path.exists(stats_path):
-        with open(stats_path) as f:
-            stats = json.load(f)
-        if stats.get("store") == "impact":
-            raise ValueError(f"{index_dir} is already an impact store — "
-                             "quantize from the original tf/dl index")
-    if not _done(index_dir, "build_complete"):
-        raise ValueError(f"{index_dir} is not a completed index")
-    if stats is None:
-        # a committed manifest without stats.json means the directory
-        # was tampered with or half-copied — fail with a diagnosis, not
-        # a NameError when the stats are first used below
-        raise ValueError(f"{index_dir} has a build_complete manifest but "
-                         "no stats.json — the index directory is damaged "
-                         "or was copied without its stats file")
+    stats = _completed_tf_index(index_dir, "quantize_index")
     if os.path.abspath(out_dir) == os.path.abspath(index_dir):
         raise ValueError("quantize output must be a NEW directory")
-    from ..operators import segments as SEG
-
-    os.makedirs(out_dir, exist_ok=True)
-    t0 = time.perf_counter()
-    seg = spark.read.parquet(os.path.join(index_dir, "segments")) \
-        .select([f.name for f in SEG.SEGMENT_SCHEMA.fields])
-    SEG.quantize_blocks(seg, stats["n_docs"], stats["total_len"],
-                        bits=bits) \
-        .sortWithinPartitions("bucket", "term", "block_id") \
-        .write.mode("overwrite").options(**TERM_BLOOM) \
-        .partitionBy("bucket").parquet(os.path.join(out_dir, "segments"))
-    from ..operators import scoring
-
-    out_stats = dict(stats)
-    out_stats.update({
-        "store": "impact", "impact_bits": bits,
-        "impact_k1": scoring.IMPACT_K1, "impact_b": scoring.IMPACT_B,
-        "sidecar_dir": os.path.abspath(index_dir),
-    })
-    _write_json(os.path.join(out_dir, "stats.json"), out_stats)
-    _record(out_dir, "quantize_complete", bits=bits,
-            source=os.path.abspath(index_dir),
-            duration_sec=round(time.perf_counter() - t0, 3))
+    with _step(out_dir, "quantize_complete") as row:
+        seg = spark.read.parquet(os.path.join(index_dir, "segments")) \
+            .select([f.name for f in SEG.SEGMENT_SCHEMA.fields])
+        SEG.quantize_blocks(seg, stats["n_docs"], stats["total_len"],
+                            bits=bits) \
+            .sortWithinPartitions("bucket", "term", "block_id") \
+            .write.mode("overwrite").options(**TERM_BLOOM) \
+            .partitionBy("bucket").parquet(os.path.join(out_dir, "segments"))
+        _write_json(os.path.join(out_dir, "stats.json"), {
+            **stats, "store": "impact", "impact_bits": bits,
+            "impact_k1": scoring.IMPACT_K1, "impact_b": scoring.IMPACT_B,
+            "sidecar_dir": os.path.abspath(index_dir)})
+        row.update(bits=bits, source=os.path.abspath(index_dir))
     return out_dir
-
-
-#: artifact file listing the common terms a phrase index covers
-PHRASE_INDEX_META = "phrase_index.json"
 
 
 #: default cap on phrase-index coverage — the TOP-K most frequent terms
 #: (ties broken by term for determinism). Bounds the driver-side covered
-#: set, the phrase_index.json artifact, and every SegmentIndex open to
+#: set, the phrase_index row, and every SegmentIndex open to
 #: O(max_terms) regardless of vocabulary size: a web-scale vocabulary
 #: (10^8-10^9 terms) admits millions of terms past a bare min_df cut,
 #: and the whole point of the artifact (Williams & Zobel 2004) is the
@@ -1124,102 +1146,85 @@ def build_phrase_index(spark: SparkSession, index_dir: str,
     vocabulary — the join is on (doc_id, pos), an equi-join Spark
     shuffles on doc_id, never a cross product.
 
-    The covered-term list is stored in ``phrase_index.json`` so serving
-    decides coverage DRIVER-SIDE (no Spark job to test a pair); the
-    artifact is versioned by its manifest row and read only when
-    committed (kill-safe like every other build step). Coverage is
-    capped at ``max_terms`` (top-K by df, df-tie broken by term) so the
-    driver list, the JSON artifact, and every index open stay
+    The covered-term list is stored in the ``phrase_index`` manifest
+    row so serving decides coverage DRIVER-SIDE (no Spark job to test a
+    pair); the artifact is read only when that row is committed, and a
+    rebuild removes the row first (kill-safe like every other step).
+    Coverage is capped at ``max_terms`` (top-K by df, df-tie broken by
+    term) so the driver list, the row, and every index open stay
     O(max_terms) at web-scale vocabularies — min_df alone is not a
     bound when the vocabulary has 10^8+ terms.
     """
-    stats_path = os.path.join(index_dir, "stats.json")
-    meta = {}
-    if os.path.exists(stats_path):
-        with open(stats_path) as f:
-            meta = json.load(f)
-        if meta.get("store") == "impact":
-            raise ValueError("build the phrase index on the SOURCE tf/dl "
-                             "index (quantized artifacts share it via the "
-                             "sidecar)")
-    if not _done(index_dir, "build_complete"):
-        raise ValueError(f"{index_dir} is not a completed index")
-    if not meta.get("positional", True):
+    meta = _completed_tf_index(index_dir, "build_phrase_index")
+    if not meta["positional"]:
         raise ValueError("phrase index needs a positional build (the "
                          "bigram counts are consecutive-position counts)")
-    from ..operators import segments as SEG
-
     if max_terms < 2:
         raise ValueError(f"max_terms must be >= 2 (a phrase needs two "
                          f"covered words): {max_terms}")
-    t0 = time.perf_counter()
-    # coverage = the df HEAD of the vocabulary, doubly bounded: df >=
-    # min_df AND top-``max_terms`` by (df desc, term asc). The driver
-    # list and the JSON artifact are O(max_terms) no matter how large
-    # the vocabulary is; the TakeOrdered collect ships only that head.
-    common = sorted(
-        r.term for r in
-        spark.read.parquet(os.path.join(index_dir, "term_stats"))
-        .filter(F.col("df") >= min_df)
-        .orderBy(F.desc("df"), F.asc("term"))
-        .limit(max_terms).select("term").collect())
-    common_df = spark.createDataFrame(
-        [(t,) for t in common], schema="term string")
-    post = spark.read.parquet(os.path.join(index_dir, "postings_stage"))
-    # restrict to common terms via a BROADCAST semi-join, not an isin
-    # literal — a head vocabulary of thousands of terms as an In()
-    # predicate bloats the plan and defeats codegen (measured 5×
-    # slower); the hash-set probe costs one broadcast
-    rows = (post.join(F.broadcast(common_df), "term", "left_semi")
-            .select("term", "doc_id", "dl",
-                    F.explode("positions").alias("pos")))
-    a = rows.select(F.col("term").alias("t1"), "doc_id", "dl", "pos")
-    b = rows.select(F.col("term").alias("t2"), "doc_id",
-                    (F.col("pos") - 1).alias("pos"))
-    # positions of each bigram instance (= the FIRST word's position)
-    # ride into the artifact: a phrase of m words then serves from the
-    # positional intersection of its m-1 bigram postings — Williams &
-    # Zobel §4's longer-phrase evaluation — instead of decoding m
-    # common unigrams' full positional postings. Two-word phrases keep
-    # reading tf only (column pruning skips the positional payload).
-    bigrams = (
-        a.join(b, ["doc_id", "pos"])
-        .groupBy("t1", "t2", "doc_id", "dl")
-        .agg(F.count("*").cast("int").alias("tf"),
-             F.sort_array(F.collect_list("pos")).alias("positions"))
-        .select(F.concat_ws(" ", "t1", "t2").alias("term"),
-                "doc_id", "tf", "dl", "positions")
-    )
-    # fused encode, same shape as the main build: ONE range exchange
-    # establishes the consecutive-run layout, then the shuffle-free
-    # vectorized encoder. encode_segments' per-group applyInPandas pays
-    # a pandas-frame construction per (bigram, block) — bigram
-    # vocabularies are an order of magnitude wider than unigram ones
-    # (measured: the per-group path was ~30× the rest of this build)
-    buckets, block_span = meta["buckets"], meta["block_span"]
-    staged = bigrams.withColumn(
-        "bucket",
-        F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
-    ).withColumn(
-        "block_id", (F.col("doc_id") / F.lit(block_span)).cast("long"))
-    seg = SEG.encode_sorted(
-        range_layout(staged, "bucket", "term", "block_id", tiebreak="doc_id"),
-        positional=True)
-    out = os.path.join(index_dir, "phrase_segments")
-    seg.sortWithinPartitions("bucket", "term", "block_id") \
-        .write.mode("overwrite").options(**TERM_BLOOM) \
-        .partitionBy("bucket").parquet(out)
-    # "positional": pre-round-5 artifacts stored tf-only bigrams; a
-    # loader finding positional=False (or absent) serves two-word
-    # phrases but reports longer chains uncovered (positional fallback)
-    info = {"min_df": min_df, "max_terms": max_terms,
-            "n_common_terms": len(common), "terms": common,
-            "positional": True}
-    _write_json(os.path.join(index_dir, PHRASE_INDEX_META), info)
-    _record(index_dir, "phrase_index", min_df=min_df, max_terms=max_terms,
-            n_common_terms=len(common),
-            duration_sec=round(time.perf_counter() - t0, 3))
-    return info
+    with _step(index_dir, "phrase_index") as row:
+        # coverage = the df HEAD of the vocabulary, doubly bounded: df >=
+        # min_df AND top-``max_terms`` by (df desc, term asc). The driver
+        # list and the manifest row are O(max_terms) no matter how large
+        # the vocabulary is; the TakeOrdered collect ships only that head.
+        common = sorted(
+            r.term for r in
+            spark.read.parquet(os.path.join(index_dir, "term_stats"))
+            .filter(F.col("df") >= min_df)
+            .orderBy(F.desc("df"), F.asc("term"))
+            .limit(max_terms).select("term").collect())
+        common_df = spark.createDataFrame(
+            [(t,) for t in common], schema="term string")
+        post = spark.read.parquet(os.path.join(index_dir, "postings_stage"))
+        # restrict to common terms via a BROADCAST semi-join, not an isin
+        # literal — a head vocabulary of thousands of terms as an In()
+        # predicate bloats the plan and defeats codegen (measured 5×
+        # slower); the hash-set probe costs one broadcast
+        rows = (post.join(F.broadcast(common_df), "term", "left_semi")
+                .select("term", "doc_id", "dl",
+                        F.explode("positions").alias("pos")))
+        a = rows.select(F.col("term").alias("t1"), "doc_id", "dl", "pos")
+        b = rows.select(F.col("term").alias("t2"), "doc_id",
+                        (F.col("pos") - 1).alias("pos"))
+        # positions of each bigram instance (= the FIRST word's position)
+        # ride into the artifact: a phrase of m words then serves from the
+        # positional intersection of its m-1 bigram postings — Williams &
+        # Zobel §4's longer-phrase evaluation — instead of decoding m
+        # common unigrams' full positional postings. Two-word phrases keep
+        # reading tf only (column pruning skips the positional payload).
+        bigrams = (
+            a.join(b, ["doc_id", "pos"])
+            .groupBy("t1", "t2", "doc_id", "dl")
+            .agg(F.count("*").cast("int").alias("tf"),
+                 F.sort_array(F.collect_list("pos")).alias("positions"))
+            .select(F.concat_ws(" ", "t1", "t2").alias("term"),
+                    "doc_id", "tf", "dl", "positions")
+        )
+        # fused encode, same shape as the main build: ONE range exchange
+        # establishes the consecutive-run layout, then the shuffle-free
+        # vectorized encoder. encode_segments' per-group applyInPandas pays
+        # a pandas-frame construction per (bigram, block) — bigram
+        # vocabularies are an order of magnitude wider than unigram ones
+        # (measured: the per-group path was ~30× the rest of this build)
+        buckets, block_span = meta["buckets"], meta["block_span"]
+        staged = bigrams.withColumn(
+            "bucket",
+            F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
+        ).withColumn(
+            "block_id", (F.col("doc_id") / F.lit(block_span)).cast("long"))
+        SEG.encode_sorted(range_layout(staged, "bucket", "term", "block_id",
+                                       tiebreak="doc_id"), positional=True) \
+            .sortWithinPartitions("bucket", "term", "block_id") \
+            .write.mode("overwrite").options(**TERM_BLOOM) \
+            .partitionBy("bucket") \
+            .parquet(os.path.join(index_dir, "phrase_segments"))
+        # the row is the artifact's only metadata: readers take coverage
+        # from "terms"; "positional" says bigram positions are stored,
+        # so k-word phrases can chain bigram postings
+        row.update(min_df=min_df, max_terms=max_terms,
+                   n_common_terms=len(common), terms=common,
+                   positional=True)
+    return row
 
 
 #: gram-hash partition count of the term-trigram index (pruning unit)
@@ -1283,39 +1288,25 @@ def build_term_ngram_index(spark: SparkSession, index_dir: str) -> dict:
     on that bounded set. Results are IDENTICAL to the vocabulary-scan
     path (pytest + driver gate) — the artifact only changes the plan.
     """
-    stats_path = os.path.join(index_dir, "stats.json")
-    if os.path.exists(stats_path):
-        with open(stats_path) as f:
-            if json.load(f).get("store") == "impact":
-                raise ValueError(
-                    "build the trigram index on the SOURCE tf/dl index "
-                    "(quantized artifacts share it via the sidecar)")
-    if not _done(index_dir, "build_complete"):
-        raise ValueError(f"{index_dir} is not a completed index")
-    t0 = time.perf_counter()
-    ts = spark.read.parquet(os.path.join(index_dir, "term_stats"))
-    padded = F.concat(F.lit("^"), F.col("term"), F.lit("$"))
-    grams = (
-        ts.select("term", "df", padded.alias("p"))
-        .select("term", "df", F.explode(F.expr(
-            "transform(sequence(1, length(p) - 2), "
-            "i -> substring(p, i, 3))")).alias("gram"))
-        .distinct()
-        .withColumn("gbucket",
-                    F.pmod(F.xxhash64("gram"),
-                           F.lit(TRIGRAM_BUCKETS)).cast("int"))
-    )
-    out = os.path.join(index_dir, "term_trigrams")
-    range_layout(grams, "gbucket", "gram", "term") \
-        .write.mode("overwrite").partitionBy("gbucket").parquet(out)
-    n_grams = spark.read.parquet(out).count()
-    _record(index_dir, "term_ngram_index", rows=n_grams,
-            duration_sec=round(time.perf_counter() - t0, 3))
-    return {"rows": n_grams}
-
-
-#: artifact file recording the ANN fit parameters + source pointer
-ANN_INDEX_META = "ann_index.json"
+    _completed_tf_index(index_dir, "build_term_ngram_index")
+    with _step(index_dir, "term_ngram_index") as row:
+        ts = spark.read.parquet(os.path.join(index_dir, "term_stats"))
+        padded = F.concat(F.lit("^"), F.col("term"), F.lit("$"))
+        grams = (
+            ts.select("term", "df", padded.alias("p"))
+            .select("term", "df", F.explode(F.expr(
+                "transform(sequence(1, length(p) - 2), "
+                "i -> substring(p, i, 3))")).alias("gram"))
+            .distinct()
+            .withColumn("gbucket",
+                        F.pmod(F.xxhash64("gram"),
+                               F.lit(TRIGRAM_BUCKETS)).cast("int"))
+        )
+        out = os.path.join(index_dir, "term_trigrams")
+        range_layout(grams, "gbucket", "gram", "term") \
+            .write.mode("overwrite").partitionBy("gbucket").parquet(out)
+        row["rows"] = spark.read.parquet(out).count()
+    return row
 
 
 def build_ann_index(spark: SparkSession, index_dir: str,
@@ -1341,73 +1332,60 @@ def build_ann_index(spark: SparkSession, index_dir: str,
       * ``ann_coded``      — (vec_id, cell, code array<int>) partitioned
         by cell: the corpus-scale scan artifact. A probe prunes to
         nprobe cell partitions and scans codes only — never vectors.
-    ``ann_index.json`` records the fit parameters and (optionally) the
-    source table path so rebuild_artifacts can re-derive the artifact
-    after a merge/vacuum.
+    The ``ann_index`` manifest row records the fit parameters and
+    (optionally) the source table path, so load_index can restore the
+    artifact and rebuild_artifacts can re-derive it after a
+    merge/vacuum.
 
     Determinism: ivf_fit/pq_fit are content-hash-sampled with fixed
     init (no RNG), and parquet round-trips float64 exactly, so a loaded
     artifact serves bit-identically to the in-session fit — the driver
     identity gates run against the LOADED artifact."""
-    stats_path = os.path.join(index_dir, "stats.json")
-    if os.path.exists(stats_path):
-        with open(stats_path) as f:
-            if json.load(f).get("store") == "impact":
-                raise ValueError(
-                    "build the ANN index on the SOURCE tf/dl index "
-                    "(quantized artifacts share it via the sidecar)")
-    if not _done(index_dir, "build_complete"):
-        raise ValueError(f"{index_dir} is not a completed index")
+    _completed_tf_index(index_dir, "build_ann_index")
     from ..operators import similarity as SIM
 
-    t0 = time.perf_counter()
-    cent = SIM.ivf_fit(embeddings, n_centroids=n_centroids,
-                       iters=ivf_iters, sample=sample,
-                       vec_col=vec_col, id_col=id_col)
-    books = SIM.pq_fit(embeddings, m=pq_m, ksub=pq_ksub, iters=pq_iters,
-                       sample=sample, vec_col=vec_col, id_col=id_col)
-    dim = cent.shape[1]
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in row]) for i, row in enumerate(cent)],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite") \
-        .parquet(os.path.join(index_dir, "ann_centroids"))
-    spark.createDataFrame(
-        [(int(j), int(c), [float(x) for x in books[j, c]])
-         for j in range(books.shape[0]) for c in range(books.shape[1])],
-        "subspace int, code int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite") \
-        .parquet(os.path.join(index_dir, "ann_codebooks"))
-    coded = SIM.pq_assign(SIM.ivf_assign(embeddings, cent, vec_col),
-                          books, vec_col)
-    coded.select(F.col(id_col).alias("vec_id"), "cell", "code") \
-        .repartition("cell") \
-        .write.mode("overwrite").partitionBy("cell") \
-        .parquet(os.path.join(index_dir, "ann_coded"))
-    n_vecs = spark.read.parquet(
-        os.path.join(index_dir, "ann_coded")).count()
-    info = {
-        "n_centroids": n_centroids, "ivf_iters": ivf_iters,
-        "pq_m": pq_m, "pq_ksub": pq_ksub, "pq_iters": pq_iters,
-        "sample": sample, "dim": int(dim), "n_vectors": int(n_vecs),
-        "vec_col": vec_col, "id_col": id_col,
-        "embeddings_path": (os.path.abspath(embeddings_path)
-                            if embeddings_path else None),
-    }
-    _write_json(os.path.join(index_dir, ANN_INDEX_META), info)
-    _record(index_dir, "ann_index", n_vectors=int(n_vecs),
-            n_centroids=n_centroids, pq_m=pq_m, pq_ksub=pq_ksub,
-            duration_sec=round(time.perf_counter() - t0, 3))
-    return info
+    with _step(index_dir, "ann_index") as row:
+        cent = SIM.ivf_fit(embeddings, n_centroids=n_centroids,
+                           iters=ivf_iters, sample=sample,
+                           vec_col=vec_col, id_col=id_col)
+        books = SIM.pq_fit(embeddings, m=pq_m, ksub=pq_ksub,
+                           iters=pq_iters, sample=sample,
+                           vec_col=vec_col, id_col=id_col)
+        spark.createDataFrame(
+            [(int(i), [float(x) for x in c]) for i, c in enumerate(cent)],
+            "cell int, centroid array<double>",
+        ).coalesce(1).write.mode("overwrite") \
+            .parquet(os.path.join(index_dir, "ann_centroids"))
+        spark.createDataFrame(
+            [(int(j), int(c), [float(x) for x in books[j, c]])
+             for j in range(books.shape[0]) for c in range(books.shape[1])],
+            "subspace int, code int, centroid array<double>",
+        ).coalesce(1).write.mode("overwrite") \
+            .parquet(os.path.join(index_dir, "ann_codebooks"))
+        coded = SIM.pq_assign(SIM.ivf_assign(embeddings, cent, vec_col),
+                              books, vec_col)
+        out = os.path.join(index_dir, "ann_coded")
+        coded.select(F.col(id_col).alias("vec_id"), "cell", "code") \
+            .repartition("cell") \
+            .write.mode("overwrite").partitionBy("cell").parquet(out)
+        row.update(
+            n_centroids=n_centroids, ivf_iters=ivf_iters, pq_m=pq_m,
+            pq_ksub=pq_ksub, pq_iters=pq_iters, sample=sample,
+            dim=int(cent.shape[1]),
+            n_vectors=spark.read.parquet(out).count(),
+            vec_col=vec_col, id_col=id_col,
+            embeddings_path=(os.path.abspath(embeddings_path)
+                             if embeddings_path else None))
+    return row
 
 
 def rebuild_artifacts(spark: SparkSession, src_dir: str,
                       out_dir: str) -> list[str]:
     """Re-derive the optional serving artifacts a source index had onto
     a freshly built/merged/vacuumed index: the next-word phrase index
-    (same min_df/max_terms as the source's phrase_index.json), the
+    (same min_df/max_terms as the source's phrase_index row), the
     trigram vocabulary index, and the ANN index (refit from the source
-    embedding table recorded in ann_index.json, MINUS the source's
+    embedding table recorded in its ann_index row, MINUS the source's
     tombstoned ids — the vacuum folded those deletes, and the ANN
     surface must not resurrect them; keep the embedding table itself in
     step with the corpus across generations, the pointer is a
@@ -1423,19 +1401,16 @@ def rebuild_artifacts(spark: SparkSession, src_dir: str,
     old quantized artifact keeps serving the OLD snapshot via its
     sidecar until the caller swaps it."""
     done = []
-    if _done(src_dir, "phrase_index"):
-        with open(os.path.join(src_dir, PHRASE_INDEX_META)) as f:
-            pmeta = json.load(f)
+    pmeta = _row(src_dir, "phrase_index")
+    if pmeta is not None:
         build_phrase_index(spark, out_dir, min_df=pmeta["min_df"],
-                           max_terms=pmeta.get("max_terms",
-                                               PHRASE_INDEX_MAX_TERMS))
+                           max_terms=pmeta["max_terms"])
         done.append("phrase_index")
     if _done(src_dir, "term_ngram_index"):
         build_term_ngram_index(spark, out_dir)
         done.append("term_ngram_index")
-    if _done(src_dir, "ann_index"):
-        with open(os.path.join(src_dir, ANN_INDEX_META)) as f:
-            ameta = json.load(f)
+    ameta = _row(src_dir, "ann_index")
+    if ameta is not None:
         epath = ameta.get("embeddings_path")
         # exists, not isdir: a single parquet FILE is a valid source
         # (spark.read.parquet accepts it and build_ann_index recorded it)
@@ -1502,10 +1477,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids,
     if (auto_vacuum_threshold is not None) and vacuum_out is None:
         raise ValueError("auto_vacuum_threshold needs vacuum_out (the "
                          "vacuumed index is a NEW directory)")
-    if not _done(index_dir, "build_complete"):
-        raise ValueError(f"{index_dir} is not a completed index — "
-                         "tombstones against a mid-build index would race "
-                         "the builder's own manifests")
+    _completed_tf_index(index_dir, "delete_docs")
     if isinstance(doc_ids, DataFrame):
         ids = doc_ids.select("doc_id").distinct()
     else:
@@ -1514,7 +1486,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids,
             raise ValueError("delete_docs called with no doc_ids")
         ids = spark.createDataFrame([(i,) for i in ids_list],
                                     "doc_id long")
-    batches = _tombstone_batches(index_dir)
+    batches = tombstone_batches(index_dir)
     nxt = (batches[-1] + 1) if batches else 0
     out = os.path.join(index_dir, "tombstones", f"batch={nxt}")
     agg = ids.agg(F.count("*").alias("n"),
@@ -1522,9 +1494,10 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids,
                   .alias("checksum")).collect()[0]
     if not agg["n"]:
         raise ValueError("delete_docs called with no doc_ids")
-    ids.write.mode("overwrite").parquet(out)
-    _record(index_dir, f"tombstones_{nxt}", batch=nxt, rows=agg["n"],
-            checksum=int(agg["checksum"] or 0))
+    with _step(index_dir, f"tombstones_{nxt}") as row:
+        ids.write.mode("overwrite").parquet(out)
+        row.update(batch=nxt, rows=agg["n"],
+                   checksum=int(agg["checksum"] or 0))
     result = {"batch": nxt, "rows": agg["n"]}
     if auto_vacuum_threshold is not None:
         frac = deleted_fraction(spark, index_dir)
@@ -1533,14 +1506,6 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids,
             result["vacuumed_to"] = vacuum_index(spark, index_dir,
                                                  vacuum_out)
     return result
-
-
-def tombstone_batches(index_dir: str) -> list[int]:
-    """Committed tombstone batch ids in commit order — the index's
-    delete-snapshot points for ``load_index(as_of_batch=…)`` (each
-    batch is an immutable parquet dir + manifest row, so every past
-    delete-state stays readable, Iceberg-snapshot style)."""
-    return _tombstone_batches(index_dir)
 
 
 def load_tombstones(spark: SparkSession, index_dir: str,
@@ -1559,7 +1524,7 @@ def _tombstone_paths(index_dir: str, as_of_batch: int | None) -> list[str]:
     """Parquet dirs of the committed tombstone batches applied at
     ``as_of_batch`` (all when None)."""
     return [os.path.join(index_dir, "tombstones", f"batch={b}")
-            for b in _tombstone_batches(index_dir)
+            for b in tombstone_batches(index_dir)
             if as_of_batch is None or b <= as_of_batch]
 
 
@@ -1600,35 +1565,14 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str],
 
     configs = []
     for d in index_dirs:
-        stats_path = os.path.join(d, "stats.json")
-        if os.path.exists(stats_path):
-            with open(stats_path) as f:
-                if json.load(f).get("store") == "impact":
-                    raise ValueError(
-                        f"{d} is a quantized-impact serving artifact — "
-                        "tf/dl are not recoverable from it; merge/vacuum "
-                        "the SOURCE indexes and re-quantize the result "
-                        "(quantize_index)")
-        if not _done(d, "build_complete"):
-            raise ValueError(f"{d} is not a completed index "
-                             "(no build_complete manifest)")
-        with open(_manifest_path(d, "build_config")) as f:
-            configs.append(json.load(f)["config"])
+        _completed_tf_index(d, "merge_indexes")
+        configs.append(_build_config(d))
     base = configs[0]
     for d, got in zip(index_dirs[1:], configs[1:]):
         if got != base:
             raise ValueError(
                 f"cannot merge indexes with different build configs: "
                 f"{index_dirs[0]} has {base}, {d} has {got}")
-
-    a = base["analyzer"]
-    conf = AnalyzerConfig(lowercase=a["lowercase"],
-                          remove_stopwords=a["remove_stopwords"],
-                          stem=a["stem"])
-    buckets, block_span = base["buckets"], base["block_span"]
-    positional = base["positional"]
-
-    os.makedirs(os.path.join(out_dir, "manifest"), exist_ok=True)
 
     # tombstones of every input, applied physically below (the vacuum)
     from functools import reduce
@@ -1660,38 +1604,32 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str],
             "(term, doc_id))")
 
     if not _done(out_dir, "doc_stats"):
-        t0 = time.perf_counter()
-        reduce(lambda x, y: x.unionByName(y), doc_stats) \
-            .write.mode("overwrite") \
-            .parquet(os.path.join(out_dir, "doc_stats"))
-        _record(out_dir, "doc_stats", merged_from=len(index_dirs),
-                duration_sec=round(time.perf_counter() - t0, 3))
+        with _step(out_dir, "doc_stats") as row:
+            reduce(lambda x, y: x.unionByName(y), doc_stats) \
+                .write.mode("overwrite") \
+                .parquet(os.path.join(out_dir, "doc_stats"))
+            row["merged_from"] = len(index_dirs)
 
-    stage_out = os.path.join(out_dir, "postings_stage")
     if not _done(out_dir, "postings_stage"):
-        t0 = time.perf_counter()
-        staged = drop_dead(reduce(
-            lambda x, y: x.unionByName(y),
-            [spark.read.parquet(os.path.join(d, "postings_stage"))
-             for d in index_dirs]))
-        range_layout(staged, "bucket", "term", "doc_id") \
-            .write.mode("overwrite").options(**TERM_BLOOM) \
-            .partitionBy("bucket").parquet(stage_out)
-        _record(out_dir, "postings_stage",
-                sources=[os.path.abspath(d) for d in index_dirs],
-                duration_sec=round(time.perf_counter() - t0, 3))
+        with _step(out_dir, "postings_stage") as row:
+            staged = drop_dead(reduce(
+                lambda x, y: x.unionByName(y),
+                [spark.read.parquet(os.path.join(d, "postings_stage"))
+                 for d in index_dirs]))
+            range_layout(staged, "bucket", "term", "doc_id") \
+                .write.mode("overwrite").options(**TERM_BLOOM) \
+                .partitionBy("bucket") \
+                .parquet(os.path.join(out_dir, "postings_stage"))
+            row["sources"] = [os.path.abspath(d) for d in index_dirs]
 
     # segments / term_stats / stats.json / vsm_norms run through the
     # normal build with its resumable manifests; docs is only read on
     # the (pre-recorded, skipped) doc_stats derivation path
-    build_durable_index(
-        spark, docs=None, index_dir=out_dir, conf=conf, buckets=buckets,
-        block_span=block_span, positional=positional, resume=True,
-    )
+    build_durable_index(spark, None, out_dir, **_build_args(base))
     _record(out_dir, "merged_from",
             sources=[os.path.abspath(d) for d in index_dirs],
             tombstone_batches_applied=sum(
-                len(_tombstone_batches(d)) for d in index_dirs))
+                len(tombstone_batches(d)) for d in index_dirs))
     return out_dir
 
 
@@ -1732,13 +1670,7 @@ def refresh_index(spark: SparkSession, index_dir: str,
     is the refreshed documents DataFrame (live main rows + batch rows,
     ids aligned with the merged index) for the caller to persist.
     """
-    cfg_path = os.path.join(index_dir, "manifest", "build_config.json")
-    if not os.path.exists(cfg_path):
-        raise ValueError(f"{index_dir} has no recorded build config — "
-                         "not a durable index built here")
-    with open(cfg_path) as f:
-        cfg = json.load(f)["config"]
-    conf = AnalyzerConfig(**cfg["analyzer"])
+    _completed_tf_index(index_dir, "refresh_index")
 
     n_batch = new_docs.count()
     n_urls = new_docs.select(url_col).distinct().count()
@@ -1773,9 +1705,8 @@ def refresh_index(spark: SparkSession, index_dir: str,
 
     delta_docs = with_dense_doc_ids(new_docs.drop("doc_id"), start=start)
     delta_dir = out_dir.rstrip("/") + ".delta"
-    build_durable_index(
-        spark, delta_docs, delta_dir, conf=conf, buckets=cfg["buckets"],
-        block_span=cfg["block_span"], positional=cfg["positional"])
+    build_durable_index(spark, delta_docs, delta_dir,
+                        **_build_args(_build_config(index_dir)))
 
     merge_indexes(spark, [index_dir, delta_dir], out_dir)
 
