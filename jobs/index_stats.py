@@ -13,7 +13,11 @@ payload codec mix (varint / impact, from the
 self-describing payload tags), and the head of the df distribution.
 Everything is DataFrame aggregates over segment metadata and side
 tables — no payload decode, so the report is cheap even on a huge
-store (the codec mix reads 2 bytes per block payload).
+store (the codec mix reads 2 bytes per block payload). Two fields are
+driver-side reads with no Spark job: the bytes on disk of each table
+directory (``on_disk_bytes``: the index's, and for a quantized store
+also its source's) and the parquet page codecs of the segment files,
+counted per column chunk from their footers (``parquet_codecs``).
 """
 
 from __future__ import annotations
@@ -24,6 +28,41 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def dir_bytes(path: str) -> int:
+    """Bytes of every file under ``path`` (parquet, checksums, markers),
+    the way perfbench's ``dir_bytes`` counts an index."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    return sum(os.path.getsize(os.path.join(d, f))
+               for d, _, files in os.walk(path) for f in files)
+
+
+def on_disk_bytes(index_dir: str) -> dict:
+    """Bytes on disk of each entry of ``index_dir`` (the tables, the
+    manifest, stats.json); they sum to ``dir_bytes(index_dir)``."""
+    return {name: dir_bytes(os.path.join(index_dir, name))
+            for name in sorted(os.listdir(index_dir))}
+
+
+def parquet_codecs(table_dir: str) -> dict:
+    """Column chunks per page codec over every parquet footer under
+    ``table_dir`` (footers only, no page is read)."""
+    import pyarrow.parquet as pq
+
+    counts: dict = {}
+    for d, _, files in os.walk(table_dir):
+        for f in files:
+            if not f.endswith(".parquet"):
+                continue
+            md = pq.read_metadata(os.path.join(d, f))
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                for c in range(rg.num_columns):
+                    codec = rg.column(c).compression
+                    counts[codec] = counts.get(codec, 0) + 1
+    return dict(sorted(counts.items()))
 
 
 def collect_stats(spark, index_dir: str) -> dict:
@@ -83,9 +122,13 @@ def collect_stats(spark, index_dir: str) -> dict:
         "deleted_fraction":
             round(catalog.deleted_fraction(spark, src), 4),
         "df_head": head,
+        "on_disk_bytes": {"index": on_disk_bytes(index_dir)},
+        "parquet_codecs": parquet_codecs(os.path.join(index_dir,
+                                                      "segments")),
     }
     if meta.get("sidecar_dir"):
         report["sidecar_dir"] = meta["sidecar_dir"]
+        report["on_disk_bytes"]["source"] = on_disk_bytes(src)
     return report
 
 

@@ -2,8 +2,9 @@
 lineage and resumable checkpoints (BASELINE.json north rule).
 
 Layout (parquet in this sandbox; every decision is Iceberg-shaped — a
-catalog with the Iceberg runtime jar would swap the ``.write.parquet``
-calls for ``writeTo(...).using("iceberg")`` without touching the plan):
+catalog with the Iceberg runtime jar would swap ``_write_table``'s one
+``.write.parquet`` call for ``writeTo(...).using("iceberg")`` without
+touching the plan):
 
     index_dir/
       stats.json                 corpus scalars + build config
@@ -23,6 +24,18 @@ A quantized-impact store (quantize_index) holds only ``segments/``,
 absolute ``sidecar_dir``) and its ``quantize_complete`` row. Everything
 else — side tables, artifacts, tombstones — is read from the source
 directory ``sidecar_dir`` names (``SegmentIndex.source_dir``).
+
+Write policy: every table above is written by ``_write_table``, with
+one set of parquet writer keys (``WRITE_POLICY``): zstd pages, and no
+min/max statistics on the ``payload`` and ``pos_payload`` columns.
+Those two columns hold opaque varint blobs; no reader filters on them,
+yet their min/max copies (whole short blobs, in every footer and page
+index) were ~11% of the segment files' bytes. Statistics stay on the
+columns that prune: ``term`` (the Arrow miss read and Spark's
+row-group filter) and ``block_id``; ``bucket`` prunes by directory.
+The term-addressed tables add the ``TERM_BLOOM`` keys. Parquet records
+the codec per file, so an index written with snappy pages still opens,
+resumes and merges.
 
 Commit rule: a step's manifest row is its only commit and carries all
 of its metadata — its duration, its counts and what readers need (the
@@ -76,6 +89,30 @@ TERM_BLOOM = {
     "parquet.bloom.filter.candidates.number#term": "12",
     "parquet.bloom.filter.max.bytes": str(128 * 1024),
 }
+
+
+#: the parquet writer keys of every catalog table (``_write_table``):
+#: zstd pages, and no column-chunk or page min/max on the two opaque
+#: varint blob columns, which no reader filters on. A key naming a
+#: column the table lacks is ignored.
+WRITE_POLICY = {
+    "compression": "zstd",
+    "parquet.column.statistics.enabled#payload": "false",
+    "parquet.column.statistics.enabled#pos_payload": "false",
+}
+
+
+def _write_table(df: DataFrame, path: str, partition_by: str | None = None,
+                 bloom: bool = False) -> None:
+    """The catalog's one parquet write: overwrite ``path`` with ``df``
+    under ``WRITE_POLICY``, partitioned by ``partition_by`` if given,
+    with the term bloom filters (``TERM_BLOOM``) if ``bloom``."""
+    w = df.write.mode("overwrite").options(**WRITE_POLICY)
+    if bloom:
+        w = w.options(**TERM_BLOOM)
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(path)
 
 
 def range_layout(df: DataFrame, *keys: str, tiebreak: str | None = None
@@ -272,9 +309,8 @@ def build_durable_index(
             # staged files free of it so readers of postings_stage see
             # the plain postings schema
             try:
-                sorted_post.drop("block_id").write.mode("overwrite") \
-                    .options(**TERM_BLOOM) \
-                    .partitionBy("bucket").parquet(stage_dir)
+                _write_table(sorted_post.drop("block_id"), stage_dir,
+                             partition_by="bucket", bloom=True)
                 # cache hit — no parquet re-read job
                 row["rows"] = sorted_post.count()
             except BaseException:
@@ -295,8 +331,8 @@ def build_durable_index(
                 empties = docs.select("doc_id").join(
                     ds.select("doc_id"), "doc_id", "left_anti"
                 ).withColumn("dl", F.lit(0))
-                ds.unionByName(empties).write.mode("overwrite") \
-                    .parquet(os.path.join(index_dir, "doc_stats"))
+                _write_table(ds.unionByName(empties),
+                             os.path.join(index_dir, "doc_stats"))
         row = spark.read.parquet(os.path.join(index_dir, "doc_stats")).agg(
             F.count("*").alias("n"), F.sum("dl").alias("t")).collect()[0]
         stats = {"n_docs": row["n"], "total_len": int(row["t"] or 0),
@@ -309,9 +345,8 @@ def build_durable_index(
         if _done(index_dir, "term_stats"):
             return
         with _step(index_dir, "term_stats"):
-            P.term_stats(_staged()).write.mode("overwrite") \
-                .options(**TERM_BLOOM) \
-                .parquet(os.path.join(index_dir, "term_stats"))
+            _write_table(P.term_stats(_staged()),
+                         os.path.join(index_dir, "term_stats"), bloom=True)
 
     def _build_vsm_norms() -> None:
         # per-doc VSM norms are a BUILD artifact (the reference
@@ -326,12 +361,11 @@ def build_durable_index(
         with _step(index_dir, "vsm_norms"):
             with open(os.path.join(index_dir, "stats.json")) as f:
                 n = json.load(f)["n_docs"]
-            vsm_norms_frame(
+            _write_table(vsm_norms_frame(
                 _staged(),
                 spark.read.parquet(os.path.join(index_dir, "term_stats")),
                 n,
-            ).write.mode("overwrite") \
-                .parquet(os.path.join(index_dir, "vsm_norms"))
+            ), os.path.join(index_dir, "vsm_norms"))
 
     def _staged() -> DataFrame:
         # the live sorted exchange when this session just produced it
@@ -361,10 +395,10 @@ def build_durable_index(
                 # (bucket, term) range, so this write touches 1-2 bucket
                 # dirs per task and files stay term-sorted for min/max
                 # pruning
-                seg.sortWithinPartitions("bucket", "term", "block_id") \
-                    .write.mode("overwrite").options(**TERM_BLOOM) \
-                    .partitionBy("bucket") \
-                    .parquet(os.path.join(index_dir, "segments"))
+                _write_table(
+                    seg.sortWithinPartitions("bucket", "term", "block_id"),
+                    os.path.join(index_dir, "segments"),
+                    partition_by="bucket", bloom=True)
                 # per-BUCKET lineage from the persisted frame (cache hit)
                 # — identical rows to the files just written, no re-read
                 lin = seg.groupBy("bucket").agg(
@@ -1097,11 +1131,12 @@ def quantize_index(spark: SparkSession, index_dir: str, out_dir: str,
     with _step(out_dir, "quantize_complete") as row:
         seg = spark.read.parquet(os.path.join(index_dir, "segments")) \
             .select([f.name for f in SEG.SEGMENT_SCHEMA.fields])
-        SEG.quantize_blocks(seg, stats["n_docs"], stats["total_len"],
-                            bits=bits) \
-            .sortWithinPartitions("bucket", "term", "block_id") \
-            .write.mode("overwrite").options(**TERM_BLOOM) \
-            .partitionBy("bucket").parquet(os.path.join(out_dir, "segments"))
+        _write_table(
+            SEG.quantize_blocks(seg, stats["n_docs"], stats["total_len"],
+                                bits=bits)
+            .sortWithinPartitions("bucket", "term", "block_id"),
+            os.path.join(out_dir, "segments"),
+            partition_by="bucket", bloom=True)
         _write_json(os.path.join(out_dir, "stats.json"), {
             **stats, "store": "impact", "impact_bits": bits,
             "impact_k1": scoring.IMPACT_K1, "impact_b": scoring.IMPACT_B,
@@ -1212,12 +1247,13 @@ def build_phrase_index(spark: SparkSession, index_dir: str,
             F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
         ).withColumn(
             "block_id", (F.col("doc_id") / F.lit(block_span)).cast("long"))
-        SEG.encode_sorted(range_layout(staged, "bucket", "term", "block_id",
-                                       tiebreak="doc_id"), positional=True) \
-            .sortWithinPartitions("bucket", "term", "block_id") \
-            .write.mode("overwrite").options(**TERM_BLOOM) \
-            .partitionBy("bucket") \
-            .parquet(os.path.join(index_dir, "phrase_segments"))
+        _write_table(
+            SEG.encode_sorted(range_layout(staged, "bucket", "term",
+                                           "block_id", tiebreak="doc_id"),
+                              positional=True)
+            .sortWithinPartitions("bucket", "term", "block_id"),
+            os.path.join(index_dir, "phrase_segments"),
+            partition_by="bucket", bloom=True)
         # the row is the artifact's only metadata: readers take coverage
         # from "terms"; "positional" says bigram positions are stored,
         # so k-word phrases can chain bigram postings
@@ -1303,8 +1339,8 @@ def build_term_ngram_index(spark: SparkSession, index_dir: str) -> dict:
                                F.lit(TRIGRAM_BUCKETS)).cast("int"))
         )
         out = os.path.join(index_dir, "term_trigrams")
-        range_layout(grams, "gbucket", "gram", "term") \
-            .write.mode("overwrite").partitionBy("gbucket").parquet(out)
+        _write_table(range_layout(grams, "gbucket", "gram", "term"), out,
+                     partition_by="gbucket")
         row["rows"] = spark.read.parquet(out).count()
     return row
 
@@ -1351,23 +1387,21 @@ def build_ann_index(spark: SparkSession, index_dir: str,
         books = SIM.pq_fit(embeddings, m=pq_m, ksub=pq_ksub,
                            iters=pq_iters, sample=sample,
                            vec_col=vec_col, id_col=id_col)
-        spark.createDataFrame(
+        _write_table(spark.createDataFrame(
             [(int(i), [float(x) for x in c]) for i, c in enumerate(cent)],
             "cell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(index_dir, "ann_centroids"))
-        spark.createDataFrame(
+        ).coalesce(1), os.path.join(index_dir, "ann_centroids"))
+        _write_table(spark.createDataFrame(
             [(int(j), int(c), [float(x) for x in books[j, c]])
              for j in range(books.shape[0]) for c in range(books.shape[1])],
             "subspace int, code int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite") \
-            .parquet(os.path.join(index_dir, "ann_codebooks"))
+        ).coalesce(1), os.path.join(index_dir, "ann_codebooks"))
         coded = SIM.pq_assign(SIM.ivf_assign(embeddings, cent, vec_col),
                               books, vec_col)
         out = os.path.join(index_dir, "ann_coded")
-        coded.select(F.col(id_col).alias("vec_id"), "cell", "code") \
-            .repartition("cell") \
-            .write.mode("overwrite").partitionBy("cell").parquet(out)
+        _write_table(coded.select(F.col(id_col).alias("vec_id"), "cell",
+                                  "code").repartition("cell"),
+                     out, partition_by="cell")
         row.update(
             n_centroids=n_centroids, ivf_iters=ivf_iters, pq_m=pq_m,
             pq_ksub=pq_ksub, pq_iters=pq_iters, sample=sample,
@@ -1495,7 +1529,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids,
     if not agg["n"]:
         raise ValueError("delete_docs called with no doc_ids")
     with _step(index_dir, f"tombstones_{nxt}") as row:
-        ids.write.mode("overwrite").parquet(out)
+        _write_table(ids, out)
         row.update(batch=nxt, rows=agg["n"],
                    checksum=int(agg["checksum"] or 0))
     result = {"batch": nxt, "rows": agg["n"]}
@@ -1605,9 +1639,8 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str],
 
     if not _done(out_dir, "doc_stats"):
         with _step(out_dir, "doc_stats") as row:
-            reduce(lambda x, y: x.unionByName(y), doc_stats) \
-                .write.mode("overwrite") \
-                .parquet(os.path.join(out_dir, "doc_stats"))
+            _write_table(reduce(lambda x, y: x.unionByName(y), doc_stats),
+                         os.path.join(out_dir, "doc_stats"))
             row["merged_from"] = len(index_dirs)
 
     if not _done(out_dir, "postings_stage"):
@@ -1616,10 +1649,9 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str],
                 lambda x, y: x.unionByName(y),
                 [spark.read.parquet(os.path.join(d, "postings_stage"))
                  for d in index_dirs]))
-            range_layout(staged, "bucket", "term", "doc_id") \
-                .write.mode("overwrite").options(**TERM_BLOOM) \
-                .partitionBy("bucket") \
-                .parquet(os.path.join(out_dir, "postings_stage"))
+            _write_table(range_layout(staged, "bucket", "term", "doc_id"),
+                         os.path.join(out_dir, "postings_stage"),
+                         partition_by="bucket", bloom=True)
             row["sources"] = [os.path.abspath(d) for d in index_dirs]
 
     # segments / term_stats / stats.json / vsm_norms run through the

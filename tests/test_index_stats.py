@@ -5,8 +5,11 @@ report their store kind + sidecar."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from search_engine_spark.operators import segments as SEG
 from search_engine_spark.sources import catalog
 
 
@@ -35,6 +38,30 @@ def test_report_matches_lineage(spark, stats_index, corpus_sdf):
     assert rep["df_head"][0][1] >= rep["df_head"][-1][1]
 
 
+def test_report_on_disk_bytes_and_codecs(spark, stats_index):
+    # bytes per table directory add up to the whole index, counted the
+    # way perfbench counts it; the codecs come from the segment footers
+    from jobs.index_stats import collect_stats
+
+    rep = collect_stats(spark, stats_index)
+    disk = rep["on_disk_bytes"]
+    assert set(disk) == {"index"}
+    tables = disk["index"]
+    assert {"segments", "postings_stage", "doc_stats", "term_stats",
+            "vsm_norms", "manifest", "stats.json"} <= set(tables)
+    assert all(b > 0 for b in tables.values())
+    walked = sum(os.path.getsize(os.path.join(d, f))
+                 for d, _, files in os.walk(stats_index) for f in files)
+    assert sum(tables.values()) == walked
+    # one chunk per segment column (bucket is the partition directory)
+    # per file; these small files hold one row group each
+    n_files = sum(f.endswith(".parquet") for _, _, files in
+                  os.walk(os.path.join(stats_index, "segments"))
+                  for f in files)
+    assert rep["parquet_codecs"] == {
+        "ZSTD": n_files * (len(SEG.SEGMENT_SCHEMA.fields) - 1)}
+
+
 def test_report_on_impact_store(tmp_path, spark, stats_index):
     from jobs.index_stats import collect_stats
 
@@ -45,6 +72,12 @@ def test_report_on_impact_store(tmp_path, spark, stats_index):
     assert rep["impact_bits"] == 8
     assert rep["sidecar_dir"] == stats_index
     assert set(rep["codec_mix"]) == {"impact"}
+    # the impact store holds only its segments; its side tables are the
+    # source's, so both directories are sized
+    disk = rep["on_disk_bytes"]
+    assert {"segments", "manifest", "stats.json"} == set(disk["index"])
+    assert {"segments", "postings_stage", "term_stats"} <= set(disk["source"])
+    assert set(rep["parquet_codecs"]) == {"ZSTD"}
 
 
 def test_impact_report_lists_sidecar_artifacts(tmp_path, spark,

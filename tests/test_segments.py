@@ -8,6 +8,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from search_engine_spark.operators import maxscore as MS
 from search_engine_spark.operators import search as S
 from search_engine_spark.operators import segments as SEG
 from search_engine_spark.sources import catalog
@@ -344,6 +345,112 @@ def test_term_bloom_filter_mechanism(spark, tmp_path):
     got = (spark.read.parquet(p_bloom)
            .join(probe, "term", "left_semi").count())
     assert got == 5  # pushed-filter reads see every row through the bloom
+
+
+def _chunks(root):
+    """(relative file, column path, compression, has min/max) of every
+    column chunk in every parquet file under ``root``."""
+    import glob as _glob
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in sorted(_glob.glob(f"{root}/**/*.parquet", recursive=True)):
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                col = md.row_group(g).column(c)
+                st = col.statistics
+                out.append((os.path.relpath(f, root), col.path_in_schema,
+                            col.compression,
+                            st is not None and st.has_min_max))
+    return out
+
+
+def _assert_write_policy(chunks):
+    assert chunks
+    assert {c[2] for c in chunks} == {"ZSTD"}, \
+        sorted({(c[0].split(os.sep)[0], c[2]) for c in chunks})
+    blobs = [c for c in chunks if c[1] in ("payload", "pos_payload")]
+    assert not [c for c in blobs if c[3]], "min/max on a varint blob column"
+    terms = [c for c in chunks if c[1] == "term"]
+    assert terms and all(c[3] for c in terms), "term chunks lost min/max"
+    return blobs, terms
+
+
+def test_index_files_follow_write_policy(seg_index_dir):
+    """Every parquet file of a built index carries catalog.WRITE_POLICY:
+    zstd pages, no min/max on the opaque payload columns, and min/max
+    kept on ``term`` (the column the Arrow miss read and Spark's
+    row-group filter prune on)."""
+    blobs, terms = _assert_write_policy(_chunks(seg_index_dir))
+    tables = {c[0].split(os.sep)[0] for c in terms}
+    assert {"segments", "postings_stage", "term_stats"} <= tables
+    assert {c[1] for c in blobs} == {"payload", "pos_payload"}
+
+
+def test_snappy_index_opens_resumes_and_vacuums(spark, corpus_sdf, tmp_path,
+                                                monkeypatch):
+    """An index written before the write policy (snappy pages, payload
+    min/max) needs no migration: parquet records the codec per file, so
+    it serves, a resumed build re-derives its segments from the snappy
+    staged postings, and a vacuum reads all of its side tables."""
+    def segs(d):
+        return {(r.term, r.block_id): (r.n_docs, bytes(r.payload),
+                                       bytes(r.pos_payload))
+                for r in spark.read.parquet(
+                    os.path.join(d, "segments")).collect()}
+
+    def codecs(d, table):
+        return {c[2] for c in _chunks(os.path.join(d, table))}
+
+    d = str(tmp_path / "snappy")
+    monkeypatch.setattr(catalog, "WRITE_POLICY", {"compression": "snappy"})
+    catalog.build_durable_index(spark, corpus_sdf.limit(40), d, buckets=4,
+                                block_span=16)
+    monkeypatch.undo()
+    assert codecs(d, "segments") == {"SNAPPY"}
+    ref = segs(d)
+    q = "connect trading market"
+    hits = MS.search_maxscore(catalog.load_index(spark, d), q, k=10)
+    assert ref and hits
+
+    for step in ("segments", "build_complete"):
+        os.remove(catalog._manifest_path(d, step))
+    shutil.rmtree(os.path.join(d, "segments"))
+    catalog.build_durable_index(spark, corpus_sdf.limit(40), d, buckets=4,
+                                block_span=16)
+    assert segs(d) == ref
+    assert codecs(d, "segments") == {"ZSTD"}
+    assert codecs(d, "postings_stage") == {"SNAPPY"}
+    assert MS.search_maxscore(catalog.load_index(spark, d), q, k=10) == hits
+
+    out = catalog.vacuum_index(spark, d, str(tmp_path / "vacuumed"))
+    assert segs(out) == ref
+    assert codecs(out, "doc_stats") == {"ZSTD"}
+    assert MS.search_maxscore(catalog.load_index(spark, out), q,
+                              k=10) == hits
+
+
+@pytest.mark.parametrize("partition_by", [None, "bucket"])
+def test_write_table_applies_policy(spark, tmp_path, partition_by):
+    """catalog._write_table over a tiny segment-shaped frame, with and
+    without a partition column: the rows round-trip and the files carry
+    the write policy."""
+    rows = [(f"t{i:02d}", i % 2, i, bytes([1 + i, 2, 3]) * (i + 1),
+             bytes([9, i + 1])) for i in range(20)]
+    df = spark.createDataFrame(
+        rows, "term string, bucket int, block_id long, payload binary, "
+              "pos_payload binary")
+    out = str(tmp_path / "t")
+    catalog._write_table(df.coalesce(1), out, partition_by=partition_by,
+                         bloom=True)
+    _assert_write_policy(_chunks(out))
+    got = sorted(tuple(r) for r in spark.read.parquet(out)
+                 .select("term", "bucket", "block_id", "payload",
+                         "pos_payload").collect())
+    assert got == sorted((t, b, k, bytearray(p), bytearray(q))
+                         for t, b, k, p, q in rows)
 
 
 def test_json_commit_is_atomic(tmp_path, monkeypatch):
