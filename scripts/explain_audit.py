@@ -1,9 +1,9 @@
 """Physical-plan audit: print .explain("formatted") for the engine's key
 plans and assert the properties that matter at 100 TB:
 
-* segment term lookup — bucket partition pruning + term predicate
-  pushdown reach the parquet scan; pos_payload column NOT read for
-  tf-only lookups (column pruning);
+* staged term lookup — bucket partition pruning + term predicate
+  pushdown reach the postings scan; the positions column is NOT read
+  for tf-only lookups (column pruning); no Python node decodes rows;
 * BM25 scoring — term_stats joined via BroadcastHashJoin; no doc_stats
   join (dl rides in postings); top-k is TakeOrderedAndProject;
 * postings build — exactly the intended shuffles (partial agg before
@@ -71,18 +71,21 @@ def main() -> int:
                 failures += 1
         sections.append((title, plan, results))
 
-    # 1. segment lookup
+    # 1. relational term lookup: a filter over the staged postings
     tmp = tempfile.mkdtemp(prefix="audit_idx_")
     catalog.build_durable_index(spark, docs, os.path.join(tmp, "idx"),
                                 buckets=16, block_span=64)
     idx = catalog.load_index(spark, os.path.join(tmp, "idx"))
     lookup = idx.lookup(["market", "price"])
     check(
-        "Segment term lookup (tf-only)", plan_of(lookup),
+        "Staged term lookup (tf-only)", plan_of(lookup),
         [
+            ("scan reads the staged postings", r"idx/postings_stage", True),
             ("bucket partition filter present", r"PartitionFilters: \[.*bucket", True),
             ("term predicate pushed to scan", r"PushedFilters: \[.*[Ii]n\(term", True),
-            ("pos_payload NOT in read schema", r"ReadSchema:.*pos_payload", False),
+            ("positions NOT in read schema", r"ReadSchema:.*positions", False),
+            ("no Python UDF node (no decode)",
+             r"MapInPandas|ArrowEvalPython|BatchEvalPython", False),
         ],
     )
 
@@ -1210,8 +1213,9 @@ def main() -> int:
     )
 
     # 51. next-word phrase index: a covered two-word phrase is ONE
-    # bucket/term-pruned scan + Arrow decode — no join, no shuffle
-    # (the positional path it replaces pays one hash join per term)
+    # bucket/term-pruned scan of the phrase postings — no decode, no
+    # join, no shuffle (the positional path it replaces pays one hash
+    # join per term)
     info51 = catalog.build_phrase_index(spark, os.path.join(tmp, "idx"),
                                         min_df=3)
     idx51 = catalog.load_index(spark, os.path.join(tmp, "idx"))
@@ -1220,6 +1224,7 @@ def main() -> int:
     check(
         "Next-word phrase lookup", p51,
         [
+            ("scan reads phrase_postings", r"idx/phrase_postings", True),
             ("bucket partition filter present",
              r"PartitionFilters: \[.*bucket", True),
             ("bigram term pushed to scan",
@@ -1227,6 +1232,8 @@ def main() -> int:
             ("no join (single posting lookup)",
              r"Join", False),
             ("no shuffle", r"\bExchange\b", False),
+            ("no Python UDF node (no decode)",
+             r"MapInPandas|ArrowEvalPython|BatchEvalPython", False),
         ],
     )
 
@@ -1267,8 +1274,8 @@ def main() -> int:
 
     # 54. chained k-word phrase (round-5, W&Z §4): a 3-word covered
     # phrase intersects TWO bigram postings from the phrase artifact —
-    # every scan reads phrase_segments (never the unigram segment
-    # store), positional payloads decode for the chain, bucket pruning
+    # every scan reads phrase_postings (never the unigram postings or
+    # segments), the chain reads their positions column, bucket pruning
     # + bigram term pushdown apply unchanged
     three = None
     for a in info51["terms"]:
@@ -1293,9 +1300,9 @@ def main() -> int:
             ("bigram terms (with space) pushed to scan",
              r"PushedFilters: \[.*[Ee]qual[Tt]o\(term,[^)]+ ", True),
             ("scans read the phrase artifact only",
-             r"phrase_segments", True),
-            ("no unigram segment-store scan",
-             r"idx/segments", False),
+             r"phrase_postings", True),
+            ("no unigram postings or segment scan",
+             r"idx/(segments|postings_stage)", False),
         ],
     )
 

@@ -130,42 +130,6 @@ def decode_block_full(payload: bytes):
     return docs, tfs, dls
 
 
-def encode_positions(positions_flat: np.ndarray, counts: np.ndarray) -> bytes:
-    """Positional payload for a block: varint([counts…, deltas-per-doc…]).
-
-    ``positions_flat`` is the concatenation of each doc's sorted 1-based
-    position list; ``counts`` the per-doc list lengths (== tf)."""
-    positions_flat = np.asarray(positions_flat, dtype=np.int64)
-    counts = np.asarray(counts, dtype=np.int64)
-    if len(positions_flat) == 0:
-        return vb_encode(np.array([0], dtype=np.int64))
-    # delta within each doc's run: subtract previous, reset at run starts
-    deltas = np.diff(positions_flat, prepend=0)
-    starts = np.zeros(len(counts), dtype=np.int64)
-    starts[1:] = np.cumsum(counts)[:-1]
-    deltas[starts] = positions_flat[starts]
-    stream = np.concatenate([np.array([len(counts)], dtype=np.int64), counts, deltas])
-    return vb_encode(stream)
-
-
-def decode_positions(payload: bytes) -> tuple[np.ndarray, np.ndarray]:
-    """→ (counts per doc, positions_flat). Inverse of encode_positions."""
-    stream = vb_decode(payload)
-    ndocs = int(stream[0])
-    if ndocs == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    counts = stream[1 : 1 + ndocs]
-    deltas = stream[1 + ndocs :].copy()
-    # prefix-sum within runs: global cumsum minus offset trick
-    ends = np.cumsum(counts)
-    starts = ends - counts
-    csum = np.cumsum(deltas)
-    base = np.zeros(len(deltas), dtype=np.int64)
-    base[starts[1:]] = csum[ends[:-1] - 1]
-    positions = csum - np.maximum.accumulate(base)
-    return np.asarray(counts, dtype=np.int64), positions
-
-
 # ---------------------------------------------------------------------------
 # Quantized-impact posting block (Anh & Moffat 2005, "Simplified
 # similarity scoring using term ranks" / the impact-sorted-index line of

@@ -51,7 +51,7 @@ def phrase_occurrences(index: InvertedIndex, phrase_terms: list[str]) -> DataFra
 
     Phrases covered by a committed NEXT-WORD index
     (catalog.build_phrase_index, Williams & Zobel 2004) serve from
-    bigram postings instead of decoding the words' full positional
+    bigram postings instead of reading the words' full positional
     postings — common-word phrases are exactly where the positional
     intersection is expensive. A TWO-word phrase is ONE tf-only bigram
     lookup; an m-word phrase (W&Z §4) intersects the positions of its

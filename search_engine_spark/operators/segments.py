@@ -1,4 +1,4 @@
-"""Posting-segment encode/decode: delta+varint blocks with block-max
+"""Posting-segment encode: delta+varint blocks with block-max
 metadata (SURVEY §2.4 C1-C5; reference compression.py:48-65 +
 index_hasher word2byte, replaced by columnar layout + pruning).
 
@@ -16,8 +16,10 @@ Layout decisions (scale rationale):
   deterministic and doc-ordered.
 * per-block ``max_tf`` and ``max_score`` (BM25 upper bound at dl→0:
   idf·(k1+1)·tf_max/(tf_max+k1·(1−b))) enable Block-Max WAND pruning.
-* payload = varint([n, doc₀, Δdocs…, tfs…]); positions payload separate
-  (column pruning: non-phrase queries never read it).
+* payload = varint([n, doc₀, Δdocs…, tfs…, dls…]). Blocks carry no
+  positions: the staged postings table is the one positional table
+  (catalog.SegmentIndex.lookup reads it), so segments are the
+  kernel's tf-only converted index (reference index_converter.py).
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ import math
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (BinaryType, DoubleType, IntegerType, LongType,
+from pyspark.sql.types import (BinaryType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 from .. import codec
@@ -41,7 +43,6 @@ SEGMENT_SCHEMA = StructType([
     StructField("max_doc_id", LongType()),
     StructField("block_max_tf", IntegerType()),
     StructField("payload", BinaryType()),
-    StructField("pos_payload", BinaryType()),
 ])
 
 DEFAULT_BUCKETS = 64
@@ -56,18 +57,15 @@ def bm25_upper_bound(df: int, n_docs: int, max_tf: int,
 
 
 def encode_segments(postings: DataFrame, buckets: int = DEFAULT_BUCKETS,
-                    block_span: int = DEFAULT_BLOCK_SPAN,
-                    positional: bool = True) -> DataFrame:
-    """postings (term, doc_id, tf[, positions]) → segment blocks.
+                    block_span: int = DEFAULT_BLOCK_SPAN) -> DataFrame:
+    """postings (term, doc_id, tf[, dl]) → segment blocks.
 
     One shuffle (groupBy term, block_id — bounded groups), Arrow-batched
     encode in applyInPandas. The reference encoder: no build runs it;
     tests compare ``encode_sorted``'s blocks against it.
     """
-    has_pos = positional and "positions" in postings.columns
     has_dl = "dl" in postings.columns
-    cols = ["term", "doc_id", "tf"] + (["dl"] if has_dl else []) \
-        + (["positions"] if has_pos else [])
+    cols = ["term", "doc_id", "tf"] + (["dl"] if has_dl else [])
     base = postings.select(*cols).withColumn(
         "bucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast(IntegerType())
     ).withColumn("block_id", (F.col("doc_id") / F.lit(block_span)).cast(LongType()))
@@ -78,15 +76,6 @@ def encode_segments(postings: DataFrame, buckets: int = DEFAULT_BUCKETS,
         tfs = pdf["tf"].to_numpy()
         dls = pdf["dl"].to_numpy() if has_dl else None
         payload = codec.encode_block(docs, tfs, dls)
-        if has_pos:
-            counts = [len(p) for p in pdf["positions"]]
-            flat = [x for p in pdf["positions"] for x in p]
-            import numpy as np
-            pos_payload = codec.encode_positions(
-                np.asarray(flat, dtype="int64"), np.asarray(counts, dtype="int64")
-            )
-        else:
-            pos_payload = b""
         return pd.DataFrame([{
             "term": pdf["term"].iloc[0],
             "bucket": int(pdf["bucket"].iloc[0]),
@@ -96,13 +85,12 @@ def encode_segments(postings: DataFrame, buckets: int = DEFAULT_BUCKETS,
             "max_doc_id": int(docs[-1]),
             "block_max_tf": int(tfs.max()),
             "payload": payload,
-            "pos_payload": pos_payload,
         }])
 
     return base.groupBy("term", "block_id").applyInPandas(encode, SEGMENT_SCHEMA)
 
 
-def encode_sorted(postings: DataFrame, positional: bool = True) -> DataFrame:
+def encode_sorted(postings: DataFrame) -> DataFrame:
     """Shuffle-FREE segment encoder for postings that are already
     range-partitioned by (bucket, term, block_id) and sorted within
     partitions by (bucket, term, block_id, doc_id) — the exact layout the
@@ -120,16 +108,14 @@ def encode_sorted(postings: DataFrame, positional: bool = True) -> DataFrame:
     straddles a partition boundary; group size is bounded by block
     occupancy ≤ block_span (the doc-partitioned-block skew bound).
 
-    Requires columns: term, doc_id, tf, bucket, block_id [, dl]
-    [, positions]. Rows within each group must be doc_id-ascending
+    Requires columns: term, doc_id, tf, bucket, block_id [, dl]. Rows within each group must be doc_id-ascending
     (delta encoding depends on it) — guaranteed by the sort.
     """
     import numpy as np
 
-    has_pos = positional and "positions" in postings.columns
     has_dl = "dl" in postings.columns
     cols = ["term", "bucket", "block_id", "doc_id", "tf"] \
-        + (["dl"] if has_dl else []) + (["positions"] if has_pos else [])
+        + (["dl"] if has_dl else [])
 
     def encode_stream(batches):
         carry: pd.DataFrame | None = None
@@ -138,28 +124,17 @@ def encode_sorted(postings: DataFrame, positional: bool = True) -> DataFrame:
             docs_all = pdf["doc_id"].to_numpy()
             tfs_all = pdf["tf"].to_numpy()
             dls_all = pdf["dl"].to_numpy() if has_dl else None
-            pos_all = pdf["positions"].to_numpy() if has_pos else None
             terms = pdf["term"].to_numpy()
             buckets_ = pdf["bucket"].to_numpy()
             blocks_ = pdf["block_id"].to_numpy()
             out = {k: [] for k in ("term", "bucket", "block_id", "n_docs",
                                    "min_doc_id", "max_doc_id",
-                                   "block_max_tf", "payload", "pos_payload")}
+                                   "block_max_tf", "payload")}
             bounds = list(starts) + [len(pdf)]
             for s, e in zip(bounds[:-1], bounds[1:]):
                 docs, tfs = docs_all[s:e], tfs_all[s:e]
                 payload = codec.encode_block(
                     docs, tfs, dls_all[s:e] if has_dl else None)
-                if has_pos:
-                    plist = pos_all[s:e]
-                    counts = np.fromiter((len(p) for p in plist),
-                                         dtype="int64", count=e - s)
-                    flat = (np.concatenate([np.asarray(p, dtype="int64")
-                                            for p in plist])
-                            if counts.sum() else np.empty(0, dtype="int64"))
-                    pos_payload = codec.encode_positions(flat, counts)
-                else:
-                    pos_payload = b""
                 out["term"].append(terms[s])
                 out["bucket"].append(int(buckets_[s]))
                 out["block_id"].append(int(blocks_[s]))
@@ -168,7 +143,6 @@ def encode_sorted(postings: DataFrame, positional: bool = True) -> DataFrame:
                 out["max_doc_id"].append(int(docs[-1]))
                 out["block_max_tf"].append(int(tfs.max()))
                 out["payload"].append(payload)
-                out["pos_payload"].append(pos_payload)
             return pd.DataFrame(out)
 
         for pdf in batches:
@@ -196,7 +170,7 @@ def encode_sorted(postings: DataFrame, positional: bool = True) -> DataFrame:
 
 
 def quantize_blocks(segments: DataFrame, n_docs: int, total_len: int,
-                    bits: int = 8, keep_positions: bool = False) -> DataFrame:
+                    bits: int = 8) -> DataFrame:
     """tf/dl segment blocks → quantized-impact blocks (same schema).
 
     mapInPandas over block rows: decode each payload (must be
@@ -208,15 +182,7 @@ def quantize_blocks(segments: DataFrame, n_docs: int, total_len: int,
     impact-ordered cap) works unchanged on the quantized store.
     ``block_max_tf`` becomes the block's max IMPACT: for impact stores
     the kernels' range bound is idf·(k1+1)·max_impact/maxq — EXACT for
-    the quantized scores (tighter than the tf store's dl→0 bound).
-    ``pos_payload`` is DROPPED (emitted empty) by default: nothing reads
-    positions from an impact store — phrase/proximity queries route
-    through the source sidecar (SegmentIndex.lookup's impact branch and
-    bigram_lookup), and on positional builds the positional payloads
-    typically dominate index size, which would defeat the whole
-    ~1 byte/posting point of the artifact. ``keep_positions=True``
-    restores the pass-through for callers that want a self-contained
-    copy."""
+    the quantized scores (tighter than the tf store's dl→0 bound)."""
     from . import scoring
 
     if not 2 <= bits <= 16:
@@ -243,70 +209,6 @@ def quantize_blocks(segments: DataFrame, n_docs: int, total_len: int,
             out = pdf.copy()
             out["payload"] = payloads
             out["block_max_tf"] = np.asarray(maxima, dtype="int32")
-            if not keep_positions:
-                out["pos_payload"] = [b""] * len(out)
             yield out
 
     return segments.mapInPandas(convert, SEGMENT_SCHEMA)
-
-
-DECODED_SCHEMA = StructType([
-    StructField("term", StringType()),
-    StructField("doc_id", LongType()),
-    StructField("tf", IntegerType()),
-    StructField("dl", IntegerType()),
-])
-
-
-def decode_segments(segments: DataFrame, positional: bool = False,
-                    has_dl: bool = True) -> DataFrame:
-    """segment blocks → postings rows (term, doc_id, tf[, dl][, positions]).
-
-    mapInPandas: each Arrow batch of blocks explodes to posting rows with
-    numpy decode — no per-row Python.
-
-    ``has_dl=False`` (segments encoded from dl-less postings) omits the
-    dl column entirely so downstream scoring falls back to the doc_stats
-    join — NEVER fabricate dl=0, which would silently zero the BM25
-    length norm. A mismatch between the flag and the payload raises.
-    """
-    import numpy as np
-    from pyspark.sql.types import ArrayType
-
-    fields = list(DECODED_SCHEMA.fields)
-    if not has_dl:
-        fields = [f for f in fields if f.name != "dl"]
-    if positional:
-        fields = fields + [StructField("positions", ArrayType(IntegerType()))]
-    out_schema = StructType(fields)
-
-    def decode(batches):
-        for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                docs, tfs, dls = codec.decode_block_full(row["payload"])
-                if has_dl and dls is None:
-                    raise ValueError(
-                        "segment payload carries no dl run but has_dl=True "
-                        "was requested — decode with has_dl=False (scoring "
-                        "will join doc_stats instead)")
-                d = {"term": row["term"], "doc_id": docs,
-                     "tf": tfs.astype("int32")}
-                if has_dl:
-                    d["dl"] = dls.astype("int32")
-                if positional:
-                    pp = row["pos_payload"]
-                    if pp is None or len(pp) == 0:
-                        raise ValueError(
-                            "segment block has no positional payload "
-                            "(encoded with positional=False) — phrase/"
-                            "proximity queries need a positional build")
-                    counts, flat = codec.decode_positions(pp)
-                    splits = np.split(flat.astype("int32"), np.cumsum(counts)[:-1])
-                    d["positions"] = [list(map(int, s)) for s in splits]
-                frames.append(pd.DataFrame(d))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    cols = ["term", "payload"] + (["pos_payload"] if positional else [])
-    return segments.select(*cols).mapInPandas(decode, out_schema)

@@ -8,10 +8,15 @@ touching the plan):
 
     index_dir/
       stats.json                 corpus scalars + build config
-      postings_stage/            postings parquet, partitioned by bucket
+      postings_stage/bucket=B/   postings (term, doc_id, tf, dl
+                                 [, positions]): the one relational and
+                                 positional table (SegmentIndex.lookup)
       doc_stats/  term_stats/  vsm_norms/   parquet side tables
-      segments/bucket=B/         encoded blocks
-      phrase_segments/bucket=B/  next-word blocks (build_phrase_index)
+      segments/bucket=B/         tf/dl blocks, no positions: the serving
+                                 kernels' tf-only converted index
+      phrase_postings/bucket=B/  next-word postings (term = "w1 w2",
+                                 doc_id, tf, dl, positions)
+                                 (build_phrase_index)
       term_trigrams/gbucket=G/   vocabulary trigrams (build_term_ngram_index)
       ann_centroids/  ann_codebooks/  ann_coded/cell=C/
                                  IVF+PQ artifacts (build_ann_index)
@@ -27,10 +32,10 @@ directory ``sidecar_dir`` names (``SegmentIndex.source_dir``).
 
 Write policy: every table above is written by ``_write_table``, with
 one set of parquet writer keys (``WRITE_POLICY``): zstd pages, and no
-min/max statistics on the ``payload`` and ``pos_payload`` columns.
-Those two columns hold opaque varint blobs; no reader filters on them,
-yet their min/max copies (whole short blobs, in every footer and page
-index) were ~11% of the segment files' bytes. Statistics stay on the
+min/max statistics on the segments' ``payload`` column. It holds
+opaque varint blobs; no reader filters on it, yet the min/max copies
+of such blobs (whole short blobs, in every footer and page index) were
+~11% of the segment files' bytes. Statistics stay on the
 columns that prune: ``term`` (the Arrow miss read and Spark's
 row-group filter) and ``block_id``; ``bucket`` prunes by directory.
 The term-addressed tables add the ``TERM_BLOOM`` keys. Parquet records
@@ -92,13 +97,12 @@ TERM_BLOOM = {
 
 
 #: the parquet writer keys of every catalog table (``_write_table``):
-#: zstd pages, and no column-chunk or page min/max on the two opaque
-#: varint blob columns, which no reader filters on. A key naming a
-#: column the table lacks is ignored.
+#: zstd pages, and no column-chunk or page min/max on the opaque
+#: varint ``payload`` column, which no reader filters on. A key naming
+#: a column the table lacks is ignored.
 WRITE_POLICY = {
     "compression": "zstd",
     "parquet.column.statistics.enabled#payload": "false",
-    "parquet.column.statistics.enabled#pos_payload": "false",
 }
 
 
@@ -388,8 +392,7 @@ def build_durable_index(
                     "block_id",
                     (F.col("doc_id") / F.lit(block_span)).cast("long")),
                     "bucket", "term", "block_id", tiebreak="doc_id")
-            seg = SEG.encode_sorted(src, positional=positional) \
-                .persist(StorageLevel.MEMORY_AND_DISK)
+            seg = SEG.encode_sorted(src).persist(StorageLevel.MEMORY_AND_DISK)
             try:
                 # encode partitions each cover a narrow contiguous
                 # (bucket, term) range, so this write touches 1-2 bucket
@@ -488,7 +491,7 @@ class MiniBlock:
 
 
 #: segment columns a mini-index miss ships to the driver, in
-#: ``MiniBlock`` constructor order (``pos_payload`` is never read)
+#: ``MiniBlock`` constructor order
 _MINI_COLUMNS = ("term", "block_id", "block_max_tf", "n_docs", "payload")
 
 
@@ -509,10 +512,11 @@ def _read_doc_ids(paths: list[str], limit: int) -> frozenset[int]:
 
 
 class SegmentIndex(InvertedIndex):
-    """InvertedIndex backed by on-disk segments: term lookups decode only
-    the matching blocks (bucket partition pruning + term predicate
-    pushdown — the columnar replacement for the reference's word2byte
-    byte-range reads, index_loader.py:71-128).
+    """InvertedIndex backed by a durable catalog. Relational term
+    lookups read the staged postings' matching rows (bucket partition
+    pruning + term predicate pushdown — the columnar replacement for
+    the reference's word2byte byte-range reads, index_loader.py:71-128);
+    the serving kernels read the tf-only segment blocks.
 
     Opening is lazy. The constructor reads only the JSON manifests
     (stats.json and manifest rows) on the driver; each Spark frame —
@@ -649,10 +653,10 @@ class SegmentIndex(InvertedIndex):
         return self.spark.read.parquet(self.table_path("vsm_norms"))
 
     @cached_property
-    def _phrase_segments(self) -> DataFrame | None:
+    def _phrase_postings(self) -> DataFrame | None:
         if self._phrase_meta is None:
             return None
-        return self.spark.read.parquet(self.table_path("phrase_segments"))
+        return self.spark.read.parquet(self.table_path("phrase_postings"))
 
     @cached_property
     def _term_trigrams(self) -> DataFrame | None:
@@ -763,20 +767,32 @@ class SegmentIndex(InvertedIndex):
         against a pre-positional (tf-only) artifact (callers fall back to
         the positional unigram intersection; results are identical either
         way, this only changes the plan). Same bucket/term-pruned scan
-        and tombstone exclusion as unigram lookup(). ``positional`` is
-        what lets a k-word phrase chain m-1 bigram postings (Williams &
-        Zobel §4) instead of decoding m common unigrams."""
+        and tombstone exclusion as unigram lookup() (``_term_rows``).
+        ``positional`` is what lets a k-word phrase chain m-1 bigram
+        postings (Williams & Zobel §4) instead of reading m common
+        unigrams' positions."""
         if not self.bigram_covered(t1, t2, positional):
             return None
-        bigram = f"{t1} {t2}"
-        blocks = self._phrase_segments.filter(
-            F.col("bucket").isin(self._buckets_for([bigram]))
-            & (F.col("term") == bigram))
-        decoded = SEG.decode_segments(blocks, positional=positional)
+        return self._term_rows(self._phrase_postings, [f"{t1} {t2}"],
+                               positional)
+
+    def _term_rows(self, table: DataFrame, terms: list[str],
+                   positional: bool) -> DataFrame:
+        """(term, doc_id, tf, dl[, positions]) rows of ``terms`` in a
+        bucket-partitioned postings table, deleted docs excluded: the
+        bucket partition filter and the term pushdown prune the scan,
+        and a broadcast anti-join drops tombstoned docs. Every
+        relational query path (free-text, phrase, boolean, proximity,
+        VSM, LM) reads its postings through here."""
+        rows = table.filter(
+            F.col("bucket").isin(self._buckets_for(terms))
+            & F.col("term").isin(terms)
+        ).select("term", "doc_id", "tf", "dl",
+                 *(["positions"] if positional else []))
         if self._tombstones is not None:
-            decoded = decoded.join(F.broadcast(self._tombstones),
-                                   "doc_id", "left_anti")
-        return decoded
+            rows = rows.join(F.broadcast(self._tombstones), "doc_id",
+                             "left_anti")
+        return rows
 
     def trigram_candidates(self, pattern: str) -> DataFrame | None:
         """(term, df) SUPERSET of the vocabulary terms matching a
@@ -883,35 +899,11 @@ class SegmentIndex(InvertedIndex):
             raise ValueError(
                 f"index at {self.index_dir} was built positional=False; "
                 "phrase/proximity queries need a positional build")
-        if self.store == "impact":
-            # tf/dl are not recoverable from quantized blocks — the
-            # relational paths (free-text/phrase/boolean/VSM/LM) read
-            # the SOURCE postings instead and score EXACT (unquantized)
-            # weights; the quantized scores are the serving kernel's
-            # (search_maxscore) and the explicit search_quantized path.
-            # Same bucket pruning as the segment scan — the stage is
-            # partitioned by bucket too.
-            cols = ["term", "doc_id", "tf", "dl"]
-            decoded = self.postings.filter(
-                F.col("bucket").isin(self._buckets_for(terms))
-                & F.col("term").isin(terms)
-            ).select(*cols + (["positions"] if positional else []))
-            if self._tombstones is not None:
-                decoded = decoded.join(F.broadcast(self._tombstones),
-                                       "doc_id", "left_anti")
-            return decoded
-        blocks = self.segments.filter(
-            F.col("bucket").isin(self._buckets_for(terms))
-            & F.col("term").isin(terms)
-        )
-        decoded = SEG.decode_segments(blocks, positional=positional)
-        if self._tombstones is not None:
-            # broadcast anti-join: every relational query path goes
-            # through lookup(), so this one exclusion covers free-text,
-            # phrase, boolean, proximity, VSM and LM scoring
-            decoded = decoded.join(F.broadcast(self._tombstones),
-                                   "doc_id", "left_anti")
-        return decoded
+        # the staged postings (the source's, on an impact store) are the
+        # one relational table, so the relational paths score EXACT
+        # tf/dl weights on either store; the quantized scores are the
+        # serving kernel's (search_maxscore) and search_quantized's
+        return self._term_rows(self.postings, terms, positional)
 
     def mini_index(self, terms: list[str], cap: int | None = None,
                    stats: dict | None = None,
@@ -1106,8 +1098,8 @@ def quantize_index(spark: SparkSession, index_dir: str, out_dir: str,
     (codec.encode_block_impact); serving then scores
     idf·(k1+1)·q/maxq with NO doc-length data — smaller payloads,
     fewer decode bytes, and an EXACT per-block bound for MaxScore
-    pruning (block_max_tf holds the block's max impact). Positions pass
-    through unchanged, so phrase/proximity queries still work.
+    pruning (block_max_tf holds the block's max impact). Phrase and
+    proximity queries read positions from the source's staged postings.
 
     The artifact is segments + stats.json + its ``quantize_complete``
     row ONLY: every side table, artifact and tombstone batch resolves
@@ -1164,7 +1156,7 @@ def build_phrase_index(spark: SparkSession, index_dir: str,
     combined indexes" (TOIS 2004, public): store postings for two-word
     phrases whose BOTH words are common (df ≥ ``min_df``), because
     common-word phrases ("big data") are exactly the ones whose
-    positional intersection is expensive — each side decodes a head
+    positional intersection is expensive — each side reads a head
     term's full postings. A covered phrase then serves from ONE pruned
     posting lookup (tf = the consecutive-occurrence count, dl riding
     along join-free), while rare-word phrases keep the cheap positional
@@ -1174,9 +1166,11 @@ def build_phrase_index(spark: SparkSession, index_dir: str,
     Build shape (one extra linear pass, no re-tokenize): the staged
     postings of common terms explode to (doc_id, pos, term) rows; a
     self-join on (doc_id, pos+1) yields bigram instances; groupBy
-    counts them; the bigram postings are block-encoded with the SAME
-    segment machinery (term = "w₁ w₂", bucket = hash(bigram), parquet
-    min/max + bloom pruning all apply unchanged). Restricting both
+    counts them; the bigram postings (term = "w₁ w₂", doc_id, tf, dl,
+    positions) are laid out and written the way merge writes the staged
+    postings (bucket = hash(bigram), one range exchange, parquet
+    min/max + bloom pruning), so ``bigram_lookup`` is the same filter
+    as ``lookup``. Restricting both
     sides to common terms bounds the explode to the head of the
     vocabulary — the join is on (doc_id, pos), an equi-join Spark
     shuffles on doc_id, never a cross product.
@@ -1224,9 +1218,9 @@ def build_phrase_index(spark: SparkSession, index_dir: str,
         # positions of each bigram instance (= the FIRST word's position)
         # ride into the artifact: a phrase of m words then serves from the
         # positional intersection of its m-1 bigram postings — Williams &
-        # Zobel §4's longer-phrase evaluation — instead of decoding m
+        # Zobel §4's longer-phrase evaluation — instead of reading m
         # common unigrams' full positional postings. Two-word phrases keep
-        # reading tf only (column pruning skips the positional payload).
+        # reading tf only (column pruning skips the positions column).
         bigrams = (
             a.join(b, ["doc_id", "pos"])
             .groupBy("t1", "t2", "doc_id", "dl")
@@ -1235,24 +1229,14 @@ def build_phrase_index(spark: SparkSession, index_dir: str,
             .select(F.concat_ws(" ", "t1", "t2").alias("term"),
                     "doc_id", "tf", "dl", "positions")
         )
-        # fused encode, same shape as the main build: ONE range exchange
-        # establishes the consecutive-run layout, then the shuffle-free
-        # vectorized encoder. encode_segments' per-group applyInPandas pays
-        # a pandas-frame construction per (bigram, block) — bigram
-        # vocabularies are an order of magnitude wider than unigram ones
-        # (measured: the per-group path was ~30× the rest of this build)
-        buckets, block_span = meta["buckets"], meta["block_span"]
+        # the staged postings' layout: bucket-partitioned, term-sorted
+        # files (min/max + bloom pruning), one range exchange
         staged = bigrams.withColumn(
             "bucket",
-            F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
-        ).withColumn(
-            "block_id", (F.col("doc_id") / F.lit(block_span)).cast("long"))
+            F.pmod(F.xxhash64("term"), F.lit(meta["buckets"])).cast("int"))
         _write_table(
-            SEG.encode_sorted(range_layout(staged, "bucket", "term",
-                                           "block_id", tiebreak="doc_id"),
-                              positional=True)
-            .sortWithinPartitions("bucket", "term", "block_id"),
-            os.path.join(index_dir, "phrase_segments"),
+            range_layout(staged, "bucket", "term", "doc_id"),
+            os.path.join(index_dir, "phrase_postings"),
             partition_by="bucket", bloom=True)
         # the row is the artifact's only metadata: readers take coverage
         # from "terms"; "positional" says bigram positions are stored,

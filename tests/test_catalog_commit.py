@@ -79,7 +79,7 @@ def _phrase(spark, d):
     assert want, "the pair occurs in doc 2"
     catalog.build_phrase_index(spark, d, min_df=1)
     return (lambda: catalog.build_phrase_index(spark, d, min_df=3),
-            "phrase_segments", want)
+            "phrase_postings", want)
 
 
 def _trigram(spark, d):

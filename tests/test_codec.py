@@ -29,21 +29,6 @@ def test_block_roundtrip(postings):
     assert (d2 == docs).all() and (t2 == tfs).all()
 
 
-@given(
-    st.lists(
-        st.lists(st.integers(1, 50000), min_size=1, max_size=40, unique=True),
-        min_size=1, max_size=40,
-    )
-)
-@settings(max_examples=100, deadline=None)
-def test_positions_roundtrip(pos_lists):
-    pos_lists = [sorted(p) for p in pos_lists]
-    counts = np.array([len(p) for p in pos_lists], dtype=np.int64)
-    flat = np.array([x for p in pos_lists for x in p], dtype=np.int64)
-    c2, p2 = codec.decode_positions(codec.encode_positions(flat, counts))
-    assert (c2 == counts).all() and (p2 == flat).all()
-
-
 def test_empty_block():
     d, t = codec.decode_block(codec.encode_block(np.array([]), np.array([])))
     assert len(d) == 0 and len(t) == 0

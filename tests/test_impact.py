@@ -278,21 +278,6 @@ def test_quantize_missing_stats_is_diagnosed(tmp_path, spark):
         catalog.quantize_index(spark, d, str(tmp_path / "out"))
 
 
-def test_quantized_store_drops_positions(indexes):
-    # positions serve from the sidecar (lookup's impact branch), so the
-    # ~1 byte/posting artifact must not duplicate the positional
-    # payloads — on positional builds they dominate index size
-    from pyspark.sql import functions as F
-
-    src, quant = indexes
-    src_pos = src.segments.agg(
-        F.max(F.length("pos_payload"))).collect()[0][0]
-    assert src_pos > 0, "source build should be positional"
-    quant_pos = quant.segments.agg(
-        F.max(F.length("pos_payload"))).collect()[0][0]
-    assert quant_pos == 0
-
-
 def test_impact_store_validates_sidecar_at_open(tmp_path, spark, indexes):
     # sidecar_dir is persisted absolute; a moved/deleted source must be
     # diagnosed at open time, not as an opaque parquet failure later

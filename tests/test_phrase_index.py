@@ -10,6 +10,8 @@ integration; tombstone exclusion on the fast path.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from search_engine_spark.operators import executor as X
@@ -101,6 +103,30 @@ def test_uncovered_pair_falls_back(phrase_indexes):
     assert after.bigram_lookup("market", rare) is None
     # fallback still answers (positional path)
     PH.search_phrase(after, ["market", rare], k=5).collect()
+
+
+def _plan(df) -> str:
+    jvm = df.sparkSession.sparkContext._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
+@pytest.mark.parametrize("positional", [False, True])
+def test_relational_lookups_run_no_python(tiny_phrase_index, positional):
+    """Unigram and bigram lookups are plain filters over bucket-
+    partitioned postings tables: their plans hold no Python node (no
+    MapInPandas decode, no Arrow UDF), and scan the staged postings and
+    the phrase postings respectively."""
+    idx = tiny_phrase_index
+    unigram = _plan(idx.lookup(["alpha", "beta"], positional=positional))
+    bigram = _plan(idx.bigram_lookup("alpha", "beta",
+                                     positional=positional))
+    for plan in (unigram, bigram):
+        assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+        assert re.search(r"PartitionFilters: \[.*bucket", plan)
+    assert "postings_stage" in unigram
+    assert "phrase_postings" in bigram
 
 
 def test_executor_phrase_goes_through_fast_path(phrase_indexes):

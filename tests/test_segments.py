@@ -8,6 +8,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from search_engine_spark import codec
 from search_engine_spark.operators import maxscore as MS
 from search_engine_spark.operators import search as S
 from search_engine_spark.operators import segments as SEG
@@ -22,15 +23,19 @@ def index_dir(tmp_path_factory, spark, corpus_sdf):
 
 
 def test_segment_roundtrip(built_index, spark):
+    """Encoded blocks, collected and decoded as the serving kernel
+    decodes them (codec.decode_block_full), give back every posting's
+    tf and dl."""
     seg = SEG.encode_segments(built_index.postings, buckets=8, block_span=64)
-    back = SEG.decode_segments(seg, positional=True)
     want = {
-        (r.term, r.doc_id): (r.tf, list(r.positions))
+        (r.term, r.doc_id): (r.tf, r.dl)
         for r in built_index.postings.collect()
     }
-    got = {
-        (r.term, r.doc_id): (r.tf, list(r.positions)) for r in back.collect()
-    }
+    got = {}
+    for r in seg.collect():
+        docs, tfs, dls = codec.decode_block_full(bytes(r.payload))
+        for d, tf, dl in zip(docs, tfs, dls):
+            got[(r.term, int(d))] = (int(tf), int(dl))
     assert got == want
 
 
@@ -53,8 +58,21 @@ def test_durable_build_and_load(spark, index_dir, built_index, corpus_sdf):
            [(r.doc_id, round(r.score, 9)) for r in want]
 
 
-def test_pruned_lookup_parity(spark, index_dir, built_index):
-    idx = catalog.load_index(spark, index_dir)
+@pytest.fixture(scope="module")
+def impact_dir(tmp_path_factory, spark, index_dir):
+    return catalog.quantize_index(
+        spark, index_dir, str(tmp_path_factory.mktemp("segimpact") / "q"))
+
+
+@pytest.mark.parametrize("store", ["tf", "impact"])
+def test_pruned_lookup_parity(spark, request, store, built_index):
+    """A durable lookup returns the in-memory index's rows, with
+    positions and without, on a tf store and on its quantized store
+    (which reads its source's staged postings)."""
+    d = request.getfixturevalue(
+        {"tf": "index_dir", "impact": "impact_dir"}[store])
+    idx = catalog.load_index(spark, d)
+    assert idx.store == store
     for positional in (False, True):
         got = idx.lookup(["market", "germani"], positional=positional).collect()
         want = built_index.lookup(["market", "germani"], positional=positional).collect()
@@ -141,22 +159,6 @@ def test_vsm_norms_build_artifact(spark, index_dir, corpus_sdf):
     assert got == want
 
 
-def test_decode_positional_mismatch_raises_descriptive(spark, corpus_sdf):
-    """Requesting positions from a tf-only build must fail with an
-    actionable error, not an opaque executor IndexError."""
-    import pytest as _pt
-
-    from search_engine_spark.operators import postings as P
-    from search_engine_spark.functions.analyzer import AnalyzerConfig
-
-    post = P.build_postings(corpus_sdf.limit(20), AnalyzerConfig.simple(),
-                            positional=False)
-    seg = SEG.encode_segments(post, buckets=4, block_span=64,
-                              positional=False)
-    with _pt.raises(Exception, match="positional"):
-        SEG.decode_segments(seg, positional=True).collect()
-
-
 def test_resume_rejects_changed_build_config(spark, corpus_sdf, tmp_path):
     """A resume with a different analyzer/block_span must refuse instead
     of silently mixing incompatible artifacts into one index."""
@@ -195,7 +197,7 @@ def test_fused_build_matches_sharded(spark, index_dir):
 
     key = (lambda r: (r.term, r.block_id))
     val = (lambda r: (r.n_docs, r.min_doc_id, r.max_doc_id, r.block_max_tf,
-                      r.bucket, bytes(r.payload), bytes(r.pos_payload)))
+                      r.bucket, bytes(r.payload)))
     built = {key(r): val(r) for r in
              spark.read.parquet(os.path.join(index_dir, "segments")).collect()}
     staged = spark.read.parquet(os.path.join(index_dir, "postings_stage"))
@@ -220,14 +222,12 @@ def test_encode_sorted_equals_encode_segments(spark, built_index):
     old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        got = {(r.term, r.block_id): (r.n_docs, bytes(r.payload),
-                                      bytes(r.pos_payload))
+        got = {(r.term, r.block_id): (r.n_docs, bytes(r.payload))
                for r in SEG.encode_sorted(sorted_post).collect()}
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                        old_batch)
-    want = {(r.term, r.block_id): (r.n_docs, bytes(r.payload),
-                                   bytes(r.pos_payload))
+    want = {(r.term, r.block_id): (r.n_docs, bytes(r.payload))
             for r in SEG.encode_segments(
                 built_index.postings, buckets=8, block_span=64).collect()}
     assert got == want and got
@@ -251,7 +251,7 @@ def test_merge_indexes_equals_full_build(spark, corpus_sdf, tmp_path):
 
     key = (lambda r: (r.term, r.block_id))
     val = (lambda r: (r.n_docs, r.min_doc_id, r.max_doc_id, r.block_max_tf,
-                      r.bucket, bytes(r.payload), bytes(r.pos_payload)))
+                      r.bucket, bytes(r.payload)))
     merged = {key(r): val(r) for r in
               spark.read.parquet(os.path.join(dm, "segments")).collect()}
     full = {key(r): val(r) for r in
@@ -371,7 +371,7 @@ def _assert_write_policy(chunks):
     assert chunks
     assert {c[2] for c in chunks} == {"ZSTD"}, \
         sorted({(c[0].split(os.sep)[0], c[2]) for c in chunks})
-    blobs = [c for c in chunks if c[1] in ("payload", "pos_payload")]
+    blobs = [c for c in chunks if c[1] == "payload"]
     assert not [c for c in blobs if c[3]], "min/max on a varint blob column"
     terms = [c for c in chunks if c[1] == "term"]
     assert terms and all(c[3] for c in terms), "term chunks lost min/max"
@@ -386,7 +386,7 @@ def test_index_files_follow_write_policy(seg_index_dir):
     blobs, terms = _assert_write_policy(_chunks(seg_index_dir))
     tables = {c[0].split(os.sep)[0] for c in terms}
     assert {"segments", "postings_stage", "term_stats"} <= tables
-    assert {c[1] for c in blobs} == {"payload", "pos_payload"}
+    assert {c[0].split(os.sep)[0] for c in blobs} == {"segments"}
 
 
 def test_snappy_index_opens_resumes_and_vacuums(spark, corpus_sdf, tmp_path,
@@ -396,8 +396,7 @@ def test_snappy_index_opens_resumes_and_vacuums(spark, corpus_sdf, tmp_path,
     it serves, a resumed build re-derives its segments from the snappy
     staged postings, and a vacuum reads all of its side tables."""
     def segs(d):
-        return {(r.term, r.block_id): (r.n_docs, bytes(r.payload),
-                                       bytes(r.pos_payload))
+        return {(r.term, r.block_id): (r.n_docs, bytes(r.payload))
                 for r in spark.read.parquet(
                     os.path.join(d, "segments")).collect()}
 
@@ -437,20 +436,18 @@ def test_write_table_applies_policy(spark, tmp_path, partition_by):
     """catalog._write_table over a tiny segment-shaped frame, with and
     without a partition column: the rows round-trip and the files carry
     the write policy."""
-    rows = [(f"t{i:02d}", i % 2, i, bytes([1 + i, 2, 3]) * (i + 1),
-             bytes([9, i + 1])) for i in range(20)]
+    rows = [(f"t{i:02d}", i % 2, i, bytes([1 + i, 2, 3]) * (i + 1))
+            for i in range(20)]
     df = spark.createDataFrame(
-        rows, "term string, bucket int, block_id long, payload binary, "
-              "pos_payload binary")
+        rows, "term string, bucket int, block_id long, payload binary")
     out = str(tmp_path / "t")
     catalog._write_table(df.coalesce(1), out, partition_by=partition_by,
                          bloom=True)
     _assert_write_policy(_chunks(out))
     got = sorted(tuple(r) for r in spark.read.parquet(out)
-                 .select("term", "bucket", "block_id", "payload",
-                         "pos_payload").collect())
-    assert got == sorted((t, b, k, bytearray(p), bytearray(q))
-                         for t, b, k, p, q in rows)
+                 .select("term", "bucket", "block_id", "payload")
+                 .collect())
+    assert got == sorted((t, b, k, bytearray(p)) for t, b, k, p in rows)
 
 
 def test_json_commit_is_atomic(tmp_path, monkeypatch):

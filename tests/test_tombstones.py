@@ -99,7 +99,7 @@ def test_vacuum_equals_fresh_build_over_live_docs(spark, corpus_sdf,
         buckets=16)
 
     key = (lambda r: (r.term, r.block_id))
-    val = (lambda r: (r.n_docs, bytes(r.payload), bytes(r.pos_payload)))
+    val = (lambda r: (r.n_docs, bytes(r.payload)))
     got = {key(r): val(r) for r in
            spark.read.parquet(os.path.join(vac, "segments")).collect()}
     want = {key(r): val(r) for r in
