@@ -2,7 +2,7 @@
 
 spark-submit --py-files dist/engine.zip jobs/build_index.py \
     --input /data/documents_parquet --output /data/index \
-    [--buckets 64] [--block-span 131072] [--no-positions] \
+    [--buckets N] [--block-span 131072] [--no-positions] \
     [--analyzer full|simple] [--text-col text] [--html] [--resume/--no-resume] \
     [--phrase-index-min-df 100] [--ann-embeddings /data/emb_parquet]
 
@@ -10,7 +10,9 @@ Input: parquet with (doc_id, text, ...) — or, with --html, the input_hint
 web shape (url, warc_ts, html, ...) where doc_id is derived via
 xxhash64(url) and text is extracted from html by the vectorized UDF.
 The build is resumable: per-step lineage manifests make a re-run skip
-completed steps (see sources/catalog.py).
+completed steps (see sources/catalog.py). Without --buckets the bucket
+count is sized to the postings (one per 16,384, at most 64; see
+operators/segments.bucket_count); a resume keeps the recorded count.
 """
 
 from __future__ import annotations
@@ -26,7 +28,9 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--buckets", type=int, default=64)
+    ap.add_argument("--buckets", type=int, default=None,
+                    help="term-hash buckets per table (default: sized "
+                         "to the postings, at most 64)")
     ap.add_argument("--block-span", type=int, default=1 << 17)
     ap.add_argument("--no-positions", action="store_true")
     ap.add_argument("--analyzer", choices=["full", "simple"], default="full")

@@ -5,7 +5,9 @@ anyone debugs a slow query or plans a merge.
 spark-submit --py-files dist/engine.zip jobs/index_stats.py /data/index
 
 Reports: corpus scalars + store kind (tf / impact bits), committed
-optional artifacts (VSM norms, phrase index, trigram index), tombstone
+optional artifacts (VSM norms, phrase index, trigram index) and the
+artifacts to rebuild (a phrase index committed before its
+``phrase_postings`` table, which queries no longer read), tombstone
 batches + deleted fraction, per-bucket segment balance (blocks,
 postings, payload bytes, and the max/mean SKEW factor — the number
 that says whether the bucket hash still spreads the term mass), the
@@ -13,11 +15,14 @@ payload codec mix (varint / impact, from the
 self-describing payload tags), and the head of the df distribution.
 Everything is DataFrame aggregates over segment metadata and side
 tables — no payload decode, so the report is cheap even on a huge
-store (the codec mix reads 2 bytes per block payload). Two fields are
+store (the codec mix reads 2 bytes per block payload). Three fields are
 driver-side reads with no Spark job: the bytes on disk of each table
 directory (``on_disk_bytes``: the index's, and for a quantized store
-also its source's) and the parquet page codecs of the segment files,
-counted per column chunk from their footers (``parquet_codecs``).
+also its source's), the parquet files of each table directory
+(``parquet_files``, next to ``buckets``: a bucket-partitioned table
+writes at least one file per bucket) and the parquet page codecs of the
+segment files, counted per column chunk from their footers
+(``parquet_codecs``).
 """
 
 from __future__ import annotations
@@ -44,6 +49,15 @@ def on_disk_bytes(index_dir: str) -> dict:
     manifest, stats.json); they sum to ``dir_bytes(index_dir)``."""
     return {name: dir_bytes(os.path.join(index_dir, name))
             for name in sorted(os.listdir(index_dir))}
+
+
+def parquet_files(index_dir: str) -> dict:
+    """Parquet files under each table directory of ``index_dir``."""
+    return {name: sum(f.endswith(".parquet") for _, _, fs in
+                      os.walk(os.path.join(index_dir, name)) for f in fs)
+            for name in sorted(os.listdir(index_dir))
+            if os.path.isdir(os.path.join(index_dir, name))
+            and name != "manifest"}
 
 
 def parquet_codecs(table_dir: str) -> dict:
@@ -95,6 +109,11 @@ def collect_stats(spark, index_dir: str) -> dict:
         .otherwise("unknown").alias("codec"))
         .groupBy("codec").count().collect())
 
+    # a phrase row that names no table was committed before the
+    # phrase_postings layout: no query reads it until it is rebuilt
+    stale = (["phrase_index"] if catalog._done(src, "phrase_index")
+             and catalog._phrase_row(src) is None else [])
+
     head = [(r.term, int(r.df)) for r in idx.term_stats
             .orderBy(F.desc("df"), F.asc("term")).limit(10).collect()]
 
@@ -106,6 +125,7 @@ def collect_stats(spark, index_dir: str) -> dict:
         "total_len": meta["total_len"],
         "avgdl": round(meta["avgdl"], 2),
         "buckets": meta["buckets"],
+        "parquet_files": parquet_files(index_dir),
         "block_span": meta["block_span"],
         "positional": meta.get("positional", True),
         "n_terms": idx.vocabulary_size(),
@@ -117,7 +137,9 @@ def collect_stats(spark, index_dir: str) -> dict:
         "codec_mix": {r.codec: int(r["count"]) for r in mix_rows},
         "artifacts": sorted(
             a for a in ("vsm_norms", "phrase_index", "term_ngram_index",
-                        "ann_index") if catalog._done(src, a)),
+                        "ann_index")
+            if catalog._done(src, a) and a not in stale),
+        "rebuild": [f"{a}: run catalog.build_{a} again" for a in stale],
         "tombstone_batches": catalog.tombstone_batches(src),
         "deleted_fraction":
             round(catalog.deleted_fraction(spark, src), 4),

@@ -6,11 +6,13 @@ to an N-way Spark range exchange).
 spark-submit --py-files dist/engine.zip jobs/merge_index.py \
     --output /data/index_merged /data/index_a /data/index_b [...]
 
-Inputs must share the same build config (analyzer, buckets, block_span,
+Inputs must share the same build config (analyzer, block_span,
 positional) and have pairwise-disjoint doc_id sets — both validated up
-front. Corpus-global stats (df, cf, n_docs, avgdl, VSM norms) are
-recomputed over the union; resumable via the same per-step manifests as
-the batch build.
+front. Their bucket counts may differ: the union is re-bucketed, with
+the inputs' common requested count or else one sized to the live
+postings, as a fresh build would. Corpus-global stats (df, cf, n_docs,
+avgdl, VSM norms) are recomputed over the union; resumable via the same
+per-step manifests as the batch build.
 """
 
 from __future__ import annotations

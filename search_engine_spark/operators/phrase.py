@@ -59,8 +59,8 @@ def phrase_occurrences(index: InvertedIndex, phrase_terms: list[str]) -> DataFra
     array_intersect chain as the unigram path but over far rarer
     posting lists (|pos(wᵢwᵢ₊₁)| ≪ |pos(wᵢ)| for common words).
     phrase_tf is the same consecutive-occurrence count on every path
-    (identity pytest + driver gates); uncovered pairs or pre-positional
-    artifacts fall back to the unigram positional path."""
+    (identity pytest + driver gates); uncovered pairs fall back to the
+    unigram positional path."""
     if not phrase_terms:
         raise ValueError("empty phrase")
     if len(phrase_terms) == 2 and hasattr(index, "bigram_lookup"):

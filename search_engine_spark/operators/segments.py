@@ -7,7 +7,10 @@ Layout decisions (scale rationale):
 * ``bucket = pmod(xxhash64(term), B)`` — the segment table is written
   partitioned by bucket, so a query's term lookup prunes to |q| partitions
   (the Spark-native ``word2byte``: file-level pruning instead of byte
-  offsets).
+  offsets). B follows the postings (``bucket_count``): one bucket per
+  ``POSTINGS_PER_BUCKET`` postings, at most ``MAX_BUCKETS``, so a small
+  index (or a refresh delta) writes a few larger files instead of 64
+  small ones, each with its own footer, checksum file and commit.
 * ``block_id = doc_id // block_span`` — DOC-partitioned blocks, assigned
   arithmetically BEFORE any grouping. A stopword term's postings land in
   many independent (term, block_id) groups of bounded size, so the encode
@@ -45,8 +48,19 @@ SEGMENT_SCHEMA = StructType([
     StructField("payload", BinaryType()),
 ])
 
-DEFAULT_BUCKETS = 64
+#: the bucket count of a large index, and the cap of a sized one
+MAX_BUCKETS = 64
+#: postings per bucket of a build sized to its data (``bucket_count``):
+#: ~1M postings and above get ``MAX_BUCKETS``
+POSTINGS_PER_BUCKET = 16_384
 DEFAULT_BLOCK_SPAN = 1 << 17  # 131072 doc ids per block
+
+
+def bucket_count(n_postings: int) -> int:
+    """Bucket count of an index holding ``n_postings`` postings:
+    ``min(MAX_BUCKETS, max(1, ceil(n_postings / POSTINGS_PER_BUCKET)))``."""
+    return min(MAX_BUCKETS, max(1, -(-n_postings // POSTINGS_PER_BUCKET)))
+
 
 def bm25_upper_bound(df: int, n_docs: int, max_tf: int,
                      k1: float = 1.2, b: float = 0.75) -> float:
@@ -56,7 +70,7 @@ def bm25_upper_bound(df: int, n_docs: int, max_tf: int,
     return idf * (k1 + 1.0) * max_tf / (max_tf + k1 * (1.0 - b))
 
 
-def encode_segments(postings: DataFrame, buckets: int = DEFAULT_BUCKETS,
+def encode_segments(postings: DataFrame, buckets: int = MAX_BUCKETS,
                     block_span: int = DEFAULT_BLOCK_SPAN) -> DataFrame:
     """postings (term, doc_id, tf[, dl]) → segment blocks.
 

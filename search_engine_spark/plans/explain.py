@@ -99,9 +99,8 @@ def explain_plan(index, query: str, model: str = "bm25") -> dict[str, Any]:
                 if len(ph) == 2:
                     fast = index.bigram_covered(ph[0], ph[1])
                 elif len(ph) >= 3:
-                    fast = all(
-                        index.bigram_covered(a, b, positional=True)
-                        for a, b in zip(ph, ph[1:]))
+                    fast = all(index.bigram_covered(a, b)
+                               for a, b in zip(ph, ph[1:]))
             engaged.append({"phrase": ph, "slop": slop,
                             "next_word_index": bool(fast)})
         artifacts["phrases"] = engaged

@@ -7,14 +7,16 @@ catalog with the Iceberg runtime jar would swap ``_write_table``'s one
 touching the plan):
 
     index_dir/
-      stats.json                 corpus scalars + build config
-      postings_stage/bucket=B/   postings (term, doc_id, tf, dl
+      stats.json                 corpus scalars + build config (its
+                                 ``buckets`` is the count B every
+                                 reader hashes terms with)
+      postings_stage/bucket=b/   postings (term, doc_id, tf, dl
                                  [, positions]): the one relational and
                                  positional table (SegmentIndex.lookup)
       doc_stats/  term_stats/  vsm_norms/   parquet side tables
-      segments/bucket=B/         tf/dl blocks, no positions: the serving
+      segments/bucket=b/         tf/dl blocks, no positions: the serving
                                  kernels' tf-only converted index
-      phrase_postings/bucket=B/  next-word postings (term = "w1 w2",
+      phrase_postings/bucket=b/  next-word postings (term = "w1 w2",
                                  doc_id, tf, dl, positions)
                                  (build_phrase_index)
       term_trigrams/gbucket=G/   vocabulary trigrams (build_term_ngram_index)
@@ -23,6 +25,18 @@ touching the plan):
       tombstones/batch=N/        deleted doc ids, one batch per delete_docs
       manifest/<step>.json       one row per committed step; the segments
                                  row carries per-bucket detail
+
+Bucket rule: a term-addressed row lives in ``bucket = pmod(xxhash64(term),
+B)``. B is sized to the postings unless the build asks for a count:
+``SEG.bucket_count`` gives one bucket per ``SEG.POSTINGS_PER_BUCKET``
+postings, at most ``SEG.MAX_BUCKETS`` (64), so a 1k-doc index writes ~9
+bucket directories per table and a corpus of ~1M postings or more
+writes 64. The build counts the postings it has just analyzed (the job
+that persists them), records B in the ``postings_stage`` row and
+stats.json, and keeps the requested value (None = sized) in the
+``build_config`` row. A merge re-buckets its live union the same way,
+so merge, vacuum and refresh equal a fresh build. Indexes built before
+sizing recorded ``buckets: 64`` and keep it.
 
 A quantized-impact store (quantize_index) holds only ``segments/``,
 ``stats.json`` (the source's, plus ``store``, ``impact_bits`` and the
@@ -63,6 +77,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from contextlib import contextmanager
 from functools import cached_property
@@ -171,6 +186,20 @@ def _row(index_dir: str, step: str) -> dict | None:
         return None
 
 
+#: the phrase artifact's table, named in its ``phrase_index`` row
+PHRASE_TABLE = "phrase_postings"
+
+
+def _phrase_row(index_dir: str) -> dict | None:
+    """The committed ``phrase_index`` row if it names ``PHRASE_TABLE``,
+    else None: a row committed before that table existed describes an
+    artifact nothing reads, so the index has no phrase artifact until
+    ``build_phrase_index`` runs again."""
+    row = _row(index_dir, "phrase_index")
+    return row if row is not None and row.get("table") == PHRASE_TABLE \
+        else None
+
+
 @contextmanager
 def _step(index_dir: str, step: str):
     """The one commit rule of a step that writes data: remove the
@@ -227,12 +256,18 @@ def _build_args(cfg: dict) -> dict:
             "positional": cfg["positional"]}
 
 
+def _bucket_col(buckets: int):
+    """The bucket of a term-addressed row: ``pmod(xxhash64(term), B)``
+    (``SegmentIndex._buckets_for`` computes the same on the driver)."""
+    return F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
+
+
 def build_durable_index(
     spark: SparkSession,
     docs: DataFrame,
     index_dir: str,
     conf: AnalyzerConfig = AnalyzerConfig.full(),
-    buckets: int = SEG.DEFAULT_BUCKETS,
+    buckets: int | None = None,
     block_span: int = SEG.DEFAULT_BLOCK_SPAN,
     positional: bool = True,
     resume: bool = True,
@@ -246,9 +281,18 @@ def build_durable_index(
     (``SEG.encode_sorted``). The segments step records per-BUCKET
     lineage. Resume granularity is the step: an interrupted segments
     step is re-derived from the staged parquet with one fresh
-    exchange."""
+    exchange.
+
+    ``buckets=None`` (the default) sizes the bucket count to the
+    postings (``SEG.bucket_count``), counted on the persisted postings
+    before the exchange; an explicit count is kept as given. The count
+    used is recorded in the ``postings_stage`` row and in stats.json
+    (what every reader takes), and a resumed build takes it from the
+    row. The ``build_config`` row keeps the requested value; a resume
+    that requests None adopts the recorded one."""
+    if buckets is not None and buckets < 1:
+        raise ValueError(f"buckets must be >= 1 or None, got {buckets}")
     if not resume and os.path.exists(os.path.join(index_dir, "manifest")):
-        import shutil
         shutil.rmtree(index_dir)
     os.makedirs(os.path.join(index_dir, "manifest"), exist_ok=True)
 
@@ -258,6 +302,11 @@ def build_durable_index(
     # against old-analyzer tokens; mixed block spans break the kernel's
     # same-block-id-covers-same-doc-range invariant). The config commits
     # to the manifest up front and every re-run validates against it.
+    # (a resume that asks for no particular bucket count keeps the
+    # recorded one)
+    prev = _build_config(index_dir)
+    if buckets is None and prev is not None:
+        buckets = prev["buckets"]
     config = {
         "buckets": buckets, "block_span": block_span,
         "positional": positional,
@@ -265,7 +314,6 @@ def build_durable_index(
                      "remove_stopwords": conf.remove_stopwords,
                      "stem": conf.stem},
     }
-    prev = _build_config(index_dir)
     if prev is None:
         _record(index_dir, "build_config", config=config)
     elif prev != config:
@@ -280,11 +328,10 @@ def build_durable_index(
     # the sorted exchange output, persisted for the session:
     # segments/doc_stats/term_stats/vsm_norms all read it cache-hit
     sorted_post: DataFrame | None = None
-    if not _done(index_dir, "postings_stage"):
+    stage_row = _row(index_dir, "postings_stage")
+    if stage_row is None:
         with _step(index_dir, "postings_stage") as row:
             post = P.build_postings(docs, conf, positional=positional) \
-                .withColumn("bucket", F.pmod(F.xxhash64("term"),
-                                             F.lit(buckets)).cast("int")) \
                 .withColumn("block_id", (F.col("doc_id")
                                          / F.lit(block_span)).cast("long"))
             # Range-partition on (bucket, term, block_id) before the
@@ -304,24 +351,32 @@ def build_durable_index(
             # persist pre-exchange too: repartitionByRange runs a
             # boundary-SAMPLING job that would otherwise re-execute the
             # whole analysis pipeline (extract+tokenize+stem UDFs) a
-            # second time
+            # second time. The count is the job that materializes it,
+            # and sizes the bucket count before any row is bucketed.
             post_cache = post.persist(StorageLevel.MEMORY_AND_DISK)
-            sorted_post = range_layout(post_cache, "bucket", "term",
-                                       "block_id", tiebreak="doc_id") \
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            # block_id is derivable (doc_id // block_span) — keep the
-            # staged files free of it so readers of postings_stage see
-            # the plain postings schema
             try:
+                n_postings = post_cache.count()
+                n_buckets = buckets or SEG.bucket_count(n_postings)
+                sorted_post = range_layout(
+                    post_cache.withColumn("bucket", _bucket_col(n_buckets)),
+                    "bucket", "term", "block_id", tiebreak="doc_id") \
+                    .persist(StorageLevel.MEMORY_AND_DISK)
+                # block_id is derivable (doc_id // block_span) — keep the
+                # staged files free of it so readers of postings_stage see
+                # the plain postings schema
                 _write_table(sorted_post.drop("block_id"), stage_dir,
                              partition_by="bucket", bloom=True)
-                # cache hit — no parquet re-read job
-                row["rows"] = sorted_post.count()
             except BaseException:
-                sorted_post.unpersist()
+                if sorted_post is not None:
+                    sorted_post.unpersist()
                 raise
             finally:
                 post_cache.unpersist()   # its rows live on in sorted_post
+            row.update(rows=n_postings, buckets=n_buckets)
+        stage_row = row
+    # the bucket count the staged postings were written with; rows
+    # committed before it was recorded used the configured count
+    n_buckets = stage_row.get("buckets", buckets)
 
     def _build_doc_stats() -> None:
         if _done(index_dir, "stats"):
@@ -341,7 +396,7 @@ def build_durable_index(
             F.count("*").alias("n"), F.sum("dl").alias("t")).collect()[0]
         stats = {"n_docs": row["n"], "total_len": int(row["t"] or 0),
                  "avgdl": (row["t"] / row["n"]) if row["n"] else 0.0,
-                 **config}
+                 **config, "buckets": n_buckets}
         _write_json(os.path.join(index_dir, "stats.json"), stats)
         _record(index_dir, "stats")
 
@@ -432,7 +487,7 @@ def build_durable_index(
     finally:
         if sorted_post is not None:
             sorted_post.unpersist()
-    _record(index_dir, "build_complete", buckets=buckets)
+    _record(index_dir, "build_complete", buckets=n_buckets)
     return index_dir
 
 
@@ -589,8 +644,10 @@ class SegmentIndex(InvertedIndex):
         # progress) leaves data but no row, and must not load.
         # next-word phrase index (build_phrase_index): its row carries
         # the covered common terms, so coverage is decided DRIVER-SIDE —
-        # no Spark job to test a pair
-        self._phrase_meta = _row(src, "phrase_index")
+        # no Spark job to test a pair. A row that does not name the
+        # table layout (one committed before phrase_postings/ existed)
+        # is no artifact: phrases take the positional path
+        self._phrase_meta = _phrase_row(src)
         self._phrase_common: frozenset[str] = frozenset(
             self._phrase_meta["terms"] if self._phrase_meta else ())
         # character-trigram vocabulary index (build_term_ngram_index):
@@ -656,7 +713,7 @@ class SegmentIndex(InvertedIndex):
     def _phrase_postings(self) -> DataFrame | None:
         if self._phrase_meta is None:
             return None
-        return self.spark.read.parquet(self.table_path("phrase_postings"))
+        return self.spark.read.parquet(self.table_path(PHRASE_TABLE))
 
     @cached_property
     def _term_trigrams(self) -> DataFrame | None:
@@ -746,15 +803,12 @@ class SegmentIndex(InvertedIndex):
 
         return sorted({spark_bucket(t, self.meta["buckets"]) for t in terms})
 
-    def bigram_covered(self, t1: str, t2: str,
-                       positional: bool = False) -> bool:
+    def bigram_covered(self, t1: str, t2: str) -> bool:
         """True iff the committed phrase index serves "t1 t2" (both words
-        in its common-term coverage, and positions stored when asked
-        for). Decided from the driver-side metadata: no Spark job."""
+        in its common-term coverage). Decided from the driver-side
+        metadata: no Spark job."""
         return (self._phrase_meta is not None
-                and t1 in self._phrase_common and t2 in self._phrase_common
-                and (not positional
-                     or self._phrase_meta["positional"]))
+                and t1 in self._phrase_common and t2 in self._phrase_common)
 
     def bigram_lookup(self, t1: str, t2: str,
                       positional: bool = False) -> DataFrame | None:
@@ -762,16 +816,16 @@ class SegmentIndex(InvertedIndex):
         [, positions]) rows for the two-word phrase "t1 t2" where tf is
         its consecutive-occurrence count and positions (when requested)
         are the FIRST word's positions of each instance — or None when
-        ``bigram_covered`` is False: no phrase index is committed, either
-        word is outside its common-term coverage, or ``positional=True``
-        against a pre-positional (tf-only) artifact (callers fall back to
-        the positional unigram intersection; results are identical either
-        way, this only changes the plan). Same bucket/term-pruned scan
+        ``bigram_covered`` is False: no phrase index is committed, or
+        either word is outside its common-term coverage (callers fall
+        back to the positional unigram intersection; results are
+        identical either way, this only changes the plan). Same
+        bucket/term-pruned scan
         and tombstone exclusion as unigram lookup() (``_term_rows``).
         ``positional`` is what lets a k-word phrase chain m-1 bigram
         postings (Williams & Zobel §4) instead of reading m common
         unigrams' positions."""
-        if not self.bigram_covered(t1, t2, positional):
+        if not self.bigram_covered(t1, t2):
             return None
         return self._term_rows(self._phrase_postings, [f"{t1} {t2}"],
                                positional)
@@ -1231,17 +1285,18 @@ def build_phrase_index(spark: SparkSession, index_dir: str,
         )
         # the staged postings' layout: bucket-partitioned, term-sorted
         # files (min/max + bloom pruning), one range exchange
-        staged = bigrams.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("term"), F.lit(meta["buckets"])).cast("int"))
+        staged = bigrams.withColumn("bucket", _bucket_col(meta["buckets"]))
         _write_table(
             range_layout(staged, "bucket", "term", "doc_id"),
-            os.path.join(index_dir, "phrase_postings"),
+            os.path.join(index_dir, PHRASE_TABLE),
             partition_by="bucket", bloom=True)
-        # the row is the artifact's only metadata: readers take coverage
-        # from "terms"; "positional" says bigram positions are stored,
-        # so k-word phrases can chain bigram postings
-        row.update(min_df=min_df, max_terms=max_terms,
+        # the block-encoded artifact of earlier builds: nothing reads it
+        shutil.rmtree(os.path.join(index_dir, "phrase_segments"),
+                      ignore_errors=True)
+        # the row is the artifact's only metadata: readers take the
+        # table from "table" (_phrase_row) and coverage from "terms";
+        # "positional" says the bigram positions are stored
+        row.update(table=PHRASE_TABLE, min_df=min_df, max_terms=max_terms,
                    n_common_terms=len(common), terms=common,
                    positional=True)
     return row
@@ -1419,6 +1474,8 @@ def rebuild_artifacts(spark: SparkSession, src_dir: str,
     old quantized artifact keeps serving the OLD snapshot via its
     sidecar until the caller swaps it."""
     done = []
+    # a legacy row (no table name) still carries the parameters to
+    # rebuild with
     pmeta = _row(src_dir, "phrase_index")
     if pmeta is not None:
         build_phrase_index(spark, out_dir, min_df=pmeta["min_df"],
@@ -1566,9 +1623,14 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str],
     out)`` is the vacuum operation, and the output carries no
     tombstones. Test-gated identical to a fresh build over the live docs.
 
+    The union is re-bucketed: inputs may have different bucket counts,
+    and the output's is the inputs' common requested count, else (and
+    for sized inputs) ``SEG.bucket_count`` of the live union's exact
+    postings count — what a fresh build over the live union would use.
+
     Requirements validated up front: every input finished building
     (build_complete manifest), all inputs share the same analyzer /
-    buckets / block_span / positional config (mixing analyzers would mix
+    block_span / positional config (mixing analyzers would mix
     token vocabularies; mixing block spans breaks the kernel's block-range
     invariant), and LIVE doc_id sets are pairwise DISJOINT
     (doc-partitioned blocks assume one posting per (term, doc_id);
@@ -1585,12 +1647,20 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str],
     for d in index_dirs:
         _completed_tf_index(d, "merge_indexes")
         configs.append(_build_config(d))
+
+    def layout(cfg: dict) -> dict:
+        # everything but the bucket count, which the merge recomputes
+        return {k: v for k, v in cfg.items() if k != "buckets"}
+
     base = configs[0]
     for d, got in zip(index_dirs[1:], configs[1:]):
-        if got != base:
+        if layout(got) != layout(base):
             raise ValueError(
                 f"cannot merge indexes with different build configs: "
                 f"{index_dirs[0]} has {base}, {d} has {got}")
+    requested = {c["buckets"] for c in configs}
+    base = {**base, "buckets": requested.pop() if len(requested) == 1
+            else None}
 
     # tombstones of every input, applied physically below (the vacuum)
     from functools import reduce
@@ -1633,10 +1703,16 @@ def merge_indexes(spark: SparkSession, index_dirs: list[str],
                 lambda x, y: x.unionByName(y),
                 [spark.read.parquet(os.path.join(d, "postings_stage"))
                  for d in index_dirs]))
-            _write_table(range_layout(staged, "bucket", "term", "doc_id"),
-                         os.path.join(out_dir, "postings_stage"),
-                         partition_by="bucket", bloom=True)
-            row["sources"] = [os.path.abspath(d) for d in index_dirs]
+            # only a sized merge counts the live union
+            n_buckets = (base["buckets"]
+                         or SEG.bucket_count(staged.count()))
+            _write_table(range_layout(
+                staged.withColumn("bucket", _bucket_col(n_buckets)),
+                "bucket", "term", "doc_id"),
+                os.path.join(out_dir, "postings_stage"),
+                partition_by="bucket", bloom=True)
+            row.update(sources=[os.path.abspath(d) for d in index_dirs],
+                       buckets=n_buckets)
 
     # segments / term_stats / stats.json / vsm_norms run through the
     # normal build with its resumable manifests; docs is only read on

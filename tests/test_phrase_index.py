@@ -252,16 +252,75 @@ def test_kword_chain_ground_truth(chain_index):
     assert _occ(idx, ["gamma", "beta", "alpha"]) == []
 
 
-def test_kword_chain_fallback_identity(chain_index, monkeypatch):
-    """A pre-round-5 (tf-only) artifact reports longer chains uncovered;
-    the unigram positional fallback must answer identically."""
-    idx = chain_index
-    want = _occ(idx, ["alpha", "beta", "gamma"])
-    monkeypatch.setitem(idx._phrase_meta, "positional", False)
-    assert idx.bigram_lookup("alpha", "beta", positional=True) is None
-    # two-word lookups still serve (tf-only read)
+def test_kword_chain_through_uncovered_word(tmp_path, spark):
+    """A k-word phrase whose chain has one uncovered word (df below the
+    phrase index's min_df) takes the unigram positional path, and
+    answers what the chain would."""
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta delta alpha beta gamma"),
+            (2, "alpha beta alpha gamma"),
+            (3, "beta gamma alpha beta"),
+            (4, "alpha alpha beta beta gamma"),
+        ],
+        "doc_id long, text string",
+    )
+    d = str(tmp_path / "idx")
+    catalog.build_durable_index(spark, docs, d, buckets=8, block_span=16)
+    catalog.build_phrase_index(spark, d, min_df=2)
+    idx = catalog.load_index(spark, d)
+    assert idx.bigram_lookup("alpha", "beta", positional=True) is not None
+    assert idx.bigram_lookup("beta", "delta", positional=True) is None
+    assert _occ(idx, ["alpha", "beta", "delta"]) == [(1, 1)]
+    assert _occ(idx, ["beta", "delta", "alpha", "beta"]) == [(1, 1)]
+    # the covered chain on the same index
+    assert _occ(idx, ["alpha", "beta", "gamma"]) == [(1, 1)]
+
+
+def test_phrase_row_without_table_is_no_artifact(tmp_path, spark):
+    """A phrase_index row committed before the phrase_postings layout
+    (it names no table) is treated as no artifact: phrases take the
+    positional path with identical answers, index_stats says to
+    rebuild, and the rebuild removes the dead phrase_segments/ and
+    serves again."""
+    import json
+    import os
+
+    from jobs.index_stats import collect_stats
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta alpha beta"), (2, "alpha gamma beta")],
+        "doc_id long, text string")
+    d = str(tmp_path / "idx")
+    catalog.build_durable_index(spark, docs, d, buckets=8, block_span=16)
+    catalog.build_phrase_index(spark, d, min_df=1)
+    want = _occ(catalog.load_index(spark, d), ["alpha", "beta"])
+    assert want == [(1, 2)]
+
+    # the old layout: a row without "table", data in phrase_segments/
+    path = catalog._manifest_path(d, "phrase_index")
+    with open(path) as f:
+        row = json.load(f)
+    del row["table"]
+    with open(path, "w") as f:
+        json.dump(row, f)
+    os.rename(os.path.join(d, "phrase_postings"),
+              os.path.join(d, "phrase_segments"))
+
+    idx = catalog.load_index(spark, d)
+    assert not idx.bigram_covered("alpha", "beta")
+    assert idx.bigram_lookup("alpha", "beta") is None
+    assert _occ(idx, ["alpha", "beta"]) == want
+    rep = collect_stats(spark, d)
+    assert "phrase_index" not in rep["artifacts"]
+    assert rep["rebuild"] and "build_phrase_index" in rep["rebuild"][0]
+
+    catalog.build_phrase_index(spark, d, min_df=1)
+    assert not os.path.exists(os.path.join(d, "phrase_segments"))
+    idx = catalog.load_index(spark, d)
     assert idx.bigram_lookup("alpha", "beta") is not None
-    assert _occ(idx, ["alpha", "beta", "gamma"]) == want == [(1, 2)]
+    assert _occ(idx, ["alpha", "beta"]) == want
+    assert collect_stats(spark, d)["rebuild"] == []
 
 
 def test_kword_chain_excludes_tombstones(tmp_path, spark, chain_index):

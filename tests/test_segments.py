@@ -278,6 +278,124 @@ def test_merge_indexes_equals_full_build(spark, corpus_sdf, tmp_path):
         assert got == want and got, model
 
 
+def _segment_rows(spark, d):
+    key = (lambda r: (r.term, r.block_id))
+    val = (lambda r: (r.n_docs, r.min_doc_id, r.max_doc_id, r.block_max_tf,
+                      r.bucket, bytes(r.payload)))
+    return {key(r): val(r) for r in
+            spark.read.parquet(os.path.join(d, "segments")).collect()}
+
+
+def _parquet_files(table_dir):
+    return sum(f.endswith(".parquet") for _, _, fs in os.walk(table_dir)
+               for f in fs)
+
+
+def _stage_buckets(d):
+    return {r["step"]: r for r in catalog.lineage_rows(d)}[
+        "postings_stage"]["buckets"]
+
+
+def test_default_build_sizes_buckets(spark, corpus_sdf, tmp_path):
+    """A default build sizes B to its postings — min(64, ceil(postings /
+    POSTINGS_PER_BUCKET)) — and records it in the postings_stage row and
+    stats.json (the build_config row keeps the request, None); each
+    bucket-partitioned table then writes at most B + 2 x
+    defaultParallelism files. An explicit count is kept as given."""
+    d = str(tmp_path / "sized")
+    catalog.build_durable_index(spark, corpus_sdf, d)
+    rows = {r["step"]: r for r in catalog.lineage_rows(d)}
+    want = min(64, -(-rows["segments"]["postings"]
+                     // SEG.POSTINGS_PER_BUCKET))
+    assert rows["postings_stage"]["buckets"] == want
+    assert rows["postings_stage"]["rows"] == rows["segments"]["postings"]
+    assert rows["build_config"]["config"]["buckets"] is None
+    with open(os.path.join(d, "stats.json")) as f:
+        assert json.load(f)["buckets"] == want
+    assert rows["build_complete"]["buckets"] == want
+    most = want + 2 * spark.sparkContext.defaultParallelism
+    for table in ("postings_stage", "segments"):
+        assert 0 < _parquet_files(os.path.join(d, table)) <= most, table
+
+    e = str(tmp_path / "explicit")
+    catalog.build_durable_index(spark, corpus_sdf.limit(40), e, buckets=3)
+    assert _stage_buckets(e) == 3
+    with open(os.path.join(e, "stats.json")) as f:
+        assert json.load(f)["buckets"] == 3
+    assert {r.bucket for r in spark.read.parquet(
+        os.path.join(e, "segments")).select("bucket").distinct()
+        .collect()} == {0, 1, 2}
+
+
+def test_sized_buckets_serve_and_resume(spark, corpus_sdf, built_index,
+                                        tmp_path, monkeypatch):
+    """With POSTINGS_PER_BUCKET small, a default build spreads over
+    several buckets and its lookups still equal the in-memory index's
+    rows; a build killed after postings_stage resumes with the recorded
+    B even when the rule would now size it differently."""
+    monkeypatch.setattr(SEG, "POSTINGS_PER_BUCKET", 1000)
+    d = str(tmp_path / "multi")
+    catalog.build_durable_index(spark, corpus_sdf, d)
+    b = _stage_buckets(d)
+    assert b > 1
+    idx = catalog.load_index(spark, d)
+    assert idx.meta["buckets"] == b
+    terms = ["market", "germani", "price"]
+    for positional in (False, True):
+        got = sorted(tuple(r) for r in
+                     idx.lookup(terms, positional=positional).collect())
+        want = sorted(tuple(r) for r in built_index.lookup(
+            terms, positional=positional).collect())
+        assert got == want and got
+    ref = _segment_rows(spark, d)
+
+    for step in ("segments", "stats", "term_stats", "vsm_norms",
+                 "build_complete"):
+        os.remove(catalog._manifest_path(d, step))
+    shutil.rmtree(os.path.join(d, "segments"))
+    os.remove(os.path.join(d, "stats.json"))
+    monkeypatch.setattr(SEG, "POSTINGS_PER_BUCKET", 100_000)
+    catalog.build_durable_index(spark, corpus_sdf, d)
+    assert _segment_rows(spark, d) == ref
+    with open(os.path.join(d, "stats.json")) as f:
+        assert json.load(f)["buckets"] == b
+
+
+def test_merge_sized_indexes_equals_full_build(spark, corpus_sdf, tmp_path,
+                                               built_index, monkeypatch):
+    """Default-bucket merge: two parts whose sized bucket counts differ
+    merge into exactly the fresh sized build of their union (segment
+    rows, doc and term stats, rankings)."""
+    ids = sorted(r.doc_id for r in corpus_sdf.select("doc_id").collect())
+    cut = ids[len(ids) // 3]
+    part_a = corpus_sdf.filter(F.col("doc_id") < cut)
+    part_b = corpus_sdf.filter(F.col("doc_id") >= cut)
+    da, db = str(tmp_path / "a"), str(tmp_path / "b")
+    dfull, dm = str(tmp_path / "full"), str(tmp_path / "merged")
+    total = built_index.postings.count()
+    monkeypatch.setattr(SEG, "POSTINGS_PER_BUCKET", -(-total // 7))
+    catalog.build_durable_index(spark, corpus_sdf, dfull)
+    catalog.build_durable_index(spark, part_a, da)
+    catalog.build_durable_index(spark, part_b, db)
+    assert len({_stage_buckets(x) for x in (da, db, dfull)}) == 3
+    catalog.merge_indexes(spark, [da, db], dm)
+
+    assert _stage_buckets(dm) == _stage_buckets(dfull) == 7
+    assert _segment_rows(spark, dm) == _segment_rows(spark, dfull)
+    mi, fi = catalog.load_index(spark, dm), catalog.load_index(spark, dfull)
+    assert mi.meta == fi.meta
+    for table in ("doc_stats", "term_stats"):
+        assert sorted(map(tuple, getattr(mi, table).collect())) == \
+            sorted(map(tuple, getattr(fi, table).collect())), table
+    q = "market price growth"
+    got = [(r.doc_id, round(r.score, 9))
+           for r in S.search_freetext(mi, q, k=30).collect()]
+    want = [(r.doc_id, round(r.score, 9))
+            for r in S.search_freetext(fi, q, k=30).collect()]
+    assert got == want and got
+    assert MS.search_maxscore(mi, q, k=10) == MS.search_maxscore(fi, q, k=10)
+
+
 def test_merge_indexes_validations(spark, corpus_sdf, tmp_path):
     """Overlapping doc_ids and mismatched build configs must refuse."""
     import pytest as _pt
@@ -291,7 +409,8 @@ def test_merge_indexes_validations(spark, corpus_sdf, tmp_path):
 
     other = corpus_sdf.filter(~F.col("doc_id").isin(
         [r.doc_id for r in sub.select("doc_id").collect()])).limit(40)
-    catalog.build_durable_index(spark, other, d3, buckets=16)  # diff config
+    catalog.build_durable_index(spark, other, d3, buckets=8,
+                                block_span=64)  # diff config
     with _pt.raises(ValueError, match="different build config"):
         catalog.merge_indexes(spark, [d1, d3], str(tmp_path / "out2"))
 
