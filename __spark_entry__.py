@@ -494,11 +494,12 @@ def q_impact_maxscore_identity(spark: SparkSession,
 
 
 def q_maxscore_bm25_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end durable-index serving path: build the segment store on
+    """End-to-end durable-index serving path: build the durable index on
     disk, run the MaxScore kernel (operators/maxscore.py) over the
-    encoded blocks, and gate the result against the SAME BM25 SQL oracle
-    as the relational path — the north rule's top-k rank-identity check,
-    from the on-disk index. k is exhaustive (every block decoded;
+    blocks it reads from the staged postings, and gate the result against
+    the SAME BM25 SQL oracle as the relational path — the north rule's
+    top-k rank-identity check, from the on-disk index. k is exhaustive
+    (every block scored;
     pruning at small k is pinned by tests/test_maxscore.py), so final
     selection happens on ROUNDED scores in the DataFrame (Spark's
     HALF_UP round == DuckDB's; Python's round() is banker's)."""

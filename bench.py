@@ -222,8 +222,7 @@ def main() -> None:
         prepared = w.select(
             "doc_id", make_extract_text_udf()(F.col("html")).alias("text")
         )
-        # the durable build: one range exchange, shuffle-free
-        # consecutive-run segment encode
+        # the durable build: one range exchange, one postings table
         catalog.build_durable_index(spark, prepared, out, block_span=4096)
         return catalog.load_index(spark, out)
 
@@ -235,13 +234,13 @@ def main() -> None:
                                       k=100))
 
     # cold = mini-index miss (driver Arrow fetch); warm = pure driver
-    # kernel time over the LRU's memoized decodes
+    # kernel time over the LRU's cached block arrays
     timed("q_maxscore_cold", q_ms, n=1)
     timed("q_maxscore_warm", q_ms)
 
     # quantized-impact serving artifact (catalog.quantize_index): the
-    # segment re-code pass, then MaxScore over 8-bit impact blocks — the
-    # ~1-byte-per-posting store with the exact quantized block bound
+    # impacts-table write, then MaxScore over 8-bit impacts — one
+    # impact column per posting with the exact quantized block bound
     def seg_quantize():
         out = os.path.join(seg_dir, "impact")
         shutil.rmtree(out, ignore_errors=True)

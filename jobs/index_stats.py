@@ -8,20 +8,19 @@ Reports: corpus scalars + store kind (tf / impact bits), committed
 optional artifacts (VSM norms, phrase index, trigram index) and the
 artifacts to rebuild (a phrase index committed before its
 ``phrase_postings`` table, which queries no longer read), tombstone
-batches + deleted fraction, per-bucket segment balance (blocks,
-postings, payload bytes, and the max/mean SKEW factor — the number
-that says whether the bucket hash still spreads the term mass), the
-payload codec mix (varint / impact, from the
-self-describing payload tags), and the head of the df distribution.
-Everything is DataFrame aggregates over segment metadata and side
-tables — no payload decode, so the report is cheap even on a huge
-store (the codec mix reads 2 bytes per block payload). Three fields are
-driver-side reads with no Spark job: the bytes on disk of each table
-directory (``on_disk_bytes``: the index's, and for a quantized store
-also its source's), the parquet files of each table directory
+batches + deleted fraction, the serving kernel's view of its table
+(blocks, postings, the doc_id and tf/dl or impact chunk bytes) and its
+per-bucket balance (the max/mean SKEW factor of postings — the number
+that says whether the bucket hash still spreads the term mass), and the
+head of the df distribution. The kernel view is the build's own
+``segments`` row (an impact store's ``quantize_complete`` row), so it
+costs no Spark job. Three more fields are driver-side reads with no
+Spark job: the bytes on disk of each table directory
+(``on_disk_bytes``: the index's, and for a quantized store also its
+source's), the parquet files of each table directory
 (``parquet_files``, next to ``buckets``: a bucket-partitioned table
 writes at least one file per bucket) and the parquet page codecs of the
-segment files, counted per column chunk from their footers
+kernel table's files, counted per column chunk from their footers
 (``parquet_codecs``).
 """
 
@@ -89,25 +88,11 @@ def collect_stats(spark, index_dir: str) -> dict:
     # source's (``source_dir``)
     idx = catalog.load_index(spark, index_dir)
     meta, src = idx.meta, idx.source_dir
-    seg = idx.segments
-
-    per_bucket = (seg.groupBy("bucket").agg(
-        F.count("*").alias("blocks"),
-        F.sum("n_docs").alias("postings"),
-        F.sum(F.length("payload")).alias("payload_bytes"))
-        .orderBy("bucket").collect())
-    postings = [int(r.postings or 0) for r in per_bucket]
+    # the kernel view recorded at build (quantize) time
+    view = catalog._row(index_dir, "quantize_complete"
+                        if idx.store == "impact" else "segments")
+    postings = [b["postings"] for b in view["bucket_lineage"].values()]
     mean_p = (sum(postings) / len(postings)) if postings else 0.0
-
-    # codec mix from the self-describing payload tag: varint payloads
-    # never start with 0x00; tagged formats are 0x00 + a format letter
-    # ('I' impact) — 2 bytes per block
-    tag = F.hex(F.expr("substring(payload, 1, 2)"))
-    mix_rows = (seg.select(
-        F.when(~tag.startswith("00"), "vb")
-        .when(tag == "0049", "impact")
-        .otherwise("unknown").alias("codec"))
-        .groupBy("codec").count().collect())
 
     # a phrase row that names no table was committed before the
     # phrase_postings layout: no query reads it until it is rebuilt
@@ -129,12 +114,11 @@ def collect_stats(spark, index_dir: str) -> dict:
         "block_span": meta["block_span"],
         "positional": meta.get("positional", True),
         "n_terms": idx.vocabulary_size(),
-        "blocks": sum(int(r.blocks) for r in per_bucket),
-        "postings": sum(postings),
-        "payload_bytes": sum(int(r.payload_bytes or 0) for r in per_bucket),
+        "blocks": view["blocks"],
+        "postings": view["postings"],
+        "payload_bytes": view["payload_bytes"],
         "bucket_skew_max_over_mean":
             round(max(postings) / mean_p, 3) if mean_p else None,
-        "codec_mix": {r.codec: int(r["count"]) for r in mix_rows},
         "artifacts": sorted(
             a for a in ("vsm_norms", "phrase_index", "term_ngram_index",
                         "ann_index")
@@ -145,8 +129,7 @@ def collect_stats(spark, index_dir: str) -> dict:
             round(catalog.deleted_fraction(spark, src), 4),
         "df_head": head,
         "on_disk_bytes": {"index": on_disk_bytes(index_dir)},
-        "parquet_codecs": parquet_codecs(os.path.join(index_dir,
-                                                      "segments")),
+        "parquet_codecs": parquet_codecs(idx.kernel_table),
     }
     if meta.get("sidecar_dir"):
         report["sidecar_dir"] = meta["sidecar_dir"]

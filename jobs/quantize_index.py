@@ -6,10 +6,10 @@ the engine's form of the reference's index converter,
 spark-submit --py-files dist/engine.zip jobs/quantize_index.py \
     /data/index --output /data/index_impact [--bits 8]
 
-The output holds re-coded segments, stats.json and its quantize_complete
-row only — ~1 byte per posting instead of the tf+dl varint pair; every
-side table, artifact and tombstone resolves from the source index
-(sidecar_dir). Serving kernels (MaxScore) score idf·(k1+1)·q/maxq with
+The output holds an impacts/ table (term, doc_id, impact), stats.json
+and its quantize_complete row only — one impact column per posting
+instead of tf and dl; every side table, artifact and tombstone resolves
+from the source index (sidecar_dir). Serving kernels (MaxScore) score idf·(k1+1)·q/maxq with
 an EXACT per-block bound; the scoring model (k1=1.2, b=0.75) and corpus
 stats are baked in, so re-quantize after any merge/vacuum of the source.
 """

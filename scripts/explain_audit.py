@@ -135,32 +135,6 @@ def main() -> int:
         ],
     )
 
-    # 3b. fused index build: postings -> sorted exchange -> shuffle-free
-    # segment encode. The WHOLE chain must contain exactly ONE Exchange
-    # (the range repartition that lays out (bucket, term, block_id)) —
-    # the encode itself is a mapInPandas over those partitions, no
-    # second shuffle, no per-group applyInPandas aggregate. The exchange
-    # is the build's own catalog.range_layout.
-    from search_engine_spark.operators import segments as SEGOP
-
-    sorted_post = catalog.range_layout(post.withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(16)).cast("int")
-    ).withColumn("block_id", (F.col("doc_id") / F.lit(4096)).cast("long")),
-        "bucket", "term", "block_id", tiebreak="doc_id")
-    p3b = plan_of(SEGOP.encode_sorted(sorted_post))
-    check(
-        "Fused segment encode (postings -> segments)", p3b,
-        [
-            ("exactly one exchange in the whole chain",
-             r"\(\d+\) Exchange\b[\s\S]*\(\d+\) Exchange\b", False),
-            ("the one range exchange is present", r"rangepartitioning", True),
-            ("encode is mapInPandas (no per-group aggregate)",
-             r"MapInPandas", True),
-            ("no FlatMapGroupsInPandas in the fused path",
-             r"FlatMapGroupsInPandas", False),
-        ],
-    )
-
     # 4. date-range filter on a days(warc_ts)-partitioned documents table
     # → directory-level partition pruning, no full scan (the reference's
     # date2doc reverse map replaced by table layout)
@@ -1181,23 +1155,22 @@ def main() -> int:
         ],
     )
 
-    # 50. quantized-impact store: the re-code pass is ONE mapInPandas
-    # over the segment scan (no shuffle — structure is preserved 1:1),
-    # and the relational quantized scorer is pure JVM integer
-    # arithmetic (no Python in the scoring path) with the standard
-    # broadcast + single-top-k shape
-    from search_engine_spark.operators import segments as SEGOP
-
-    seg50 = spark.read.parquet(os.path.join(tmp, "idx", "segments"))
-    qpass = SEGOP.quantize_blocks(
-        seg50.select([fld.name for fld in SEGOP.SEGMENT_SCHEMA.fields]),
-        idx.stats["n_docs"], idx.stats["total_len"], bits=8)
+    # 50. quantized-impact store: quantize_index writes the impacts
+    # table as ONE projection of the staged postings — the integer
+    # quantizer stays JVM-side (no Python), no shuffle, and positions
+    # are not read; the relational quantized scorer is the same JVM
+    # arithmetic with the standard broadcast + single-top-k shape
     check(
-        "Impact quantize pass (segment re-code)", plan_of(qpass),
+        "Impact store write (staged postings -> impacts)",
+        plan_of(catalog.impact_rows(spark, os.path.join(tmp, "idx"), 8)),
         [
-            ("one Arrow mapInPandas pass", r"MapInPandas", True),
-            ("no shuffle (structure preserved 1:1)", r"\bExchange\b", False),
+            ("scan reads the staged postings", r"idx/postings_stage", True),
+            ("integer quantizer stays JVM-side (no Python eval)",
+             r"MapInPandas|ArrowEvalPython|BatchEvalPython", False),
+            ("no shuffle (one row per posting)", r"\bExchange\b", False),
             ("no aggregate", r"Aggregate\b", False),
+            ("positions NOT in read schema", r"ReadSchema:.*positions",
+             False),
         ],
     )
     p50 = plan_of(S.search_quantized(idx, ["market", "price"], k=100))
@@ -1274,8 +1247,8 @@ def main() -> int:
 
     # 54. chained k-word phrase (round-5, W&Z §4): a 3-word covered
     # phrase intersects TWO bigram postings from the phrase artifact —
-    # every scan reads phrase_postings (never the unigram postings or
-    # segments), the chain reads their positions column, bucket pruning
+    # every scan reads phrase_postings (never the unigram postings),
+    # the chain reads their positions column, bucket pruning
     # + bigram term pushdown apply unchanged
     three = None
     for a in info51["terms"]:
@@ -1301,8 +1274,7 @@ def main() -> int:
              r"PushedFilters: \[.*[Ee]qual[Tt]o\(term,[^)]+ ", True),
             ("scans read the phrase artifact only",
              r"phrase_postings", True),
-            ("no unigram postings or segment scan",
-             r"idx/(segments|postings_stage)", False),
+            ("no unigram postings scan", r"idx/postings_stage", False),
         ],
     )
 

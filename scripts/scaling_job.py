@@ -7,7 +7,7 @@ Usage: python scripts/scaling_job.py <cpus> <corpus_parquet_dir> [--runs R]
 Methodology: a small warm-up build first (JIT-compiles the codegen and
 Arrow paths — cold-JVM constants would otherwise swamp the scaling
 signal), then R timed FULL durable index builds (extract UDF → analysis →
-salted aggregations → positional block encode → segment write + lineage),
+salted aggregations → range exchange → postings write + lineage),
 best-of-R reported. Input corpus must pre-exist so every run reads
 identical bytes.
 """

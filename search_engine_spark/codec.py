@@ -5,11 +5,12 @@ of ``[df, Δdoc₁, tf₁, Δdoc₂, tf₂, …]`` — encode at
 /root/reference/indexing/index_compressor/compression.py:48-65 (vbcode lib),
 decode at /root/reference/search/retrieval/retrieval_helpers/index_decoder.py:8-37.
 
-Ours is block-oriented for scale: posting lists are chunked into bounded
-blocks; each block payload is ``varint([n, doc₀, Δdoc₁.., tf₁..tfₙ])`` with
-docs and tfs stored as separate runs (better delta locality than the
-reference's interleaving) plus per-block max-tf / max-score metadata for
-Block-Max WAND pruning (BASELINE.json north_star, C5 in SURVEY §2.4).
+Ours is block-oriented: posting lists are chunked into bounded blocks;
+each block payload is ``varint([n, doc₀, Δdoc₁.., tf₁..tfₙ])`` with docs
+and tfs stored as separate runs (better delta locality than the
+reference's interleaving). It is the reference encoder
+(``segments.encode_segments``) that tests check the serving kernel's
+blocks against; the index itself stores postings as parquet columns.
 
 Varint wire format = the classic 7-bit variable-byte code used by the
 reference's ``vbcode``: big-endian 7-bit groups, continuation bit set on the
@@ -102,15 +103,15 @@ def decode_block(payload: bytes) -> tuple[np.ndarray, np.ndarray]:
 def decode_block_full(payload: bytes):
     """→ (doc_ids, tfs, dls|None) depending on whether the dl run exists.
 
-    Dispatches on the payload's first byte: 0x00 marks a tagged format
-    (the quantized-impact block, see encode_block_impact), which has no
-    tf/dl and is refused, as is any other tag; anything else is the
-    varint stream, whose first byte is never 0x00."""
-    if payload[:2] == _IMPACT_TAG:
-        raise ValueError(
-            "quantized-impact payload: tf/dl are not recoverable from an "
-            "impact store — decode with decode_block_impact (serving "
-            "kernels) or re-quantize from the SOURCE index (merge/vacuum)")
+    No serving path decodes payloads: the kernel reads the staged
+    postings' columns. This decoder stays for two readers: tests
+    compare the kernel's blocks against ``encode_block`` payloads
+    decoded here (the reference C1-C4 codec), and the benchmark's
+    tracer wraps this function by name.
+
+    A payload whose first byte is 0x00 is refused: a varint stream's
+    first byte (the top 7-bit group of n) is never 0x00, so such a
+    payload is some other, tagged format."""
     if payload[:1] == b"\x00":
         raise ValueError(f"unknown tagged payload format {payload[:2]!r}")
     stream = vb_decode(payload)
@@ -128,65 +129,3 @@ def decode_block_full(payload: bytes):
     if len(stream) >= 1 + 3 * n:
         dls = np.asarray(stream[1 + 2 * n : 1 + 3 * n], dtype=np.int64)
     return docs, tfs, dls
-
-
-# ---------------------------------------------------------------------------
-# Quantized-impact posting block (Anh & Moffat 2005, "Simplified
-# similarity scoring using term ranks" / the impact-sorted-index line of
-# work; Lucene's quantized norms are the production analogue — all
-# public). The block stores, per posting, an integer impact
-# q ∈ [0, 2^bits−1] that quantizes the BM25 tf/dl part
-# w(tf,dl) = tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)); serving scores
-# idf·(k1+1)·q/maxq with NO doc-length lookup and ~1 byte/posting
-# instead of the tf+dl varint pair. The quantization is defined in
-# EXACT int64 arithmetic (see operators.scoring.quantize_impacts) so an
-# ANSI-SQL oracle reproduces stored impacts bit-for-bit.
-#
-# Payload tagging: a varint payload's first byte is the most significant
-# 7-bit group of the block's n and is therefore NEVER 0x00 (n=0 encodes
-# as 0x80). Tagged formats start with 0x00 + a format letter, so
-# ``decode_block_full`` tells them apart without any table metadata.
-# ---------------------------------------------------------------------------
-
-_IMPACT_TAG = b"\x00I"
-
-
-def encode_block_impact(doc_ids: np.ndarray, impacts: np.ndarray) -> bytes:
-    """Posting block of (doc_id, quantized impact) → payload bytes.
-
-    Layout: ``0x00 'I' varint([n, doc₀, Δdoc₁.., q₁..qₙ])``. doc_ids
-    must be sorted ascending and unique within the block; impacts are
-    non-negative ints ≤ 2^16−1 (8-bit is the standard deployment, the
-    varint run costs 1 byte/posting there)."""
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    impacts = np.asarray(impacts, dtype=np.int64)
-    n = len(doc_ids)
-    parts = [np.array([n, doc_ids[0] if n else 0], dtype=np.int64),
-             np.diff(doc_ids), impacts]
-    return _IMPACT_TAG + vb_encode(np.concatenate(parts))
-
-
-def decode_block_impact(payload: bytes) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse of encode_block_impact → (doc_ids ascending, impacts)."""
-    if payload[:2] != _IMPACT_TAG:
-        raise ValueError(
-            "not a quantized-impact payload — tf/dl stores decode with "
-            "decode_block_full")
-    stream = vb_decode(payload[2:])
-    n = int(stream[0])
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e
-    docs = np.empty(n, dtype=np.int64)
-    docs[0] = stream[1]
-    if n > 1:
-        docs[1:] = stream[2:1 + n]
-        np.cumsum(docs, out=docs)
-    impacts = np.asarray(stream[1 + n:1 + 2 * n], dtype=np.int64)
-    return docs, impacts
-
-
-def is_impact_payload(payload: bytes) -> bool:
-    """True iff the payload is a quantized-impact block."""
-    return payload[:2] == _IMPACT_TAG
-

@@ -3,9 +3,10 @@ the engine's one dynamic-pruning serving kernel.
 
 The reference loads a per-query "mini index" via byte-range reads
 (index_loader.py:71-128) and scores it in Python loops. Here the mini
-index is the query terms' segment BLOCKS, fetched by a driver-side
-Arrow read (catalog.SegmentIndex.mini_index; bounded per term by the
-impact-ordered FETCH_CAP), and scored with block-max pruning.
+index is the query terms' posting BLOCKS: a driver-side Arrow read of
+the staged postings (an impact store's impacts table) split into
+doc-range blocks (catalog.SegmentIndex.mini_index; bounded per term by
+the impact-ordered FETCH_CAP), and scored with block-max pruning.
 
 Blocks are doc-partitioned (block_id = doc_id // span), so all terms'
 blocks with the same block_id cover the same doc range and a doc's
@@ -15,28 +16,28 @@ score upper bound (Σ qtf · ub(df, block_max_tf)) and call a block
 "non-essential" when the upper bounds of it and every smaller block sum
 to < θ, the current top-k threshold — a document containing ONLY
 non-essential terms can never enter the top-k, so non-essential blocks
-are never decoded wholesale. They are probed only for candidates that
+are never scored wholesale. They are probed only for candidates that
 already scored on an essential term, and each candidate is abandoned
 the moment its partial score plus the remaining non-essential bound
 falls below θ.
 
 Block-Max WAND's range skip is the degenerate case: every block
 non-essential ⇒ the whole range's bound is < θ ⇒ skip the range without
-decoding. Inside surviving ranges MaxScore adds the per-term decode
-savings: for head-term-heavy queries ("the data") it decodes the
-selective terms' blocks and touches the head term's bytes only for live
-candidates — at web scale, where the head term's blocks dominate a
-range's byte volume, that is the difference that matters.
+scoring it. Inside surviving ranges MaxScore adds the per-term
+savings: for head-term-heavy queries ("the data") it scores the
+selective terms' blocks and touches the head term's postings only for
+live candidates — at web scale, where the head term's blocks dominate a
+range's volume, that is the difference that matters.
 
-Scoring is array work over the blocks' memoized decodes (the mini-index
-LRU keeps them, catalog.MiniBlock): per surviving range, the essential
+Scoring is array work over the blocks' arrays (the mini-index LRU keeps
+them, catalog.MiniBlock): per surviving range, the essential
 blocks' postings are summed per doc with unique + bincount, probes add
 non-essential weights by searchsorted, and the top-k is two arrays
 merged after each range in (score desc, doc asc) order.
 
 Exactness: every skip is against the CURRENT θ, which only grows, and
 every bound argument is a strict ``< θ`` — ties at the threshold are
-still decoded, so results are rank-identical to the relational BM25
+still scored, so results are rank-identical to the relational BM25
 path (pinned by the ``maxscore_bm25_identity`` driver gate and the
 oracle identity tests in tests/test_maxscore.py).
 """
@@ -52,11 +53,12 @@ from pyspark.sql import functions as F
 from . import segments as SEG
 
 
-# Default per-term driver-fetch bound (blocks). At the default build
-# span of 4096 docs/block this is ~1M docs of postings per term — far
-# beyond any non-head term, so typical queries stay EXACT; a
-# stopword-scale term at 10^12 docs is truncated to its 256
-# highest-upper-bound blocks instead of shipping GBs to the driver.
+# Default per-term bound on the blocks the mini-index LRU keeps. At the
+# default build span of 131,072 docs/block this covers 33.5M doc ids per
+# term, so it only truncates a term on a corpus above ~33.5M docs and
+# typical queries stay EXACT; past that a head term keeps its 256
+# highest-upper-bound blocks. The cap bounds what the driver holds,
+# not what it reads: a miss reads the term's df rows (df ≤ n_docs).
 FETCH_CAP = 256
 
 # the relational path's floor for docs absent from the prior frame
@@ -98,7 +100,7 @@ def search_maxscore(index, query: str, k: int = 100,
     Returns [(doc_id, score)] — a driver-side result (the serving path);
     use operators.search for the distributed DataFrame path.
 
-    Requires a SegmentIndex (the durable, block-encoded form): the
+    Requires a SegmentIndex (the durable, bucket-partitioned form): the
     relational ``operators.search`` path is the equivalent for in-memory
     indexes. FREE-TEXT queries only: phrase/boolean/proximity shapes
     raise ValueError (the analyzer would strip their operators and
@@ -106,12 +108,12 @@ def search_maxscore(index, query: str, k: int = 100,
     Tombstoned deletes are masked with the same stale global stats as
     the relational path, so the two stay rank-identical under deletes.
 
-    ``max_blocks_per_term`` bounds the fetch: each term keeps only its
-    highest-upper-bound blocks, ranked from block metadata before any
-    payload is read, with the exact df alongside. Dropped blocks can
-    only LOWER a doc's score (a safe approximation, reported in
-    ``stats["truncated_terms"]``). ``"auto"`` = FETCH_CAP, ``None`` =
-    the exact uncapped fetch, an int = an explicit cap. Fetches go
+    ``max_blocks_per_term`` bounds what the fetch keeps: each term keeps
+    only its highest-upper-bound blocks, with the exact df alongside.
+    Dropped blocks can only LOWER a doc's score (a safe approximation,
+    reported in ``stats["truncated_terms"]``). ``"auto"`` = FETCH_CAP,
+    ``None`` = the exact uncapped fetch, an int = an explicit cap.
+    Fetches go
     through the driver mini-index LRU and its misses are driver-side
     Arrow reads, so a query launches ZERO Spark jobs.
 
@@ -135,9 +137,8 @@ def search_maxscore(index, query: str, k: int = 100,
     """
     if not hasattr(index, "mini_index"):
         raise TypeError(
-            "search_maxscore needs a SegmentIndex (durable block-encoded "
-            "index); use operators.search.search_freetext for in-memory "
-            "indexes")
+            "search_maxscore needs a SegmentIndex (durable index); use "
+            "operators.search.search_freetext for in-memory indexes")
     if plan is None:
         from ..plans import planner
 
@@ -158,8 +159,8 @@ def search_maxscore(index, query: str, k: int = 100,
     n = index.stats["n_docs"]
     avgdl = index.stats["avgdl"]
     # quantized-impact stores (catalog.quantize_index): blocks carry the
-    # stored impact q instead of tf+dl; score = qtf·idf·(k1+1)·q/maxq and
-    # the per-block bound idf·(k1+1)·block_max/maxq is EXACT for the
+    # stored impact q instead of tf and dl; score = qtf·idf·(k1+1)·q/maxq
+    # and the per-block bound idf·(k1+1)·block_max/maxq is EXACT for the
     # quantized scores (block_max_tf holds the block's max impact)
     impact_store = getattr(index, "store", "tf") == "impact"
     impact_scale = 0.0
@@ -195,19 +196,14 @@ def search_maxscore(index, query: str, k: int = 100,
 
     def weights(blk):
         """(docs, per-term bm25 weights) of a block with deletes masked;
-        None when every posting in the block is tombstoned. The decode
-        is the block's memo (catalog.MiniBlock), so only the weights
+        None when every posting in the block is tombstoned. The block's
+        arrays are the LRU's (catalog.MiniBlock), so only the weights
         are computed per request."""
+        docs = blk.docs
         if impact_store:
-            docs, q = blk.impact()
+            (q,) = blk.values
         else:
-            docs, tfs, dls = blk.full()
-            if dls is None:
-                raise ValueError(
-                    "segment payloads carry no per-doc lengths (dl): "
-                    "MaxScore needs self-contained blocks — build the "
-                    "index from postings that include dl (the durable "
-                    "build does)")
+            tfs, dls = blk.values
         if del_arr is not None:
             pos = np.searchsorted(del_arr, docs)
             pos[pos == len(del_arr)] = 0

@@ -1,28 +1,33 @@
-"""Posting-segment encode: delta+varint blocks with block-max
-metadata (SURVEY §2.4 C1-C5; reference compression.py:48-65 +
-index_hasher word2byte, replaced by columnar layout + pruning).
+"""Posting-block layout: buckets, doc-partitioned blocks and the
+block-max bound (SURVEY §2.4 C1-C5; reference compression.py:48-65 +
+index_hasher word2byte, replaced by columnar layout + pruning), plus
+the reference varint block encoder.
 
 Layout decisions (scale rationale):
 
-* ``bucket = pmod(xxhash64(term), B)`` — the segment table is written
-  partitioned by bucket, so a query's term lookup prunes to |q| partitions
-  (the Spark-native ``word2byte``: file-level pruning instead of byte
-  offsets). B follows the postings (``bucket_count``): one bucket per
-  ``POSTINGS_PER_BUCKET`` postings, at most ``MAX_BUCKETS``, so a small
-  index (or a refresh delta) writes a few larger files instead of 64
-  small ones, each with its own footer, checksum file and commit.
-* ``block_id = doc_id // block_span`` — DOC-partitioned blocks, assigned
-  arithmetically BEFORE any grouping. A stopword term's postings land in
-  many independent (term, block_id) groups of bounded size, so the encode
-  groupBy has no skewed reducer — this is the salting of the north rule,
-  derived from the data instead of a random salt so block membership stays
-  deterministic and doc-ordered.
-* per-block ``max_tf`` and ``max_score`` (BM25 upper bound at dl→0:
-  idf·(k1+1)·tf_max/(tf_max+k1·(1−b))) enable Block-Max WAND pruning.
-* payload = varint([n, doc₀, Δdocs…, tfs…, dls…]). Blocks carry no
-  positions: the staged postings table is the one positional table
-  (catalog.SegmentIndex.lookup reads it), so segments are the
-  kernel's tf-only converted index (reference index_converter.py).
+* ``bucket = pmod(xxhash64(term), B)`` — every term-addressed table is
+  written partitioned by bucket, so a query's term lookup prunes to |q|
+  partitions (the Spark-native ``word2byte``: file-level pruning
+  instead of byte offsets). B follows the postings (``bucket_count``):
+  one bucket per ``POSTINGS_PER_BUCKET`` postings, at most
+  ``MAX_BUCKETS``, so a small index (or a refresh delta) writes a few
+  larger files instead of 64 small ones, each with its own footer,
+  checksum file and commit.
+* ``block_id = doc_id // block_span`` — DOC-partitioned blocks, derived
+  arithmetically from the doc id. A stopword term's postings fall in
+  many independent (term, block_id) blocks of bounded size (the
+  salting of the north rule, derived from the data so block membership
+  stays deterministic and doc-ordered). The build's layout exchange
+  splits a huge term across tasks in these units, and the serving
+  kernel splits a term's staged postings into them on the driver
+  (catalog.SegmentIndex.mini_index): nothing stores a block.
+* per-block ``max_tf`` gives the BM25 upper bound at dl→0
+  (``bm25_upper_bound``) that Block-Max WAND / MaxScore prune with.
+
+``encode_segments`` is the reference's C1-C4 block encoder (delta +
+varint, ``codec.encode_block``). No build runs it: tests compare the
+kernel's blocks, read from the staged postings, against its blocks
+decoded with ``codec.decode_block_full``.
 """
 
 from __future__ import annotations
@@ -72,11 +77,11 @@ def bm25_upper_bound(df: int, n_docs: int, max_tf: int,
 
 def encode_segments(postings: DataFrame, buckets: int = MAX_BUCKETS,
                     block_span: int = DEFAULT_BLOCK_SPAN) -> DataFrame:
-    """postings (term, doc_id, tf[, dl]) → segment blocks.
+    """postings (term, doc_id, tf[, dl]) → varint segment blocks.
 
     One shuffle (groupBy term, block_id — bounded groups), Arrow-batched
     encode in applyInPandas. The reference encoder: no build runs it;
-    tests compare ``encode_sorted``'s blocks against it.
+    tests compare the serving kernel's blocks against it.
     """
     has_dl = "dl" in postings.columns
     cols = ["term", "doc_id", "tf"] + (["dl"] if has_dl else [])
@@ -102,127 +107,3 @@ def encode_segments(postings: DataFrame, buckets: int = MAX_BUCKETS,
         }])
 
     return base.groupBy("term", "block_id").applyInPandas(encode, SEGMENT_SCHEMA)
-
-
-def encode_sorted(postings: DataFrame) -> DataFrame:
-    """Shuffle-FREE segment encoder for postings that are already
-    range-partitioned by (bucket, term, block_id) and sorted within
-    partitions by (bucket, term, block_id, doc_id) — the exact layout the
-    durable build's ONE stage exchange produces.
-
-    ``encode_segments`` pays a second full shuffle of every posting row
-    plus one pandas-DataFrame construction per (term, block) group
-    (applyInPandas); at 150k docs / 11M postings that group overhead was
-    ~2/3 of the whole index build and scaled at only ~0.4 efficiency
-    from 2→8 cores. This encoder is a mapInPandas pass: groups are
-    CONSECUTIVE runs in the sorted partitions, detected vectorized, with
-    the trailing (possibly incomplete) run carried across Arrow batch
-    boundaries within a partition. Range partitioning keeps every row of
-    one (bucket, term, block_id) key in one partition, so no group ever
-    straddles a partition boundary; group size is bounded by block
-    occupancy ≤ block_span (the doc-partitioned-block skew bound).
-
-    Requires columns: term, doc_id, tf, bucket, block_id [, dl]. Rows within each group must be doc_id-ascending
-    (delta encoding depends on it) — guaranteed by the sort.
-    """
-    import numpy as np
-
-    has_dl = "dl" in postings.columns
-    cols = ["term", "bucket", "block_id", "doc_id", "tf"] \
-        + (["dl"] if has_dl else [])
-
-    def encode_stream(batches):
-        carry: pd.DataFrame | None = None
-
-        def encode_runs(pdf: pd.DataFrame, starts: "np.ndarray"):
-            docs_all = pdf["doc_id"].to_numpy()
-            tfs_all = pdf["tf"].to_numpy()
-            dls_all = pdf["dl"].to_numpy() if has_dl else None
-            terms = pdf["term"].to_numpy()
-            buckets_ = pdf["bucket"].to_numpy()
-            blocks_ = pdf["block_id"].to_numpy()
-            out = {k: [] for k in ("term", "bucket", "block_id", "n_docs",
-                                   "min_doc_id", "max_doc_id",
-                                   "block_max_tf", "payload")}
-            bounds = list(starts) + [len(pdf)]
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                docs, tfs = docs_all[s:e], tfs_all[s:e]
-                payload = codec.encode_block(
-                    docs, tfs, dls_all[s:e] if has_dl else None)
-                out["term"].append(terms[s])
-                out["bucket"].append(int(buckets_[s]))
-                out["block_id"].append(int(blocks_[s]))
-                out["n_docs"].append(e - s)
-                out["min_doc_id"].append(int(docs[0]))
-                out["max_doc_id"].append(int(docs[-1]))
-                out["block_max_tf"].append(int(tfs.max()))
-                out["payload"].append(payload)
-            return pd.DataFrame(out)
-
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            terms = pdf["term"].to_numpy()
-            blocks_ = pdf["block_id"].to_numpy()
-            change = (terms[1:] != terms[:-1]) | (blocks_[1:] != blocks_[:-1])
-            starts = np.concatenate(
-                [[0], np.flatnonzero(change) + 1]).astype("int64")
-            # the last run may continue in the next Arrow batch of this
-            # partition — hold it back
-            carry = pdf.iloc[starts[-1]:]
-            body = pdf.iloc[: starts[-1]]
-            if len(body):
-                yield encode_runs(body, starts[:-1])
-        if carry is not None and len(carry):
-            yield encode_runs(carry.reset_index(drop=True),
-                              np.zeros(1, dtype="int64"))
-
-    return postings.select(*cols).mapInPandas(encode_stream, SEGMENT_SCHEMA)
-
-
-def quantize_blocks(segments: DataFrame, n_docs: int, total_len: int,
-                    bits: int = 8) -> DataFrame:
-    """tf/dl segment blocks → quantized-impact blocks (same schema).
-
-    mapInPandas over block rows: decode each payload (must be
-    self-contained, i.e. carry the dl run — the durable build's shape),
-    quantize with scoring.quantize_impacts (exact int64 arithmetic), and
-    re-encode via codec.encode_block_impact. Structure is preserved 1:1
-    — same (term, bucket, block_id, n_docs, min/max doc) — so every
-    pruning path (bucket partitions, parquet min/max + bloom, the
-    impact-ordered cap) works unchanged on the quantized store.
-    ``block_max_tf`` becomes the block's max IMPACT: for impact stores
-    the kernels' range bound is idf·(k1+1)·max_impact/maxq — EXACT for
-    the quantized scores (tighter than the tf store's dl→0 bound)."""
-    from . import scoring
-
-    if not 2 <= bits <= 16:
-        raise ValueError(f"impact bits must be in [2, 16]: {bits}")
-
-    def convert(batches):
-        from .. import codec as C
-
-        for pdf in batches:
-            payloads, maxima = [], []
-            for payload in pdf["payload"]:
-                docs, tfs, dls = C.decode_block_full(bytes(payload))
-                if dls is None:
-                    raise ValueError(
-                        "quantize_blocks needs self-contained blocks "
-                        "(payloads carrying dl — the durable build's "
-                        "shape); this store was encoded without dl")
-                q = scoring.quantize_impacts(tfs, dls, n_docs, total_len,
-                                             bits)
-                payloads.append(C.encode_block_impact(docs, q))
-                maxima.append(int(q.max()) if len(q) else 0)
-            import numpy as np
-
-            out = pdf.copy()
-            out["payload"] = payloads
-            out["block_max_tf"] = np.asarray(maxima, dtype="int32")
-            yield out
-
-    return segments.mapInPandas(convert, SEGMENT_SCHEMA)

@@ -1,4 +1,4 @@
-"""Durable index catalog: Iceberg-layout segment writer with per-bucket
+"""Durable index catalog: Iceberg-layout index writer with per-bucket
 lineage and resumable checkpoints (BASELINE.json north rule).
 
 Layout (parquet in this sandbox; every decision is Iceberg-shaped — a
@@ -11,11 +11,13 @@ touching the plan):
                                  ``buckets`` is the count B every
                                  reader hashes terms with)
       postings_stage/bucket=b/   postings (term, doc_id, tf, dl
-                                 [, positions]): the one relational and
-                                 positional table (SegmentIndex.lookup)
+                                 [, positions]): the one postings
+                                 table — relational lookups filter it
+                                 (SegmentIndex.lookup) and the MaxScore
+                                 kernel splits its term rows into
+                                 ``block_span`` doc-range blocks
+                                 (SegmentIndex.mini_index)
       doc_stats/  term_stats/  vsm_norms/   parquet side tables
-      segments/bucket=b/         tf/dl blocks, no positions: the serving
-                                 kernels' tf-only converted index
       phrase_postings/bucket=b/  next-word postings (term = "w1 w2",
                                  doc_id, tf, dl, positions)
                                  (build_phrase_index)
@@ -24,7 +26,13 @@ touching the plan):
                                  IVF+PQ artifacts (build_ann_index)
       tombstones/batch=N/        deleted doc ids, one batch per delete_docs
       manifest/<step>.json       one row per committed step; the segments
-                                 row carries per-bucket detail
+                                 row records the kernel's view of
+                                 postings_stage per bucket (blocks,
+                                 postings, bytes, checksum)
+
+An index built before the kernel read ``postings_stage`` also holds a
+``segments/`` directory of varint blocks. Nothing reads it; its next
+merge (or vacuum) writes an index without it.
 
 Bucket rule: a term-addressed row lives in ``bucket = pmod(xxhash64(term),
 B)``. B is sized to the postings unless the build asks for a count:
@@ -38,20 +46,20 @@ stats.json, and keeps the requested value (None = sized) in the
 so merge, vacuum and refresh equal a fresh build. Indexes built before
 sizing recorded ``buckets: 64`` and keep it.
 
-A quantized-impact store (quantize_index) holds only ``segments/``,
-``stats.json`` (the source's, plus ``store``, ``impact_bits`` and the
-absolute ``sidecar_dir``) and its ``quantize_complete`` row. Everything
-else — side tables, artifacts, tombstones — is read from the source
-directory ``sidecar_dir`` names (``SegmentIndex.source_dir``).
+A quantized-impact store (quantize_index) holds only ``impacts/bucket=b/``
+(term, doc_id, impact), ``stats.json`` (the source's, plus ``store``,
+``impact_bits`` and the absolute ``sidecar_dir``) and its
+``quantize_complete`` row. Everything else — side tables, artifacts,
+tombstones — is read from the source directory ``sidecar_dir`` names
+(``SegmentIndex.source_dir``).
 
 Write policy: every table above is written by ``_write_table``, with
 one set of parquet writer keys (``WRITE_POLICY``): zstd pages, and no
-min/max statistics on the segments' ``payload`` column. It holds
-opaque varint blobs; no reader filters on it, yet the min/max copies
-of such blobs (whole short blobs, in every footer and page index) were
-~11% of the segment files' bytes. Statistics stay on the
-columns that prune: ``term`` (the Arrow miss read and Spark's
-row-group filter) and ``block_id``; ``bucket`` prunes by directory.
+min/max statistics on a ``payload`` column. Such a column held opaque
+varint blobs (the ``segments/`` table of older indexes) whose min/max
+copies were ~11% of those files' bytes; no table written now has one.
+Statistics stay on the columns that prune: ``term`` (the Arrow miss
+read and Spark's row-group filter); ``bucket`` prunes by directory.
 The term-addressed tables add the ``TERM_BLOOM`` keys. Parquet records
 the codec per file, so an index written with snappy pages still opens,
 resumes and merges.
@@ -81,11 +89,11 @@ import shutil
 import time
 from contextlib import contextmanager
 from functools import cached_property
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import codec
 from ..functions.analyzer import AnalyzerConfig
 from ..operators import postings as P
 from ..operators import scoring
@@ -98,11 +106,11 @@ from ..operators.search import InvertedIndex
 #: covers the term but whose chunk does not contain it (the gap min/max
 #: stats cannot close once a row group spans a wide vocabulary range).
 #: parquet-mr materializes the bloom whenever a chunk leaves dictionary
-#: encoding, which segment chunks always do (one row per (term, block)).
-#: Adaptive mode sizes each bloom to the chunk's distinct terms (the
-#: smallest of 12 halving candidates up to the 128 KiB cap): a 4-term
-#: segment file pays ~1 KiB. parquet-mr reads adaptive.enabled only as
-#: a global key, and an explicit expected.ndv would turn it off.
+#: encoding (a chunk of many distinct terms). Adaptive mode sizes each
+#: bloom to the chunk's distinct terms (the smallest of 12 halving
+#: candidates up to the 128 KiB cap): a 4-term file pays ~1 KiB.
+#: parquet-mr reads adaptive.enabled only as a global key, and an
+#: explicit expected.ndv would turn it off.
 TERM_BLOOM = {
     "parquet.bloom.filter.enabled#term": "true",
     "parquet.bloom.filter.adaptive.enabled": "true",
@@ -112,9 +120,9 @@ TERM_BLOOM = {
 
 
 #: the parquet writer keys of every catalog table (``_write_table``):
-#: zstd pages, and no column-chunk or page min/max on the opaque
-#: varint ``payload`` column, which no reader filters on. A key naming
-#: a column the table lacks is ignored.
+#: zstd pages, and no column-chunk or page min/max on an opaque
+#: ``payload`` column, which no reader filters on (no table written now
+#: has one). A key naming a column the table lacks is ignored.
 WRITE_POLICY = {
     "compression": "zstd",
     "parquet.column.statistics.enabled#payload": "false",
@@ -142,7 +150,8 @@ def range_layout(df: DataFrame, *keys: str, tiebreak: str | None = None
     may coalesce, so small inputs run few tasks and write few files.
     Equal keys land whole in one partition, and coalescing only merges
     neighbouring ranges, so each key's rows stay one consecutive run
-    (the invariant ``SEG.encode_sorted`` scans for)."""
+    and every file is sorted by ``keys`` (the term min/max the Arrow
+    miss read and Spark's row-group filter prune on)."""
     order = keys + ((tiebreak,) if tiebreak else ())
     return df.repartitionByRange(*keys).sortWithinPartitions(*order)
 
@@ -226,7 +235,7 @@ def _completed_tf_index(index_dir: str, what: str) -> dict:
     if _done(index_dir, "quantize_complete"):
         raise ValueError(
             f"{what} needs a tf/dl index, and {index_dir} is already an "
-            "impact store: it holds only quantized segments and reads "
+            "impact store: it holds only quantized impacts and reads "
             "everything else from its SOURCE index. Run it on the source "
             "index, then re-quantize (quantize_index).")
     if not _done(index_dir, "build_complete"):
@@ -262,6 +271,66 @@ def _bucket_col(buckets: int):
     return F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int")
 
 
+#: the value columns of each store's kernel table (``kernel_lineage``,
+#: ``SegmentIndex._fetch_blocks``): tf and dl beside doc_id in
+#: ``postings_stage``, the quantized impact in ``IMPACT_TABLE``
+KERNEL_VALUES = {"tf": ("tf", "dl"), "impact": ("impact",)}
+
+#: the quantized store's one table (``quantize_index``)
+IMPACT_TABLE = "impacts"
+
+
+def _chunk_bytes(table_dir: str, columns: tuple[str, ...]) -> dict[str, int]:
+    """Compressed bytes of ``columns``' chunks per bucket of the
+    bucket-partitioned table at ``table_dir``, read from the parquet
+    footers on the driver (no data page is read)."""
+    import pyarrow.parquet as pq
+
+    out: dict[str, int] = {}
+    for d, _, files in os.walk(table_dir):
+        part = os.path.basename(d)
+        if not part.startswith("bucket="):
+            continue
+        for f in files:
+            if not f.endswith(".parquet"):
+                continue
+            md = pq.read_metadata(os.path.join(d, f))
+            n = sum(md.row_group(g).column(c).total_compressed_size
+                    for g in range(md.num_row_groups)
+                    for c in range(md.num_columns)
+                    if md.row_group(g).column(c).path_in_schema in columns)
+            key = part[len("bucket="):]
+            out[key] = out.get(key, 0) + n
+    return out
+
+
+def kernel_lineage(rows: DataFrame, table_dir: str, block_span: int,
+                   values: tuple[str, ...]) -> dict:
+    """The MaxScore kernel's view of a bucket-partitioned postings
+    table, per bucket and in total: ``postings``, ``blocks`` (distinct
+    (term, doc_id // block_span)), ``payload_bytes`` (the compressed
+    doc_id and ``values`` chunks, from the footers under ``table_dir``)
+    and a ``checksum`` (the sum of each row's crc32, so it depends on
+    the rows and not on how files split them). ``rows`` is the table's
+    content (term, bucket, doc_id, ``values``); one Spark job."""
+    block_id = (F.col("doc_id") / F.lit(block_span)).cast("long")
+    row_crc = F.crc32(F.concat_ws(" ", "term", "doc_id", *values))
+    lin = (rows.groupBy("bucket", "term", block_id.alias("block_id"))
+           .agg(F.count("*").alias("n"), F.sum(row_crc).alias("c"))
+           .groupBy("bucket")
+           .agg(F.count("*").alias("blocks"), F.sum("n").alias("postings"),
+                F.sum("c").alias("checksum"))
+           .collect())
+    nbytes = _chunk_bytes(table_dir, ("doc_id",) + values)
+    per_bucket = {str(r["bucket"]): {
+        "blocks": r["blocks"], "postings": int(r["postings"]),
+        "payload_bytes": nbytes.get(str(r["bucket"]), 0),
+        "checksum": int(r["checksum"])} for r in lin}
+    row = {k: sum(b[k] for b in per_bucket.values())
+           for k in ("blocks", "postings", "payload_bytes", "checksum")}
+    return {**row, "bucket_lineage": per_bucket}
+
+
 def build_durable_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -272,16 +341,16 @@ def build_durable_index(
     positional: bool = True,
     resume: bool = True,
 ) -> str:
-    """Build (or resume building) the segment index under ``index_dir``.
+    """Build (or resume building) the durable index under ``index_dir``.
 
     One range exchange lays the postings out by (bucket, term,
-    block_id); the staged postings table, the encoded segments, doc/term
-    stats and VSM norms are all derived from that one sorted, persisted
-    exchange — the segment encode is a shuffle-free mapInPandas over it
-    (``SEG.encode_sorted``). The segments step records per-BUCKET
-    lineage. Resume granularity is the step: an interrupted segments
-    step is re-derived from the staged parquet with one fresh
-    exchange.
+    block_id); the staged postings table, doc/term stats and VSM norms
+    are all derived from that one sorted, persisted exchange. The
+    staged postings are the only postings table: the ``segments`` step
+    writes no data, and its row records the MaxScore kernel's view of
+    them per BUCKET (``kernel_lineage``). Resume granularity is the
+    step: an interrupted step is re-derived from the staged parquet
+    with no fresh exchange.
 
     ``buckets=None`` (the default) sizes the bucket count to the
     postings (``SEG.bucket_count``), counted on the persisted postings
@@ -325,8 +394,9 @@ def build_durable_index(
     from pyspark import StorageLevel
 
     stage_dir = os.path.join(index_dir, "postings_stage")
-    # the sorted exchange output, persisted for the session:
-    # segments/doc_stats/term_stats/vsm_norms all read it cache-hit
+    # the sorted exchange output, persisted for the session: the
+    # segments row, doc_stats, term_stats and vsm_norms all read it
+    # cache-hit
     sorted_post: DataFrame | None = None
     stage_row = _row(index_dir, "postings_stage")
     if stage_row is None:
@@ -335,7 +405,7 @@ def build_durable_index(
                 .withColumn("block_id", (F.col("doc_id")
                                          / F.lit(block_span)).cast("long"))
             # Range-partition on (bucket, term, block_id) before the
-            # partitionBy write. Four birds: (1) without a pre-partition,
+            # partitionBy write. Three birds: (1) without a pre-partition,
             # every task writes into every bucket dir — file count scales
             # as tasks x buckets and commit overhead WORSENS with more
             # cores; (2) a plain hash repartition(buckets) makes one task
@@ -346,8 +416,7 @@ def build_durable_index(
             # rule: a key's rows are bounded by block occupancy ≤
             # block_span); (3) sortWithinPartitions gives term-ordered
             # files whose parquet min/max term stats prune term lookups
-            # (the word2byte analog); (4) equal (bucket, term, block_id)
-            # keys form one consecutive run (range_layout).
+            # (the word2byte analog).
             # persist pre-exchange too: repartitionByRange runs a
             # boundary-SAMPLING job that would otherwise re-execute the
             # whole analysis pipeline (extract+tokenize+stem UDFs) a
@@ -434,52 +503,18 @@ def build_durable_index(
         return spark.read.parquet(stage_dir)
 
     def _build_segments() -> None:
+        # the kernel reads postings_stage itself; this step's row is its
+        # view of that table (perfbench and index_stats read it by name)
         if _done(index_dir, "segments"):
             return
         with _step(index_dir, "segments") as row:
-            if sorted_post is not None:
-                src = sorted_post
-            else:
-                # resume: the consecutive-run invariant must be
-                # re-established — parquet re-reads split/coalesce files
-                # arbitrarily, so pay one fresh exchange
-                src = range_layout(spark.read.parquet(stage_dir).withColumn(
-                    "block_id",
-                    (F.col("doc_id") / F.lit(block_span)).cast("long")),
-                    "bucket", "term", "block_id", tiebreak="doc_id")
-            seg = SEG.encode_sorted(src).persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                # encode partitions each cover a narrow contiguous
-                # (bucket, term) range, so this write touches 1-2 bucket
-                # dirs per task and files stay term-sorted for min/max
-                # pruning
-                _write_table(
-                    seg.sortWithinPartitions("bucket", "term", "block_id"),
-                    os.path.join(index_dir, "segments"),
-                    partition_by="bucket", bloom=True)
-                # per-BUCKET lineage from the persisted frame (cache hit)
-                # — identical rows to the files just written, no re-read
-                lin = seg.groupBy("bucket").agg(
-                    F.count("*").alias("blocks"),
-                    F.sum("n_docs").alias("postings"),
-                    F.sum(F.length("payload")).alias("payload_bytes"),
-                    F.sum(F.crc32(F.col("payload"))).alias("checksum"),
-                ).collect()
-            finally:
-                seg.unpersist()
-            per_bucket = {str(r["bucket"]): {
-                "blocks": r["blocks"], "postings": int(r["postings"] or 0),
-                "payload_bytes": int(r["payload_bytes"] or 0),
-                "checksum": int(r["checksum"] or 0)} for r in lin}
-            for k in ("blocks", "postings", "payload_bytes", "checksum"):
-                row[k] = sum(b[k] for b in per_bucket.values())
-            row["bucket_lineage"] = per_bucket
+            row.update(kernel_lineage(_staged(), stage_dir, block_span,
+                                      KERNEL_VALUES["tf"]))
 
     try:
-        # each of these jobs saturates the cluster on its own (the encode
-        # is a map-only scan of the cached exchange), so they run
-        # serially — measured on 2 vs 8 cores, concurrent submission only
-        # added contention here
+        # each of these jobs saturates the cluster on its own, so they
+        # run serially — measured on 2 vs 8 cores, concurrent submission
+        # only added contention here
         _build_segments()
         _build_doc_stats()
         _build_term_stats()
@@ -500,54 +535,21 @@ def lineage_rows(index_dir: str) -> list[dict]:
     return [r for r in rows if r is not None]  # None: retracted meanwhile
 
 
-class MiniBlock:
-    """One posting block in the driver mini-index: the segment row's
-    metadata and payload bytes, plus the block's decoded arrays,
-    memoized on first use so a cached term is decoded once rather than
-    once per request. The arrays are read-only (every request shares
-    them; tombstone masking makes per-request copies) and are evicted
-    with the term's LRU entry. Decoded, a posting costs at most 24 B
-    (int64 doc, tf and dl) against ~4 B as varints. The memo is
-    idempotent: two threads racing on it decode the same arrays."""
+class MiniBlock(NamedTuple):
+    """One posting block of the driver mini-index: a term's postings in
+    one ``block_span`` doc range, as doc_id-ascending read-only arrays
+    that every request shares (tombstone masking makes per-request
+    copies). ``values`` holds the store's ``KERNEL_VALUES`` arrays —
+    (tf, dl) on a tf store, (impact,) on an impact store — and
+    ``block_max_tf`` the block's largest first value (max tf, or max
+    impact)."""
 
-    __slots__ = ("term", "block_id", "block_max_tf", "n_docs", "payload",
-                 "_decoded")
-
-    def __init__(self, term: str, block_id: int, block_max_tf: int,
-                 n_docs: int, payload: bytes):
-        self.term = term
-        self.block_id = block_id
-        self.block_max_tf = block_max_tf
-        self.n_docs = n_docs
-        self.payload = payload
-        self._decoded = None
-
-    def _memo(self, decode):
-        if self._decoded is None:
-            arrays = []
-            for a in decode(self.payload):
-                if a is not None:
-                    if a.base is not None:
-                        # tf, dl and impact runs are views into the
-                        # whole decoded varint stream: own just the run
-                        a = a.copy()
-                    a.flags.writeable = False
-                arrays.append(a)
-            self._decoded = tuple(arrays)
-        return self._decoded
-
-    def full(self):
-        """codec.decode_block_full of the payload: (docs, tfs, dls|None)."""
-        return self._memo(codec.decode_block_full)
-
-    def impact(self):
-        """codec.decode_block_impact of the payload: (docs, impacts)."""
-        return self._memo(codec.decode_block_impact)
-
-
-#: segment columns a mini-index miss ships to the driver, in
-#: ``MiniBlock`` constructor order
-_MINI_COLUMNS = ("term", "block_id", "block_max_tf", "n_docs", "payload")
+    term: str
+    block_id: int
+    block_max_tf: int
+    n_docs: int
+    docs: np.ndarray
+    values: tuple
 
 
 def _read_doc_ids(paths: list[str], limit: int) -> frozenset[int]:
@@ -571,14 +573,15 @@ class SegmentIndex(InvertedIndex):
     lookups read the staged postings' matching rows (bucket partition
     pruning + term predicate pushdown — the columnar replacement for
     the reference's word2byte byte-range reads, index_loader.py:71-128);
-    the serving kernels read the tf-only segment blocks.
+    the serving kernel reads the same rows on the driver and splits
+    them into doc-range blocks (``mini_index``).
 
     Opening is lazy. The constructor reads only the JSON manifests
     (stats.json and manifest rows) on the driver; each Spark frame —
-    segments, postings, doc_stats, term_stats, VSM norms, the phrase and
-    trigram tables, tombstones — is created on first use. The serving
-    kernels read segments and tombstones through Arrow on the driver
-    (``mini_index``, ``deleted_ids``), so a handle that only serves them
+    postings, doc_stats, term_stats, VSM norms, the phrase and trigram
+    tables, tombstones — is created on first use. The serving kernel
+    reads its table and the tombstones through Arrow on the driver
+    (``mini_index``, ``deleted_ids``), so a handle that only serves it
     never starts a Spark job. The driver must see ``index_dir``, as it
     must to read the manifests."""
 
@@ -596,6 +599,13 @@ class SegmentIndex(InvertedIndex):
                 "store): its build stopped part-way. Resume the build "
                 "(build_durable_index with resume=True, the default of "
                 "jobs/build_index.py) or re-run quantize_index.")
+        quantized = _row(index_dir, "quantize_complete")
+        if quantized is not None and quantized.get("table") != IMPACT_TABLE:
+            raise ValueError(
+                f"impact store at {index_dir} holds varint segment blocks "
+                f"(written before the {IMPACT_TABLE}/ table), which the "
+                "serving kernel no longer reads: re-quantize from the "
+                "source index (quantize_index / jobs/quantize_index.py)")
         with open(os.path.join(index_dir, "stats.json")) as f:
             meta = json.load(f)
         self.spark = spark
@@ -605,7 +615,7 @@ class SegmentIndex(InvertedIndex):
         self.documents = documents
         self.analyzer = AnalyzerConfig(**meta["analyzer"])
         # quantized-impact artifacts (quantize_index) carry only their
-        # re-coded segments + stats.json; every side table, artifact and
+        # impacts table + stats.json; every side table, artifact and
         # tombstone batch resolves from the SOURCE index — Iceberg
         # metadata-pointing-at-shared-data-files, not a copy
         sidecar = meta.get("sidecar_dir")
@@ -628,15 +638,14 @@ class SegmentIndex(InvertedIndex):
         # Driver-side mini-index LRU: per-term (df, [MiniBlock], cap_used)
         # — the moral equivalent of the reference's startup word2byte
         # dict plus byte-range posting loads warmed by the OS page cache
-        # (index_loader.py:71-128). A repeat term costs zero reads and,
-        # once scored, zero block decodes.
+        # (index_loader.py:71-128). A repeat term costs zero reads.
         from collections import OrderedDict
         self._mini: OrderedDict[str, tuple[int, list]] = OrderedDict()
         self._mini_cap = self.MAX_CACHED_TERMS
-        self._segment_files = None
+        self._kernel_files = None
         #: cumulative mini-index traffic of this handle: term lookups
-        #: served from the LRU (hits) or fetched (misses), payload blocks
-        #: shipped and seconds spent in fetches
+        #: served from the LRU (hits) or fetched (misses), blocks the
+        #: fetches kept and seconds spent in fetches
         self.mini_counters = {"hits": 0, "misses": 0, "blocks_fetched": 0,
                               "fetch_s": 0.0}
         # every optional artifact is gated on its manifest row, never on
@@ -686,11 +695,6 @@ class SegmentIndex(InvertedIndex):
         return os.path.join(self.source_dir, name)
 
     @cached_property
-    def segments(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_dir,
-                                                    "segments"))
-
-    @cached_property
     def postings(self) -> DataFrame:
         return self.spark.read.parquet(self.table_path("postings_stage"))
 
@@ -738,11 +742,19 @@ class SegmentIndex(InvertedIndex):
 
     @property
     def store(self) -> str:
-        """Payload kind of the segment store: "tf" (self-contained
-        tf+dl blocks, the build default) or "impact" (quantized impacts,
-        quantize_index output — serving kernels score from the impact
-        byte, scoring model baked at quantize time)."""
+        """What the serving kernel scores: "tf" (tf and dl from the
+        staged postings, the build default) or "impact" (quantized
+        impacts, quantize_index output — the scoring model is baked at
+        quantize time)."""
         return self.meta.get("store", "tf")
+
+    @property
+    def kernel_table(self) -> str:
+        """Directory of the table the serving kernel reads: the staged
+        postings (the source's), or an impact store's ``IMPACT_TABLE``."""
+        if self.store == "impact":
+            return os.path.join(self.index_dir, IMPACT_TABLE)
+        return self.table_path("postings_stage")
 
     #: deleted_ids driver-set bound: ~48 MB of Python ints. Above this
     #: the kernel's live-docs set is itself the memory problem and the
@@ -962,13 +974,12 @@ class SegmentIndex(InvertedIndex):
     def mini_index(self, terms: list[str], cap: int | None = None,
                    stats: dict | None = None,
                    ) -> dict[str, tuple[int, list]]:
-        """Serving-path point lookup: {term: (df, [MiniBlock(term,
-        block_id, block_max_tf, n_docs, payload)])} for in-vocabulary
-        terms, through the driver LRU. Hits cost nothing; the misses of
-        one call cost one driver-side Arrow read of segments/
-        (``_fetch_blocks``) and no Spark job.
+        """Serving-path point lookup: {term: (df, [MiniBlock])} for
+        in-vocabulary terms, through the driver LRU. Hits cost nothing;
+        the misses of one call cost one driver-side Arrow read of the
+        kernel table (``_fetch_blocks``) and no Spark job.
 
-        ``cap`` bounds what a miss SHIPS to the driver: each term keeps
+        ``cap`` bounds what a miss KEEPS in the LRU: each term keeps
         its top-``cap`` blocks by upper bound (block_max_tf desc,
         block_id asc), with the EXACT df alongside. Cache entries
         remember the cap they were fetched under: an entry fetched full
@@ -1030,57 +1041,68 @@ class SegmentIndex(InvertedIndex):
     def _fetch_blocks(self, terms: list[str], cap: int | None
                       ) -> dict[str, tuple[int, list, int | None]]:
         """LRU entries {term: (df, [MiniBlock], cap_used)} for the
-        in-vocabulary ``terms``, from one driver-side Arrow read of
-        segments/ (the reference's word2byte byte-range loads,
-        index_loader.py:71-128). The read prunes files on the hive
-        ``bucket=`` partitions and row groups on term min/max. It reads
-        block metadata first: blocks are doc-disjoint, so a term's df is
-        the sum of its blocks' n_docs, and a term with more than ``cap``
+        in-vocabulary ``terms``, from one driver-side Arrow read of the
+        kernel table (``kernel_table``: the reference's word2byte
+        byte-range loads, index_loader.py:71-128). The read prunes files
+        on the hive ``bucket=`` partitions and row groups on term
+        min/max, and returns each term's rows whole: df ≤ n_docs rows
+        per term, whatever ``cap`` is. Each term's rows are sorted by
+        doc_id (file order is not guaranteed) and split into
+        ``doc_id // block_span`` blocks; a term with more than ``cap``
         blocks keeps its top ``cap`` by (block_max_tf desc, block_id
         asc) — the BM25 upper bound is monotone in block_max_tf for a
-        fixed term. Payloads are then read for the selected blocks only.
-        cap_used is ``cap`` for a truncated term and None for one fetched
-        complete, so a later exact request is a hit."""
+        fixed term — and the df stays exact. cap_used is ``cap`` for a
+        truncated term and None for one kept complete, so a later
+        exact request is a hit."""
+        import numpy as np
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
-        if self._segment_files is None:
-            self._segment_files = pads.dataset(
-                os.path.join(self.index_dir, "segments"), format="parquet",
-                partitioning="hive")
-        files = self._segment_files
+        if self._kernel_files is None:
+            self._kernel_files = pads.dataset(
+                self.kernel_table, format="parquet", partitioning="hive")
+        files = self._kernel_files
         if "term" not in files.schema.names:
-            return {}  # an index with no postings wrote no segment files
-        in_buckets = pads.field("bucket").isin(self._buckets_for(terms))
-        meta = files.to_table(
-            columns=["term", "block_id", "block_max_tf", "n_docs"],
-            filter=in_buckets & pads.field("term").isin(terms))
-        dfs: dict[str, int] = {}
-        capped: set[str] = set()
-        want = None
+            return {}  # an index with no postings wrote no files
+        values = KERNEL_VALUES[self.store]
+        rows = files.to_table(
+            columns=["term", "doc_id", *values],
+            filter=pads.field("bucket").isin(self._buckets_for(terms))
+            & pads.field("term").isin(terms))
+        span = self.meta["block_span"]
+        out = {}
         for t in dict.fromkeys(terms):
-            blocks = meta.filter(pc.equal(meta["term"], t))
-            if not blocks.num_rows:
+            hit = rows.filter(pc.equal(rows["term"], t))
+            if not hit.num_rows:
                 continue
-            dfs[t] = pc.sum(blocks["n_docs"]).as_py()
-            sel = pads.field("term") == t
-            if cap is not None and blocks.num_rows > cap:
-                top = pc.sort_indices(blocks, sort_keys=[
-                    ("block_max_tf", "descending"),
-                    ("block_id", "ascending")])[:cap]
-                sel = sel & pads.field("block_id").isin(
-                    blocks["block_id"].take(top).to_pylist())
-                capped.add(t)
-            want = sel if want is None else want | sel
-        if want is None:
-            return {}
-        rows = files.to_table(columns=list(_MINI_COLUMNS),
-                              filter=in_buckets & want)
-        self.mini_counters["blocks_fetched"] += rows.num_rows
-        out = {t: (df, [], cap if t in capped else None)
-               for t, df in dfs.items()}
-        for rec in zip(*(rows[c].to_pylist() for c in _MINI_COLUMNS)):
-            out[rec[0]][1].append(MiniBlock(*rec))
+            docs = hit["doc_id"].to_numpy()
+            order = np.argsort(docs, kind="stable")
+            docs, *vals = (np.asarray(c)[order] for c in
+                           (docs, *(hit[v].to_numpy() for v in values)))
+            for a in (docs, *vals):
+                a.flags.writeable = False
+            ids = docs // span
+            starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+            ends = np.r_[starts[1:], len(docs)]
+            maxima = np.maximum.reduceat(vals[0], starts)
+            keep = np.arange(len(starts))
+            capped = cap is not None and len(starts) > cap
+            if capped:
+                keep = np.lexsort((ids[starts], -maxima))[:cap]
+            blocks = []
+            for i in keep:
+                sl = slice(starts[i], ends[i])
+                arrays = (docs[sl], *(v[sl] for v in vals))
+                if capped:
+                    # own the kept blocks, so the dropped rows are freed
+                    arrays = tuple(a.copy() for a in arrays)
+                    for a in arrays:
+                        a.flags.writeable = False
+                blocks.append(MiniBlock(t, int(ids[starts[i]]),
+                                        int(maxima[i]), len(arrays[0]),
+                                        arrays[0], arrays[1:]))
+            self.mini_counters["blocks_fetched"] += len(blocks)
+            out[t] = (len(docs), blocks, cap if capped else None)
         return out
 
 
@@ -1147,25 +1169,28 @@ def quantize_index(spark: SparkSession, index_dir: str, out_dir: str,
     are the production analogue — public technique).
 
     Each posting's BM25 tf/dl part is quantized to ``bits`` bits with
-    the exact-int64 quantizer (operators.scoring.quantize_impacts) and
-    re-encoded as ~1-byte-per-posting impact blocks
-    (codec.encode_block_impact); serving then scores
-    idf·(k1+1)·q/maxq with NO doc-length data — smaller payloads,
-    fewer decode bytes, and an EXACT per-block bound for MaxScore
-    pruning (block_max_tf holds the block's max impact). Phrase and
-    proximity queries read positions from the source's staged postings.
+    the exact-int64 quantizer, as a JVM integer column
+    (operators.scoring.quantized_impact_col, bit-identical to
+    scoring.quantize_impacts), and written as ``IMPACT_TABLE`` rows
+    (term, doc_id, impact) in the source's buckets (``impact_rows``);
+    serving then scores idf·(k1+1)·q/maxq with NO doc-length data and
+    an EXACT per-block bound for MaxScore pruning (a block's
+    block_max_tf is its max impact). Phrase and proximity queries read
+    positions from the source's staged postings.
 
-    The artifact is segments + stats.json + its ``quantize_complete``
-    row ONLY: every side table, artifact and tombstone batch resolves
-    from the source via ``sidecar_dir`` (``SegmentIndex.source_dir``),
-    so nothing corpus-sized is copied; artifact builds, deletes and
-    merges refuse the store and point at its SOURCE. Re-quantizing into
-    an existing ``out_dir`` first removes its ``quantize_complete`` row,
-    so a failed re-quantize leaves a store ``load_index`` refuses, never
-    new blocks under old stats. The scoring model (k1=1.2, b=0.75) and
-    the corpus stats are BAKED IN — after a merge or vacuum of the
-    source, re-quantize from the new index (global stats change);
-    merge_indexes/vacuum_index refuse impact stores for that reason.
+    The artifact is ``IMPACT_TABLE`` + stats.json + its
+    ``quantize_complete`` row ONLY: every side table, artifact and
+    tombstone batch resolves from the source via ``sidecar_dir``
+    (``SegmentIndex.source_dir``), so nothing else is copied; artifact
+    builds, deletes and merges refuse the store and point at its
+    SOURCE. The row names the table and carries the kernel's view of it
+    (``kernel_lineage``). Re-quantizing into an existing ``out_dir``
+    first removes its ``quantize_complete`` row, so a failed re-quantize
+    leaves a store ``load_index`` refuses, never new impacts under old
+    stats. The scoring model (k1=1.2, b=0.75) and the corpus stats are
+    BAKED IN — after a merge or vacuum of the source, re-quantize from
+    the new index (global stats change); merge_indexes/vacuum_index
+    refuse impact stores for that reason.
 
     This is the engine's form of the reference's index converter
     (/root/reference/indexing/index_converter — re-code an existing
@@ -1174,21 +1199,35 @@ def quantize_index(spark: SparkSession, index_dir: str, out_dir: str,
     stats = _completed_tf_index(index_dir, "quantize_index")
     if os.path.abspath(out_dir) == os.path.abspath(index_dir):
         raise ValueError("quantize output must be a NEW directory")
+    table = os.path.join(out_dir, IMPACT_TABLE)
     with _step(out_dir, "quantize_complete") as row:
-        seg = spark.read.parquet(os.path.join(index_dir, "segments")) \
-            .select([f.name for f in SEG.SEGMENT_SCHEMA.fields])
         _write_table(
-            SEG.quantize_blocks(seg, stats["n_docs"], stats["total_len"],
-                                bits=bits)
-            .sortWithinPartitions("bucket", "term", "block_id"),
-            os.path.join(out_dir, "segments"),
-            partition_by="bucket", bloom=True)
+            impact_rows(spark, index_dir, bits)
+            .sortWithinPartitions("bucket", "term", "doc_id"),
+            table, partition_by="bucket", bloom=True)
         _write_json(os.path.join(out_dir, "stats.json"), {
             **stats, "store": "impact", "impact_bits": bits,
             "impact_k1": scoring.IMPACT_K1, "impact_b": scoring.IMPACT_B,
             "sidecar_dir": os.path.abspath(index_dir)})
-        row.update(bits=bits, source=os.path.abspath(index_dir))
+        row.update(kernel_lineage(spark.read.parquet(table), table,
+                                  stats["block_span"],
+                                  KERNEL_VALUES["impact"]),
+                   bits=bits, source=os.path.abspath(index_dir),
+                   table=IMPACT_TABLE)
     return out_dir
+
+
+def impact_rows(spark: SparkSession, index_dir: str,
+                bits: int) -> DataFrame:
+    """(term, bucket, doc_id, impact) for every staged posting of the
+    completed tf index at ``index_dir``, quantized to ``bits`` bits
+    against its stats: a column projection of ``postings_stage`` with
+    no shuffle and no Python (``quantize_index`` writes it)."""
+    with open(os.path.join(index_dir, "stats.json")) as f:
+        stats = json.load(f)
+    return spark.read.parquet(os.path.join(index_dir, "postings_stage")) \
+        .select("term", "bucket", "doc_id", scoring.quantized_impact_col(
+            stats["n_docs"], stats["total_len"], bits))
 
 
 #: default cap on phrase-index coverage — the TOP-K most frequent terms

@@ -97,7 +97,7 @@ def _requantize(spark, d):
     q = d + "_impact"
     catalog.quantize_index(spark, d, q, bits=8)
     return (lambda: catalog.quantize_index(spark, d, q, bits=4),
-            "segments", None)
+            catalog.IMPACT_TABLE, None)
 
 
 @pytest.mark.parametrize("step,setup", [

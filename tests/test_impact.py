@@ -1,19 +1,21 @@
-"""Quantized-impact store (codec tag 0x00'I' + catalog.quantize_index +
-the MaxScore impact branch + search.search_quantized).
+"""Quantized-impact store (catalog.quantize_index + the MaxScore impact
+branch + search.search_quantized).
 
 Gates:
-* codec roundtrip + cross-format refusals;
 * the exact-int64 quantizer: numpy == Spark column == Fraction ground
   truth, and the dequantized weight is within (k1+1)/(2·maxq) of the
   BM25 tf/dl part computed at the pinned milli-avgdl;
+* the store's impacts table == scoring.quantize_impacts of the source's
+  staged postings, bit for bit;
 * serving identity: MaxScore-on-impact-store == relational
   search_quantized (rank AND score), pruned == exhaustive kernel;
 * accuracy vs exact BM25: per-doc error within the theoretical bound;
 * phrase queries still work on a quantized store (positions, tf and dl
-  all resolve from the source sidecar; the quantized segments carry no
-  positional payloads at all);
-* merge/vacuum refuse impact stores (stats are baked — re-quantize);
-* the impact store is smaller than the tf/dl store it came from.
+  all resolve from the source sidecar; the impacts table carries no
+  positions at all);
+* merge/vacuum refuse impact stores (stats are baked — re-quantize), and
+  a store written before the impacts table does not open;
+* the kernel reads fewer bytes on the impact store than on its source.
 """
 
 from __future__ import annotations
@@ -21,45 +23,10 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from search_engine_spark import codec
 from search_engine_spark.operators import maxscore as MS
 from search_engine_spark.operators import scoring
 from search_engine_spark.operators import search as S
 from search_engine_spark.sources import catalog
-
-
-# ---------------------------------------------------------------------------
-# codec
-# ---------------------------------------------------------------------------
-
-def test_impact_codec_roundtrip():
-    rng = np.random.default_rng(7)
-    docs = np.unique(rng.integers(0, 1 << 40, size=500))
-    imps = rng.integers(0, 256, size=len(docs))
-    payload = codec.encode_block_impact(docs, imps)
-    d2, i2 = codec.decode_block_impact(payload)
-    assert np.array_equal(d2, docs)
-    assert np.array_equal(i2, imps)
-    assert codec.is_impact_payload(payload)
-
-
-def test_impact_codec_empty():
-    e = np.empty(0, dtype=np.int64)
-    payload = codec.encode_block_impact(e, e)
-    d2, i2 = codec.decode_block_impact(payload)
-    assert len(d2) == 0 and len(i2) == 0
-
-
-def test_impact_payload_refusals():
-    docs = np.array([1, 5, 9], dtype=np.int64)
-    imps = np.array([3, 200, 65535], dtype=np.int64)
-    impact_payload = codec.encode_block_impact(docs, imps)
-    with pytest.raises(ValueError, match="impact"):
-        codec.decode_block_full(impact_payload)
-    tf_payload = codec.encode_block(docs, np.array([1, 2, 3]))
-    with pytest.raises(ValueError, match="not a quantized-impact"):
-        codec.decode_block_impact(tf_payload)
-    assert not codec.is_impact_payload(tf_payload)
 
 
 # ---------------------------------------------------------------------------
@@ -250,14 +217,65 @@ def test_merge_and_vacuum_refuse_impact_store(tmp_path, spark, indexes):
 
 
 def test_impact_store_is_smaller(indexes):
-    from pyspark.sql import functions as F
-
+    """The kernel view of the impact store (doc_id + impact chunks) is
+    smaller than its source's (doc_id + tf + dl chunks), over the same
+    blocks and postings."""
     src, quant = indexes
-    src_bytes = src.segments.agg(
-        F.sum(F.length("payload"))).collect()[0][0]
-    quant_bytes = quant.segments.agg(
-        F.sum(F.length("payload"))).collect()[0][0]
-    assert quant_bytes < src_bytes
+    view = {r["step"]: r for r in catalog.lineage_rows(src.index_dir)}[
+        "segments"]
+    qview = {r["step"]: r for r in catalog.lineage_rows(quant.index_dir)}[
+        "quantize_complete"]
+    assert (qview["blocks"], qview["postings"]) == \
+        (view["blocks"], view["postings"])
+    assert 0 < qview["payload_bytes"] < view["payload_bytes"]
+
+
+def test_impacts_equal_quantize_impacts(spark, indexes):
+    """Every impact the store holds is scoring.quantize_impacts of its
+    staged posting's tf and dl (the numpy quantizer the varint impact
+    blocks were written with), bit for bit, in the posting's bucket; and
+    the kernel's impact blocks hold exactly those values."""
+    src, quant = indexes
+    got = {(r.term, r.doc_id): (r.bucket, r.impact) for r in spark.read
+           .parquet(quant.kernel_table).collect()}
+    rows = src.postings.select("term", "doc_id", "bucket", "tf",
+                               "dl").collect()
+    want_q = scoring.quantize_impacts(
+        [r.tf for r in rows], [r.dl for r in rows], src.stats["n_docs"],
+        src.stats["total_len"], 8)
+    want = {(r.term, r.doc_id): (r.bucket, int(q))
+            for r, q in zip(rows, want_q)}
+    assert got == want and got
+    quant._mini.clear()
+    for t, (df, blks) in quant.mini_index(["market", "price"]).items():
+        assert df == sum(b.n_docs for b in blks)
+        for b in blks:
+            assert b.block_max_tf == max(b.values[0])
+            assert [got[(t, d)][1] for d in b.docs.tolist()] \
+                == b.values[0].tolist()
+
+
+def test_impact_store_without_impacts_table_is_refused(tmp_path, spark,
+                                                       indexes):
+    """A store whose quantize_complete row names no impacts table (one
+    quantized into varint segment blocks) does not open: the kernel no
+    longer reads those blocks."""
+    import json
+    import os
+    import shutil
+
+    _, quant = indexes
+    old = str(tmp_path / "old_store")
+    shutil.copytree(quant.index_dir, old)
+    path = catalog._manifest_path(old, "quantize_complete")
+    with open(path) as f:
+        row = json.load(f)
+    del row["table"]
+    with open(path, "w") as f:
+        json.dump(row, f)
+    assert os.path.isdir(os.path.join(old, catalog.IMPACT_TABLE))
+    with pytest.raises(ValueError, match="re-quantize from the source"):
+        catalog.load_index(spark, old)
 
 
 def test_quantize_requires_completed_build(tmp_path, spark):

@@ -1,7 +1,6 @@
 """jobs/index_stats.py: the store-inspection report — numbers must
-agree with the build's own lineage, the codec mix must read the
-self-describing payload tags correctly, and impact artifacts must
-report their store kind + sidecar."""
+agree with the build's own lineage (the kernel view), and impact
+artifacts must report their store kind + sidecar."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ import os
 
 import pytest
 
-from search_engine_spark.operators import segments as SEG
 from search_engine_spark.sources import catalog
 
 
@@ -32,7 +30,7 @@ def test_report_matches_lineage(spark, stats_index, corpus_sdf):
     assert rep["postings"] == seg_rows[0]["postings"]
     assert rep["payload_bytes"] == seg_rows[0]["payload_bytes"]
     assert rep["store"] == "tf"
-    assert rep["codec_mix"] == {"vb": rep["blocks"]}
+    assert "codec_mix" not in rep
     assert rep["bucket_skew_max_over_mean"] >= 1.0
     assert rep["deleted_fraction"] == 0.0
     assert rep["df_head"][0][1] >= rep["df_head"][-1][1]
@@ -40,26 +38,27 @@ def test_report_matches_lineage(spark, stats_index, corpus_sdf):
 
 def test_report_on_disk_bytes_and_codecs(spark, stats_index):
     # bytes per table directory add up to the whole index, counted the
-    # way perfbench counts it; the codecs come from the segment footers
+    # way perfbench counts it; the codecs come from the footers of the
+    # kernel's table, the staged postings
     from jobs.index_stats import collect_stats
 
     rep = collect_stats(spark, stats_index)
     disk = rep["on_disk_bytes"]
     assert set(disk) == {"index"}
     tables = disk["index"]
-    assert {"segments", "postings_stage", "doc_stats", "term_stats",
-            "vsm_norms", "manifest", "stats.json"} <= set(tables)
+    assert {"postings_stage", "doc_stats", "term_stats",
+            "vsm_norms", "manifest", "stats.json"} == set(tables)
     assert all(b > 0 for b in tables.values())
     walked = sum(os.path.getsize(os.path.join(d, f))
                  for d, _, files in os.walk(stats_index) for f in files)
     assert sum(tables.values()) == walked
-    # one chunk per segment column (bucket is the partition directory)
-    # per file; these small files hold one row group each
+    # one chunk per staged column (term, doc_id, tf, dl, positions;
+    # bucket is the partition directory) per file; these small files
+    # hold one row group each
     n_files = sum(f.endswith(".parquet") for _, _, files in
-                  os.walk(os.path.join(stats_index, "segments"))
+                  os.walk(os.path.join(stats_index, "postings_stage"))
                   for f in files)
-    assert rep["parquet_codecs"] == {
-        "ZSTD": n_files * (len(SEG.SEGMENT_SCHEMA.fields) - 1)}
+    assert rep["parquet_codecs"] == {"ZSTD": n_files * 5}
 
 
 def test_report_on_impact_store(tmp_path, spark, stats_index):
@@ -71,12 +70,15 @@ def test_report_on_impact_store(tmp_path, spark, stats_index):
     assert rep["store"] == "impact"
     assert rep["impact_bits"] == 8
     assert rep["sidecar_dir"] == stats_index
-    assert set(rep["codec_mix"]) == {"impact"}
-    # the impact store holds only its segments; its side tables are the
+    source = collect_stats(spark, stats_index)
+    assert (rep["blocks"], rep["postings"]) == \
+        (source["blocks"], source["postings"])
+    assert 0 < rep["payload_bytes"] < source["payload_bytes"]
+    # the impact store holds only its impacts; its side tables are the
     # source's, so both directories are sized
     disk = rep["on_disk_bytes"]
-    assert {"segments", "manifest", "stats.json"} == set(disk["index"])
-    assert {"segments", "postings_stage", "term_stats"} <= set(disk["source"])
+    assert {"impacts", "manifest", "stats.json"} == set(disk["index"])
+    assert {"postings_stage", "term_stats"} <= set(disk["source"])
     assert set(rep["parquet_codecs"]) == {"ZSTD"}
 
 

@@ -285,25 +285,109 @@ def test_handed_plan_ranks_like_classifying_inside(seg_index):
 
 
 def test_warm_repeat_query_decodes_nothing(seg_index, monkeypatch):
-    """The mini-index LRU keeps each block's decoded arrays: once a
-    query has scored every block, repeating it (at any k) decodes
-    nothing."""
-    calls = []
+    """No query decodes a payload (a block is the staged postings'
+    columns), and once a query's terms are in the mini-index LRU,
+    repeating it (at any k) reads nothing."""
+    calls, reads = [], []
     decode = codec.decode_block_full
+    fetch = type(seg_index)._fetch_blocks
 
     def counting(payload):
         calls.append(1)
         return decode(payload)
 
+    def counting_fetch(self, terms, cap):
+        reads.append(list(terms))
+        return fetch(self, terms, cap)
+
     monkeypatch.setattr(codec, "decode_block_full", counting)
+    monkeypatch.setattr(type(seg_index), "_fetch_blocks", counting_fetch)
     q = "market price growth"
     seg_index._mini.clear()
     cold = MS.search_maxscore(seg_index, q, k=1 << 30)
-    assert calls  # the cold query decoded through the patched codec
-    calls.clear()
+    assert reads  # the cold query read the staged postings
+    reads.clear()
     assert MS.search_maxscore(seg_index, q, k=1 << 30) == cold
     MS.search_maxscore(seg_index, q, k=5)
-    assert calls == []
+    assert reads == [] and calls == []
+
+
+def test_kernel_blocks_equal_reference_encoder(spark, seg_index_dir,
+                                               tmp_path):
+    """For every term of a block_span=16 index, the blocks the fetch
+    builds from the staged postings equal the reference varint blocks
+    (segments.encode_segments, decoded by codec.decode_block_full) of
+    the same postings — docs, tf, dl, n_docs, block_max_tf — and the df
+    is their postings' sum. Tombstoned docs stay in the blocks (the
+    kernel masks them per request), and a capped term keeps the
+    reference's top blocks by (block_max_tf desc, block_id asc) with
+    the exact df."""
+    import shutil
+
+    from search_engine_spark.operators import segments as SEG
+    from search_engine_spark.sources import catalog
+    from tests.test_segments import kernel_blocks
+
+    d = str(tmp_path / "idx")
+    shutil.copytree(seg_index_dir, d)
+    catalog.delete_docs(spark, d, [3, 40, 41, 77])
+    idx = catalog.load_index(spark, d)
+    assert idx.deleted_ids() == {3, 40, 41, 77}
+    ref, dfs = {}, {}
+    for r in SEG.encode_segments(idx.postings, buckets=16,
+                                 block_span=16).collect():
+        docs, tfs, dls = codec.decode_block_full(bytes(r.payload))
+        ref[(r.term, r.block_id)] = (r.n_docs, r.block_max_tf, docs.tolist(),
+                                     tfs.tolist(), dls.tolist())
+        dfs[r.term] = dfs.get(r.term, 0) + r.n_docs
+    assert kernel_blocks(idx) == ref and ref
+    fetched = idx._fetch_blocks(sorted(dfs), None)
+    assert {t: df for t, (df, _, _) in fetched.items()} == dfs
+
+    n_blocks = {}
+    for t, _ in ref:
+        n_blocks[t] = n_blocks.get(t, 0) + 1
+    head = max(sorted(n_blocks), key=n_blocks.get)
+    assert n_blocks[head] > 2
+    df, blks, cap_used = idx._fetch_blocks([head], 2)[head]
+    want = sorted(((k, v) for k, v in ref.items() if k[0] == head),
+                  key=lambda kv: (-kv[1][1], kv[0][1]))[:2]
+    assert (df, cap_used) == (dfs[head], 2)
+    assert [((b.term, b.block_id), (b.n_docs, b.block_max_tf,
+                                    b.docs.tolist(),
+                                    *(v.tolist() for v in b.values)))
+            for b in blks] == want
+
+
+@pytest.mark.parametrize("which", ["built", "merged"])
+def test_benchmark_interface(spark, seg_index_dir, tmp_path, which):
+    """What the benchmark's traced runs read of the engine: with every
+    name its tracer wraps instrumented, a merge and a kernel query run,
+    and the index's segments row has integer postings, blocks and
+    payload_bytes, beside a duration on each of the five build rows."""
+    from perfbench.run import segments_row
+    from perfbench.trace import Tracer
+    from search_engine_spark.sources import catalog
+
+    tracer = Tracer(spark.sparkContext)
+    try:
+        kernel = tracer.instrument_engine()
+        d = seg_index_dir
+        if which == "merged":
+            d = catalog.merge_indexes(spark, [seg_index_dir],
+                                      str(tmp_path / "merged"))
+        assert MS.search_maxscore(catalog.load_index(spark, d),
+                                  "market price", k=5)
+        assert kernel["calls"] == 1
+        row = segments_row(d)
+        for key in ("postings", "blocks", "payload_bytes"):
+            assert isinstance(row[key], int) and row[key] > 0, key
+        steps = {r["step"]: r for r in catalog.lineage_rows(d)}
+        for step in ("postings_stage", "segments", "doc_stats",
+                     "term_stats", "vsm_norms"):
+            assert isinstance(steps[step]["duration_sec"], float), step
+    finally:
+        tracer.restore()
 
 
 def test_deletes_after_warm_cache_are_masked(seg_index, monkeypatch):

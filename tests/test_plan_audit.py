@@ -23,6 +23,6 @@ def test_explain_audit_passes(tmp_path):
     # the dump goes where --out says (the committed BENCH/PLANS.md is
     # regenerated only on explicit request), with temp paths normalized
     dump = out.read_text()
-    assert "## Fused segment encode" in dump
-    assert "<tmp>/audit_idx/idx/segments" in dump
+    assert "## Impact store write" in dump
+    assert "<tmp>/audit_idx/idx/postings_stage" in dump
     assert "/audit_idx_" not in dump

@@ -1,9 +1,10 @@
-"""Segment layer: encode/decode round-trip through Spark, durable build,
-kill-resume identity, pruned lookup parity, block-max metadata sanity."""
+"""Segment layer: the reference block encoder's round-trip through
+Spark, durable build, kill-resume identity, pruned lookup parity,
+block-max metadata sanity, and the kernel's blocks read from the staged
+postings."""
 
 import json
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +14,26 @@ from search_engine_spark.operators import maxscore as MS
 from search_engine_spark.operators import search as S
 from search_engine_spark.operators import segments as SEG
 from search_engine_spark.sources import catalog
+
+
+def kernel_blocks(idx) -> dict:
+    """{(term, block_id): (n_docs, block_max_tf, docs, *values)} of
+    every vocabulary term, as the serving kernel fetches them (uncapped,
+    plain lists)."""
+    terms = [r.term for r in idx.term_stats.select("term").collect()]
+    return {(b.term, b.block_id): (b.n_docs, b.block_max_tf, b.docs.tolist(),
+                                   *(v.tolist() for v in b.values))
+            for _, blks, _ in idx._fetch_blocks(terms, None).values()
+            for b in blks}
+
+
+def kernel_view(d) -> dict:
+    """The segments row's per-bucket (blocks, postings, checksum): the
+    kernel view's content, without the byte count that depends on how
+    the files split."""
+    row = next(r for r in catalog.lineage_rows(d) if r["step"] == "segments")
+    return {b: (v["blocks"], v["postings"], v["checksum"])
+            for b, v in row["bucket_lineage"].items()}
 
 
 @pytest.fixture(scope="module")
@@ -94,23 +115,23 @@ def test_lineage_complete(index_dir):
 
 def test_kill_resume_identity(spark, corpus_sdf, tmp_path):
     """Simulate a crash after the staged postings and doc stats: lose the
-    segments and term_stats manifests and the segment data; the resumed
-    build must reproduce identical segments without re-running the
+    segments and term_stats manifests; the resumed build must record the
+    same kernel view (and serve the same blocks) without re-running the
     completed steps."""
     d = str(tmp_path / "index2")
     catalog.build_durable_index(spark, corpus_sdf, d, buckets=16)
-    ref = {(r.term, r.block_id): (r.n_docs, bytes(r.payload))
-           for r in spark.read.parquet(os.path.join(d, "segments")).collect()}
+    ref = kernel_blocks(catalog.load_index(spark, d))
     before = {r["step"]: r for r in catalog.lineage_rows(d)}
 
     for step in ("segments", "term_stats", "build_complete"):
         os.remove(catalog._manifest_path(d, step))
-    shutil.rmtree(os.path.join(d, "segments"))
 
     catalog.build_durable_index(spark, corpus_sdf, d, buckets=16)
-    got = {(r.term, r.block_id): (r.n_docs, bytes(r.payload))
-           for r in spark.read.parquet(os.path.join(d, "segments")).collect()}
-    assert got == ref and got
+    assert kernel_blocks(catalog.load_index(spark, d)) == ref and ref
+    after_seg = {r["step"]: r for r in catalog.lineage_rows(d)}["segments"]
+    for k in ("blocks", "postings", "payload_bytes", "checksum",
+              "bucket_lineage"):
+        assert after_seg[k] == before["segments"][k], k
 
     # completed steps were NOT re-run (manifest ts preserved)
     after = {r["step"]: r for r in catalog.lineage_rows(d)}
@@ -120,20 +141,20 @@ def test_kill_resume_identity(spark, corpus_sdf, tmp_path):
 
 
 def test_block_max_consistency(spark, index_dir):
-    seg = spark.read.parquet(os.path.join(index_dir, "segments"))
     with open(os.path.join(index_dir, "stats.json")) as f:
         n_docs = json.load(f)["n_docs"]
     # upper bound must dominate every actual BM25 weight in the block
-    some = seg.orderBy(F.desc("n_docs")).limit(5).collect()
     idx = catalog.load_index(spark, index_dir)
     ts = {r.term: r.df for r in idx.term_stats.collect()}
+    head = sorted(ts, key=lambda t: (-ts[t], t))[:5]
+    some = [b for _, blks in idx.mini_index(head).values() for b in blks]
     import tests.oracle as O
     dl_map = {r.doc_id: r.dl for r in idx.doc_stats.collect()}
     avgdl = idx.stats["avgdl"]
+    assert some
     for blk in some:
         ub = SEG.bm25_upper_bound(ts[blk.term], n_docs, blk.block_max_tf)
-        from search_engine_spark import codec
-        docs, tfs = codec.decode_block(bytes(blk.payload))
+        docs, (tfs, _) = blk.docs, blk.values
         for d, tf in zip(docs, tfs):
             w = O.bm25_weight_std(int(tf), dl_map[int(d)], ts[blk.term], n_docs, avgdl)
             assert w <= ub + 1e-12
@@ -182,55 +203,25 @@ def test_resume_rejects_changed_build_config(spark, corpus_sdf, tmp_path):
 
 
 def test_fused_build_matches_sharded(spark, index_dir):
-    """The build's segment blocks (one range exchange, SEG.encode_sorted)
-    are byte-identical to the reference groupBy encoder
-    (SEG.encode_segments) over the same staged postings."""
-    def n_segment_files():
-        return sum(f.endswith(".parquet") for _, _, fs in
-                   os.walk(os.path.join(index_dir, "segments")) for f in fs)
-
+    """The build writes its one postings table in few files, and its
+    segments row records exactly the per-bucket blocks and postings of
+    the reference groupBy encoder (SEG.encode_segments) over the same
+    staged postings."""
     # the layout exchange is data-sized (session shuffle partitions, AQE
     # coalescing): each task writes the buckets its contiguous range
     # covers, so files <= tasks + buckets
     max_files = 16 + 2 * spark.sparkContext.defaultParallelism
-    assert 0 < n_segment_files() <= max_files
+    assert 0 < _parquet_files(os.path.join(index_dir, "postings_stage")) \
+        <= max_files
+    assert not os.path.exists(os.path.join(index_dir, "segments"))
 
-    key = (lambda r: (r.term, r.block_id))
-    val = (lambda r: (r.n_docs, r.min_doc_id, r.max_doc_id, r.block_max_tf,
-                      r.bucket, bytes(r.payload)))
-    built = {key(r): val(r) for r in
-             spark.read.parquet(os.path.join(index_dir, "segments")).collect()}
     staged = spark.read.parquet(os.path.join(index_dir, "postings_stage"))
-    ref = {key(r): val(r) for r in SEG.encode_segments(
-        staged, buckets=16, block_span=SEG.DEFAULT_BLOCK_SPAN).collect()}
-    assert built == ref and built
-
-
-def test_encode_sorted_equals_encode_segments(spark, built_index):
-    """The shuffle-free consecutive-run encoder over a range-partitioned,
-    sorted frame emits exactly the blocks of the groupBy encoder —
-    including groups that straddle Arrow batch boundaries (forced tiny
-    batches)."""
-    from pyspark.sql import functions as F
-
-    post = built_index.postings.withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(8)).cast("int")
-    ).withColumn("block_id", (F.col("doc_id") / F.lit(64)).cast("long"))
-    sorted_post = post.repartitionByRange(4, "bucket", "term", "block_id") \
-        .sortWithinPartitions("bucket", "term", "block_id", "doc_id")
-
-    old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        got = {(r.term, r.block_id): (r.n_docs, bytes(r.payload))
-               for r in SEG.encode_sorted(sorted_post).collect()}
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                       old_batch)
-    want = {(r.term, r.block_id): (r.n_docs, bytes(r.payload))
-            for r in SEG.encode_segments(
-                built_index.postings, buckets=8, block_span=64).collect()}
-    assert got == want and got
+    ref = {str(r.bucket): (r.blocks, r.postings) for r in SEG.encode_segments(
+        staged, buckets=16, block_span=SEG.DEFAULT_BLOCK_SPAN)
+        .groupBy("bucket").agg(F.count("*").alias("blocks"),
+                               F.sum("n_docs").alias("postings")).collect()}
+    got = {b: v[:2] for b, v in kernel_view(index_dir).items()}
+    assert got == ref and got
 
 
 def test_merge_indexes_equals_full_build(spark, corpus_sdf, tmp_path):
@@ -249,14 +240,10 @@ def test_merge_indexes_equals_full_build(spark, corpus_sdf, tmp_path):
     catalog.build_durable_index(spark, corpus_sdf, dfull, buckets=16)
     catalog.merge_indexes(spark, [da, db], dm)
 
-    key = (lambda r: (r.term, r.block_id))
-    val = (lambda r: (r.n_docs, r.min_doc_id, r.max_doc_id, r.block_max_tf,
-                      r.bucket, bytes(r.payload)))
-    merged = {key(r): val(r) for r in
-              spark.read.parquet(os.path.join(dm, "segments")).collect()}
-    full = {key(r): val(r) for r in
-            spark.read.parquet(os.path.join(dfull, "segments")).collect()}
-    assert merged == full and merged
+    assert kernel_view(dm) == kernel_view(dfull)
+    merged = kernel_blocks(catalog.load_index(spark, dm))
+    assert merged == kernel_blocks(catalog.load_index(spark, dfull)) \
+        and merged
 
     with open(os.path.join(dm, "stats.json")) as f:
         sm = json.load(f)
@@ -279,11 +266,8 @@ def test_merge_indexes_equals_full_build(spark, corpus_sdf, tmp_path):
 
 
 def _segment_rows(spark, d):
-    key = (lambda r: (r.term, r.block_id))
-    val = (lambda r: (r.n_docs, r.min_doc_id, r.max_doc_id, r.block_max_tf,
-                      r.bucket, bytes(r.payload)))
-    return {key(r): val(r) for r in
-            spark.read.parquet(os.path.join(d, "segments")).collect()}
+    """The kernel view of ``d``: its segments row and its blocks."""
+    return kernel_view(d), kernel_blocks(catalog.load_index(spark, d))
 
 
 def _parquet_files(table_dir):
@@ -314,8 +298,7 @@ def test_default_build_sizes_buckets(spark, corpus_sdf, tmp_path):
         assert json.load(f)["buckets"] == want
     assert rows["build_complete"]["buckets"] == want
     most = want + 2 * spark.sparkContext.defaultParallelism
-    for table in ("postings_stage", "segments"):
-        assert 0 < _parquet_files(os.path.join(d, table)) <= most, table
+    assert 0 < _parquet_files(os.path.join(d, "postings_stage")) <= most
 
     e = str(tmp_path / "explicit")
     catalog.build_durable_index(spark, corpus_sdf.limit(40), e, buckets=3)
@@ -323,8 +306,9 @@ def test_default_build_sizes_buckets(spark, corpus_sdf, tmp_path):
     with open(os.path.join(e, "stats.json")) as f:
         assert json.load(f)["buckets"] == 3
     assert {r.bucket for r in spark.read.parquet(
-        os.path.join(e, "segments")).select("bucket").distinct()
+        os.path.join(e, "postings_stage")).select("bucket").distinct()
         .collect()} == {0, 1, 2}
+    assert set(kernel_view(e)) == {"0", "1", "2"}
 
 
 def test_sized_buckets_serve_and_resume(spark, corpus_sdf, built_index,
@@ -352,7 +336,6 @@ def test_sized_buckets_serve_and_resume(spark, corpus_sdf, built_index,
     for step in ("segments", "stats", "term_stats", "vsm_norms",
                  "build_complete"):
         os.remove(catalog._manifest_path(d, step))
-    shutil.rmtree(os.path.join(d, "segments"))
     os.remove(os.path.join(d, "stats.json"))
     monkeypatch.setattr(SEG, "POSTINGS_PER_BUCKET", 100_000)
     catalog.build_durable_index(spark, corpus_sdf, d)
@@ -499,25 +482,23 @@ def _assert_write_policy(chunks):
 
 def test_index_files_follow_write_policy(seg_index_dir):
     """Every parquet file of a built index carries catalog.WRITE_POLICY:
-    zstd pages, no min/max on the opaque payload columns, and min/max
-    kept on ``term`` (the column the Arrow miss read and Spark's
-    row-group filter prune on)."""
+    zstd pages and min/max kept on ``term`` (the column the Arrow miss
+    read and Spark's row-group filter prune on); no table has an opaque
+    payload column any more."""
     blobs, terms = _assert_write_policy(_chunks(seg_index_dir))
     tables = {c[0].split(os.sep)[0] for c in terms}
-    assert {"segments", "postings_stage", "term_stats"} <= tables
-    assert {c[0].split(os.sep)[0] for c in blobs} == {"segments"}
+    assert {"postings_stage", "term_stats"} <= tables
+    assert "segments" not in tables and blobs == []
 
 
 def test_snappy_index_opens_resumes_and_vacuums(spark, corpus_sdf, tmp_path,
                                                 monkeypatch):
-    """An index written before the write policy (snappy pages, payload
-    min/max) needs no migration: parquet records the codec per file, so
-    it serves, a resumed build re-derives its segments from the snappy
-    staged postings, and a vacuum reads all of its side tables."""
+    """An index written before the write policy (snappy pages) needs no
+    migration: parquet records the codec per file, so it serves, a
+    resumed build re-derives its segments row from the snappy staged
+    postings, and a vacuum reads all of its side tables."""
     def segs(d):
-        return {(r.term, r.block_id): (r.n_docs, bytes(r.payload))
-                for r in spark.read.parquet(
-                    os.path.join(d, "segments")).collect()}
+        return kernel_blocks(catalog.load_index(spark, d))
 
     def codecs(d, table):
         return {c[2] for c in _chunks(os.path.join(d, table))}
@@ -527,19 +508,18 @@ def test_snappy_index_opens_resumes_and_vacuums(spark, corpus_sdf, tmp_path,
     catalog.build_durable_index(spark, corpus_sdf.limit(40), d, buckets=4,
                                 block_span=16)
     monkeypatch.undo()
-    assert codecs(d, "segments") == {"SNAPPY"}
+    assert codecs(d, "postings_stage") == {"SNAPPY"}
     ref = segs(d)
     q = "connect trading market"
     hits = MS.search_maxscore(catalog.load_index(spark, d), q, k=10)
     assert ref and hits
 
+    view = kernel_view(d)
     for step in ("segments", "build_complete"):
         os.remove(catalog._manifest_path(d, step))
-    shutil.rmtree(os.path.join(d, "segments"))
     catalog.build_durable_index(spark, corpus_sdf.limit(40), d, buckets=4,
                                 block_span=16)
-    assert segs(d) == ref
-    assert codecs(d, "segments") == {"ZSTD"}
+    assert segs(d) == ref and kernel_view(d) == view
     assert codecs(d, "postings_stage") == {"SNAPPY"}
     assert MS.search_maxscore(catalog.load_index(spark, d), q, k=10) == hits
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from search_engine_spark.operators import search as S
 from search_engine_spark.operators import maxscore as MS
 from search_engine_spark.sources import catalog
+from tests.test_segments import kernel_blocks
 
 
 @pytest.fixture()
@@ -98,12 +99,8 @@ def test_vacuum_equals_fresh_build_over_live_docs(spark, corpus_sdf,
         spark, corpus_sdf.filter(~F.col("doc_id").isin(victims)), fresh,
         buckets=16)
 
-    key = (lambda r: (r.term, r.block_id))
-    val = (lambda r: (r.n_docs, bytes(r.payload)))
-    got = {key(r): val(r) for r in
-           spark.read.parquet(os.path.join(vac, "segments")).collect()}
-    want = {key(r): val(r) for r in
-            spark.read.parquet(os.path.join(fresh, "segments")).collect()}
+    got = kernel_blocks(catalog.load_index(spark, vac))
+    want = kernel_blocks(catalog.load_index(spark, fresh))
     assert got == want and got
 
     # stats recomputed over live docs; no tombstones carried forward

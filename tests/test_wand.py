@@ -178,10 +178,10 @@ def test_wand_requires_segment_index(spark, corpus_sdf):
 
 
 def test_default_cap_bounds_head_term_fetch(seg_index, monkeypatch):
-    """The OUT-OF-BOX path must bound driver transfer: with the auto cap
-    tightened to 2, a head-term query under the DEFAULT arguments ships
-    at most 2 blocks per term to the driver (visible in the LRU entry),
-    and an explicit opt-in to None still fetches the full exact set."""
+    """The OUT-OF-BOX path must bound what the driver keeps: with the
+    auto cap tightened to 2, a head-term query under the DEFAULT
+    arguments keeps at most 2 blocks per term in the LRU, and an
+    explicit opt-in to None still keeps the full exact set."""
     monkeypatch.setattr(MS, "FETCH_CAP", 2)
     seg_index._mini.clear()
     MS.search_maxscore(seg_index, "market price", k=5)  # defaults
@@ -221,9 +221,11 @@ def test_cap_cache_remembers_complete_fetch(seg_index):
     is a cache hit instead of a refetch."""
     from pyspark.sql import functions as F
 
+    span = seg_index.meta["block_span"]
     counts = {r.term: r.cnt
-              for r in seg_index.segments.groupBy("term")
-              .agg(F.count("*").alias("cnt")).collect()}
+              for r in seg_index.postings.groupBy("term").agg(
+                  F.countDistinct(F.floor(F.col("doc_id") / span))
+                  .alias("cnt")).collect()}
     head = max(counts, key=counts.get)
     tail = min(counts, key=counts.get)
     cap = counts[tail] + 1  # tail fits under the cap, head exceeds it
@@ -252,12 +254,20 @@ def test_default_auto_cap_rank_identical_on_bench_queries(seg_index, oracle_inde
 
 
 def test_capped_fetch_ships_at_most_cap_blocks(seg_index):
-    """The impact-ordered cap bounds what reaches the driver, not just
-    what gets decoded: the Arrow fetch must return <= cap blocks per
-    term with the term's EXACT df alongside."""
+    """The impact-ordered cap bounds what the driver KEEPS, not just
+    what gets scored: the fetch must keep <= cap blocks per term, the
+    top ones by (block_max_tf desc, block_id asc), with the term's
+    EXACT df alongside."""
     fetched = seg_index._fetch_blocks(["market", "price"], 2)
     per_term = {t: len(blks) for t, (_, blks, _) in fetched.items()}
     assert per_term and all(v <= 2 for v in per_term.values())
+    full = seg_index._fetch_blocks(["market", "price"], None)
+    for t, (_, blks, cap_used) in fetched.items():
+        order = sorted(full[t][1], key=lambda b: (-b.block_max_tf,
+                                                  b.block_id))
+        assert cap_used == 2 and len(full[t][1]) > 2
+        assert [b.block_id for b in blks] == [b.block_id
+                                               for b in order[:2]]
     exact = {r.term: r.df for r in seg_index.term_stats.filter(
         seg_index.term_stats.term.isin(["market", "price"])).collect()}
     dfs = {t: df for t, (df, _, _) in fetched.items()}
